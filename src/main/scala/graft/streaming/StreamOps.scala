@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -13,6 +14,20 @@ import graft.connectors.CdcEvent
   * production and MemoryStream in tests. The batch-equivalent semantics of
   * the windowed operators are pinned by the j-block oracle queries; these
   * add the incremental parts: watermarks, state, and upsert output.
+  *
+  * Every single-`ValueState` twin in this package (the `Streaming*`
+  * objects) is one [[keyedFold]] call: the twin writes only its per-key
+  * fold step, and [[keyedFold]] owns every state decision. Seven
+  * processors stay outside it:
+  *  - `StreamingBigramLm` (a ValueState plus a MapState) and
+  *    `StreamingQualityBuckets` (a MapState) keep keyed maps;
+  *  - `StreamingNearDedup` (×2) and `StreamingPpJoin` append to a
+  *    ListState;
+  *  - `StreamingSessionClose` closes sessions on event-time timers;
+  *  - [[LatestPerKeyProcessor]] runs in Append mode and is kept
+  *    line-for-line beside its `flatMapGroupsWithState` twin
+  *    [[latestPerKeyStream]], which the StreamingSpec drives through
+  *    the same scenario.
   */
 object StreamOps {
 
@@ -21,6 +36,59 @@ object StreamOps {
     * per-operator. */
   private[streaming] def timeModeFor(ttl: TTLConfig): TimeMode =
     if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime()
+
+  /** Per-key fold over a grouped stream with one named `ValueState[S]`
+    * (needs the RocksDB state store provider, like every
+    * transformWithState operator here). `step(key, prior, rows)` folds
+    * one micro-batch of a key's rows into `(next, out)`, and the state
+    * contract is decided here, once, for every twin:
+    *  - the state is read exactly once per key per micro-batch (`prior`,
+    *    `None` for a key never seen or expired by its TTL);
+    *  - `next = None` leaves the state untouched;
+    *  - `next = Some(s)` is written only when `s != prior` — so a replayed
+    *    batch of an idempotent fold (min/max, set insert) writes nothing —
+    *    or on every batch when a TTL is set: transformWithState refreshes
+    *    a state's TTL on update, not on read, so a hot key whose state is
+    *    stable would otherwise expire mid-traffic. A state holding
+    *    arrays compares by reference, so it is written on every batch
+    *    that touches its key.
+    * `out` is returned after the write, as the operator's rows for this
+    * key, in output `mode` (Update: the twins' per-key upsert shape;
+    * StreamingConcurrency's once-per-interval rows use Append).
+    * `stateName` names the state variable in the checkpoint; a non-NONE
+    * `ttl` switches the query to processing time ([[timeModeFor]]), where
+    * Spark runs a no-data micro-batch on every trigger, so a TTL'd query
+    * wants a trigger interval. */
+  def keyedFold[K, I, S, O](grouped: KeyValueGroupedDataset[K, I],
+                            stateName: String, ttl: TTLConfig,
+                            mode: OutputMode = OutputMode.Update())
+                           (step: (K, Option[S], Iterator[I]) =>
+                             (Option[S], Iterator[O]))
+                           (implicit stateEnc: Encoder[S],
+                            outEnc: Encoder[O]): Dataset[O] =
+    grouped.transformWithState(
+      new KeyedFoldProcessor(stateName, ttl, stateEnc, step),
+      timeModeFor(ttl), mode)
+
+  /** The one StatefulProcessor behind [[keyedFold]]. */
+  private final class KeyedFoldProcessor[K, I, S, O](
+      stateName: String, ttl: TTLConfig, stateEnc: Encoder[S],
+      step: (K, Option[S], Iterator[I]) => (Option[S], Iterator[O]))
+      extends StatefulProcessor[K, I, O] {
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S](stateName, stateEnc, ttl)
+
+    override def handleInputRows(key: K, rows: Iterator[I],
+                                 timerValues: TimerValues): Iterator[O] = {
+      val prior = Option(st.get())
+      val (next, out) = step(key, prior, rows)
+      next.foreach(n =>
+        if (ttl != TTLConfig.NONE || !prior.contains(n)) st.update(n))
+      out
+    }
+  }
 
   /** Tumbling-window counts+sums with a watermark: late rows beyond
     * `lateness` are dropped once the watermark passes the window end. */

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming two-sample rank statistics: the unbounded-stream twin of the
   * batch `d35_mann_whitney_u` and `d37_ks_test` declared queries — a live
@@ -57,28 +56,6 @@ object StreamingAbTest {
           else dnum.toDouble / (na * nb).toDouble)
   }
 
-  final class Processor(gridMax: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, AbIn, AbOut] {
-    @transient private var st: ValueState[AbState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AbState]("ab", Encoders.product[AbState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[AbIn],
-                                 timerValues: TimerValues): Iterator[AbOut] = {
-      val s = Option(st.get()).getOrElse(
-        AbState(Seq.fill(gridMax)(0L), Seq.fill(gridMax)(0L)))
-      val ca = s.ca.toArray
-      val cb = s.cb.toArray
-      rows.foreach { r =>
-        val cell = math.min(math.max(r.value, 1L), gridMax.toLong).toInt - 1
-        if (r.arm == 0) ca(cell) += 1L else cb(cell) += 1L
-      }
-      st.update(AbState(ca.toSeq, cb.toSeq))
-      Iterator.single(stats(key, ca.toSeq, cb.toSeq))
-    }
-  }
-
   /** Per-experiment running Mann-Whitney / KS statistics over an unbounded
     * stream (needs the RocksDB state store provider, like every
     * transformWithState operator here). */
@@ -86,8 +63,18 @@ object StreamingAbTest {
               ttl: TTLConfig = TTLConfig.NONE)
              (implicit s: SparkSession): Dataset[AbOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(gridMax, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "ab", ttl) {
+      (key, prior: Option[AbState], rows) =>
+        val st = prior.getOrElse(
+          AbState(Seq.fill(gridMax)(0L), Seq.fill(gridMax)(0L)))
+        val ca = st.ca.toArray
+        val cb = st.cb.toArray
+        rows.foreach { r =>
+          val cell = math.min(math.max(r.value, 1L), gridMax.toLong).toInt - 1
+          if (r.arm == 0) ca(cell) += 1L else cb(cell) += 1L
+        }
+        (Some(AbState(ca.toSeq, cb.toSeq)),
+         Iterator.single(stats(key, ca.toSeq, cb.toSeq)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming one-way ANOVA: the unbounded-stream twin of the batch
   * `d41_anova_f` declared query — a live k-arm experiment monitor that
@@ -60,38 +59,25 @@ object StreamingAnova {
     AOut(key, nT, k - 1, nT - k.toLong, ssb, ssw, f)
   }
 
-  final class Processor(arms: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, AIn, AOut] {
-    @transient private var st: ValueState[AState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[AState]("aov", Encoders.product[AState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[AIn],
-                                 timerValues: TimerValues): Iterator[AOut] = {
-      val s = Option(st.get()).getOrElse(
-        AState(Seq.fill(arms)(0L), Seq.fill(arms)(0L), Seq.fill(arms)(0L)))
-      val n = s.n.toArray; val sm = s.s.toArray; val q = s.q.toArray
-      rows.foreach { r =>
-        if (r.arm >= 0 && r.arm < arms) {
-          n(r.arm) += 1L
-          sm(r.arm) += r.x
-          q(r.arm) += r.x * r.x
-        }
-      }
-      val ns = AState(n.toSeq, sm.toSeq, q.toSeq)
-      st.update(ns)
-      Iterator.single(stats(key, ns))
-    }
-  }
-
   /** Per-key running one-way ANOVA over an unbounded stream (RocksDB
     * state store provider, like every transformWithState operator here). */
   def monitor(values: Dataset[AIn], arms: Int, ttl: TTLConfig = TTLConfig.NONE)
              (implicit s: SparkSession): Dataset[AOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(arms, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "aov", ttl) {
+      (key, prior: Option[AState], rows) =>
+        val st = prior.getOrElse(
+          AState(Seq.fill(arms)(0L), Seq.fill(arms)(0L), Seq.fill(arms)(0L)))
+        val n = st.n.toArray; val sm = st.s.toArray; val q = st.q.toArray
+        rows.foreach { r =>
+          if (r.arm >= 0 && r.arm < arms) {
+            n(r.arm) += 1L
+            sm(r.arm) += r.x
+            q(r.arm) += r.x * r.x
+          }
+        }
+        val ns = AState(n.toSeq, sm.toSeq, q.toSeq)
+        (Some(ns), Iterator.single(stats(key, ns)))
+    }
   }
 }

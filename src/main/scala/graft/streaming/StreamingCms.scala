@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 import org.apache.spark.util.sketch.CountMinSketch
 
 /** Streaming Count-Min sketch: the unbounded-stream twin of the batch
@@ -42,26 +41,6 @@ object StreamingCms {
   final case class CmsIn(group: String, value: Long)
   final case class CmsOut(group: String, sketch: Array[Byte])
 
-  final class Processor(eps: Double, confidence: Double, seed: Int,
-                        ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, CmsIn, CmsOut] {
-    @transient private var st: ValueState[Array[Byte]] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Array[Byte]]("cms", Encoders.BINARY, ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[CmsIn],
-                                 timerValues: TimerValues): Iterator[CmsOut] = {
-      val sk = Option(st.get())
-        .map(b => CountMinSketch.readFrom(new ByteArrayInputStream(b)))
-        .getOrElse(CountMinSketch.create(eps, confidence, seed))
-      rows.foreach(r => sk.add(r.value))
-      val bytes = sk.toByteArray
-      st.update(bytes)
-      Iterator.single(CmsOut(key, bytes))
-    }
-  }
-
   /** Per-group running Count-Min sketch over an unbounded stream (needs
     * the RocksDB state store provider, like every transformWithState
     * operator here). Params must match the batch aggregate's exactly
@@ -70,8 +49,14 @@ object StreamingCms {
                       seed: Int, ttl: TTLConfig = TTLConfig.NONE)
                      (implicit s: SparkSession): Dataset[CmsOut] = {
     import s.implicits._
-    values.groupByKey(_.group)
-      .transformWithState(new Processor(eps, confidence, seed, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.group), "cms", ttl) {
+      (key, prior: Option[Array[Byte]], rows) =>
+        val sk = prior
+          .map(b => CountMinSketch.readFrom(new ByteArrayInputStream(b)))
+          .getOrElse(CountMinSketch.create(eps, confidence, seed))
+        rows.foreach(r => sk.add(r.value))
+        val bytes = sk.toByteArray
+        (Some(bytes), Iterator.single(CmsOut(key, bytes)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 
 /** Streaming running concurrency: the unbounded-stream twin of the batch
   * `e27_running_concurrency` declared query (ClickHouse
@@ -33,36 +32,23 @@ object StreamingConcurrency {
   final case class ConcOut(user_id: Long, event_id: Long, concurrency: Long,
                            n_seen: Long)
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, IvIn, ConcOut] {
-    @transient private var st: ValueState[OpenState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[OpenState](
-        "conc", Encoders.product[OpenState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[IvIn],
-                                 timerValues: TimerValues): Iterator[ConcOut] = {
-      var s = Option(st.get()).getOrElse(OpenState(Nil, 0L))
-      val out = Vector.newBuilder[ConcOut]
-      rows.toArray.sortBy(iv => (iv.s_micros, iv.event_id)).foreach { iv =>
-        val open = s.ends.filter(_ > iv.s_micros) // half-open: end == s closed
-        val conc = open.length + 1L               // the arrival itself is open
-        s = OpenState((iv.e_micros :: open).sorted, s.nSeen + 1L)
-        out += ConcOut(key, iv.event_id, conc, s.nSeen)
-      }
-      st.update(s)
-      out.result().iterator
-    }
-  }
-
   /** Per-interval concurrency over an unbounded interval stream (RocksDB
     * state store provider required). */
   def concurrency(intervals: Dataset[IvIn], ttl: TTLConfig = TTLConfig.NONE)
                  (implicit s: SparkSession): Dataset[ConcOut] = {
     import s.implicits._
-    intervals.groupByKey(_.user_id)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Append())
+    StreamOps.keyedFold(intervals.groupByKey(_.user_id), "conc", ttl,
+                        OutputMode.Append()) {
+      (key, prior: Option[OpenState], rows) =>
+        var st = prior.getOrElse(OpenState(Nil, 0L))
+        val out = Vector.newBuilder[ConcOut]
+        rows.toArray.sortBy(iv => (iv.s_micros, iv.event_id)).foreach { iv =>
+          val open = st.ends.filter(_ > iv.s_micros) // half-open: end == s closed
+          val conc = open.length + 1L               // the arrival itself is open
+          st = OpenState((iv.e_micros :: open).sorted, st.nSeen + 1L)
+          out += ConcOut(key, iv.event_id, conc, st.nSeen)
+        }
+        (Some(st), out.result().iterator)
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming k-gram contamination probe: the unbounded-stream counterpart
   * of the batch k34 query (eval-set docs sharing a verbatim 3-gram with
@@ -51,45 +50,27 @@ object StreamingContamination {
     else (0 until t.length - 2).map(i => t(i) + " " + t(i + 1) + " " + t(i + 2)).distinct
   }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, GramRow, GramHit] {
-    @transient private var st: ValueState[MinTrain] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[MinTrain]("mintrain", Encoders.product[MinTrain], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[GramRow],
-                                 timerValues: TimerValues): Iterator[GramHit] = {
-      val arr = rows.toArray
-      val prior = Option(st.get()).map(_.doc_id)
-      val m = (prior.iterator ++
-        arr.iterator.filter(_.split == "train").map(_.doc_id)).reduceOption(_ min _)
-      // write-only-on-change keeps replays idempotent — but only without
-      // a TTL (update refreshes the TTL clock, read does not; a hot gram
-      // with a stable min would otherwise expire mid-traffic — the
-      // StreamingSpanDedup fix applied to the same latent class here)
-      m.filter(v => ttl != TTLConfig.NONE || !prior.contains(v))
-        .foreach(v => st.update(MinTrain(v)))
-      m match {
-        case None => Iterator.empty
-        case Some(t) =>
-          arr.iterator.filter(_.split != "train").map(r => GramHit(r.doc_id, key, t))
-      }
-    }
-  }
-
   /** Gram-level contamination hits over an unbounded document stream
     * (RocksDB state store provider required, like every transformWithState
     * operator here). The flatMap shingling is map-side; the only shuffle
     * is the groupByKey on gram — the same (gram)-keyed exchange the batch
     * window pays once per run, here paid per micro-batch on the batch's
-    * rows only. */
+    * rows only. A gram no train row has produced keeps no state. */
   def contaminationStream(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
                          (implicit s: SparkSession): Dataset[GramHit] = {
     import s.implicits._
-    docs.flatMap(d => grams(d.text).map(g => GramRow(g, d.doc_id, d.split)))
-      .groupByKey(_.g)
-      .transformWithState(new Processor(ttl), StreamOps.timeModeFor(ttl),
-                          OutputMode.Update())
+    val gramRows =
+      docs.flatMap(d => grams(d.text).map(g => GramRow(g, d.doc_id, d.split)))
+    StreamOps.keyedFold(gramRows.groupByKey(_.g), "mintrain", ttl) {
+      (key, prior: Option[MinTrain], rows) =>
+        val arr = rows.toArray
+        val m = (prior.iterator.map(_.doc_id) ++
+          arr.iterator.filter(_.split == "train").map(_.doc_id)).reduceOption(_ min _)
+        (m.map(MinTrain(_)), m match {
+          case None => Iterator.empty
+          case Some(t) =>
+            arr.iterator.filter(_.split != "train").map(r => GramHit(r.doc_id, key, t))
+        })
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming correlation/covariance matrix: the unbounded-stream twin of
   * the batch `d46_corr_matrix` declared query (ClickHouse
@@ -67,36 +66,21 @@ object StreamingCorrMatrix {
          covar(sq, sd, sqd), covar(sp, sd, spd))
   }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, MIn, MOut] {
-    @transient private var st: ValueState[MState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[MState](
-        "corrmatrix", Encoders.product[MState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[MIn],
-                                 timerValues: TimerValues): Iterator[MOut] = {
-      var s = Option(st.get())
-        .getOrElse(MState(0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
-      rows.foreach { e =>
-        val (hi, lo) = add128(s.sp2hi, s.sp2lo, e.p * e.p)
-        s = MState(s.n + 1, s.sq + e.q, s.sq2 + e.q * e.q, s.sp + e.p,
-                   hi, lo, s.sd + e.d, s.sd2 + e.d * e.d,
-                   s.sqp + e.q * e.p, s.sqd + e.q * e.d, s.spd + e.p * e.d)
-      }
-      st.update(s)
-      Iterator.single(stats(key, s))
-    }
-  }
-
   /** Per-key running correlation matrix over an unbounded stream of
     * (q, p, d) triples (RocksDB state store provider required). */
   def monitor(rows: Dataset[MIn], ttl: TTLConfig = TTLConfig.NONE)
              (implicit s: SparkSession): Dataset[MOut] = {
     import s.implicits._
-    rows.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(rows.groupByKey(_.key), "corrmatrix", ttl) {
+      (key, prior: Option[MState], batch) =>
+        var st = prior.getOrElse(MState(0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L))
+        batch.foreach { e =>
+          val (hi, lo) = add128(st.sp2hi, st.sp2lo, e.p * e.p)
+          st = MState(st.n + 1, st.sq + e.q, st.sq2 + e.q * e.q, st.sp + e.p,
+                      hi, lo, st.sd + e.d, st.sd2 + e.d * e.d,
+                      st.sqp + e.q * e.p, st.sqd + e.q * e.d, st.spd + e.p * e.d)
+        }
+        (Some(st), Iterator.single(stats(key, st)))
+    }
   }
 }

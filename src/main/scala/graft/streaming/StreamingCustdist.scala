@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of d63's count-of-counts (TPC-H Q13 shape): the LIVE
   * order-count distribution over an unbounded order stream — the
@@ -49,40 +48,28 @@ object StreamingCustdist {
     * member. */
   final case class DeltaOut(c_count: Long, delta: Long)
 
-  /** Keyed by customer: count += the batch's orders; emit the bucket
-    * move as a retraction pair (old bucket only if the customer was
-    * already seen — the zero bucket is closed-form, not state). */
-  final class CountProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, OrderIn, DeltaOut] {
-    @transient private var st: ValueState[Count] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Count]("c", Encoders.product[Count], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[OrderIn],
-                                 timerValues: TimerValues): Iterator[DeltaOut] = {
-      var add = 0L
-      rows.foreach(_ => add += 1L)
-      if (add == 0L) Iterator.empty
-      else {
-        val old = Option(st.get()).map(_.n).getOrElse(0L)
-        val next = old + add
-        st.update(Count(next))
-        if (old >= 1L) Iterator(DeltaOut(old, -1L), DeltaOut(next, 1L))
-        else Iterator.single(DeltaOut(next, 1L))
-      }
-    }
-  }
-
   /** Distribution changelog over an unbounded qualifying-order stream
     * (RocksDB state store provider required). The only shuffle is the
-    * groupByKey on customer — the batch plan's one pre-agg exchange. */
+    * groupByKey on customer — the batch plan's one pre-agg exchange.
+    * Keyed by customer: count += the batch's orders; emit the bucket
+    * move as a retraction pair (old bucket only if the customer was
+    * already seen — the zero bucket is closed-form, not state). */
   def distributionDeltas(orders: Dataset[OrderIn],
                          ttl: TTLConfig = TTLConfig.NONE)
                         (implicit s: SparkSession): Dataset[DeltaOut] = {
     import s.implicits._
-    orders.groupByKey(_.o_custkey)
-      .transformWithState(new CountProcessor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(orders.groupByKey(_.o_custkey), "c", ttl) {
+      (_, prior: Option[Count], rows) =>
+        var add = 0L
+        rows.foreach(_ => add += 1L)
+        if (add == 0L) (None, Iterator.empty)
+        else {
+          val old = prior.map(_.n).getOrElse(0L)
+          val next = old + add
+          (Some(Count(next)),
+           if (old >= 1L) Iterator(DeltaOut(old, -1L), DeltaOut(next, 1L))
+           else Iterator.single(DeltaOut(next, 1L)))
+        }
+    }
   }
 }

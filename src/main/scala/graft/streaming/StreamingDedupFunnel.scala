@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming strict-dedup funnel: the unbounded-stream counterpart of the
   * batch `j11_funnel_strict_dedup` declared query (ClickHouse `windowFunnel`
@@ -45,41 +44,27 @@ object StreamingDedupFunnel {
     else if (acc == 1) { if (s == 2) 2 else if (s == 1) 11 else 1 }
     else { if (s == 3) 3 else if (s == 1 || s == 2) 12 else acc }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, DedupIn, DedupOut] {
-    @transient private var st: ValueState[DedupState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[DedupState](
-        "dedupFunnel", Encoders.product[DedupState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[DedupIn],
-                                 timerValues: TimerValues): Iterator[DedupOut] = {
-      var s = Option(st.get())
-        .getOrElse(DedupState(Long.MinValue, Int.MinValue, Long.MinValue, 0))
-      rows.toArray.sortBy(r => (r.tsUs, r.stepIdx, r.eventId)).foreach { r =>
-        val inOrder =
-          r.tsUs > s.lastTs ||
-            (r.tsUs == s.lastTs && (r.stepIdx > s.lastStep ||
-              (r.stepIdx == s.lastStep && r.eventId > s.lastId)))
-        if (inOrder)
-          s = DedupState(r.tsUs, r.stepIdx, r.eventId, step(s.st, r.stepIdx))
-        // else: out-of-order or redelivered, dropped by contract
-      }
-      st.update(s)
-      Iterator.single(DedupOut(key,
-        if (s.st >= 10) s.st - 10 else s.st, s.st >= 10))
-    }
-  }
-
   /** Per-user running strict-dedup funnel level over an unbounded stream
     * (needs the RocksDB state store provider, like every
     * transformWithState operator here). */
   def funnel(values: Dataset[DedupIn], ttl: TTLConfig = TTLConfig.NONE)
             (implicit s: SparkSession): Dataset[DedupOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "dedupFunnel", ttl) {
+      (key, prior: Option[DedupState], rows) =>
+        var st = prior.getOrElse(
+          DedupState(Long.MinValue, Int.MinValue, Long.MinValue, 0))
+        rows.toArray.sortBy(r => (r.tsUs, r.stepIdx, r.eventId)).foreach { r =>
+          val inOrder =
+            r.tsUs > st.lastTs ||
+              (r.tsUs == st.lastTs && (r.stepIdx > st.lastStep ||
+                (r.stepIdx == st.lastStep && r.eventId > st.lastId)))
+          if (inOrder)
+            st = DedupState(r.tsUs, r.stepIdx, r.eventId, step(st.st, r.stepIdx))
+          // else: out-of-order or redelivered, dropped by contract
+        }
+        (Some(st), Iterator.single(DedupOut(key,
+          if (st.st >= 10) st.st - 10 else st.st, st.st >= 10)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of k51's domain-mixture weights: the per-source token
   * MASS and document count carried as running state over an unbounded
@@ -30,37 +29,23 @@ object StreamingDomainMixture {
   final case class SourceMass(toks: Long, docs: Long)
   final case class MassOut(source: String, n_tokens: Long, n_docs: Long)
 
-  /** Keyed by source: fold the batch's token/doc counts into the running
-    * pair, emit the post-batch totals once per source per batch. */
-  final class MassProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, DocIn, MassOut] {
-    @transient private var st: ValueState[SourceMass] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SourceMass](
-        "mass", Encoders.product[SourceMass], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[DocIn],
-                                 timerValues: TimerValues): Iterator[MassOut] = {
-      var toks = 0L
-      var docs = 0L
-      rows.foreach { d => docs += 1; toks += d.text.split(" ", -1).length.toLong }
-      val prev = Option(st.get()).getOrElse(SourceMass(0L, 0L))
-      val next = SourceMass(prev.toks + toks, prev.docs + docs)
-      st.update(next)
-      Iterator.single(MassOut(key, next.toks, next.docs))
-    }
-  }
-
   /** Running per-source (token mass, doc count) over an unbounded
     * document stream (RocksDB state store provider required). The only
     * shuffle is the groupByKey on source — the batch plan's one
-    * source-keyed exchange. */
+    * source-keyed exchange. Keyed by source: fold the batch's token/doc
+    * counts into the running pair, emit the post-batch totals once per
+    * source per batch. */
   def sourceMass(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
                 (implicit s: SparkSession): Dataset[MassOut] = {
     import s.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new MassProcessor(ttl), StreamOps.timeModeFor(ttl),
-                          OutputMode.Update())
+    StreamOps.keyedFold(docs.groupByKey(_.source), "mass", ttl) {
+      (key, prior: Option[SourceMass], rows) =>
+        var toks = 0L
+        var n = 0L
+        rows.foreach { d => n += 1; toks += d.text.split(" ", -1).length.toLong }
+        val prev = prior.getOrElse(SourceMass(0L, 0L))
+        val next = SourceMass(prev.toks + toks, prev.docs + n)
+        (Some(next), Iterator.single(MassOut(key, next.toks, next.docs)))
+    }
   }
 }

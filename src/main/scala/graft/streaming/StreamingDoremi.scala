@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of k71's DoReMi domain-weight update: the per-source
   * sufficient statistics (Σ zi, n_docs) carried as running state over an
@@ -51,35 +50,22 @@ object StreamingDoremi {
       k("wc") * text.codePointCount(0, text.length).toLong + k("b")
   }
 
-  /** Keyed by source: (Σ zi, n) += the batch's documents; one post-batch
-    * emission per touched source. */
-  final class StatProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, (String, Long), StatOut] {
-    @transient private var st: ValueState[ZiStat] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ZiStat]("s", Encoders.product[ZiStat], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[(String, Long)],
-                                 timerValues: TimerValues): Iterator[StatOut] = {
-      var addZ = 0L; var addN = 0L
-      rows.foreach { case (_, z) => addZ += z; addN += 1L }
-      val prev = Option(st.get()).getOrElse(ZiStat(0L, 0L))
-      val next = ZiStat(prev.sum_zi + addZ, prev.n + addN)
-      st.update(next)
-      Iterator.single(StatOut(key, next.sum_zi, next.n))
-    }
-  }
-
   /** Running per-source (Σ zi, n) over an unbounded document stream
     * (RocksDB state store provider required). The only shuffle is the
-    * groupByKey on source — the batch plan's one exchange. */
+    * groupByKey on source — the batch plan's one exchange. Keyed by
+    * source: (Σ zi, n) += the batch's documents; one post-batch emission
+    * per touched source. */
   def stats(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
            (implicit s: SparkSession): Dataset[StatOut] = {
     import s.implicits._
-    docs.map(d => (d.source, zi(d.text)))
-      .groupByKey(_._1)
-      .transformWithState(new StatProcessor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(docs.map(d => (d.source, zi(d.text))).groupByKey(_._1),
+                        "s", ttl) {
+      (key, prior: Option[ZiStat], rows) =>
+        var addZ = 0L; var addN = 0L
+        rows.foreach { case (_, z) => addZ += z; addN += 1L }
+        val prev = prior.getOrElse(ZiStat(0L, 0L))
+        val next = ZiStat(prev.sum_zi + addZ, prev.n + addN)
+        (Some(next), Iterator.single(StatOut(key, next.sum_zi, next.n)))
+    }
   }
 }

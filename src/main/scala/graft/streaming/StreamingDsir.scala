@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of k58's DSIR importance weights: the per-token RAW and
   * TARGET corpus counts carried as running state over an unbounded
@@ -69,75 +68,41 @@ object StreamingDsir {
       .toSeq
   }
 
-  /** Keyed by token: (cr, ctt) += the batch's raw/target occurrences,
-    * then every (doc, token) row scores against the POST-batch counts;
-    * `first` marks the rows of the batch that first saw this token. */
-  final class CountProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, TokRow, TokenHit] {
-    @transient private var st: ValueState[Counts] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Counts]("c", Encoders.product[Counts], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[TokRow],
-                                 timerValues: TimerValues): Iterator[TokenHit] = {
-      // fold to per-doc multiplicities first (the StreamingBigramLm
-      // type-level buffer bound — never the raw row objects)
-      val dc = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-      var addR = 0L
-      var addT = 0L
-      rows.foreach { r =>
-        dc.update(r.doc_id, dc.getOrElse(r.doc_id, 0L) + r.c)
-        addR += r.c
-        if (r.tgt) addT += r.c
-      }
-      val prev = Option(st.get())
-      val next = Counts(prev.map(_.cr).getOrElse(0L) + addR,
-                        prev.map(_.ctt).getOrElse(0L) + addT)
-      st.update(next)
-      val first = prev.isEmpty
-      dc.iterator.map { case (doc, c) =>
-        TokenHit(doc, key, c, next.cr, next.ctt, first)
-      }
-    }
-  }
-
-  /** Singleton-keyed corpus raw/target token totals; one [[Tot]] per
-    * batch (the totals that batch's documents score against). */
-  final class TotalProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, TokRow, Tot] {
-    @transient private var st: ValueState[Tot] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Tot]("t", Encoders.product[Tot], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[TokRow],
-                                 timerValues: TimerValues): Iterator[Tot] = {
-      var nr = Option(st.get()).map(_.nr).getOrElse(0L)
-      var nt = Option(st.get()).map(_.nt).getOrElse(0L)
-      rows.foreach { r => nr += r.c; if (r.tgt) nt += r.c }
-      val next = Tot(nr, nt)
-      st.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  /** Per-(doc, token) hits against post-batch raw/target counts. */
+  /** Per-(doc, token) hits against post-batch raw/target counts. Keyed by
+    * token: (cr, ctt) += the batch's raw/target occurrences, then every
+    * (doc, token) row scores against the POST-batch counts; `first` marks
+    * the rows of the batch that first saw this token. */
   def tokenHits(docs: Dataset[DocIn],
                 targets: Set[String] =
                   graft.engine.Round19Ops.DsirTargetSources.toSet,
                 ttl: TTLConfig = TTLConfig.NONE)
                (implicit s: SparkSession): Dataset[TokenHit] = {
     import s.implicits._
-    docs.flatMap(tf(_, targets))
-      .groupByKey(_.t)
-      .transformWithState(new CountProcessor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(docs.flatMap(tf(_, targets)).groupByKey(_.t), "c", ttl) {
+      (key, prior: Option[Counts], rows) =>
+        // fold to per-doc multiplicities first (the StreamingBigramLm
+        // type-level buffer bound — never the raw row objects)
+        val dc = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
+        var addR = 0L
+        var addT = 0L
+        rows.foreach { r =>
+          dc.update(r.doc_id, dc.getOrElse(r.doc_id, 0L) + r.c)
+          addR += r.c
+          if (r.tgt) addT += r.c
+        }
+        val next = Counts(prior.map(_.cr).getOrElse(0L) + addR,
+                          prior.map(_.ctt).getOrElse(0L) + addT)
+        val first = prior.isEmpty
+        (Some(next), dc.iterator.map { case (doc, c) =>
+          TokenHit(doc, key, c, next.cr, next.ctt, first)
+        })
+    }
   }
 
-  /** Running corpus (raw, target) token totals, one row per batch. The
-    * singleton key sees ONE small row per DOCUMENT (token count + target
-    * flag folded map-side — r19 review: the first cut funneled the whole
+  /** Running corpus (raw, target) token totals, one [[Tot]] per batch
+    * (the totals that batch's documents score against). The singleton
+    * key sees ONE small row per DOCUMENT (token count + target flag
+    * folded map-side — r19 review: the first cut funneled the whole
     * per-token-type stream through the one key and re-tokenized every
     * document a second time; this shape shuffles doc-count rows and
     * needs no tokenization beyond a split length). */
@@ -147,12 +112,17 @@ object StreamingDsir {
                    ttl: TTLConfig = TTLConfig.NONE)
                   (implicit s: SparkSession): Dataset[Tot] = {
     import s.implicits._
-    docs.map { d =>
+    val perDoc = docs.map { d =>
       val n = d.text.split(" ", -1).length.toLong
       TokRow("", d.doc_id, n, targets.contains(d.source))
     }
-      .groupByKey(_ => "corpus")
-      .transformWithState(new TotalProcessor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(perDoc.groupByKey(_ => "corpus"), "t", ttl) {
+      (_, prior: Option[Tot], rows) =>
+        var nr = prior.map(_.nr).getOrElse(0L)
+        var nt = prior.map(_.nt).getOrElse(0L)
+        rows.foreach { r => nr += r.c; if (r.tgt) nt += r.c }
+        val next = Tot(nr, nt)
+        (Some(next), Iterator.single(next))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming exponential moving average: the unbounded-stream
   * counterpart of the batch `e20_exp_moving_avg` declared query
@@ -33,37 +32,25 @@ object StreamingEma {
   final case class EmaState(lastTs: Long, lastId: Long, ema: Long, n: Long)
   final case class EmaOut(key: Long, ema_scaled: Long, ema_cents: Long, n: Long)
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, EmaIn, EmaOut] {
-    @transient private var st: ValueState[EmaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EmaState]("ema", Encoders.product[EmaState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[EmaIn],
-                                 timerValues: TimerValues): Iterator[EmaOut] = {
-      var s = Option(st.get()).orNull
-      // the batch query's (ts, event_id) total order within the batch
-      rows.toArray.sortBy(r => (r.tsUs, r.eventId)).foreach { r =>
-        val x = r.cents * 65536L
-        s = if (s == null) EmaState(r.tsUs, r.eventId, x, 1L)
-        else if (r.tsUs > s.lastTs || (r.tsUs == s.lastTs && r.eventId > s.lastId))
-          EmaState(r.tsUs, r.eventId, s.ema + (x - s.ema) / 8L, s.n + 1L)
-        else s // out-of-order: dropped, never retro-folded
-      }
-      st.update(s)
-      Iterator.single(EmaOut(key, s.ema, s.ema / 65536L, s.n))
-    }
-  }
-
   /** Per-key running EMA (α = 1/8, exact integer recursion) over an
     * unbounded stream (needs the RocksDB state store provider, like
     * every transformWithState operator here). */
   def ema(values: Dataset[EmaIn], ttl: TTLConfig = TTLConfig.NONE)
          (implicit s: SparkSession): Dataset[EmaOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "ema", ttl) {
+      (key, prior: Option[EmaState], rows) =>
+        var st = prior.orNull
+        // the batch query's (ts, event_id) total order within the batch
+        rows.toArray.sortBy(r => (r.tsUs, r.eventId)).foreach { r =>
+          val x = r.cents * 65536L
+          st = if (st == null) EmaState(r.tsUs, r.eventId, x, 1L)
+          else if (r.tsUs > st.lastTs ||
+                   (r.tsUs == st.lastTs && r.eventId > st.lastId))
+            EmaState(r.tsUs, r.eventId, st.ema + (x - st.ema) / 8L, st.n + 1L)
+          else st // out-of-order: dropped, never retro-folded
+        }
+        (Some(st), Iterator.single(EmaOut(key, st.ema, st.ema / 65536L, st.n)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming windowFunnel: the unbounded-stream counterpart of the batch
   * j05 query (ClickHouse `windowFunnel` analog) — per-user funnel depth
@@ -35,36 +34,6 @@ object StreamingFunnel {
 
   private val Unset = Long.MinValue
 
-  final class Processor(stage1: String, stage2: String, stage3: String,
-                        windowMicros: Long, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, EventIn, FunnelDepth] {
-    @transient private var st: ValueState[FunnelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState](
-        "funnel", Encoders.product[FunnelState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-                                 timerValues: TimerValues): Iterator[FunnelDepth] = {
-      var s = Option(st.get()).getOrElse(FunnelState(Unset, Unset, Unset))
-      rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
-        val t = e.ts_micros
-        if (e.event_type == stage1 && s.l1 == Unset)
-          s = s.copy(l1 = t)
-        else if (e.event_type == stage2 && s.l2 == Unset && s.l1 != Unset &&
-                 t > s.l1 && t <= s.l1 + windowMicros)
-          s = s.copy(l2 = t)
-        else if (e.event_type == stage3 && s.l3 == Unset && s.l2 != Unset &&
-                 t > s.l2 && t <= s.l1 + windowMicros)
-          s = s.copy(l3 = t)
-      }
-      st.update(s)
-      val depth = if (s.l3 != Unset) 3 else if (s.l2 != Unset) 2
-                  else if (s.l1 != Unset) 1 else 0
-      Iterator.single(FunnelDepth(key, depth))
-    }
-  }
-
   /** Per-user running funnel depth over an unbounded event stream (RocksDB
     * state store provider required). Defaults mirror the batch j05 stages
     * and 6-hour window. */
@@ -75,8 +44,23 @@ object StreamingFunnel {
                   ttl: TTLConfig = TTLConfig.NONE)
                  (implicit s: SparkSession): Dataset[FunnelDepth] = {
     import s.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new Processor(stage1, stage2, stage3, windowMicros, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(events.groupByKey(_.user_id), "funnel", ttl) {
+      (key, prior: Option[FunnelState], rows) =>
+        var st = prior.getOrElse(FunnelState(Unset, Unset, Unset))
+        rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
+          val t = e.ts_micros
+          if (e.event_type == stage1 && st.l1 == Unset)
+            st = st.copy(l1 = t)
+          else if (e.event_type == stage2 && st.l2 == Unset && st.l1 != Unset &&
+                   t > st.l1 && t <= st.l1 + windowMicros)
+            st = st.copy(l2 = t)
+          else if (e.event_type == stage3 && st.l3 == Unset && st.l2 != Unset &&
+                   t > st.l2 && t <= st.l1 + windowMicros)
+            st = st.copy(l3 = t)
+        }
+        val depth = if (st.l3 != Unset) 3 else if (st.l2 != Unset) 2
+                    else if (st.l1 != Unset) 1 else 0
+        (Some(st), Iterator.single(FunnelDepth(key, depth)))
+    }
   }
 }

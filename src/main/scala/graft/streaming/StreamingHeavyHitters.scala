@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 import graft.operators.HeavyHitters
 import graft.operators.HeavyHitters.MgSummary
@@ -37,36 +36,25 @@ object StreamingHeavyHitters {
   final case class Hitter(group: String, value: String, approx_count: Long,
                           rank: Int, n_rows: Long)
 
-  final class Processor(k: Int, capacity: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, ValueIn, Hitter] {
-    require(k >= 1 && capacity >= k,
-      s"need capacity >= k >= 1, got k=$k capacity=$capacity")
-    @transient private var st: ValueState[MgSummary] = _
-    // the batch aggregator's reduce IS the streaming update step
-    @transient private lazy val mg = new HeavyHitters.MisraGries(capacity)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[MgSummary](
-        "mg", Encoders.product[MgSummary], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[ValueIn],
-                                 timerValues: TimerValues): Iterator[Hitter] = {
-      var s = Option(st.get()).getOrElse(MgSummary(Map.empty, 0L))
-      rows.toArray.sortBy(_.seq).foreach(r => s = mg.reduce(s, r.value))
-      st.update(s)
-      s.counts.toSeq.sortBy { case (v, c) => (-c, v) }.take(k).iterator
-        .zipWithIndex.map { case ((v, c), i) => Hitter(key, v, c, i + 1, s.n) }
-    }
-  }
-
   /** Per-group running top-k over an unbounded stream (needs the RocksDB
-    * state store provider, like every transformWithState operator here). */
+    * state store provider, like every transformWithState operator here).
+    * Rejects `capacity < k` or `k < 1` when the query is built. */
   def topK(values: Dataset[ValueIn], k: Int, capacity: Int,
            ttl: TTLConfig = TTLConfig.NONE)
           (implicit s: SparkSession): Dataset[Hitter] = {
     import s.implicits._
-    values.groupByKey(_.group)
-      .transformWithState(new Processor(k, capacity, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    require(k >= 1 && capacity >= k,
+      s"need capacity >= k >= 1, got k=$k capacity=$capacity")
+    // the batch aggregator's reduce IS the streaming update step
+    val mg = new HeavyHitters.MisraGries(capacity)
+    StreamOps.keyedFold(values.groupByKey(_.group), "mg", ttl) {
+      (key, prior: Option[MgSummary], rows) =>
+        val st = rows.toArray.sortBy(_.seq)
+          .foldLeft(prior.getOrElse(MgSummary(Map.empty, 0L)))((acc, r) =>
+            mg.reduce(acc, r.value))
+        (Some(st), st.counts.toSeq.sortBy { case (v, c) => (-c, v) }.take(k)
+          .iterator.zipWithIndex
+          .map { case ((v, c), i) => Hitter(key, v, c, i + 1, st.n) })
+    }
   }
 }

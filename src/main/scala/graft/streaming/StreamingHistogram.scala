@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 import graft.operators.AdaptiveHistogram
 import graft.operators.AdaptiveHistogram.HistState
@@ -33,35 +32,21 @@ object StreamingHistogram {
   final case class BinOut(group: String, rank: Int, sum: Long, count: Long,
                           n_bins: Int)
 
-  final class Processor(n: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, ValueIn, BinOut] {
-    require(n >= 1, s"need n >= 1 bins, got $n")
-    @transient private var st: ValueState[HistState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[HistState](
-        "hist", Encoders.product[HistState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[ValueIn],
-                                 timerValues: TimerValues): Iterator[BinOut] = {
-      var s = Option(st.get())
-        .getOrElse(HistState(Array.empty[Long], Array.empty[Long]))
-      rows.foreach(r => s = AdaptiveHistogram.insertOne(s, r.v, n))
-      st.update(s)
-      s.sums.indices.iterator.map(i =>
-        BinOut(key, i + 1, s.sums(i), s.cnts(i), s.sums.length))
-    }
-  }
-
   /** Per-group running n-bin histogram over an unbounded stream (RocksDB
     * state store provider required, like every transformWithState
-    * operator here). */
+    * operator here). Rejects `n < 1` when the query is built. */
   def histogram(values: Dataset[ValueIn], n: Int,
                 ttl: TTLConfig = TTLConfig.NONE)
                (implicit s: SparkSession): Dataset[BinOut] = {
     import s.implicits._
-    values.groupByKey(_.group)
-      .transformWithState(new Processor(n, ttl), StreamOps.timeModeFor(ttl),
-                          OutputMode.Update())
+    require(n >= 1, s"need n >= 1 bins, got $n")
+    StreamOps.keyedFold(values.groupByKey(_.group), "hist", ttl) {
+      (key, prior: Option[HistState], rows) =>
+        val h = rows.foldLeft(
+          prior.getOrElse(HistState(Array.empty[Long], Array.empty[Long])))(
+          (acc, r) => AdaptiveHistogram.insertOne(acc, r.v, n))
+        (Some(h), h.sums.indices.iterator.map(i =>
+          BinOut(key, i + 1, h.sums(i), h.cnts(i), h.sums.length)))
+    }
   }
 }

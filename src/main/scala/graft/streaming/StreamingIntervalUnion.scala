@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming union-of-intervals coverage: the unbounded-stream counterpart
   * of the batch e13 query (ClickHouse `intervalLengthSum` analog) — per
@@ -32,37 +31,23 @@ object StreamingIntervalUnion {
   final case class CoverState(frontier: Long, covered: Long)
   final case class Coverage(user_id: Long, covered: Long)
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, IntervalIn, Coverage] {
-    @transient private var st: ValueState[CoverState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CoverState](
-        "cover", Encoders.product[CoverState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[IntervalIn],
-                                 timerValues: TimerValues): Iterator[Coverage] = {
-      var s = Option(st.get()).getOrElse(CoverState(Long.MinValue, 0L))
-      rows.toArray.sortBy(iv => (iv.start, iv.event_id)).foreach { iv =>
-        if (iv.end > iv.start) {
-          val from = math.max(iv.start, s.frontier)
-          val add  = math.max(0L, iv.end - from)
-          s = CoverState(math.max(s.frontier, iv.end), s.covered + add)
-        }
-      }
-      st.update(s)
-      Iterator.single(Coverage(key, s.covered))
-    }
-  }
-
   /** Per-user running union coverage over an unbounded interval stream
     * (RocksDB state store provider required, like every transformWithState
     * operator here). */
   def coverage(intervals: Dataset[IntervalIn], ttl: TTLConfig = TTLConfig.NONE)
               (implicit s: SparkSession): Dataset[Coverage] = {
     import s.implicits._
-    intervals.groupByKey(_.user_id)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(intervals.groupByKey(_.user_id), "cover", ttl) {
+      (key, prior: Option[CoverState], rows) =>
+        var st = prior.getOrElse(CoverState(Long.MinValue, 0L))
+        rows.toArray.sortBy(iv => (iv.start, iv.event_id)).foreach { iv =>
+          if (iv.end > iv.start) {
+            val from = math.max(iv.start, st.frontier)
+            val add  = math.max(0L, iv.end - from)
+            st = CoverState(math.max(st.frontier, iv.end), st.covered + add)
+          }
+        }
+        (Some(st), Iterator.single(Coverage(key, st.covered)))
+    }
   }
 }

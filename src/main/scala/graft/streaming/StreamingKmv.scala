@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 import graft.operators.{Kmv, KmvBuf}
 
 /** Streaming KMV distinct sketch: the unbounded-stream twin of the batch
@@ -27,23 +26,6 @@ object StreamingKmv {
   final case class KmvIn(key: String, value: Long)
   final case class KmvOut(key: String, n_tracked: Int, estimate: Long)
 
-  final class Processor(k: Int, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, KmvIn, KmvOut] {
-    @transient private var st: ValueState[KmvBuf] = _
-    private val agg = Kmv(k)
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[KmvBuf]("kmv", Encoders.product[KmvBuf], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[KmvIn],
-                                 timerValues: TimerValues): Iterator[KmvOut] = {
-      var b = Option(st.get()).getOrElse(agg.zero)
-      rows.foreach(r => b = agg.reduce(b, r.value))
-      st.update(b)
-      Iterator.single(KmvOut(key, b.hs.length, Kmv.estimate(b.hs, k)))
-    }
-  }
-
   /** Per-group running KMV distinct estimate over an unbounded stream
     * (needs the RocksDB state store provider, like every
     * transformWithState operator here). */
@@ -51,8 +33,12 @@ object StreamingKmv {
                      ttl: TTLConfig = TTLConfig.NONE)
                     (implicit s: SparkSession): Dataset[KmvOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(k, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    val agg = Kmv(k)
+    StreamOps.keyedFold(values.groupByKey(_.key), "kmv", ttl) {
+      (key, prior: Option[KmvBuf], rows) =>
+        var b = prior.getOrElse(agg.zero)
+        rows.foreach(r => b = agg.reduce(b, r.value))
+        (Some(b), Iterator.single(KmvOut(key, b.hs.length, Kmv.estimate(b.hs, k))))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming M4 downsampling: the unbounded-stream counterpart of the
   * batch `e18_m4_downsample` declared query (Jugel et al., VLDB 2014
@@ -42,49 +41,37 @@ object StreamingM4 {
   final case class M4Out(series: String, bkt: Long, v_min: Long, v_max: Long,
                          v_first: Long, v_last: Long, n: Long)
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[(String, Long), M4In, M4Out] {
-    @transient private var st: ValueState[M4State] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[M4State]("m4", Encoders.product[M4State], ttl)
-
-    override def handleInputRows(key: (String, Long), rows: Iterator[M4In],
-                                 timerValues: TimerValues): Iterator[M4Out] = {
-      var s = Option(st.get()).orNull
-      rows.foreach { r =>
-        s = if (s == null)
-          M4State(r.cents, r.cents, r.tsUs, r.eventId, r.cents,
-                  r.tsUs, r.eventId, r.cents, 1L)
-        else {
-          val earlier = r.tsUs < s.firstTs ||
-            (r.tsUs == s.firstTs && r.eventId < s.firstId)
-          val later = r.tsUs > s.lastTs ||
-            (r.tsUs == s.lastTs && r.eventId > s.lastId)
-          M4State(
-            math.min(s.vMin, r.cents), math.max(s.vMax, r.cents),
-            if (earlier) r.tsUs else s.firstTs,
-            if (earlier) r.eventId else s.firstId,
-            if (earlier) r.cents else s.firstV,
-            if (later) r.tsUs else s.lastTs,
-            if (later) r.eventId else s.lastId,
-            if (later) r.cents else s.lastV,
-            s.n + 1L)
-        }
-      }
-      st.update(s)
-      Iterator.single(M4Out(key._1, key._2, s.vMin, s.vMax, s.firstV, s.lastV, s.n))
-    }
-  }
-
   /** Per-(series, bucket) running M4 tuple over an unbounded stream
     * (needs the RocksDB state store provider, like every
     * transformWithState operator here). */
   def downsample(points: Dataset[M4In], ttl: TTLConfig = TTLConfig.NONE)
                 (implicit s: SparkSession): Dataset[M4Out] = {
     import s.implicits._
-    points.groupByKey(r => (r.series, r.bkt))
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(points.groupByKey(r => (r.series, r.bkt)), "m4", ttl) {
+      (key, prior: Option[M4State], rows) =>
+        var st = prior.orNull
+        rows.foreach { r =>
+          st = if (st == null)
+            M4State(r.cents, r.cents, r.tsUs, r.eventId, r.cents,
+                    r.tsUs, r.eventId, r.cents, 1L)
+          else {
+            val earlier = r.tsUs < st.firstTs ||
+              (r.tsUs == st.firstTs && r.eventId < st.firstId)
+            val later = r.tsUs > st.lastTs ||
+              (r.tsUs == st.lastTs && r.eventId > st.lastId)
+            M4State(
+              math.min(st.vMin, r.cents), math.max(st.vMax, r.cents),
+              if (earlier) r.tsUs else st.firstTs,
+              if (earlier) r.eventId else st.firstId,
+              if (earlier) r.cents else st.firstV,
+              if (later) r.tsUs else st.lastTs,
+              if (later) r.eventId else st.lastId,
+              if (later) r.cents else st.lastV,
+              st.n + 1L)
+          }
+        }
+        (Some(st), Iterator.single(
+          M4Out(key._1, key._2, st.vMin, st.vMax, st.firstV, st.lastV, st.n)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming distribution moments: the unbounded-stream twin of the batch
   * `d32_skew_kurt` declared query — a live per-key monitor of mean,
@@ -45,33 +44,20 @@ object StreamingMoments {
     MOut(key, st.n, mean, m2, m3 / (m2 * math.sqrt(m2)), m4 / (m2 * m2) - 3.0)
   }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, MIn, MOut] {
-    @transient private var st: ValueState[MState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[MState]("mom", Encoders.product[MState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[MIn],
-                                 timerValues: TimerValues): Iterator[MOut] = {
-      var s = Option(st.get()).getOrElse(MState(0L, 0L, 0L, 0L, 0L))
-      rows.foreach { r =>
-        val x = r.x
-        s = MState(s.n + 1L, s.s1 + x, s.s2 + x * x, s.s3 + x * x * x,
-                   s.s4 + x * x * x * x)
-      }
-      st.update(s)
-      Iterator.single(stats(key, s))
-    }
-  }
-
   /** Per-key running moments over an unbounded stream (RocksDB state
     * store provider, like every transformWithState operator here). */
   def monitor(values: Dataset[MIn], ttl: TTLConfig = TTLConfig.NONE)
              (implicit s: SparkSession): Dataset[MOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "mom", ttl) {
+      (key, prior: Option[MState], rows) =>
+        var st = prior.getOrElse(MState(0L, 0L, 0L, 0L, 0L))
+        rows.foreach { r =>
+          val x = r.x
+          st = MState(st.n + 1L, st.s1 + x, st.s2 + x * x, st.s3 + x * x * x,
+                      st.s4 + x * x * x * x)
+        }
+        (Some(st), Iterator.single(stats(key, st)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of k61's n-gram novelty: the train-split 5-gram SET
   * carried as per-digest state over an unbounded document stream — the
@@ -57,39 +56,26 @@ object StreamingNovelty {
     }
   }
 
-  /** Keyed by digest: the batch's TRAIN rows fold into the presence bit
-    * first, then the batch's TEST rows read the post-fold state. */
-  final class NoveltyProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, GramRow, GramHit] {
-    @transient private var st: ValueState[Seen] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Seen]("s", Encoders.product[Seen], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[GramRow],
-                                 timerValues: TimerValues): Iterator[GramHit] = {
-      // fold to per-doc counts; remember whether any train row arrived
-      val tests = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-      var trainInBatch = false
-      rows.foreach { r =>
-        if (r.is_test) tests.update(r.doc_id, tests.getOrElse(r.doc_id, 0L) + r.c)
-        else trainInBatch = true
-      }
-      val held = Option(st.get()).exists(_.v) || trainInBatch
-      if (trainInBatch && !Option(st.get()).exists(_.v)) st.update(Seen(true))
-      tests.iterator.map { case (doc, c) => GramHit(doc, key, c, held) }
-    }
-  }
-
   /** Per-(test doc, 5-gram) hits against the post-batch train set
     * (RocksDB state store provider required). The only shuffle is the
-    * groupByKey on digest — the batch plan's one digest exchange. */
+    * groupByKey on digest — the batch plan's one digest exchange. Keyed by
+    * digest: the batch's TRAIN rows fold into the presence bit first,
+    * then the batch's TEST rows read the post-fold state. */
   def gramHits(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
               (implicit s: SparkSession): Dataset[GramHit] = {
     import s.implicits._
-    docs.flatMap(grams)
-      .groupByKey(_.d)
-      .transformWithState(new NoveltyProcessor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(docs.flatMap(grams).groupByKey(_.d), "s", ttl) {
+      (key, prior: Option[Seen], rows) =>
+        // fold to per-doc counts; remember whether any train row arrived
+        val tests = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
+        var trainInBatch = false
+        rows.foreach { r =>
+          if (r.is_test) tests.update(r.doc_id, tests.getOrElse(r.doc_id, 0L) + r.c)
+          else trainInBatch = true
+        }
+        val held = prior.exists(_.v) || trainInBatch
+        (if (trainInBatch) Some(Seen(true)) else None,
+         tests.iterator.map { case (doc, c) => GramHit(doc, key, c, held) })
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming retention: the unbounded-stream counterpart of the batch j06
   * query (ClickHouse `retention` analog) — per-user activity flags for the
@@ -44,33 +43,6 @@ object StreamingRetention {
 
   private val Unset = Long.MinValue
 
-  final class Processor(anchorType: String, bucketMicros: Long, nBuckets: Int,
-                        ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, EventIn, RetentionFlags] {
-    @transient private var st: ValueState[RetState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[RetState](
-        "retention", Encoders.product[RetState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-                                 timerValues: TimerValues): Iterator[RetentionFlags] = {
-      var s = Option(st.get()).getOrElse(RetState(Unset, 0))
-      rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
-        if (s.l1 == Unset && e.event_type == anchorType)
-          s = s.copy(l1 = e.ts_micros)
-        if (s.l1 != Unset && e.ts_micros >= s.l1) {
-          val b = (e.ts_micros - s.l1) / bucketMicros
-          if (b < nBuckets) s = s.copy(mask = s.mask | (1 << b.toInt))
-        }
-      }
-      st.update(s)
-      if (s.l1 == Unset) Iterator.empty
-      else Iterator.single(RetentionFlags(key, s.mask,
-        (0 until nBuckets).map(b => (s.mask >> b) & 1)))
-    }
-  }
-
   /** Per-user running retention flags over an unbounded event stream
     * (RocksDB state store provider required). Defaults mirror the batch
     * j06: 'signup' anchor, 7-day buckets, weeks 0–2. Users with no anchor
@@ -83,8 +55,21 @@ object StreamingRetention {
                     (implicit s: SparkSession): Dataset[RetentionFlags] = {
     import s.implicits._
     require(nBuckets >= 1 && nBuckets <= 30, s"nBuckets must be in [1,30], got $nBuckets")
-    events.groupByKey(_.user_id)
-      .transformWithState(new Processor(anchorType, bucketMicros, nBuckets, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(events.groupByKey(_.user_id), "retention", ttl) {
+      (key, prior: Option[RetState], rows) =>
+        var st = prior.getOrElse(RetState(Unset, 0))
+        rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
+          if (st.l1 == Unset && e.event_type == anchorType)
+            st = st.copy(l1 = e.ts_micros)
+          if (st.l1 != Unset && e.ts_micros >= st.l1) {
+            val b = (e.ts_micros - st.l1) / bucketMicros
+            if (b < nBuckets) st = st.copy(mask = st.mask | (1 << b.toInt))
+          }
+        }
+        (Some(st),
+         if (st.l1 == Unset) Iterator.empty
+         else Iterator.single(RetentionFlags(key, st.mask,
+           (0 until nBuckets).map(b => (st.mask >> b) & 1))))
+    }
   }
 }

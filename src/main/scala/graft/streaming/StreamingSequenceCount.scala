@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming sequenceCount: the unbounded-stream counterpart of the batch
   * j08 query — per-user running count of non-overlapping open→close event
@@ -40,28 +39,6 @@ object StreamingSequenceCount {
   final case class ChainState(open: Long, matched: Long)
   final case class ChainCount(user_id: Long, open: Long, n_chains: Long)
 
-  final class Processor(openType: String, closeType: String,
-                        ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, EventIn, ChainCount] {
-    @transient private var st: ValueState[ChainState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ChainState](
-        "chain", Encoders.product[ChainState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-                                 timerValues: TimerValues): Iterator[ChainCount] = {
-      var s = Option(st.get()).getOrElse(ChainState(0L, 0L))
-      rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
-        if (e.event_type == openType) s = ChainState(s.open + 1, s.matched)
-        else if (e.event_type == closeType && s.open > 0)
-          s = ChainState(s.open - 1, s.matched + 1)
-      }
-      st.update(s)
-      Iterator.single(ChainCount(key, s.open, s.matched))
-    }
-  }
-
   /** Per-user running chain counts over an unbounded event stream (needs the
     * RocksDB state store provider, like every transformWithState operator
     * here). */
@@ -70,9 +47,16 @@ object StreamingSequenceCount {
                   ttl: TTLConfig = TTLConfig.NONE)
                  (implicit s: SparkSession): Dataset[ChainCount] = {
     import s.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new Processor(openType, closeType, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(events.groupByKey(_.user_id), "chain", ttl) {
+      (key, prior: Option[ChainState], rows) =>
+        var st = prior.getOrElse(ChainState(0L, 0L))
+        rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
+          if (e.event_type == openType) st = ChainState(st.open + 1, st.matched)
+          else if (e.event_type == closeType && st.open > 0)
+            st = ChainState(st.open - 1, st.matched + 1)
+        }
+        (Some(st), Iterator.single(ChainCount(key, st.open, st.matched)))
+    }
   }
 
   // -------------------------------------------------------------------
@@ -83,61 +67,16 @@ object StreamingSequenceCount {
   final case class BoundedState(bestA: Long, n: Long, nEvents: Long)
   final case class BoundedCount(user_id: Long, n_chains: Long, n_events: Long)
 
-  /** Streaming twin of
+  /** Per-user running span-disjoint bounded chain count — defaults mirror
+    * the batch j18 (signup→click within 4 hours). The streaming twin of
     * [[graft.operators.SequenceMatch.countChainsBounded]]: span-disjoint
     * time-bounded A→B chains counted by the SAME 2-long restart
     * automaton the batch fold runs — best-opener-since-restart (LATEST
     * A for upper bounds, EARLIEST for lower) + count — so it streams by
     * construction; the fold is already a left fold in (ts, tie) order.
     * In-order delivery ⇒ emissions equal the batch j18 exactly (pinned
-    * across a batch cut in StreamingSpec). */
-  final class BoundedProcessor(typeA: String, typeB: String, op: String,
-                               boundMicros: Long,
-                               ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, EventIn, BoundedCount] {
-    require(Set("<=", "<", ">", ">=")(op), s"unsupported time operator '$op'")
-    private val upper = op == "<=" || op == "<"
-    // max-mode sentinel −2^62 / min-mode +2^62 — the batch fold's values
-    private val Sent =
-      if (upper) -4611686018427387904L else 4611686018427387904L
-    @transient private var st: ValueState[BoundedState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[BoundedState](
-        "boundedchain", Encoders.product[BoundedState], ttl)
-
-    private def isSet(bestA: Long): Boolean =
-      if (upper) bestA > Sent else bestA < Sent
-
-    private def gapOk(bestA: Long, t: Long): Boolean = op match {
-      case "<=" => t <= bestA + boundMicros
-      case "<"  => t < bestA + boundMicros
-      case ">"  => t > bestA + boundMicros
-      case ">=" => t >= bestA + boundMicros
-    }
-
-    override def handleInputRows(key: Long, rows: Iterator[EventIn],
-                                 timerValues: TimerValues): Iterator[BoundedCount] = {
-      var s = Option(st.get()).getOrElse(BoundedState(Sent, 0L, 0L))
-      rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
-        // B-check BEFORE the A-update (an event cannot chain with itself)
-        if (e.event_type == typeB && isSet(s.bestA) &&
-            gapOk(s.bestA, e.ts_micros))
-          s = s.copy(bestA = Sent, n = s.n + 1L)
-        else if (e.event_type == typeA)
-          s = s.copy(bestA =
-            if (!isSet(s.bestA)) e.ts_micros
-            else if (upper) math.max(s.bestA, e.ts_micros)
-            else math.min(s.bestA, e.ts_micros))
-        s = s.copy(nEvents = s.nEvents + 1L)
-      }
-      st.update(s)
-      Iterator.single(BoundedCount(key, s.n, s.nEvents))
-    }
-  }
-
-  /** Per-user running span-disjoint bounded chain count — defaults mirror
-    * the batch j18 (signup→click within 4 hours). */
+    * across a batch cut in StreamingSpec). Rejects an `op` outside
+    * {<=, <, >, >=} when the query is built. */
   def boundedChainCounts(events: Dataset[EventIn],
                          typeA: String = "signup", typeB: String = "click",
                          op: String = "<=",
@@ -145,8 +84,33 @@ object StreamingSequenceCount {
                          ttl: TTLConfig = TTLConfig.NONE)
                         (implicit s: SparkSession): Dataset[BoundedCount] = {
     import s.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new BoundedProcessor(typeA, typeB, op, boundMicros, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    require(Set("<=", "<", ">", ">=")(op), s"unsupported time operator '$op'")
+    val upper = op == "<=" || op == "<"
+    // max-mode sentinel −2^62 / min-mode +2^62 — the batch fold's values
+    val sent = if (upper) -4611686018427387904L else 4611686018427387904L
+    def isSet(bestA: Long): Boolean = if (upper) bestA > sent else bestA < sent
+    def gapOk(bestA: Long, t: Long): Boolean = op match {
+      case "<=" => t <= bestA + boundMicros
+      case "<"  => t < bestA + boundMicros
+      case ">"  => t > bestA + boundMicros
+      case ">=" => t >= bestA + boundMicros
+    }
+    StreamOps.keyedFold(events.groupByKey(_.user_id), "boundedchain", ttl) {
+      (key, prior: Option[BoundedState], rows) =>
+        var st = prior.getOrElse(BoundedState(sent, 0L, 0L))
+        rows.toArray.sortBy(e => (e.ts_micros, e.event_id)).foreach { e =>
+          // B-check BEFORE the A-update (an event cannot chain with itself)
+          if (e.event_type == typeB && isSet(st.bestA) &&
+              gapOk(st.bestA, e.ts_micros))
+            st = st.copy(bestA = sent, n = st.n + 1L)
+          else if (e.event_type == typeA)
+            st = st.copy(bestA =
+              if (!isSet(st.bestA)) e.ts_micros
+              else if (upper) math.max(st.bestA, e.ts_micros)
+              else math.min(st.bestA, e.ts_micros))
+          st = st.copy(nEvents = st.nEvents + 1L)
+        }
+        (Some(st), Iterator.single(BoundedCount(key, st.n, st.nEvents)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of k53's cross-source span-overlap matrix: the LIVE
   * mirror-site / syndicated-boilerplate detector — as documents ingest,
@@ -45,32 +44,6 @@ object StreamingSourceOverlap {
     StreamingSpanDedup.spans(doc.text).map(_._2).distinct
       .map(DigestSrc(_, doc.source))
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, DigestSrc, PairOut] {
-    @transient private var st: ValueState[Srcs] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Srcs]("srcs", Encoders.product[Srcs], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[DigestSrc],
-                                 timerValues: TimerValues): Iterator[PairOut] = {
-      val have = scala.collection.mutable.TreeSet.empty[String]
-      Option(st.get()).foreach(s => have ++= s.sources)
-      val out = Seq.newBuilder[PairOut]
-      rows.map(_.source).toSeq.distinct.sorted.foreach { s =>
-        if (!have.contains(s)) {
-          have.foreach { e =>
-            val (a, b) = if (e < s) (e, s) else (s, e)
-            out += PairOut(key, a, b)
-          }
-          have += s
-        }
-      }
-      st.update(Srcs(have.toSeq))
-      out.result().iterator
-    }
-  }
-
   /** Newly-formed (digest, source pair) facts over an unbounded document
     * stream (RocksDB state store provider required). The shingling is
     * map-side; the only shuffle is the groupByKey on digest — the batch
@@ -78,9 +51,21 @@ object StreamingSourceOverlap {
   def newPairs(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
               (implicit s: SparkSession): Dataset[PairOut] = {
     import s.implicits._
-    docs.flatMap(digests _)
-      .groupByKey(_.d)
-      .transformWithState(new Processor(ttl), StreamOps.timeModeFor(ttl),
-                          OutputMode.Update())
+    StreamOps.keyedFold(docs.flatMap(digests _).groupByKey(_.d), "srcs", ttl) {
+      (key, prior: Option[Srcs], rows) =>
+        val have = scala.collection.mutable.TreeSet.empty[String]
+        prior.foreach(p => have ++= p.sources)
+        val out = Seq.newBuilder[PairOut]
+        rows.map(_.source).toSeq.distinct.sorted.foreach { src =>
+          if (!have.contains(src)) {
+            have.foreach { e =>
+              val (a, b) = if (e < src) (e, src) else (src, e)
+              out += PairOut(key, a, b)
+            }
+            have += src
+          }
+        }
+        (Some(Srcs(have.toSeq)), out.result().iterator)
+    }
   }
 }

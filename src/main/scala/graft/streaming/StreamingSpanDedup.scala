@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming ExactSubstr span dedup: the unbounded-stream counterpart of
   * the batch k44 query (duplicate ≥20-token spans across documents, Lee
@@ -61,52 +60,33 @@ object StreamingSpanDedup {
     }
   }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, SpanRow, SpanHit] {
-    @transient private var st: ValueState[Extremes] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Extremes](
-        "spanextremes", Encoders.product[Extremes], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[SpanRow],
-                                 timerValues: TimerValues): Iterator[SpanHit] = {
-      val arr = rows.toArray
-      val prior = Option(st.get())
-      var mn = prior.map(_.minDoc).getOrElse(Long.MaxValue)
-      var mx = prior.map(_.maxDoc).getOrElse(Long.MinValue)
-      arr.foreach { r =>
-        if (r.doc_id < mn) mn = r.doc_id
-        if (r.doc_id > mx) mx = r.doc_id
-      }
-      // write-only-on-change keeps replays idempotent — but ONLY without
-      // a TTL: transformWithState refreshes a state's TTL on update, not
-      // on read, so under a TTL a hot digest whose extremes are stable
-      // would silently expire mid-traffic and forget its first holder.
-      // With a TTL configured, every batch that sees the digest rewrites
-      // the (unchanged) extremes to keep the clock honest.
-      if (ttl != TTLConfig.NONE || !prior.contains(Extremes(mn, mx)))
-        st.update(Extremes(mn, mx))
-      if (mn < mx)
-        arr.iterator.map(r =>
-          SpanHit(r.doc_id, r.st, mn, if (r.doc_id != mn) 1 else 0))
-      else Iterator.empty
-    }
-  }
-
   /** Span-level duplication hits over an unbounded document stream
     * (RocksDB state store provider required). The shingling flatMap is
     * map-side; the only shuffle is the groupByKey on the digest — the
     * same digest-keyed exchange the batch window pays once per run, here
-    * paid per micro-batch on that batch's rows only. */
+    * paid per micro-batch on that batch's rows only. Unchanged extremes
+    * are not rewritten (replays stay idempotent on state) unless a TTL is
+    * set — the [[StreamOps.keyedFold]] contract. */
   def spanDupStream(docs: Dataset[(Long, String)],
                     ttl: TTLConfig = TTLConfig.NONE)
                    (implicit s: SparkSession): Dataset[SpanHit] = {
     import s.implicits._
-    docs.flatMap { case (id, text) =>
-        spans(text).map { case (pos, dg) => SpanRow(id, pos, dg) } }
-      .groupByKey(_.d)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    val spanRows = docs.flatMap { case (id, text) =>
+      spans(text).map { case (pos, dg) => SpanRow(id, pos, dg) } }
+    StreamOps.keyedFold(spanRows.groupByKey(_.d), "spanextremes", ttl) {
+      (_, prior: Option[Extremes], rows) =>
+        val arr = rows.toArray
+        var mn = prior.map(_.minDoc).getOrElse(Long.MaxValue)
+        var mx = prior.map(_.maxDoc).getOrElse(Long.MinValue)
+        arr.foreach { r =>
+          if (r.doc_id < mn) mn = r.doc_id
+          if (r.doc_id > mx) mx = r.doc_id
+        }
+        (Some(Extremes(mn, mx)),
+         if (mn < mx)
+           arr.iterator.map(r =>
+             SpanHit(r.doc_id, r.st, mn, if (r.doc_id != mn) 1 else 0))
+         else Iterator.empty)
+    }
   }
 }

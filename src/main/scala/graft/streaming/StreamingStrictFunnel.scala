@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming strict-order funnel: the unbounded-stream counterpart of
   * the batch `j10_funnel_strict_order` declared query (ClickHouse
@@ -40,36 +39,22 @@ object StreamingStrictFunnel {
     else if (s == acc + 1) acc + 1
     else 10 + acc
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, FunnelIn, FunnelOut] {
-    @transient private var st: ValueState[FunnelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState](
-        "funnel", Encoders.product[FunnelState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[FunnelIn],
-                                 timerValues: TimerValues): Iterator[FunnelOut] = {
-      var s = Option(st.get()).getOrElse(FunnelState(Long.MinValue, Long.MinValue, 0))
-      rows.toArray.sortBy(r => (r.tsUs, r.eventId)).foreach { r =>
-        if (r.tsUs > s.lastTs || (r.tsUs == s.lastTs && r.eventId > s.lastId))
-          s = FunnelState(r.tsUs, r.eventId, step(s.st, r.stepIdx))
-        // else: out-of-order, dropped by contract
-      }
-      st.update(s)
-      Iterator.single(FunnelOut(key,
-        if (s.st >= 10) s.st - 10 else s.st, s.st >= 10))
-    }
-  }
-
   /** Per-user running strict-order funnel level over an unbounded stream
     * (needs the RocksDB state store provider, like every
     * transformWithState operator here). */
   def funnel(values: Dataset[FunnelIn], ttl: TTLConfig = TTLConfig.NONE)
             (implicit s: SparkSession): Dataset[FunnelOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "funnel", ttl) {
+      (key, prior: Option[FunnelState], rows) =>
+        var st = prior.getOrElse(FunnelState(Long.MinValue, Long.MinValue, 0))
+        rows.toArray.sortBy(r => (r.tsUs, r.eventId)).foreach { r =>
+          if (r.tsUs > st.lastTs || (r.tsUs == st.lastTs && r.eventId > st.lastId))
+            st = FunnelState(r.tsUs, r.eventId, step(st.st, r.stepIdx))
+          // else: out-of-order, dropped by contract
+        }
+        (Some(st), Iterator.single(FunnelOut(key,
+          if (st.st >= 10) st.st - 10 else st.st, st.st >= 10)))
+    }
   }
 }

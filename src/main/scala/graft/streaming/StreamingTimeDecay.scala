@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming time-decayed sum: the unbounded-stream twin of the batch
   * `e21_time_decayed_sum` declared query (ClickHouse
@@ -56,27 +55,6 @@ object StreamingTimeDecay {
   def render(key: Long, st: DState): DOut =
     DOut(key, st.units, st.units.toDouble / 1073741824.0 / 100.0, st.n)
 
-  final class Processor(refMicros: Long, ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[Long, DIn, DOut] {
-    @transient private var st: ValueState[DState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[DState](
-        "decay", Encoders.product[DState], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[DIn],
-                                 timerValues: TimerValues): Iterator[DOut] = {
-      var s = Option(st.get()).getOrElse(DState(0L, 0L))
-      rows.foreach { e =>
-        if (e.ts_micros <= refMicros)
-          s = DState(s.units + contribution(refMicros, e.ts_micros, e.cents),
-                     s.n + 1L)
-      }
-      st.update(s)
-      Iterator.single(render(key, s))
-    }
-  }
-
   /** Per-user running decayed sum over an unbounded event stream (RocksDB
     * state store provider required). `refMicros` defaults to the batch
     * e21 reference instant (2024-01-31 00:00 UTC). */
@@ -85,8 +63,15 @@ object StreamingTimeDecay {
                  ttl: TTLConfig = TTLConfig.NONE)
                 (implicit s: SparkSession): Dataset[DOut] = {
     import s.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new Processor(refMicros, ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(events.groupByKey(_.user_id), "decay", ttl) {
+      (key, prior: Option[DState], rows) =>
+        var st = prior.getOrElse(DState(0L, 0L))
+        rows.foreach { e =>
+          if (e.ts_micros <= refMicros)
+            st = DState(st.units + contribution(refMicros, e.ts_micros, e.cents),
+                        st.n + 1L)
+        }
+        (Some(st), Iterator.single(render(key, st)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 import graft.engine.Round8dOps
 
@@ -37,39 +36,26 @@ object StreamingTimingQuantiles {
   final case class TimingQuantiles(group: String, p50_ms: Long, p90_ms: Long,
                                    p99_ms: Long, n: Long)
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, TimingIn, TimingQuantiles] {
-    @transient private var st: ValueState[TqSummary] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TqSummary](
-        "tq", Encoders.product[TqSummary], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[TimingIn],
-                                 timerValues: TimerValues): Iterator[TimingQuantiles] = {
-      val prev = Option(st.get()).getOrElse(TqSummary(Array.empty, Array.empty, 0L))
-      var m = prev.buckets.zip(prev.counts).toMap
-      var n = prev.n
-      rows.foreach { r =>
-        val b = Round8dOps.gridMs(r.ms)
-        m = m.updated(b, m.getOrElse(b, 0L) + 1L)
-        n += 1L
-      }
-      val sorted = m.toArray.sortBy(_._1)
-      st.update(TqSummary(sorted.map(_._1), sorted.map(_._2), n))
-      val Seq(p50, p90, p99) = Round8dOps.histQuantiles(m, Seq(50, 90, 99))
-      Iterator.single(TimingQuantiles(key, p50, p90, p99, n))
-    }
-  }
-
   /** Per-group running p50/p90/p99 on the timing grid over an unbounded
     * stream (needs the RocksDB state store provider, like every
     * transformWithState operator here). */
   def quantiles(values: Dataset[TimingIn], ttl: TTLConfig = TTLConfig.NONE)
                (implicit s: SparkSession): Dataset[TimingQuantiles] = {
     import s.implicits._
-    values.groupByKey(_.group)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.group), "tq", ttl) {
+      (key, prior: Option[TqSummary], rows) =>
+        val prev = prior.getOrElse(TqSummary(Array.empty, Array.empty, 0L))
+        var m = prev.buckets.zip(prev.counts).toMap
+        var n = prev.n
+        rows.foreach { r =>
+          val b = Round8dOps.gridMs(r.ms)
+          m = m.updated(b, m.getOrElse(b, 0L) + 1L)
+          n += 1L
+        }
+        val sorted = m.toArray.sortBy(_._1)
+        val Seq(p50, p90, p99) = Round8dOps.histQuantiles(m, Seq(50, 90, 99))
+        (Some(TqSummary(sorted.map(_._1), sorted.map(_._2), n)),
+         Iterator.single(TimingQuantiles(key, p50, p90, p99, n)))
+    }
   }
 }

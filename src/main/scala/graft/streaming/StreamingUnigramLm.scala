@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twins of the r13 quality gates (the r11 brief item 7):
   *
@@ -50,58 +49,28 @@ object StreamingUnigramLm {
     d.text.split(" ", -1).groupBy(identity).iterator
       .map { case (t, occ) => TokRow(t, d.doc_id, occ.length.toLong) }.toSeq
 
-  /** Keyed by token: corpus count state += the batch's occurrences, then
-    * every (doc, token) row of the batch scores against the POST-batch
-    * count — so a one-batch replay reproduces the batch query's corpus
-    * distribution exactly. */
-  final class CountProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, TokRow, TokenHit] {
-    @transient private var st: ValueState[Count] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Count]("ct", Encoders.product[Count], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[TokRow],
-                                 timerValues: TimerValues): Iterator[TokenHit] = {
-      val arr = rows.toArray
-      val ct = Option(st.get()).map(_.n).getOrElse(0L) + arr.iterator.map(_.c).sum
-      st.update(Count(ct))
-      arr.iterator.map(r => TokenHit(r.doc_id, key, r.c, ct))
-    }
-  }
-
-  /** Singleton-keyed corpus token total; one [[Tot]] emission per batch
-    * (the batch all documents in that batch score against). */
-  final class TotalProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, Count, Tot] {
-    @transient private var st: ValueState[Count] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Count]("tot", Encoders.product[Count], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[Count],
-                                 timerValues: TimerValues): Iterator[Tot] = {
-      val tot = Option(st.get()).map(_.n).getOrElse(0L) + rows.map(_.n).sum
-      st.update(Count(tot))
-      Iterator.single(Tot(tot))
-    }
-  }
-
   /** Per-(doc, token) corpus-count hits over an unbounded document stream
     * (RocksDB state store provider required). The tf map is map-side; the
     * only shuffle is the groupByKey on token — the same token-keyed
-    * exchange the batch `cf` aggregate pays once per run. */
+    * exchange the batch `cf` aggregate pays once per run. Keyed by token:
+    * corpus count state += the batch's occurrences, then every (doc,
+    * token) row of the batch scores against the POST-batch count — so a
+    * one-batch replay reproduces the batch query's corpus distribution
+    * exactly. */
   def tokenHits(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
                (implicit s: SparkSession): Dataset[TokenHit] = {
     import s.implicits._
-    docs.flatMap(tf _)
-      .groupByKey(_.t)
-      .transformWithState(new CountProcessor(ttl), StreamOps.timeModeFor(ttl),
-                          OutputMode.Update())
+    StreamOps.keyedFold(docs.flatMap(tf _).groupByKey(_.t), "ct", ttl) {
+      (key, prior: Option[Count], rows) =>
+        val arr = rows.toArray
+        val ct = prior.map(_.n).getOrElse(0L) + arr.iterator.map(_.c).sum
+        (Some(Count(ct)), arr.iterator.map(r => TokenHit(r.doc_id, key, r.c, ct)))
+    }
   }
 
-  /** Running corpus token total, one row per micro-batch. The per-doc
-    * counts are pre-summed map-side by an explicit mapPartitions fold
+  /** Running corpus token total, one [[Tot]] per micro-batch (the total
+    * all documents in that batch score against). The per-doc counts are
+    * pre-summed map-side by an explicit mapPartitions fold
     * (groupByKey + transformWithState performs NO partial aggregation on
     * its own — r12 ADVICE), so the singleton key genuinely sees one
     * number per non-empty upstream partition per batch, not one row per
@@ -110,15 +79,17 @@ object StreamingUnigramLm {
   def corpusTotal(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
                  (implicit s: SparkSession): Dataset[Tot] = {
     import s.implicits._
-    docs.mapPartitions { it =>
-        var n = 0L
-        var any = false
-        it.foreach { d => any = true; n += d.text.split(" ", -1).length.toLong }
-        if (any) Iterator.single(Count(n)) else Iterator.empty
-      }
-      .groupByKey(_ => "")
-      .transformWithState(new TotalProcessor(ttl), StreamOps.timeModeFor(ttl),
-                          OutputMode.Update())
+    val partTotals = docs.mapPartitions { it =>
+      var n = 0L
+      var any = false
+      it.foreach { d => any = true; n += d.text.split(" ", -1).length.toLong }
+      if (any) Iterator.single(Count(n)) else Iterator.empty
+    }
+    StreamOps.keyedFold(partTotals.groupByKey(_ => ""), "tot", ttl) {
+      (_, prior: Option[Count], rows) =>
+        val tot = prior.map(_.n).getOrElse(0L) + rows.map(_.n).sum
+        (Some(Count(tot)), Iterator.single(Tot(tot)))
+    }
   }
 
   final case class GateFlags(doc_id: Long, n_tokens: Int, n_stop_kinds: Int,

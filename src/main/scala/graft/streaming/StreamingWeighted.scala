@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming weighted moments: the unbounded-stream twin of the batch
   * `d48_weighted_moments` declared query (ClickHouse `avgWeighted` analog
@@ -35,34 +34,20 @@ object StreamingWeighted {
     WOut(key, st.n, st.sw, swx / sw, (swx2 - swx * swx / sw) / (sw - 1.0))
   }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, WIn, WOut] {
-    @transient private var st: ValueState[WState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[WState](
-        "weighted", Encoders.product[WState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[WIn],
-                                 timerValues: TimerValues): Iterator[WOut] = {
-      var s = Option(st.get()).getOrElse(WState(0L, 0L, 0L, 0L, 0L))
-      rows.foreach { e =>
-        val (hi, lo) =
-          StreamingCorrMatrix.add128(s.swx2hi, s.swx2lo, e.w * e.x * e.x)
-        s = WState(s.n + 1, s.sw + e.w, s.swx + e.w * e.x, hi, lo)
-      }
-      st.update(s)
-      Iterator.single(stats(key, s))
-    }
-  }
-
   /** Per-key running weighted mean/variance over an unbounded stream of
     * (weight, value) pairs (RocksDB state store provider required). */
   def monitor(rows: Dataset[WIn], ttl: TTLConfig = TTLConfig.NONE)
              (implicit s: SparkSession): Dataset[WOut] = {
     import s.implicits._
-    rows.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(rows.groupByKey(_.key), "weighted", ttl) {
+      (key, prior: Option[WState], batch) =>
+        var st = prior.getOrElse(WState(0L, 0L, 0L, 0L, 0L))
+        batch.foreach { e =>
+          val (hi, lo) =
+            StreamingCorrMatrix.add128(st.swx2hi, st.swx2lo, e.w * e.x * e.x)
+          st = WState(st.n + 1, st.sw + e.w, st.swx + e.w * e.x, hi, lo)
+        }
+        (Some(st), Iterator.single(stats(key, st)))
+    }
   }
 }

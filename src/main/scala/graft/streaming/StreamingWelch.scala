@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming two-sample t statistics: the unbounded-stream twin of the
   * batch `d36_welch_ttest` and `d40_student_ttest` declared queries — a
@@ -50,37 +49,24 @@ object StreamingWelch {
     TOut(key, st.n1, st.n2, tW, dof, tP, vp)
   }
 
-  final class Processor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[String, TIn, TOut] {
-    @transient private var st: ValueState[TState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[TState]("t", Encoders.product[TState], ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[TIn],
-                                 timerValues: TimerValues): Iterator[TOut] = {
-      var s = Option(st.get()).getOrElse(TState(0L, 0L, 0L, 0L, 0L, 0L))
-      rows.foreach { r =>
-        s = if (r.arm == 0)
-          s.copy(n1 = s.n1 + 1L, s1 = s.s1 + r.cents,
-                 q1 = s.q1 + r.cents * r.cents)
-        else
-          s.copy(n2 = s.n2 + 1L, s2 = s.s2 + r.cents,
-                 q2 = s.q2 + r.cents * r.cents)
-      }
-      st.update(s)
-      Iterator.single(stats(key, s))
-    }
-  }
-
   /** Per-key running Welch + pooled t statistics over an unbounded stream
     * (RocksDB state store provider, like every transformWithState
     * operator here). */
   def monitor(values: Dataset[TIn], ttl: TTLConfig = TTLConfig.NONE)
              (implicit s: SparkSession): Dataset[TOut] = {
     import s.implicits._
-    values.groupByKey(_.key)
-      .transformWithState(new Processor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(values.groupByKey(_.key), "t", ttl) {
+      (key, prior: Option[TState], rows) =>
+        var st = prior.getOrElse(TState(0L, 0L, 0L, 0L, 0L, 0L))
+        rows.foreach { r =>
+          st = if (r.arm == 0)
+            st.copy(n1 = st.n1 + 1L, s1 = st.s1 + r.cents,
+                    q1 = st.q1 + r.cents * r.cents)
+          else
+            st.copy(n2 = st.n2 + 1L, s2 = st.s2 + r.cents,
+                    q2 = st.q2 + r.cents * r.cents)
+        }
+        (Some(st), Iterator.single(stats(key, st)))
+    }
   }
 }

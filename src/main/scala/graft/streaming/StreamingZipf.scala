@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
-  TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.TTLConfig
 
 /** Streaming twin of k60's per-source Zipf fit: the (source, token)
   * frequency SPECTRUM carried as running state over an unbounded
@@ -39,35 +38,20 @@ object StreamingZipf {
     d.text.split(" ", -1).groupBy(identity).iterator
       .map { case (t, occ) => TokRow(d.source, t, occ.length.toLong) }.toSeq
 
-  /** Keyed by (source, token): running count += the batch's occurrences,
-    * one post-batch emission per touched key. */
-  final class SpectrumProcessor(ttl: TTLConfig = TTLConfig.NONE)
-      extends StatefulProcessor[(String, String), TokRow, SpectrumOut] {
-    @transient private var st: ValueState[Count] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[Count]("c", Encoders.product[Count], ttl)
-
-    override def handleInputRows(key: (String, String), rows: Iterator[TokRow],
-                                 timerValues: TimerValues): Iterator[SpectrumOut] = {
-      var add = 0L
-      rows.foreach(add += _.c)
-      val next = Option(st.get()).map(_.n).getOrElse(0L) + add
-      st.update(Count(next))
-      Iterator.single(SpectrumOut(key._1, key._2, next))
-    }
-  }
-
   /** Running (source, token) → count spectrum over an unbounded document
     * stream (RocksDB state store provider required). The only shuffle is
     * the groupByKey on (source, token) — the batch plan's one type-level
-    * exchange. */
+    * exchange. Keyed by (source, token): running count += the batch's
+    * occurrences, one post-batch emission per touched key. */
   def spectrum(docs: Dataset[DocIn], ttl: TTLConfig = TTLConfig.NONE)
               (implicit s: SparkSession): Dataset[SpectrumOut] = {
     import s.implicits._
-    docs.flatMap(tf)
-      .groupByKey(r => (r.source, r.t))
-      .transformWithState(new SpectrumProcessor(ttl),
-                          StreamOps.timeModeFor(ttl), OutputMode.Update())
+    StreamOps.keyedFold(docs.flatMap(tf).groupByKey(r => (r.source, r.t)), "c", ttl) {
+      (key, prior: Option[Count], rows) =>
+        var add = 0L
+        rows.foreach(add += _.c)
+        val next = prior.map(_.n).getOrElse(0L) + add
+        (Some(Count(next)), Iterator.single(SpectrumOut(key._1, key._2, next)))
+    }
   }
 }

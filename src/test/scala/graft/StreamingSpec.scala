@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 import graft.connectors.CdcEvent
 import graft.streaming.StreamOps
 
@@ -16,21 +16,23 @@ class StreamingSpec extends SparkSpec {
   private def ts(minutes: Int): Timestamp =
     new Timestamp(1704067200000L + minutes * 60000L) // 2024-01-01 00:00 UTC
 
-  /** Run `body` with the RocksDB state-store provider set, restoring the
-    * prior conf afterwards — INCLUDING when query construction/start
-    * throws (the inline save/set/restore blocks the older tests carry
-    * leak the conf on a start failure because the .start() sits before
-    * the try; new transformWithState tests should use this instead). */
-  private def withRocksDbProvider[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
+  /** Run `body` with the session conf `key` set to `value`, restoring the
+    * prior setting afterwards — INCLUDING when query construction/start
+    * throws, so a failing test cannot leak the setting into later suites. */
+  private def withConf[A](key: String, value: String)(body: => A): A = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(key, value)
     try body finally prev match {
       case Some(p) => spark.conf.set(key, p)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Run `body` with the RocksDB state-store provider that every
+    * transformWithState operator needs (see [[withConf]]). */
+  private def withRocksDbProvider[A](body: => A): A =
+    withConf("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   case class Ev(event_id: Long, user_id: Long, ts: Timestamp, value: Double)
 
@@ -101,34 +103,26 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[CdcEvent]
-    val q = StreamOps.latestPerKeyTws(in.toDS()).writeStream
-      .format("memory").queryName("tws_t").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(CdcEvent(1, 10, 1000, "c", "v1"), CdcEvent(2, 11, 1000, "c", "w1"))
-      q.processAllAvailable()
-      in.addData(CdcEvent(1, 12, 2000, "u", "v2")) // newer → emit
-      in.addData(CdcEvent(2, 9, 500, "u", "stale")) // older → suppressed
-      in.addData(CdcEvent(3, 13, 3000, "c", "x1"))  // separate batch: emit
-      q.processAllAvailable()
-      in.addData(CdcEvent(3, 14, 4000, "d", "gone")) // tombstone: suppressed
-      q.processAllAvailable()
-      val emitted = spark.table("tws_t").collect()
-        .map(r => (r.getAs[Long]("key"), r.getAs[String]("payload")))
-      assert(emitted.count(_._1 == 1L) == 2) // v1 then v2
-      assert(emitted.filter(_._1 == 2L).map(_._2).toSeq == Seq("w1"))
-      // key 3: create emitted, tombstone suppressed
-      assert(emitted.filter(_._1 == 3L).map(_._2).toSeq == Seq("x1"))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[CdcEvent]
+      val q = StreamOps.latestPerKeyTws(in.toDS()).writeStream
+        .format("memory").queryName("tws_t").outputMode(OutputMode.Append).start()
+      try {
+        in.addData(CdcEvent(1, 10, 1000, "c", "v1"), CdcEvent(2, 11, 1000, "c", "w1"))
+        q.processAllAvailable()
+        in.addData(CdcEvent(1, 12, 2000, "u", "v2")) // newer → emit
+        in.addData(CdcEvent(2, 9, 500, "u", "stale")) // older → suppressed
+        in.addData(CdcEvent(3, 13, 3000, "c", "x1"))  // separate batch: emit
+        q.processAllAvailable()
+        in.addData(CdcEvent(3, 14, 4000, "d", "gone")) // tombstone: suppressed
+        q.processAllAvailable()
+        val emitted = spark.table("tws_t").collect()
+          .map(r => (r.getAs[Long]("key"), r.getAs[String]("payload")))
+        assert(emitted.count(_._1 == 1L) == 2) // v1 then v2
+        assert(emitted.filter(_._1 == 2L).map(_._2).toSeq == Seq("w1"))
+        // key 3: create emitted, tombstone suppressed
+        assert(emitted.filter(_._1 == 3L).map(_._2).toSeq == Seq("x1"))
+      } finally { q.stop() }
     }
   }
 
@@ -156,36 +150,29 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DocIn]
-    val q = StreamingNearDedup.dedupStream(in.toDS(), maxHamming = 6).writeStream
-      .format("memory").queryName("neardup_t").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        DocIn(1, "the quick brown fox jumps over the lazy dog"),
-        DocIn(2, "completely unrelated corpus text about spark shuffles and parquet"))
-      q.processAllAvailable()
-      // same token set as doc 1, reordered → Hamming 0 against the corpus
-      in.addData(
-        DocIn(3, "lazy dog the quick brown fox jumps over"),
-        DocIn(4, "yet another disjoint document mentioning clickhouse replication"))
-      q.processAllAvailable()
-      val hits = spark.table("neardup_t").as[DupHit].collect()
-        .map(h => (h.doc_id, h.dup_of, h.hamming)).toSet
-      assert(hits.contains((3L, 1L, 0)),
-        s"re-ingested near-dup must be flagged against the accumulated corpus: $hits")
-      assert(!hits.exists(h => h._1 == 2L || h._1 == 4L),
-        s"distinct docs must pass clean: $hits")
-      // a doc never dups against itself, and earlier docs are never re-flagged
-      assert(!hits.exists(h => h._1 == h._2) && !hits.exists(_._1 == 1L))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[DocIn]
+      val q = StreamingNearDedup.dedupStream(in.toDS(), maxHamming = 6).writeStream
+        .format("memory").queryName("neardup_t").outputMode(OutputMode.Append).start()
+      try {
+        in.addData(
+          DocIn(1, "the quick brown fox jumps over the lazy dog"),
+          DocIn(2, "completely unrelated corpus text about spark shuffles and parquet"))
+        q.processAllAvailable()
+        // same token set as doc 1, reordered → Hamming 0 against the corpus
+        in.addData(
+          DocIn(3, "lazy dog the quick brown fox jumps over"),
+          DocIn(4, "yet another disjoint document mentioning clickhouse replication"))
+        q.processAllAvailable()
+        val hits = spark.table("neardup_t").as[DupHit].collect()
+          .map(h => (h.doc_id, h.dup_of, h.hamming)).toSet
+        assert(hits.contains((3L, 1L, 0)),
+          s"re-ingested near-dup must be flagged against the accumulated corpus: $hits")
+        assert(!hits.exists(h => h._1 == 2L || h._1 == 4L),
+          s"distinct docs must pass clean: $hits")
+        // a doc never dups against itself, and earlier docs are never re-flagged
+        assert(!hits.exists(h => h._1 == h._2) && !hits.exists(_._1 == 1L))
+      } finally { q.stop() }
     }
   }
 
@@ -196,33 +183,26 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DocIn]
-    val q = StreamingNearDedup.dedupStream(in.toDS(), maxHamming = 6).writeStream
-      .format("memory").queryName("replay_t").outputMode(OutputMode.Append).start()
-    try {
-      val d1 = DocIn(1, "alpha beta gamma delta epsilon zeta")
-      in.addData(d1)
-      q.processAllAvailable()
-      in.addData(d1) // replayed delivery: must neither emit nor duplicate state
-      q.processAllAvailable()
-      // identical token set → collides with doc 1 in all 4 bands: exactly
-      // 4 hit rows if state holds ONE entry for doc 1, 8 if the replay
-      // duplicated it
-      in.addData(DocIn(2, "zeta epsilon delta gamma beta alpha"))
-      q.processAllAvailable()
-      val hits = spark.table("replay_t").as[DupHit].collect()
-      assert(!hits.exists(_.doc_id == 1L), s"replay must not re-emit: ${hits.toSeq}")
-      assert(hits.count(h => h.doc_id == 2L && h.dup_of == 1L) == 4,
-        s"duplicated state would double the per-band hits: ${hits.toSeq}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[DocIn]
+      val q = StreamingNearDedup.dedupStream(in.toDS(), maxHamming = 6).writeStream
+        .format("memory").queryName("replay_t").outputMode(OutputMode.Append).start()
+      try {
+        val d1 = DocIn(1, "alpha beta gamma delta epsilon zeta")
+        in.addData(d1)
+        q.processAllAvailable()
+        in.addData(d1) // replayed delivery: must neither emit nor duplicate state
+        q.processAllAvailable()
+        // identical token set → collides with doc 1 in all 4 bands: exactly
+        // 4 hit rows if state holds ONE entry for doc 1, 8 if the replay
+        // duplicated it
+        in.addData(DocIn(2, "zeta epsilon delta gamma beta alpha"))
+        q.processAllAvailable()
+        val hits = spark.table("replay_t").as[DupHit].collect()
+        assert(!hits.exists(_.doc_id == 1L), s"replay must not re-emit: ${hits.toSeq}")
+        assert(hits.count(h => h.doc_id == 2L && h.dup_of == 1L) == 4,
+          s"duplicated state would double the per-band hits: ${hits.toSeq}")
+      } finally { q.stop() }
     }
   }
 
@@ -251,29 +231,22 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DocIn]
-    val q = StreamingNearDedup.minhashDedupStream(in.toDS()).writeStream
-      .format("memory").queryName("mh_dedup_t").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(
-        DocIn(1, "the quick brown fox jumps over the lazy dog"),
-        DocIn(2, "completely unrelated corpus text about spark shuffles"))
-      q.processAllAvailable()
-      // identical token SET (minhash is set-invariant) → same band
-      in.addData(DocIn(3, "dog lazy the over jumps fox brown quick the"))
-      q.processAllAvailable()
-      val hits = spark.table("mh_dedup_t").as[MinHashHit].collect()
-        .map(h => (h.doc_id, h.dup_of)).toSet
-      assert(hits == Set((3L, 1L)), s"expected exactly the re-ingest hit: $hits")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[DocIn]
+      val q = StreamingNearDedup.minhashDedupStream(in.toDS()).writeStream
+        .format("memory").queryName("mh_dedup_t").outputMode(OutputMode.Append).start()
+      try {
+        in.addData(
+          DocIn(1, "the quick brown fox jumps over the lazy dog"),
+          DocIn(2, "completely unrelated corpus text about spark shuffles"))
+        q.processAllAvailable()
+        // identical token SET (minhash is set-invariant) → same band
+        in.addData(DocIn(3, "dog lazy the over jumps fox brown quick the"))
+        q.processAllAvailable()
+        val hits = spark.table("mh_dedup_t").as[MinHashHit].collect()
+          .map(h => (h.doc_id, h.dup_of)).toSet
+        assert(hits == Set((3L, 1L)), s"expected exactly the re-ingest hit: $hits")
+      } finally { q.stop() }
     }
   }
 
@@ -612,51 +585,44 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val t = 0.6
-    // the real fixture corpus, streamed in doc_id order across 3 micro-batches
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "text", "source").collect()
-      .map(r => PpDoc(r.getLong(0), r.getString(1), r.getString(2)))
-      .sortBy(_.doc_id)
-    val in = MemoryStream[PpDoc]
-    val q = StreamingPpJoin.dedupStream(in.toDS(), threshold = t).writeStream
-      .format("memory").queryName("ppjoin_t").outputMode(OutputMode.Append).start()
-    try {
-      val third = (docs.length + 2) / 3
-      docs.grouped(third).foreach { chunk =>
-        in.addData(chunk.toIndexedSeq: _*)
+    withRocksDbProvider {
+      val t = 0.6
+      // the real fixture corpus, streamed in doc_id order across 3 micro-batches
+      val docs = Tables.documents(spark, sf0001)
+        .select("doc_id", "text", "source").collect()
+        .map(r => PpDoc(r.getLong(0), r.getString(1), r.getString(2)))
+        .sortBy(_.doc_id)
+      val in = MemoryStream[PpDoc]
+      val q = StreamingPpJoin.dedupStream(in.toDS(), threshold = t).writeStream
+        .format("memory").queryName("ppjoin_t").outputMode(OutputMode.Append).start()
+      try {
+        val third = (docs.length + 2) / 3
+        docs.grouped(third).foreach { chunk =>
+          in.addData(chunk.toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+        // replayed delivery (at-least-once): must add nothing
+        in.addData(docs.head)
         q.processAllAvailable()
-      }
-      // replayed delivery (at-least-once): must add nothing
-      in.addData(docs.head)
-      q.processAllAvailable()
-      // one hit may arrive per shared prefix token — dedup to pairs, then
-      // compare UNORDERED pairs + jaccard against the oracle-anchored batch
-      // exact join over the same corpus and blocking
-      val flagged = spark.table("ppjoin_t").as[PpHit].collect()
-        .map(h => (math.min(h.doc_id, h.dup_of), math.max(h.doc_id, h.dup_of),
-                   math.round(h.jaccard * 1e9)))
-        .toSet
-      val batch = graft.api.Dedup.tokenJaccardPairs(
-          Tables.documents(spark, sf0001), "doc_id", "text", "source", t)
-        .collect()
-        .map(r => (math.min(r.getLong(0), r.getLong(1)),
-                   math.max(r.getLong(0), r.getLong(1)),
-                   math.round(r.getDouble(2) * 1e9)))
-        .toSet
-      assert(batch.nonEmpty, "fixture must contain exact near-dups")
-      assert(flagged == batch,
-        s"streaming PPJoin must equal the batch exact join: " +
-          s"missed ${(batch -- flagged).take(5)}, extra ${(flagged -- batch).take(5)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        // one hit may arrive per shared prefix token — dedup to pairs, then
+        // compare UNORDERED pairs + jaccard against the oracle-anchored batch
+        // exact join over the same corpus and blocking
+        val flagged = spark.table("ppjoin_t").as[PpHit].collect()
+          .map(h => (math.min(h.doc_id, h.dup_of), math.max(h.doc_id, h.dup_of),
+                     math.round(h.jaccard * 1e9)))
+          .toSet
+        val batch = graft.api.Dedup.tokenJaccardPairs(
+            Tables.documents(spark, sf0001), "doc_id", "text", "source", t)
+          .collect()
+          .map(r => (math.min(r.getLong(0), r.getLong(1)),
+                     math.max(r.getLong(0), r.getLong(1)),
+                     math.round(r.getDouble(2) * 1e9)))
+          .toSet
+        assert(batch.nonEmpty, "fixture must contain exact near-dups")
+        assert(flagged == batch,
+          s"streaming PPJoin must equal the batch exact join: " +
+            s"missed ${(batch -- flagged).take(5)}, extra ${(flagged -- batch).take(5)}")
+      } finally { q.stop() }
     }
   }
 
@@ -667,54 +633,47 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[EventIn]
-    val q = StreamingSequenceCount.chainCounts(in.toDS()).writeStream
-      .format("memory").queryName("seqcount_t").outputMode(OutputMode.Update).start()
-    // per-user event logs, cut mid-chain at the batch boundary: user 1 has an
-    // open signup straddling the batches, user 2 closes before opening, user 3
-    // sees purchases only
-    val batch1 = Seq(
-      EventIn(1, 100, 1, "signup"), EventIn(1, 200, 2, "purchase"),
-      EventIn(1, 300, 3, "signup"),                         // still open
-      EventIn(2, 100, 4, "purchase"), EventIn(2, 200, 5, "signup"),
-      EventIn(3, 100, 6, "purchase"),
-      // out-of-order arrival inside one batch: must sort by (ts, event_id)
-      EventIn(4, 200, 8, "purchase"), EventIn(4, 100, 7, "signup"))
-    val batch2 = Seq(
-      EventIn(1, 400, 9, "purchase"),  // closes the straddling chain
-      EventIn(1, 500, 10, "purchase"), // nothing open → no match
-      EventIn(2, 300, 11, "purchase"), // closes batch-1's signup
-      EventIn(3, 200, 12, "purchase"))
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      // last emission per user is the running total
-      val got = spark.table("seqcount_t").as[ChainCount].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.last.n_chains }
-      // brute-force greedy over the full concatenated log (the semantic the
-      // bracket identity is property-proven equal to)
-      val expected = (batch1 ++ batch2).groupBy(_.user_id).map { case (u, evs) =>
-        var open = 0L; var matched = 0L
-        evs.sortBy(e => (e.ts_micros, e.event_id)).foreach {
-          case e if e.event_type == "signup" => open += 1
-          case e if e.event_type == "purchase" && open > 0 =>
-            open -= 1; matched += 1
-          case _ => ()
+    withRocksDbProvider {
+      val in = MemoryStream[EventIn]
+      val q = StreamingSequenceCount.chainCounts(in.toDS()).writeStream
+        .format("memory").queryName("seqcount_t").outputMode(OutputMode.Update).start()
+      // per-user event logs, cut mid-chain at the batch boundary: user 1 has an
+      // open signup straddling the batches, user 2 closes before opening, user 3
+      // sees purchases only
+      val batch1 = Seq(
+        EventIn(1, 100, 1, "signup"), EventIn(1, 200, 2, "purchase"),
+        EventIn(1, 300, 3, "signup"),                         // still open
+        EventIn(2, 100, 4, "purchase"), EventIn(2, 200, 5, "signup"),
+        EventIn(3, 100, 6, "purchase"),
+        // out-of-order arrival inside one batch: must sort by (ts, event_id)
+        EventIn(4, 200, 8, "purchase"), EventIn(4, 100, 7, "signup"))
+      val batch2 = Seq(
+        EventIn(1, 400, 9, "purchase"),  // closes the straddling chain
+        EventIn(1, 500, 10, "purchase"), // nothing open → no match
+        EventIn(2, 300, 11, "purchase"), // closes batch-1's signup
+        EventIn(3, 200, 12, "purchase"))
+      try {
+        in.addData(batch1: _*); q.processAllAvailable()
+        in.addData(batch2: _*); q.processAllAvailable()
+        // last emission per user is the running total
+        val got = spark.table("seqcount_t").as[ChainCount].collect()
+          .groupBy(_.user_id).map { case (u, rows) => u -> rows.last.n_chains }
+        // brute-force greedy over the full concatenated log (the semantic the
+        // bracket identity is property-proven equal to)
+        val expected = (batch1 ++ batch2).groupBy(_.user_id).map { case (u, evs) =>
+          var open = 0L; var matched = 0L
+          evs.sortBy(e => (e.ts_micros, e.event_id)).foreach {
+            case e if e.event_type == "signup" => open += 1
+            case e if e.event_type == "purchase" && open > 0 =>
+              open -= 1; matched += 1
+            case _ => ()
+          }
+          u -> matched
         }
-        u -> matched
-      }
-      assert(got == expected,
-        s"streaming chain counts must equal batch greedy: got $got, want $expected")
-      assert(got(3L) == 0L && got(1L) == 2L && got(2L) == 1L && got(4L) == 1L)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        assert(got == expected,
+          s"streaming chain counts must equal batch greedy: got $got, want $expected")
+        assert(got(3L) == 0L && got(1L) == 2L && got(2L) == 1L && got(4L) == 1L)
+      } finally { q.stop() }
     }
   }
 
@@ -725,48 +684,41 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[IntervalIn]
-    val q = StreamingIntervalUnion.coverage(in.toDS()).writeStream
-      .format("memory").queryName("ivu_t").outputMode(OutputMode.Update).start()
-    // user 1: overlap inside batch 1, then a batch-2 interval overlapping the
-    // batch-1 frontier; user 2: containment + duplicate; user 3: zero-length
-    // plus disjoint; out-of-order arrival inside batch 1 exercises the sort
-    val batch1 = Seq(
-      IntervalIn(1, 10, 20, 2), IntervalIn(1, 0, 15, 1),
-      IntervalIn(2, 0, 100, 3), IntervalIn(2, 10, 50, 4), IntervalIn(2, 0, 100, 5),
-      IntervalIn(3, 5, 5, 6))
-    val batch2 = Seq(
-      IntervalIn(1, 15, 30, 7),  // overlaps the persisted frontier (20)
-      IntervalIn(3, 10, 12, 8))
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val got = spark.table("ivu_t").as[Coverage].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.last.covered }
-      // brute force: merged-interval union over the full log (the law
-      // PropertiesSpec proves equal to the e13 sweep)
-      val expected = (batch1 ++ batch2).filter(iv => iv.end > iv.start)
-        .groupBy(_.user_id).map { case (u, ivs) =>
-          val sorted = ivs.map(iv => (iv.start, iv.end)).sortBy(identity)
-          val merged = sorted.foldLeft(List.empty[(Long, Long)]) {
-            case ((ms, me) :: tail, (st2, e)) if st2 <= me =>
-              (ms, math.max(me, e)) :: tail
-            case (acc, (st2, e)) => (st2, e) :: acc
+    withRocksDbProvider {
+      val in = MemoryStream[IntervalIn]
+      val q = StreamingIntervalUnion.coverage(in.toDS()).writeStream
+        .format("memory").queryName("ivu_t").outputMode(OutputMode.Update).start()
+      // user 1: overlap inside batch 1, then a batch-2 interval overlapping the
+      // batch-1 frontier; user 2: containment + duplicate; user 3: zero-length
+      // plus disjoint; out-of-order arrival inside batch 1 exercises the sort
+      val batch1 = Seq(
+        IntervalIn(1, 10, 20, 2), IntervalIn(1, 0, 15, 1),
+        IntervalIn(2, 0, 100, 3), IntervalIn(2, 10, 50, 4), IntervalIn(2, 0, 100, 5),
+        IntervalIn(3, 5, 5, 6))
+      val batch2 = Seq(
+        IntervalIn(1, 15, 30, 7),  // overlaps the persisted frontier (20)
+        IntervalIn(3, 10, 12, 8))
+      try {
+        in.addData(batch1: _*); q.processAllAvailable()
+        in.addData(batch2: _*); q.processAllAvailable()
+        val got = spark.table("ivu_t").as[Coverage].collect()
+          .groupBy(_.user_id).map { case (u, rows) => u -> rows.last.covered }
+        // brute force: merged-interval union over the full log (the law
+        // PropertiesSpec proves equal to the e13 sweep)
+        val expected = (batch1 ++ batch2).filter(iv => iv.end > iv.start)
+          .groupBy(_.user_id).map { case (u, ivs) =>
+            val sorted = ivs.map(iv => (iv.start, iv.end)).sortBy(identity)
+            val merged = sorted.foldLeft(List.empty[(Long, Long)]) {
+              case ((ms, me) :: tail, (st2, e)) if st2 <= me =>
+                (ms, math.max(me, e)) :: tail
+              case (acc, (st2, e)) => (st2, e) :: acc
+            }
+            u -> merged.map { case (st2, e) => e - st2 }.sum
           }
-          u -> merged.map { case (st2, e) => e - st2 }.sum
-        }
-      assert(got == expected,
-        s"streaming coverage must equal batch union: got $got, want $expected")
-      assert(got(1L) == 30L && got(2L) == 100L && got(3L) == 2L)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        assert(got == expected,
+          s"streaming coverage must equal batch union: got $got, want $expected")
+        assert(got(1L) == 30L && got(2L) == 100L && got(3L) == 2L)
+      } finally { q.stop() }
     }
   }
 
@@ -777,58 +729,51 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val H = 3600L * 1000000L // one hour in micros
-    val in = MemoryStream[EventIn]
-    val q = StreamingFunnel.funnelDepth(in.toDS()).writeStream
-      .format("memory").queryName("funnel_t").outputMode(OutputMode.Update).start()
-    // user 1 completes the funnel across the batch cut; user 2's purchase is
-    // outside the 6h window of its anchor; user 3's view precedes any signup
-    // (never qualifies); user 4 stops at depth 2
-    val batch1 = Seq(
-      EventIn(1, 0 * H, 1, "signup"), EventIn(1, 1 * H, 2, "view"),
-      EventIn(2, 0 * H, 3, "signup"), EventIn(2, 1 * H, 4, "view"),
-      EventIn(3, 0 * H, 5, "view"),
-      EventIn(4, 0 * H, 6, "signup"))
-    val batch2 = Seq(
-      EventIn(1, 2 * H, 7, "purchase"),  // inside 6h of anchor → depth 3
-      EventIn(2, 8 * H, 8, "purchase"),  // outside 6h of anchor → stays 2
-      EventIn(3, 1 * H, 9, "signup"),    // anchor opens AFTER the view → 1
-      EventIn(4, 2 * H, 10, "view"))     // depth 2
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val got = spark.table("funnel_t").as[FunnelDepth].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.last.funnel_level }
-      // brute-force batch landmark rule over the full log (j05's semantics)
-      val W = 6 * H
-      val expected = (batch1 ++ batch2).groupBy(_.user_id).map { case (u, evs) =>
-        val sorted = evs.sortBy(e => (e.ts_micros, e.event_id))
-        val l1 = sorted.collectFirst {
-          case e if e.event_type == "signup" => e.ts_micros }
-        val l2 = l1.flatMap(a => sorted.collectFirst {
-          case e if e.event_type == "view" && e.ts_micros > a &&
-            e.ts_micros <= a + W => e.ts_micros })
-        val l3 = (l1, l2) match {
-          case (Some(a), Some(b)) => sorted.collectFirst {
-            case e if e.event_type == "purchase" && e.ts_micros > b &&
-              e.ts_micros <= a + W => e.ts_micros }
-          case _ => None
+    withRocksDbProvider {
+      val H = 3600L * 1000000L // one hour in micros
+      val in = MemoryStream[EventIn]
+      val q = StreamingFunnel.funnelDepth(in.toDS()).writeStream
+        .format("memory").queryName("funnel_t").outputMode(OutputMode.Update).start()
+      // user 1 completes the funnel across the batch cut; user 2's purchase is
+      // outside the 6h window of its anchor; user 3's view precedes any signup
+      // (never qualifies); user 4 stops at depth 2
+      val batch1 = Seq(
+        EventIn(1, 0 * H, 1, "signup"), EventIn(1, 1 * H, 2, "view"),
+        EventIn(2, 0 * H, 3, "signup"), EventIn(2, 1 * H, 4, "view"),
+        EventIn(3, 0 * H, 5, "view"),
+        EventIn(4, 0 * H, 6, "signup"))
+      val batch2 = Seq(
+        EventIn(1, 2 * H, 7, "purchase"),  // inside 6h of anchor → depth 3
+        EventIn(2, 8 * H, 8, "purchase"),  // outside 6h of anchor → stays 2
+        EventIn(3, 1 * H, 9, "signup"),    // anchor opens AFTER the view → 1
+        EventIn(4, 2 * H, 10, "view"))     // depth 2
+      try {
+        in.addData(batch1: _*); q.processAllAvailable()
+        in.addData(batch2: _*); q.processAllAvailable()
+        val got = spark.table("funnel_t").as[FunnelDepth].collect()
+          .groupBy(_.user_id).map { case (u, rows) => u -> rows.last.funnel_level }
+        // brute-force batch landmark rule over the full log (j05's semantics)
+        val W = 6 * H
+        val expected = (batch1 ++ batch2).groupBy(_.user_id).map { case (u, evs) =>
+          val sorted = evs.sortBy(e => (e.ts_micros, e.event_id))
+          val l1 = sorted.collectFirst {
+            case e if e.event_type == "signup" => e.ts_micros }
+          val l2 = l1.flatMap(a => sorted.collectFirst {
+            case e if e.event_type == "view" && e.ts_micros > a &&
+              e.ts_micros <= a + W => e.ts_micros })
+          val l3 = (l1, l2) match {
+            case (Some(a), Some(b)) => sorted.collectFirst {
+              case e if e.event_type == "purchase" && e.ts_micros > b &&
+                e.ts_micros <= a + W => e.ts_micros }
+            case _ => None
+          }
+          u -> (if (l3.isDefined) 3 else if (l2.isDefined) 2
+                else if (l1.isDefined) 1 else 0)
         }
-        u -> (if (l3.isDefined) 3 else if (l2.isDefined) 2
-              else if (l1.isDefined) 1 else 0)
-      }
-      assert(got == expected,
-        s"streaming funnel must equal batch landmarks: got $got, want $expected")
-      assert(got(1L) == 3 && got(2L) == 2 && got(3L) == 1 && got(4L) == 2)
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        assert(got == expected,
+          s"streaming funnel must equal batch landmarks: got $got, want $expected")
+        assert(got(1L) == 3 && got(2L) == 2 && got(3L) == 1 && got(4L) == 2)
+      } finally { q.stop() }
     }
   }
 
@@ -840,42 +785,42 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the fixture corpus with the SAME md5 split derivation as batch k34
-    val h1 = substring(md5(col("doc_id").cast("string")), 1, 1)
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"),
-              when(h1 <= "c", "train").when(h1 === "d", "val")
-                .otherwise("test").as("split"),
-              col("text"))
-      .as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingContamination.contaminationStream(in.toDS()).writeStream
-      .format("memory").queryName("contam_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
-      q.processAllAvailable()
-      val streamed = spark.table("contam_t").as[GramHit].collect()
-        .groupBy(_.doc_id)
-        .map { case (id, hs) =>
-          id -> ((hs.map(_.g).distinct.length.toLong, hs.map(_.contaminated_by).min))
-        }
-      val batch = PipelineOps.k34.fn(spark, sf0001).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_shared"), r.getAs[Long]("contaminated_by")))).toMap
-      assert(batch.nonEmpty, "fixture must contain contaminated docs")
-      assert(streamed == batch,
-        s"one-batch streaming rollup must equal batch k34: " +
-          s"streamOnly=${streamed.keySet -- batch.keySet} " +
-          s"batchOnly=${batch.keySet -- streamed.keySet}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the fixture corpus with the SAME md5 split derivation as batch k34
+      val h1 = substring(md5(col("doc_id").cast("string")), 1, 1)
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"),
+                when(h1 <= "c", "train").when(h1 === "d", "val")
+                  .otherwise("test").as("split"),
+                col("text"))
+        .as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingContamination.contaminationStream(in.toDS()).writeStream
+        .format("memory").queryName("contam_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
+        q.processAllAvailable()
+        val streamed = spark.table("contam_t").as[GramHit].collect()
+          .groupBy(_.doc_id)
+          .map { case (id, hs) =>
+            id -> ((hs.map(_.g).distinct.length.toLong, hs.map(_.contaminated_by).min))
+          }
+        val batch = PipelineOps.k34.fn(spark, sf0001).collect()
+          .map(r => r.getAs[Long]("doc_id") ->
+            ((r.getAs[Long]("n_shared"), r.getAs[Long]("contaminated_by")))).toMap
+        assert(batch.nonEmpty, "fixture must contain contaminated docs")
+        assert(streamed == batch,
+          s"one-batch streaming rollup must equal batch k34: " +
+            s"streamOnly=${streamed.keySet -- batch.keySet} " +
+            s"batchOnly=${batch.keySet -- streamed.keySet}")
+        // state only for grams some train doc produced: a fold that
+        // returns None (an eval-only gram) must write nothing
+        val trainGrams = docs.filter(_.split == "train")
+          .flatMap(d => StreamingContamination.grams(d.text)).distinct.length
+        assert(q.lastProgress.stateOperators(0).numRowsTotal == trainGrams,
+          s"contamination state must hold one row per train gram: " +
+            s"${q.lastProgress.stateOperators(0)}")
+      } finally { q.stop() }
     }
   }
 
@@ -960,27 +905,49 @@ class StreamingSpec extends SparkSpec {
     implicit val s = spark
     implicit val sq = spark.sqlContext
     val span = (1 to 20).map(i => s"w$i").mkString(" ")
-    withRocksDbProvider {
+    // one run per TTL setting; returns every emitted hit and the state
+    // rows written by the last micro-batch
+    def run(ttl: TTLConfig, name: String): (Seq[SpanHit], Long) = withRocksDbProvider {
       val in = MemoryStream[(Long, String)]
-      val q = StreamingSpanDedup.spanDupStream(in.toDS()).writeStream
-        .format("memory").queryName("spandup_xb_t")
+      val q = StreamingSpanDedup.spanDupStream(in.toDS(), ttl).writeStream
+        .format("memory").queryName(name)
         .outputMode(OutputMode.Update).start()
       try {
         // batch 1: the first holder alone — nothing is a duplicate yet
         in.addData((1L, span))
         q.processAllAvailable()
-        assert(spark.table("spandup_xb_t").as[SpanHit].collect().isEmpty,
+        assert(spark.table(name).as[SpanHit].collect().isEmpty,
           "the first holder must not be flagged")
         // batch 2: a second doc with the same span — ITS occurrence is
         // flagged (removed, keep-min witness = doc 1); doc 1 is NOT
         // retroactively flagged (the probe-at-arrival contract)
         in.addData((2L, span))
         q.processAllAvailable()
-        val hits = spark.table("spandup_xb_t").as[SpanHit].collect().toSeq
+        val hits = spark.table(name).as[SpanHit].collect().toSeq
         assert(hits == Seq(SpanHit(2L, 1, 1L, 1)),
           s"late duplicate must flag only itself against the state: $hits")
+        // batch 3: doc 2 redelivered — the digest's extremes stay (1, 2)
+        in.addData((2L, span))
+        q.processAllAvailable()
+        (spark.table(name).as[SpanHit].collect().toSeq,
+         q.lastProgress.stateOperators(0).numRowsUpdated)
       } finally { q.stop() }
     }
+    val (plain, plainWrites) = run(TTLConfig.NONE, "spandup_xb_t")
+    // a TTL puts the query on processing time, where transformWithState
+    // asks for a no-data batch on every trigger (timer/TTL eviction) and
+    // processAllAvailable would never see the stream idle
+    val (ttl, ttlWrites) =
+      withConf("spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+        run(TTLConfig(java.time.Duration.ofHours(1)), "spandup_xb_ttl_t")
+      }
+    def ordered(hs: Seq[SpanHit]) =
+      hs.sortBy(h => (h.doc_id, h.st, h.first_holder, h.removed))
+    assert(ordered(ttl) == ordered(plain),
+      s"a TTL must not change the emitted hits: $ttl vs $plain")
+    // unchanged extremes are rewritten only to refresh a TTL
+    assert(plainWrites == 0L && ttlWrites > 0L,
+      s"state writes on the replayed batch: NONE=$plainWrites TTL=$ttlWrites")
   }
 
   test("streaming contamination is probe-at-arrival across micro-batches") {
@@ -990,48 +957,41 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DocIn]
-    val q = StreamingContamination.contaminationStream(in.toDS()).writeStream
-      .format("memory").queryName("contam_xb_t").outputMode(OutputMode.Update).start()
-    try {
-      // batch 1: a train doc, and an eval doc sharing a gram with a train
-      // doc that only arrives LATER (doc 30's gram appears in batch-2 train)
-      in.addData(
-        DocIn(10, "train", "alpha beta gamma delta"),
-        DocIn(30, "test", "one two three four"))
-      q.processAllAvailable()
-      val afterB1 = spark.table("contam_xb_t").as[GramHit].collect()
-      assert(afterB1.isEmpty, s"no contamination visible yet: ${afterB1.toSeq}")
-      // batch 2: eval doc hits batch-1 train state (cross-batch flag); a
-      // later train doc carrying doc 30's gram must NOT retro-flag doc 30
-      in.addData(
-        DocIn(20, "val", "zzz alpha beta gamma yyy"),
-        DocIn(11, "train", "one two three xxx"))
-      q.processAllAvailable()
-      val hits = spark.table("contam_xb_t").as[GramHit].collect()
-      val byDoc = hits.groupBy(_.doc_id)
-      // doc 20 shares exactly "alpha beta gamma" with train doc 10
-      assert(byDoc.get(20L).exists(hs =>
-          hs.map(h => (h.g, h.contaminated_by)).toSet == Set(("alpha beta gamma", 10L))),
-        s"cross-batch contamination must flag: ${hits.toSeq}")
-      assert(!byDoc.contains(30L),
-        s"probe-at-arrival: later train must not retro-flag: ${hits.toSeq}")
-      // batch 3: same gram again from a NEW eval doc -> flagged by min train
-      in.addData(DocIn(40, "test", "prefix one two three suffix"))
-      q.processAllAvailable()
-      val hits3 = spark.table("contam_xb_t").as[GramHit].collect()
-      assert(hits3.exists(h => h.doc_id == 40L && h.g == "one two three"
-          && h.contaminated_by == 11L),
-        s"accumulated train state must flag later eval arrivals: ${hits3.toSeq}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[DocIn]
+      val q = StreamingContamination.contaminationStream(in.toDS()).writeStream
+        .format("memory").queryName("contam_xb_t").outputMode(OutputMode.Update).start()
+      try {
+        // batch 1: a train doc, and an eval doc sharing a gram with a train
+        // doc that only arrives LATER (doc 30's gram appears in batch-2 train)
+        in.addData(
+          DocIn(10, "train", "alpha beta gamma delta"),
+          DocIn(30, "test", "one two three four"))
+        q.processAllAvailable()
+        val afterB1 = spark.table("contam_xb_t").as[GramHit].collect()
+        assert(afterB1.isEmpty, s"no contamination visible yet: ${afterB1.toSeq}")
+        // batch 2: eval doc hits batch-1 train state (cross-batch flag); a
+        // later train doc carrying doc 30's gram must NOT retro-flag doc 30
+        in.addData(
+          DocIn(20, "val", "zzz alpha beta gamma yyy"),
+          DocIn(11, "train", "one two three xxx"))
+        q.processAllAvailable()
+        val hits = spark.table("contam_xb_t").as[GramHit].collect()
+        val byDoc = hits.groupBy(_.doc_id)
+        // doc 20 shares exactly "alpha beta gamma" with train doc 10
+        assert(byDoc.get(20L).exists(hs =>
+            hs.map(h => (h.g, h.contaminated_by)).toSet == Set(("alpha beta gamma", 10L))),
+          s"cross-batch contamination must flag: ${hits.toSeq}")
+        assert(!byDoc.contains(30L),
+          s"probe-at-arrival: later train must not retro-flag: ${hits.toSeq}")
+        // batch 3: same gram again from a NEW eval doc -> flagged by min train
+        in.addData(DocIn(40, "test", "prefix one two three suffix"))
+        q.processAllAvailable()
+        val hits3 = spark.table("contam_xb_t").as[GramHit].collect()
+        assert(hits3.exists(h => h.doc_id == 40L && h.g == "one two three"
+            && h.contaminated_by == 11L),
+          s"accumulated train state must flag later eval arrivals: ${hits3.toSeq}")
+      } finally { q.stop() }
     }
   }
 
@@ -1042,36 +1002,29 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[ValueIn]
-    val q = StreamingHeavyHitters.topK(in.toDS(), k = 3, capacity = 16).writeStream
-      .format("memory").queryName("hh_exact_t").outputMode(OutputMode.Update).start()
-    // capacity 16 > 4 distinct values -> MG degenerates to exact counting,
-    // so the streaming result must EQUAL the batch count across batches
-    val batch1 = Seq("a", "a", "b", "c", "a", "b").zipWithIndex
-      .map { case (v, i) => ValueIn("g1", i.toLong, v) }
-    val batch2 = (Seq("b", "b", "d", "a").zipWithIndex)
-      .map { case (v, i) => ValueIn("g1", 100L + i, v) }
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val all = (batch1 ++ batch2).map(_.value)
-      val exact = all.groupBy(identity).map { case (v, xs) => v -> xs.size.toLong }
-      val last = spark.table("hh_exact_t").as[Hitter].collect()
-        .filter(_.n_rows == all.size) // final batch's emission
-      assert(last.map(h => h.value -> h.approx_count).toMap ==
-        exact.toSeq.sortBy { case (v, c) => (-c, v) }.take(3).toMap,
-        s"exact-regime streaming top-3 must equal batch counts: ${last.toSeq}")
-      assert(last.sortBy(_.rank).map(_.value).toSeq == Seq("a", "b", "c"),
-        s"ranks must follow (count desc, value asc): ${last.toSeq}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[ValueIn]
+      val q = StreamingHeavyHitters.topK(in.toDS(), k = 3, capacity = 16).writeStream
+        .format("memory").queryName("hh_exact_t").outputMode(OutputMode.Update).start()
+      // capacity 16 > 4 distinct values -> MG degenerates to exact counting,
+      // so the streaming result must EQUAL the batch count across batches
+      val batch1 = Seq("a", "a", "b", "c", "a", "b").zipWithIndex
+        .map { case (v, i) => ValueIn("g1", i.toLong, v) }
+      val batch2 = (Seq("b", "b", "d", "a").zipWithIndex)
+        .map { case (v, i) => ValueIn("g1", 100L + i, v) }
+      try {
+        in.addData(batch1: _*); q.processAllAvailable()
+        in.addData(batch2: _*); q.processAllAvailable()
+        val all = (batch1 ++ batch2).map(_.value)
+        val exact = all.groupBy(identity).map { case (v, xs) => v -> xs.size.toLong }
+        val last = spark.table("hh_exact_t").as[Hitter].collect()
+          .filter(_.n_rows == all.size) // final batch's emission
+        assert(last.map(h => h.value -> h.approx_count).toMap ==
+          exact.toSeq.sortBy { case (v, c) => (-c, v) }.take(3).toMap,
+          s"exact-regime streaming top-3 must equal batch counts: ${last.toSeq}")
+        assert(last.sortBy(_.rank).map(_.value).toSeq == Seq("a", "b", "c"),
+          s"ranks must follow (count desc, value asc): ${last.toSeq}")
+      } finally { q.stop() }
     }
   }
 
@@ -1082,41 +1035,34 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[ValueIn]
-    val cap = 4
-    val q = StreamingHeavyHitters.topK(in.toDS(), k = 4, capacity = cap).writeStream
-      .format("memory").queryName("hh_mg_t").outputMode(OutputMode.Update).start()
-    // 60 rows: "hot" 24x (40% > n/(cap+1) = 20%) must survive the capped
-    // summary; 30 distinct cold values force constant counter eviction
-    val hot = Seq.fill(24)("hot")
-    val warm = Seq.fill(6)("warm")
-    val cold = (0 until 30).map(i => s"cold$i")
-    val rows = (hot ++ warm ++ cold).zipWithIndex
-      .map { case (v, i) => ValueIn("g1", i.toLong, v) }
-    val (b1, b2) = rows.splitAt(25) // batch boundary mid-stream
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val n = rows.size.toLong
-      val last = spark.table("hh_mg_t").as[Hitter].collect().filter(_.n_rows == n)
-      val hotRow = last.find(_.value == "hot")
-      assert(hotRow.isDefined,
-        s"freq 24/60 > n/(capacity+1): 'hot' must survive: ${last.toSeq}")
-      val slack = n / (cap + 1)
-      last.foreach { h =>
-        val truth = rows.count(_.value == h.value).toLong
-        assert(h.approx_count <= truth && h.approx_count >= truth - slack,
-          s"count for ${h.value}: got ${h.approx_count}, truth $truth, slack $slack")
-      }
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[ValueIn]
+      val cap = 4
+      val q = StreamingHeavyHitters.topK(in.toDS(), k = 4, capacity = cap).writeStream
+        .format("memory").queryName("hh_mg_t").outputMode(OutputMode.Update).start()
+      // 60 rows: "hot" 24x (40% > n/(cap+1) = 20%) must survive the capped
+      // summary; 30 distinct cold values force constant counter eviction
+      val hot = Seq.fill(24)("hot")
+      val warm = Seq.fill(6)("warm")
+      val cold = (0 until 30).map(i => s"cold$i")
+      val rows = (hot ++ warm ++ cold).zipWithIndex
+        .map { case (v, i) => ValueIn("g1", i.toLong, v) }
+      val (b1, b2) = rows.splitAt(25) // batch boundary mid-stream
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val n = rows.size.toLong
+        val last = spark.table("hh_mg_t").as[Hitter].collect().filter(_.n_rows == n)
+        val hotRow = last.find(_.value == "hot")
+        assert(hotRow.isDefined,
+          s"freq 24/60 > n/(capacity+1): 'hot' must survive: ${last.toSeq}")
+        val slack = n / (cap + 1)
+        last.foreach { h =>
+          val truth = rows.count(_.value == h.value).toLong
+          assert(h.approx_count <= truth && h.approx_count >= truth - slack,
+            s"count for ${h.value}: got ${h.approx_count}, truth $truth, slack $slack")
+        }
+      } finally { q.stop() }
     }
   }
 
@@ -1127,37 +1073,30 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input rows: event_type + cents of value
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("event_type"), col("event_id"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => TimingIn(r.getString(0), r.getLong(1), r.getLong(2)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // batch boundary mid-stream
-    val in = MemoryStream[TimingIn]
-    val q = StreamingTimingQuantiles.quantiles(in.toDS()).writeStream
-      .format("memory").queryName("tq_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round8dOps.d28.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-      val nPerGroup = rows.groupBy(_.group).map { case (g, xs) => g -> xs.size.toLong }
-      val last = spark.table("tq_t").as[TimingQuantiles].collect()
-        .filter(t => t.n == nPerGroup(t.group)) // final emission per group
-        .map(t => t.group -> ((t.p50_ms, t.p90_ms, t.p99_ms, t.n))).toMap
-      assert(last == batch,
-        s"streaming final state must equal batch d28: stream=$last batch=$batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input rows: event_type + cents of value
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("event_type"), col("event_id"),
+          (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+        .collect()
+        .map(r => TimingIn(r.getString(0), r.getLong(1), r.getLong(2)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // batch boundary mid-stream
+      val in = MemoryStream[TimingIn]
+      val q = StreamingTimingQuantiles.quantiles(in.toDS()).writeStream
+        .format("memory").queryName("tq_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round8dOps.d28.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) ->
+            ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+        val nPerGroup = rows.groupBy(_.group).map { case (g, xs) => g -> xs.size.toLong }
+        val last = spark.table("tq_t").as[TimingQuantiles].collect()
+          .filter(t => t.n == nPerGroup(t.group)) // final emission per group
+          .map(t => t.group -> ((t.p50_ms, t.p90_ms, t.p99_ms, t.n))).toMap
+        assert(last == batch,
+          s"streaming final state must equal batch d28: stream=$last batch=$batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1168,38 +1107,34 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input rows, in its (ts, event_id) total order —
-    // the in-order-replay regime the parity contract requires
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"), col("event_id"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => EmaIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(r => (r.tsUs, r.eventId))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // cut preserves per-key order
-    val in = MemoryStream[EmaIn]
-    val q = StreamingEma.ema(in.toDS()).writeStream
-      .format("memory").queryName("ema_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round8gOps.e20.fn(spark, sf0001).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3), r.getLong(1)))).toMap
-      val nPerKey = rows.groupBy(_.key).map { case (k, xs) => k -> xs.size.toLong }
-      val last = spark.table("ema_t").as[EmaOut].collect()
-        .filter(o => o.n == nPerKey(o.key)) // final emission per key
-        .map(o => o.key -> ((o.ema_scaled, o.ema_cents, o.n))).toMap
-      assert(last == batch,
-        s"streaming final state must equal batch e20: stream=$last batch=$batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input rows, in its (ts, event_id) total order —
+      // the in-order-replay regime the parity contract requires
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"), col("event_id"),
+          (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+        .collect()
+        .map(r => EmaIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sortBy(r => (r.tsUs, r.eventId))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // cut preserves per-key order
+      val in = MemoryStream[EmaIn]
+      val q = StreamingEma.ema(in.toDS()).writeStream
+        .format("memory").queryName("ema_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round8gOps.e20.fn(spark, sf0001).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3), r.getLong(1)))).toMap
+        val nPerKey = rows.groupBy(_.key).map { case (k, xs) => k -> xs.size.toLong }
+        val last = spark.table("ema_t").as[EmaOut].collect()
+          .filter(o => o.n == nPerKey(o.key)) // final emission per key
+          .map(o => o.key -> ((o.ema_scaled, o.ema_cents, o.n))).toMap
+        assert(last == batch,
+          s"streaming final state must equal batch e20: stream=$last batch=$batch")
+        // the "bounded state" claim, observed: one state row per key
+        assert(q.lastProgress.stateOperators(0).numRowsTotal == nPerKey.size,
+          s"EMA state must hold one row per key: ${q.lastProgress.stateOperators(0)}")
+      } finally { q.stop() }
     }
   }
 
@@ -1210,56 +1145,49 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"), col("event_id"),
-        when(col("event_type") === "signup", 1)
-          .when(col("event_type") === "click", 2)
-          .when(col("event_type") === "purchase", 3).otherwise(0).as("s"))
-      .collect()
-      .map(r => FunnelIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-      .sortBy(r => (r.tsUs, r.eventId))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // cut preserves per-key order
-    val in = MemoryStream[FunnelIn]
-    val q = StreamingStrictFunnel.funnel(in.toDS()).writeStream
-      .format("memory").queryName("sf_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      // batch j10 reports level->n_users; reduce the stream's final per-user
-      // levels to the same rollup. Final emission per user = the batch-2
-      // emission if the user appears there, else the batch-1 one — dedup by
-      // keeping the LAST emission per user in table order is not reliable,
-      // so recompute: fold the full in-order row set through the shared step
-      // function and compare BOTH (stream vs scala fold vs batch rollup).
-      val scalaLevels = rows.groupBy(_.key).map { case (k, xs) =>
-        val st = xs.map(_.stepIdx).foldLeft(0)(StreamingStrictFunnel.step)
-        k -> (if (st >= 10) st - 10 else st)
-      }
-      val streamed = spark.table("sf_t").as[FunnelOut].collect()
-        .groupBy(_.key).map { case (k, emissions) =>
-          // Update-mode emissions grow monotonically in folded prefix; the
-          // final state is the max-level-reaching emission with abort flag —
-          // reconstruct by taking the emission matching the scala fold
-          k -> emissions.map(_.funnel_level).max
+    withRocksDbProvider {
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"), col("event_id"),
+          when(col("event_type") === "signup", 1)
+            .when(col("event_type") === "click", 2)
+            .when(col("event_type") === "purchase", 3).otherwise(0).as("s"))
+        .collect()
+        .map(r => FunnelIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+        .sortBy(r => (r.tsUs, r.eventId))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // cut preserves per-key order
+      val in = MemoryStream[FunnelIn]
+      val q = StreamingStrictFunnel.funnel(in.toDS()).writeStream
+        .format("memory").queryName("sf_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        // batch j10 reports level->n_users; reduce the stream's final per-user
+        // levels to the same rollup. Final emission per user = the batch-2
+        // emission if the user appears there, else the batch-1 one — dedup by
+        // keeping the LAST emission per user in table order is not reliable,
+        // so recompute: fold the full in-order row set through the shared step
+        // function and compare BOTH (stream vs scala fold vs batch rollup).
+        val scalaLevels = rows.groupBy(_.key).map { case (k, xs) =>
+          val st = xs.map(_.stepIdx).foldLeft(0)(StreamingStrictFunnel.step)
+          k -> (if (st >= 10) st - 10 else st)
         }
-      // stream's max emitted level per user can overshoot the FINAL level
-      // only if levels decreased — impossible (monotone), so max = final
-      assert(streamed == scalaLevels,
-        s"stream per-user levels must equal the shared-fold levels")
-      val batch = graft.engine.Round8gOps.j10.fn(spark, sf0001).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val rollup = scalaLevels.values.groupBy(identity).map { case (l, xs) => l -> xs.size.toLong }
-      assert(rollup == batch,
-        s"scala-fold rollup must equal batch j10: fold=$rollup batch=$batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        val streamed = spark.table("sf_t").as[FunnelOut].collect()
+          .groupBy(_.key).map { case (k, emissions) =>
+            // Update-mode emissions grow monotonically in folded prefix; the
+            // final state is the max-level-reaching emission with abort flag —
+            // reconstruct by taking the emission matching the scala fold
+            k -> emissions.map(_.funnel_level).max
+          }
+        // stream's max emitted level per user can overshoot the FINAL level
+        // only if levels decreased — impossible (monotone), so max = final
+        assert(streamed == scalaLevels,
+          s"stream per-user levels must equal the shared-fold levels")
+        val batch = graft.engine.Round8gOps.j10.fn(spark, sf0001).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val rollup = scalaLevels.values.groupBy(identity).map { case (l, xs) => l -> xs.size.toLong }
+        assert(rollup == batch,
+          s"scala-fold rollup must equal batch j10: fold=$rollup batch=$batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1270,39 +1198,32 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // sf0.01: 150 users/type >= k=64, so the ESTIMATE regime is live (the
-    // exact regime is covered by Round9Spec's laws); bottom-k state is
-    // commutative, so the cut position cannot matter — full equality pin,
-    // including a replayed (duplicated) slice for at-least-once idempotence
-    val rows = graft.engine.Tables.events(spark, sf001)
-      .select(col("event_type"), col("user_id"))
-      .collect().map(r => KmvIn(r.getString(0), r.getLong(1)))
-    val (b1, b2) = rows.splitAt(rows.length / 3)
-    val in = MemoryStream[KmvIn]
-    val q = StreamingKmv.distinctSketch(in.toDS(), 64).writeStream
-      .format("memory").queryName("kmv_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      in.addData(b1.take(500): _*); q.processAllAvailable() // replay slice
-      val batch = graft.engine.Round9Ops.d34.fn(spark, sf001).collect()
-        .map(r => r.getString(0) -> r.getLong(2)).toMap
-      // last emission per group: Update mode appends to the memory sink, so
-      // take the final row per key in sink order
-      val emissions = spark.table("kmv_t").as[KmvOut].collect()
-      val last = emissions.zipWithIndex.groupBy(_._1.key)
-        .map { case (k, xs) => k -> xs.maxBy(_._2)._1.estimate }
-      assert(last == batch,
-        s"streaming final estimates must equal batch d34: stream=$last batch=$batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // sf0.01: 150 users/type >= k=64, so the ESTIMATE regime is live (the
+      // exact regime is covered by Round9Spec's laws); bottom-k state is
+      // commutative, so the cut position cannot matter — full equality pin,
+      // including a replayed (duplicated) slice for at-least-once idempotence
+      val rows = graft.engine.Tables.events(spark, sf001)
+        .select(col("event_type"), col("user_id"))
+        .collect().map(r => KmvIn(r.getString(0), r.getLong(1)))
+      val (b1, b2) = rows.splitAt(rows.length / 3)
+      val in = MemoryStream[KmvIn]
+      val q = StreamingKmv.distinctSketch(in.toDS(), 64).writeStream
+        .format("memory").queryName("kmv_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        in.addData(b1.take(500): _*); q.processAllAvailable() // replay slice
+        val batch = graft.engine.Round9Ops.d34.fn(spark, sf001).collect()
+          .map(r => r.getString(0) -> r.getLong(2)).toMap
+        // last emission per group: Update mode appends to the memory sink, so
+        // take the final row per key in sink order
+        val emissions = spark.table("kmv_t").as[KmvOut].collect()
+        val last = emissions.zipWithIndex.groupBy(_._1.key)
+          .map { case (k, xs) => k -> xs.maxBy(_._2)._1.estimate }
+        assert(last == batch,
+          s"streaming final estimates must equal batch d34: stream=$last batch=$batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1313,48 +1234,41 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // batch j11's own input: funnel events only, ordered by (tsUs, stepIdx)
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"), col("event_id"),
-        when(col("event_type") === "signup", 1)
-          .when(col("event_type") === "click", 2)
-          .when(col("event_type") === "purchase", 3).otherwise(0).as("s"))
-      .where(col("s") > 0)
-      .collect()
-      .map(r => DedupIn(r.getLong(0), r.getLong(1), r.getInt(3), r.getLong(2)))
-      .sortBy(r => (r.tsUs, r.stepIdx, r.eventId))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // cut preserves per-key order
-    val in = MemoryStream[DedupIn]
-    val q = StreamingDedupFunnel.funnel(in.toDS()).writeStream
-      .format("memory").queryName("df_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val scalaLevels = rows.groupBy(_.key).map { case (k, xs) =>
-        val st = xs.map(_.stepIdx).foldLeft(0)(StreamingDedupFunnel.step)
-        k -> (if (st >= 10) st - 10 else st)
-      }
-      val streamed = spark.table("df_t").as[DedupOut].collect()
-        .groupBy(_.key).map { case (k, emissions) =>
-          k -> emissions.map(_.funnel_level).max // levels are monotone
+    withRocksDbProvider {
+      // batch j11's own input: funnel events only, ordered by (tsUs, stepIdx)
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), expr("unix_micros(ts)").as("ts_us"), col("event_id"),
+          when(col("event_type") === "signup", 1)
+            .when(col("event_type") === "click", 2)
+            .when(col("event_type") === "purchase", 3).otherwise(0).as("s"))
+        .where(col("s") > 0)
+        .collect()
+        .map(r => DedupIn(r.getLong(0), r.getLong(1), r.getInt(3), r.getLong(2)))
+        .sortBy(r => (r.tsUs, r.stepIdx, r.eventId))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // cut preserves per-key order
+      val in = MemoryStream[DedupIn]
+      val q = StreamingDedupFunnel.funnel(in.toDS()).writeStream
+        .format("memory").queryName("df_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val scalaLevels = rows.groupBy(_.key).map { case (k, xs) =>
+          val st = xs.map(_.stepIdx).foldLeft(0)(StreamingDedupFunnel.step)
+          k -> (if (st >= 10) st - 10 else st)
         }
-      assert(streamed == scalaLevels,
-        "stream per-user levels must equal the shared-fold levels")
-      val batch = graft.engine.Round9Ops.j11.fn(spark, sf0001).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val rollup = scalaLevels.values.groupBy(identity)
-        .map { case (l, xs) => l -> xs.size.toLong }
-      assert(rollup == batch,
-        s"scala-fold rollup must equal batch j11: fold=$rollup batch=$batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        val streamed = spark.table("df_t").as[DedupOut].collect()
+          .groupBy(_.key).map { case (k, emissions) =>
+            k -> emissions.map(_.funnel_level).max // levels are monotone
+          }
+        assert(streamed == scalaLevels,
+          "stream per-user levels must equal the shared-fold levels")
+        val batch = graft.engine.Round9Ops.j11.fn(spark, sf0001).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val rollup = scalaLevels.values.groupBy(identity)
+          .map { case (l, xs) => l -> xs.size.toLong }
+        assert(rollup == batch,
+          s"scala-fold rollup must equal batch j11: fold=$rollup batch=$batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1365,45 +1279,38 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch queries' own input: A/R lineitem quantities keyed by linestatus
-    val rows = graft.engine.Tables.lineitem(spark, sf0001)
-      .where(col("l_returnflag").isin("A", "R"))
-      .select(col("l_linestatus"), col("l_returnflag"),
-              col("l_quantity").cast("long"))
-      .collect()
-      .map(r => AbIn(r.getString(0), if (r.getString(1) == "A") 0 else 1, r.getLong(2)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // counters are commutative: any cut
-    val in = MemoryStream[AbIn]
-    val q = StreamingAbTest.monitor(in.toDS()).writeStream
-      .format("memory").queryName("ab_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val d35 = graft.engine.Round9Ops.d35.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
-      val d37 = graft.engine.Round9Ops.d37.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) -> ((r.getLong(3), r.getDouble(4)))).toMap
-      val nPerKey = rows.groupBy(_.key).map { case (k, xs) => k -> xs.size.toLong }
-      val last = spark.table("ab_t").as[AbOut].collect()
-        .filter(o => o.n_a + o.n_b == nPerKey(o.key)) // final emission per key
-        .map(o => o.key -> o).toMap
-      assert(last.keySet == d35.keySet)
-      last.foreach { case (k, o) =>
-        assert((o.n_a, o.n_b, o.u2_a, o.u2_b, o.cles_a) == d35(k),
-          s"$k: stream MW ${(o.n_a, o.n_b, o.u2_a, o.u2_b, o.cles_a)} vs batch ${d35(k)}")
-        assert((o.d_num, o.ks_d) == d37(k),
-          s"$k: stream KS ${(o.d_num, o.ks_d)} vs batch ${d37(k)}")
-      }
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch queries' own input: A/R lineitem quantities keyed by linestatus
+      val rows = graft.engine.Tables.lineitem(spark, sf0001)
+        .where(col("l_returnflag").isin("A", "R"))
+        .select(col("l_linestatus"), col("l_returnflag"),
+                col("l_quantity").cast("long"))
+        .collect()
+        .map(r => AbIn(r.getString(0), if (r.getString(1) == "A") 0 else 1, r.getLong(2)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // counters are commutative: any cut
+      val in = MemoryStream[AbIn]
+      val q = StreamingAbTest.monitor(in.toDS()).writeStream
+        .format("memory").queryName("ab_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val d35 = graft.engine.Round9Ops.d35.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) ->
+            ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
+        val d37 = graft.engine.Round9Ops.d37.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) -> ((r.getLong(3), r.getDouble(4)))).toMap
+        val nPerKey = rows.groupBy(_.key).map { case (k, xs) => k -> xs.size.toLong }
+        val last = spark.table("ab_t").as[AbOut].collect()
+          .filter(o => o.n_a + o.n_b == nPerKey(o.key)) // final emission per key
+          .map(o => o.key -> o).toMap
+        assert(last.keySet == d35.keySet)
+        last.foreach { case (k, o) =>
+          assert((o.n_a, o.n_b, o.u2_a, o.u2_b, o.cles_a) == d35(k),
+            s"$k: stream MW ${(o.n_a, o.n_b, o.u2_a, o.u2_b, o.cles_a)} vs batch ${d35(k)}")
+          assert((o.d_num, o.ks_d) == d37(k),
+            s"$k: stream KS ${(o.d_num, o.ks_d)} vs batch ${d37(k)}")
+        }
+      } finally { q.stop() }
     }
   }
 
@@ -1414,43 +1321,39 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input rows: (series, hour bucket, ts µs, id, cents)
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("event_type"), expr("unix_millis(ts) div 3600000").as("bkt"),
-        expr("unix_micros(ts)").as("ts_us"), col("event_id"),
-        (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      .collect()
-      .map(r => M4In(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-                     r.getLong(4)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // batch boundary mid-stream
-    val in = MemoryStream[M4In]
-    val q = StreamingM4.downsample(in.toDS()).writeStream
-      .format("memory").queryName("m4_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round8cOps.e18.fn(spark, sf0001).collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))))
-        .toMap
-      val nPerKey = rows.groupBy(r => (r.series, r.bkt))
-        .map { case (k, xs) => k -> xs.size.toLong }
-      val last = spark.table("m4_t").as[M4Out].collect()
-        .filter(o => o.n == nPerKey((o.series, o.bkt))) // final emission per key
-        .map(o => (o.series, o.bkt) ->
-          ((o.v_min, o.v_max, o.v_first, o.v_last, o.n))).toMap
-      assert(last == batch,
-        s"streaming final state must equal batch e18: stream=${last.size} keys, " +
-          s"batch=${batch.size} keys, diff=${(last.toSet diff batch.toSet).take(3)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input rows: (series, hour bucket, ts µs, id, cents)
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("event_type"), expr("unix_millis(ts) div 3600000").as("bkt"),
+          expr("unix_micros(ts)").as("ts_us"), col("event_id"),
+          (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+        .collect()
+        .map(r => M4In(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+                       r.getLong(4)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // batch boundary mid-stream
+      val in = MemoryStream[M4In]
+      val q = StreamingM4.downsample(in.toDS()).writeStream
+        .format("memory").queryName("m4_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round8cOps.e18.fn(spark, sf0001).collect()
+          .map(r => (r.getString(0), r.getLong(1)) ->
+            ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))))
+          .toMap
+        val nPerKey = rows.groupBy(r => (r.series, r.bkt))
+          .map { case (k, xs) => k -> xs.size.toLong }
+        val last = spark.table("m4_t").as[M4Out].collect()
+          .filter(o => o.n == nPerKey((o.series, o.bkt))) // final emission per key
+          .map(o => (o.series, o.bkt) ->
+            ((o.v_min, o.v_max, o.v_first, o.v_last, o.n))).toMap
+        assert(last == batch,
+          s"streaming final state must equal batch e18: stream=${last.size} keys, " +
+            s"batch=${batch.size} keys, diff=${(last.toSet diff batch.toSet).take(3)}")
+        // the "bounded state" claim, observed: one state row per bucket
+        assert(q.lastProgress.stateOperators(0).numRowsTotal == nPerKey.size,
+          s"M4 state must hold one row per bucket: ${q.lastProgress.stateOperators(0)}")
+      } finally { q.stop() }
     }
   }
 
@@ -1461,45 +1364,38 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch queries' own input: purchase (arm A) vs click (arm B) cents
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .where(col("event_type").isin("purchase", "click"))
-      .select(col("event_type"),
-              (col("value").cast("decimal(18,2)") * 100).cast("long"))
-      .collect()
-      .map(r => TIn("exp", if (r.getString(0) == "purchase") 0 else 1,
-                    r.getLong(1)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // power sums commute: any cut
-    val in = MemoryStream[TIn]
-    val q = StreamingWelch.monitor(in.toDS()).writeStream
-      .format("memory").queryName("welch_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val d36 = graft.engine.Round9Ops.d36.fn(spark, sf0001).collect().head
-      val d40 = graft.engine.Round10Ops.d40.fn(spark, sf0001).collect().head
-      val last = spark.table("welch_t").as[TOut].collect()
-        .filter(o => o.n_a + o.n_b == rows.length.toLong).head
-      // EQUALITY, no tolerance: the Scala closed forms mirror the batch SQL
-      // trees op-for-op over the same exact integer sums
-      assert((last.n_a, last.n_b) == ((d36.getLong(0), d36.getLong(1))))
-      assert(last.t_welch == d36.getDouble(2),
-        s"welch t ${last.t_welch} vs batch ${d36.getDouble(2)}")
-      assert(last.welch_dof == d36.getDouble(3),
-        s"welch dof ${last.welch_dof} vs batch ${d36.getDouble(3)}")
-      assert(last.pooled_var == d40.getDouble(3),
-        s"pooled var ${last.pooled_var} vs batch ${d40.getDouble(3)}")
-      assert(last.t_pooled == d40.getDouble(4),
-        s"pooled t ${last.t_pooled} vs batch ${d40.getDouble(4)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch queries' own input: purchase (arm A) vs click (arm B) cents
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .where(col("event_type").isin("purchase", "click"))
+        .select(col("event_type"),
+                (col("value").cast("decimal(18,2)") * 100).cast("long"))
+        .collect()
+        .map(r => TIn("exp", if (r.getString(0) == "purchase") 0 else 1,
+                      r.getLong(1)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // power sums commute: any cut
+      val in = MemoryStream[TIn]
+      val q = StreamingWelch.monitor(in.toDS()).writeStream
+        .format("memory").queryName("welch_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val d36 = graft.engine.Round9Ops.d36.fn(spark, sf0001).collect().head
+        val d40 = graft.engine.Round10Ops.d40.fn(spark, sf0001).collect().head
+        val last = spark.table("welch_t").as[TOut].collect()
+          .filter(o => o.n_a + o.n_b == rows.length.toLong).head
+        // EQUALITY, no tolerance: the Scala closed forms mirror the batch SQL
+        // trees op-for-op over the same exact integer sums
+        assert((last.n_a, last.n_b) == ((d36.getLong(0), d36.getLong(1))))
+        assert(last.t_welch == d36.getDouble(2),
+          s"welch t ${last.t_welch} vs batch ${d36.getDouble(2)}")
+        assert(last.welch_dof == d36.getDouble(3),
+          s"welch dof ${last.welch_dof} vs batch ${d36.getDouble(3)}")
+        assert(last.pooled_var == d40.getDouble(3),
+          s"pooled var ${last.pooled_var} vs batch ${d40.getDouble(3)}")
+        assert(last.t_pooled == d40.getDouble(4),
+          s"pooled t ${last.t_pooled} vs batch ${d40.getDouble(4)}")
+      } finally { q.stop() }
     }
   }
 
@@ -1510,41 +1406,34 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input: quantities with the FIXED arm order A,N,R
-    val armOf = Map("A" -> 0, "N" -> 1, "R" -> 2)
-    val rows = graft.engine.Tables.lineitem(spark, sf0001)
-      .select(col("l_returnflag"), col("l_quantity").cast("long"))
-      .collect()
-      .map(r => AIn("exp", armOf(r.getString(0)), r.getLong(1)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // power sums commute: any cut
-    val in = MemoryStream[AIn]
-    val q = StreamingAnova.monitor(in.toDS(), arms = 3).writeStream
-      .format("memory").queryName("aov_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val d41 = graft.engine.Round10Ops.d41.fn(spark, sf0001).collect().head
-      val last = spark.table("aov_t").as[AOut].collect()
-        .filter(_.n_rows == rows.length.toLong).head
-      // EQUALITY, no tolerance: the Scala fold mirrors the generated SQL
-      // left-to-right arm order over the same exact integer sums
-      assert(last.df_between == d41.getInt(1))
-      assert(last.df_within == d41.getLong(2))
-      assert(last.ss_between == d41.getDouble(3),
-        s"SSB ${last.ss_between} vs batch ${d41.getDouble(3)}")
-      assert(last.ss_within == d41.getDouble(4),
-        s"SSW ${last.ss_within} vs batch ${d41.getDouble(4)}")
-      assert(last.f_stat == d41.getDouble(5),
-        s"F ${last.f_stat} vs batch ${d41.getDouble(5)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input: quantities with the FIXED arm order A,N,R
+      val armOf = Map("A" -> 0, "N" -> 1, "R" -> 2)
+      val rows = graft.engine.Tables.lineitem(spark, sf0001)
+        .select(col("l_returnflag"), col("l_quantity").cast("long"))
+        .collect()
+        .map(r => AIn("exp", armOf(r.getString(0)), r.getLong(1)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // power sums commute: any cut
+      val in = MemoryStream[AIn]
+      val q = StreamingAnova.monitor(in.toDS(), arms = 3).writeStream
+        .format("memory").queryName("aov_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val d41 = graft.engine.Round10Ops.d41.fn(spark, sf0001).collect().head
+        val last = spark.table("aov_t").as[AOut].collect()
+          .filter(_.n_rows == rows.length.toLong).head
+        // EQUALITY, no tolerance: the Scala fold mirrors the generated SQL
+        // left-to-right arm order over the same exact integer sums
+        assert(last.df_between == d41.getInt(1))
+        assert(last.df_within == d41.getLong(2))
+        assert(last.ss_between == d41.getDouble(3),
+          s"SSB ${last.ss_between} vs batch ${d41.getDouble(3)}")
+        assert(last.ss_within == d41.getDouble(4),
+          s"SSW ${last.ss_within} vs batch ${d41.getDouble(4)}")
+        assert(last.f_stat == d41.getDouble(5),
+          s"F ${last.f_stat} vs batch ${d41.getDouble(5)}")
+      } finally { q.stop() }
     }
   }
 
@@ -1555,41 +1444,34 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input: quantities keyed by return flag
-    val rows = graft.engine.Tables.lineitem(spark, sf0001)
-      .select(col("l_returnflag"), col("l_quantity").cast("long"))
-      .collect()
-      .map(r => MIn(r.getString(0), r.getLong(1)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // power sums commute: any cut
-    val in = MemoryStream[MIn]
-    val q = StreamingMoments.monitor(in.toDS()).writeStream
-      .format("memory").queryName("mom_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val d32 = graft.engine.Round9Ops.d32.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
-      val nPerKey = rows.groupBy(_.key).map { case (k, xs) => k -> xs.size.toLong }
-      val last = spark.table("mom_t").as[MOut].collect()
-        .filter(o => o.n_rows == nPerKey(o.key)) // final emission per key
-        .map(o => o.key -> o).toMap
-      assert(last.keySet == d32.keySet)
-      // EQUALITY, no tolerance: the Scala closed form mirrors d32's SQL
-      // fragments op-for-op over the same exact integer power sums
-      last.foreach { case (k, o) =>
-        assert((o.n_rows, o.skew_pop, o.kurt_pop) == d32(k),
-          s"$k: stream ${(o.n_rows, o.skew_pop, o.kurt_pop)} vs batch ${d32(k)}")
-      }
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input: quantities keyed by return flag
+      val rows = graft.engine.Tables.lineitem(spark, sf0001)
+        .select(col("l_returnflag"), col("l_quantity").cast("long"))
+        .collect()
+        .map(r => MIn(r.getString(0), r.getLong(1)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // power sums commute: any cut
+      val in = MemoryStream[MIn]
+      val q = StreamingMoments.monitor(in.toDS()).writeStream
+        .format("memory").queryName("mom_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val d32 = graft.engine.Round9Ops.d32.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) ->
+            ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
+        val nPerKey = rows.groupBy(_.key).map { case (k, xs) => k -> xs.size.toLong }
+        val last = spark.table("mom_t").as[MOut].collect()
+          .filter(o => o.n_rows == nPerKey(o.key)) // final emission per key
+          .map(o => o.key -> o).toMap
+        assert(last.keySet == d32.keySet)
+        // EQUALITY, no tolerance: the Scala closed form mirrors d32's SQL
+        // fragments op-for-op over the same exact integer power sums
+        last.foreach { case (k, o) =>
+          assert((o.n_rows, o.skew_pop, o.kurt_pop) == d32(k),
+            s"$k: stream ${(o.n_rows, o.skew_pop, o.kurt_pop)} vs batch ${d32(k)}")
+        }
+      } finally { q.stop() }
     }
   }
 
@@ -1600,38 +1482,31 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input: per-event (user, µs, cents)
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), unix_micros(col("ts")),
-              (col("value").cast("decimal(18,2)") * 100).cast("long"))
-      .collect()
-      .map(r => DIn(r.getLong(0), r.getLong(1), r.getLong(2)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // additive state: any cut
-    val in = MemoryStream[DIn]
-    val q = StreamingTimeDecay.decayedSum(in.toDS()).writeStream
-      .format("memory").queryName("decay_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round11Ops.e21.fn(spark, sf0001).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3))))
-        .toMap
-      val last = spark.table("decay_t").as[DOut].collect()
-        .groupBy(_.user_id).map { case (u, os) =>
-          val o = os.maxBy(_.n_events); u -> ((o.units, o.decayed_sum, o.n_events)) }
-      // EQUALITY, no tolerance: the contribution term and the render divide
-      // mirror the batch SQL op-for-op over the same exact integers
-      assert(last == batch,
-        s"streaming decayed sums must equal batch e21: got $last, want $batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input: per-event (user, µs, cents)
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), unix_micros(col("ts")),
+                (col("value").cast("decimal(18,2)") * 100).cast("long"))
+        .collect()
+        .map(r => DIn(r.getLong(0), r.getLong(1), r.getLong(2)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // additive state: any cut
+      val in = MemoryStream[DIn]
+      val q = StreamingTimeDecay.decayedSum(in.toDS()).writeStream
+        .format("memory").queryName("decay_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round11Ops.e21.fn(spark, sf0001).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3))))
+          .toMap
+        val last = spark.table("decay_t").as[DOut].collect()
+          .groupBy(_.user_id).map { case (u, os) =>
+            val o = os.maxBy(_.n_events); u -> ((o.units, o.decayed_sum, o.n_events)) }
+        // EQUALITY, no tolerance: the contribution term and the render divide
+        // mirror the batch SQL op-for-op over the same exact integers
+        assert(last == batch,
+          s"streaming decayed sums must equal batch e21: got $last, want $batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1642,43 +1517,36 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input: per-row (q, p cents, d hundredths) by status
-    val rows = graft.engine.Tables.lineitem(spark, sf0001)
-      .select(col("l_linestatus"), col("l_quantity").cast("long"),
-              (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"),
-              (col("l_discount").cast("decimal(18,2)") * 100).cast("long"))
-      .collect()
-      .map(r => MIn(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // additive state: any cut
-    val in = MemoryStream[MIn]
-    val q = StreamingCorrMatrix.monitor(in.toDS()).writeStream
-      .format("memory").queryName("corrm_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round11Ops.d46.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) -> Seq(r.getDouble(2), r.getDouble(3),
-          r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7)))
-        .toMap
-      val perKeyN = rows.groupBy(_.key).map { case (k, v) => k -> v.length.toLong }
-      val last = spark.table("corrm_t").as[MOut].collect()
-        .filter(o => o.n_rows == perKeyN(o.key))
-        .map(o => o.key -> Seq(o.corr_qty_price, o.corr_qty_disc,
-          o.corr_price_disc, o.covar_qty_price, o.covar_qty_disc,
-          o.covar_price_disc)).toMap
-      // EQUALITY, no tolerance: the Scala closed forms mirror d46's
-      // shared-text SQL trees op-for-op over the same exact sums
-      assert(last == batch,
-        s"streaming corr matrix must equal batch d46: got $last, want $batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input: per-row (q, p cents, d hundredths) by status
+      val rows = graft.engine.Tables.lineitem(spark, sf0001)
+        .select(col("l_linestatus"), col("l_quantity").cast("long"),
+                (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"),
+                (col("l_discount").cast("decimal(18,2)") * 100).cast("long"))
+        .collect()
+        .map(r => MIn(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // additive state: any cut
+      val in = MemoryStream[MIn]
+      val q = StreamingCorrMatrix.monitor(in.toDS()).writeStream
+        .format("memory").queryName("corrm_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round11Ops.d46.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) -> Seq(r.getDouble(2), r.getDouble(3),
+            r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7)))
+          .toMap
+        val perKeyN = rows.groupBy(_.key).map { case (k, v) => k -> v.length.toLong }
+        val last = spark.table("corrm_t").as[MOut].collect()
+          .filter(o => o.n_rows == perKeyN(o.key))
+          .map(o => o.key -> Seq(o.corr_qty_price, o.corr_qty_disc,
+            o.corr_price_disc, o.covar_qty_price, o.covar_qty_disc,
+            o.covar_price_disc)).toMap
+        // EQUALITY, no tolerance: the Scala closed forms mirror d46's
+        // shared-text SQL trees op-for-op over the same exact sums
+        assert(last == batch,
+          s"streaming corr matrix must equal batch d46: got $last, want $batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1689,37 +1557,30 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own input: (return flag, quantity weight, price cents)
-    val rows = graft.engine.Tables.lineitem(spark, sf0001)
-      .select(col("l_returnflag"), col("l_quantity").cast("long"),
-              (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
-      .collect()
-      .map(r => WIn(r.getString(0), r.getLong(1), r.getLong(2)))
-    val (b1, b2) = rows.splitAt(rows.length / 2) // additive state: any cut
-    val in = MemoryStream[WIn]
-    val q = StreamingWeighted.monitor(in.toDS()).writeStream
-      .format("memory").queryName("wmom_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round11Ops.d48.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) -> ((r.getLong(2), r.getDouble(3), r.getDouble(4))))
-        .toMap
-      val perKeyN = rows.groupBy(_.key).map { case (k, v) => k -> v.length.toLong }
-      val last = spark.table("wmom_t").as[WOut].collect()
-        .filter(o => o.n_rows == perKeyN(o.key))
-        .map(o => o.key -> ((o.sum_w, o.avg_weighted, o.var_weighted))).toMap
-      assert(last == batch,
-        s"streaming weighted moments must equal batch d48: got $last, want $batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own input: (return flag, quantity weight, price cents)
+      val rows = graft.engine.Tables.lineitem(spark, sf0001)
+        .select(col("l_returnflag"), col("l_quantity").cast("long"),
+                (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"))
+        .collect()
+        .map(r => WIn(r.getString(0), r.getLong(1), r.getLong(2)))
+      val (b1, b2) = rows.splitAt(rows.length / 2) // additive state: any cut
+      val in = MemoryStream[WIn]
+      val q = StreamingWeighted.monitor(in.toDS()).writeStream
+        .format("memory").queryName("wmom_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round11Ops.d48.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) -> ((r.getLong(2), r.getDouble(3), r.getDouble(4))))
+          .toMap
+        val perKeyN = rows.groupBy(_.key).map { case (k, v) => k -> v.length.toLong }
+        val last = spark.table("wmom_t").as[WOut].collect()
+          .filter(o => o.n_rows == perKeyN(o.key))
+          .map(o => o.key -> ((o.sum_w, o.avg_weighted, o.var_weighted))).toMap
+        assert(last == batch,
+          s"streaming weighted moments must equal batch d48: got $last, want $batch")
+      } finally { q.stop() }
     }
   }
 
@@ -1730,64 +1591,57 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val D = 86400L * 1000000L // one day in micros
-    val in = MemoryStream[EventIn]
-    val q = StreamingRetention.retentionFlags(in.toDS()).writeStream
-      .format("memory").queryName("retention_t").outputMode(OutputMode.Update).start()
-    // user 1: anchor + week-0 activity in batch 1; week-1 and week-2
-    //   activity arrive in batch 2 (cross-batch accumulation) → 1,1,1
-    // user 2: anchor only (the signup itself is week-0 activity) → 1,0,0
-    // user 3: pre-anchor click (ts < eventual anchor, never counted), then
-    //   the anchor and a week-2 event in batch 2 → 1,0,1
-    // user 4: activity exactly at l1 + 7d — the half-open boundary goes to
-    //   week 1 — and at l1 + 21d, outside the horizon → 1,1,0
-    // user 5: activity but never an anchor → emits nothing
-    val batch1 = Seq(
-      EventIn(1, 0 * D, 1, "signup"), EventIn(1, 3 * D, 2, "click"),
-      EventIn(2, 1 * D, 3, "signup"),
-      EventIn(3, 0 * D, 4, "click"),
-      EventIn(4, 0 * D, 5, "signup"),
-      EventIn(5, 0 * D, 6, "view"))
-    val batch2 = Seq(
-      EventIn(1, 8 * D, 7, "view"), EventIn(1, 15 * D, 8, "purchase"),
-      EventIn(3, 2 * D, 9, "signup"), EventIn(3, 17 * D, 10, "click"),
-      EventIn(4, 7 * D, 11, "click"), EventIn(4, 21 * D, 12, "click"),
-      EventIn(5, 9 * D, 13, "view"))
-    try {
-      in.addData(batch1: _*); q.processAllAvailable()
-      in.addData(batch2: _*); q.processAllAvailable()
-      val got = spark.table("retention_t").as[RetentionFlags].collect()
-        .groupBy(_.user_id).map { case (u, rows) =>
-          val r = rows.last; u -> (r.w0, r.w1, r.w2) }
-      // brute-force batch rule over the full log (j06's semantics)
-      val W = 7 * D
-      val expected = (batch1 ++ batch2).groupBy(_.user_id).flatMap { case (u, evs) =>
-        val sorted = evs.sortBy(e => (e.ts_micros, e.event_id))
-        sorted.collectFirst { case e if e.event_type == "signup" => e.ts_micros }
-          .map { l1 =>
-            def wk(k: Int) = if (sorted.exists(e =>
-              e.ts_micros >= l1 + k * W && e.ts_micros < l1 + (k + 1) * W)) 1 else 0
-            u -> (wk(0), wk(1), wk(2))
-          }
-      }
-      assert(got == expected,
-        s"streaming retention must equal batch cohort rule: got $got, want $expected")
-      assert(got(1L) == ((1, 1, 1)) && got(2L) == ((1, 0, 0)) &&
-             got(3L) == ((1, 0, 1)) && got(4L) == ((1, 1, 0)))
-      assert(!got.contains(5L), "unanchored user must emit nothing")
-      // cohort rollup (what j06 aggregates): n_users and per-week sums
-      val cohort = (got.size, got.values.map(_._1).sum,
-                    got.values.map(_._2).sum, got.values.map(_._3).sum)
-      assert(cohort == ((4, 4, 2, 2)))
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val D = 86400L * 1000000L // one day in micros
+      val in = MemoryStream[EventIn]
+      val q = StreamingRetention.retentionFlags(in.toDS()).writeStream
+        .format("memory").queryName("retention_t").outputMode(OutputMode.Update).start()
+      // user 1: anchor + week-0 activity in batch 1; week-1 and week-2
+      //   activity arrive in batch 2 (cross-batch accumulation) → 1,1,1
+      // user 2: anchor only (the signup itself is week-0 activity) → 1,0,0
+      // user 3: pre-anchor click (ts < eventual anchor, never counted), then
+      //   the anchor and a week-2 event in batch 2 → 1,0,1
+      // user 4: activity exactly at l1 + 7d — the half-open boundary goes to
+      //   week 1 — and at l1 + 21d, outside the horizon → 1,1,0
+      // user 5: activity but never an anchor → emits nothing
+      val batch1 = Seq(
+        EventIn(1, 0 * D, 1, "signup"), EventIn(1, 3 * D, 2, "click"),
+        EventIn(2, 1 * D, 3, "signup"),
+        EventIn(3, 0 * D, 4, "click"),
+        EventIn(4, 0 * D, 5, "signup"),
+        EventIn(5, 0 * D, 6, "view"))
+      val batch2 = Seq(
+        EventIn(1, 8 * D, 7, "view"), EventIn(1, 15 * D, 8, "purchase"),
+        EventIn(3, 2 * D, 9, "signup"), EventIn(3, 17 * D, 10, "click"),
+        EventIn(4, 7 * D, 11, "click"), EventIn(4, 21 * D, 12, "click"),
+        EventIn(5, 9 * D, 13, "view"))
+      try {
+        in.addData(batch1: _*); q.processAllAvailable()
+        in.addData(batch2: _*); q.processAllAvailable()
+        val got = spark.table("retention_t").as[RetentionFlags].collect()
+          .groupBy(_.user_id).map { case (u, rows) =>
+            val r = rows.last; u -> (r.w0, r.w1, r.w2) }
+        // brute-force batch rule over the full log (j06's semantics)
+        val W = 7 * D
+        val expected = (batch1 ++ batch2).groupBy(_.user_id).flatMap { case (u, evs) =>
+          val sorted = evs.sortBy(e => (e.ts_micros, e.event_id))
+          sorted.collectFirst { case e if e.event_type == "signup" => e.ts_micros }
+            .map { l1 =>
+              def wk(k: Int) = if (sorted.exists(e =>
+                e.ts_micros >= l1 + k * W && e.ts_micros < l1 + (k + 1) * W)) 1 else 0
+              u -> (wk(0), wk(1), wk(2))
+            }
+        }
+        assert(got == expected,
+          s"streaming retention must equal batch cohort rule: got $got, want $expected")
+        assert(got(1L) == ((1, 1, 1)) && got(2L) == ((1, 0, 0)) &&
+               got(3L) == ((1, 0, 1)) && got(4L) == ((1, 1, 0)))
+        assert(!got.contains(5L), "unanchored user must emit nothing")
+        // cohort rollup (what j06 aggregates): n_users and per-week sums
+        val cohort = (got.size, got.values.map(_._1).sum,
+                      got.values.map(_._2).sum, got.values.map(_._3).sum)
+        assert(cohort == ((4, 4, 2, 2)))
+      } finally { q.stop() }
     }
   }
 
@@ -1798,44 +1652,37 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch queries' own input, replayed IN ORDER with an arbitrary cut
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
-              col("event_type"))
-      .collect()
-      .map(r => EIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(e => (e.ts_micros, e.event_id))
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    for ((qname, op, batchDf) <- Seq(
-        ("j12", "<=", graft.engine.Round11Ops.j12.fn(spark, sf0001)),
-        ("j13", ">", graft.engine.Round12Ops.j13.fn(spark, sf0001)))) {
-      val in = MemoryStream[EIn]
-      val q = StreamingSequenceMatch.matched(in.toDS(), op = op).writeStream
-        .format("memory").queryName(s"seqm_$qname").outputMode(OutputMode.Update).start()
-      try {
-        in.addData(b1: _*); q.processAllAvailable()
-        in.addData(b2: _*); q.processAllAvailable()
-        val batch = batchDf.collect()
-          .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3))))
-          .toMap
-        val last = spark.table(s"seqm_$qname").as[SeqOut].collect()
-          .groupBy(_.user_id).map { case (u, os) =>
-            val o = os.maxBy(_.n_events)
-            u -> ((o.matched, o.n_hits, o.n_events)) }
-        // EQUALITY, no tolerance: the running extrema ARE the batch
-        // window closed forms over the same exact µs integers
-        assert(last == batch,
-          s"streaming $qname twin must equal batch: got $last, want $batch")
-      } finally {
-        q.stop()
+    withRocksDbProvider {
+      // the batch queries' own input, replayed IN ORDER with an arbitrary cut
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
+                col("event_type"))
+        .collect()
+        .map(r => EIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .sortBy(e => (e.ts_micros, e.event_id))
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      for ((qname, op, batchDf) <- Seq(
+          ("j12", "<=", graft.engine.Round11Ops.j12.fn(spark, sf0001)),
+          ("j13", ">", graft.engine.Round12Ops.j13.fn(spark, sf0001)))) {
+        val in = MemoryStream[EIn]
+        val q = StreamingSequenceMatch.matched(in.toDS(), op = op).writeStream
+          .format("memory").queryName(s"seqm_$qname").outputMode(OutputMode.Update).start()
+        try {
+          in.addData(b1: _*); q.processAllAvailable()
+          in.addData(b2: _*); q.processAllAvailable()
+          val batch = batchDf.collect()
+            .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3))))
+            .toMap
+          val last = spark.table(s"seqm_$qname").as[SeqOut].collect()
+            .groupBy(_.user_id).map { case (u, os) =>
+              val o = os.maxBy(_.n_events)
+              u -> ((o.matched, o.n_hits, o.n_events)) }
+          // EQUALITY, no tolerance: the running extrema ARE the batch
+          // window closed forms over the same exact µs integers
+          assert(last == batch,
+            s"streaming $qname twin must equal batch: got $last, want $batch")
+        } finally { q.stop() }
       }
-    }
-    prevProvider match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1846,41 +1693,34 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
-              col("event_type"))
-      .collect()
-      .map(r => EIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(e => (e.ts_micros, e.event_id))
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val in = MemoryStream[EIn]
-    // defaults = the batch j16 pattern and conditions
-    val q = StreamingSequenceMatch.foldMatched(in.toDS()).writeStream
-      .format("memory").queryName("seqfold_j16")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round13Ops.j16.fn(spark, sf0001).collect()
-        .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3))))
-        .toMap
-      val last = spark.table("seqfold_j16").as[SeqOut].collect()
-        .groupBy(_.user_id).map { case (u, os) =>
-          val o = os.maxBy(_.n_events)
-          u -> ((o.matched, o.n_hits, o.n_events)) }
-      // EQUALITY, no tolerance: the (min, max) frontier IS the batch
-      // fold's aggregate state over the same exact µs integers
-      assert(last == batch,
-        s"streaming j16 twin must equal batch: got $last, want $batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
+                col("event_type"))
+        .collect()
+        .map(r => EIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .sortBy(e => (e.ts_micros, e.event_id))
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      val in = MemoryStream[EIn]
+      // defaults = the batch j16 pattern and conditions
+      val q = StreamingSequenceMatch.foldMatched(in.toDS()).writeStream
+        .format("memory").queryName("seqfold_j16")
+        .outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round13Ops.j16.fn(spark, sf0001).collect()
+          .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getLong(3))))
+          .toMap
+        val last = spark.table("seqfold_j16").as[SeqOut].collect()
+          .groupBy(_.user_id).map { case (u, os) =>
+            val o = os.maxBy(_.n_events)
+            u -> ((o.matched, o.n_hits, o.n_events)) }
+        // EQUALITY, no tolerance: the (min, max) frontier IS the batch
+        // fold's aggregate state over the same exact µs integers
+        assert(last == batch,
+          s"streaming j16 twin must equal batch: got $last, want $batch")
+      } finally { q.stop() }
     }
   }
 
@@ -2093,38 +1933,31 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
-              col("event_type"))
-      .collect()
-      .map(r => EventIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(e => (e.ts_micros, e.event_id))
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val in = MemoryStream[EventIn]
-    // defaults = the batch j18 pattern (signup→click within 4 hours)
-    val q = StreamingSequenceCount.boundedChainCounts(in.toDS()).writeStream
-      .format("memory").queryName("bounded_j18")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round13Ops.j18.fn(spark, sf0001).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val last = spark.table("bounded_j18").as[BoundedCount].collect()
-        .groupBy(_.user_id).map { case (u, os) =>
-          val o = os.maxBy(_.n_events); u -> ((o.n_chains, o.n_events)) }
-      // EQUALITY: the 2-long restart automaton IS the batch fold's state
-      assert(last == batch,
-        s"streaming j18 twin must equal batch: got $last, want $batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
+                col("event_type"))
+        .collect()
+        .map(r => EventIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .sortBy(e => (e.ts_micros, e.event_id))
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      val in = MemoryStream[EventIn]
+      // defaults = the batch j18 pattern (signup→click within 4 hours)
+      val q = StreamingSequenceCount.boundedChainCounts(in.toDS()).writeStream
+        .format("memory").queryName("bounded_j18")
+        .outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round13Ops.j18.fn(spark, sf0001).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        val last = spark.table("bounded_j18").as[BoundedCount].collect()
+          .groupBy(_.user_id).map { case (u, os) =>
+            val o = os.maxBy(_.n_events); u -> ((o.n_chains, o.n_events)) }
+        // EQUALITY: the 2-long restart automaton IS the batch fold's state
+        assert(last == batch,
+          s"streaming j18 twin must equal batch: got $last, want $batch")
+      } finally { q.stop() }
     }
   }
 
@@ -2137,29 +1970,26 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
-              col("event_type"))
-      .collect()
-      .map(r => EIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(e => (e.ts_micros, e.event_id))
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    // batch references: j07's two flags and j14's mixed flag, by user
-    val j07 = graft.engine.StreamBatchOps.j07.fn(spark, sf0001).collect()
-      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
-    val j14 = graft.engine.Round12Ops.j14.fn(spark, sf0001).collect()
-      .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
-    val cases = Seq(
-      ("loose", "(?1).*(?2)", Seq("signup", "purchase"),
-        (u: Long) => (j07(u)._1, j07(u)._3)),
-      ("adj", "(?1)(?2)", Seq("signup", "purchase"),
-        (u: Long) => (j07(u)._2, j07(u)._3)),
-      ("mixed", "(?1).*(?2)(?3)", Seq("signup", "click", "purchase"),
-        (u: Long) => j14(u)))
-    try {
+    withRocksDbProvider {
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
+                col("event_type"))
+        .collect()
+        .map(r => EIn(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .sortBy(e => (e.ts_micros, e.event_id))
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      // batch references: j07's two flags and j14's mixed flag, by user
+      val j07 = graft.engine.StreamBatchOps.j07.fn(spark, sf0001).collect()
+        .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
+      val j14 = graft.engine.Round12Ops.j14.fn(spark, sf0001).collect()
+        .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
+      val cases = Seq(
+        ("loose", "(?1).*(?2)", Seq("signup", "purchase"),
+          (u: Long) => (j07(u)._1, j07(u)._3)),
+        ("adj", "(?1)(?2)", Seq("signup", "purchase"),
+          (u: Long) => (j07(u)._2, j07(u)._3)),
+        ("mixed", "(?1).*(?2)(?3)", Seq("signup", "click", "purchase"),
+          (u: Long) => j14(u)))
       for ((tag, pattern, conds, want) <- cases) {
         val in = MemoryStream[EIn]
         val q = StreamingSequenceMatch.forPattern(in.toDS(), pattern, conds)
@@ -2175,11 +2005,6 @@ class StreamingSpec extends SparkSpec {
           assert(last == batch,
             s"NFA '$pattern' must equal batch: got $last, want $batch")
         } finally { q.stop() }
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
   }
@@ -2237,6 +2062,23 @@ class StreamingSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("adjacency"),
       s"time-against-adjacency must be refused loudly: ${err.getMessage}")
+    // every other bad argument also fails on the driver, at query build
+    import graft.streaming.{StreamingHeavyHitters, StreamingHistogram,
+      StreamingSequenceCount}
+    val badArgs: Seq[(String, () => Any)] = Seq(
+      "topK k=0" -> (() => StreamingHeavyHitters.topK(
+        MemoryStream[StreamingHeavyHitters.ValueIn].toDS(), k = 0, capacity = 4)),
+      "topK capacity<k" -> (() => StreamingHeavyHitters.topK(
+        MemoryStream[StreamingHeavyHitters.ValueIn].toDS(), k = 5, capacity = 4)),
+      "histogram n=0" -> (() => StreamingHistogram.histogram(
+        MemoryStream[StreamingHistogram.ValueIn].toDS(), n = 0)),
+      "boundedChainCounts op" -> (() => StreamingSequenceCount.boundedChainCounts(
+        MemoryStream[StreamingSequenceCount.EventIn].toDS(), op = "==")),
+      "matched op" -> (() => StreamingSequenceMatch.matched(
+        MemoryStream[EIn].toDS(), op = "!=")))
+    badArgs.foreach { case (what, build) =>
+      withClue(s"$what: ") { intercept[IllegalArgumentException](build()) }
+    }
   }
 
   test("streaming concurrency equals batch e27 across a batch cut") {
@@ -2246,36 +2088,29 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the batch query's own intervals, replayed IN ORDER with a cut
-    val rows = graft.engine.Tables.events(spark, sf0001)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), unix_micros(col("ts")), col("event_id"))
-      .collect()
-      .map(r => IvIn(r.getLong(0), r.getLong(1),
-                     r.getLong(1) + 7200000000L, r.getLong(2)))
-      .sortBy(iv => (iv.s_micros, iv.event_id))
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val in = MemoryStream[IvIn]
-    val q = StreamingConcurrency.concurrency(in.toDS()).writeStream
-      .format("memory").queryName("conc_t").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val batch = graft.engine.Round12Ops.e27.fn(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val got = spark.table("conc_t").as[ConcOut].collect()
-        .map(o => (o.user_id, o.event_id) -> o.concurrency).toMap
-      assert(got == batch,
-        s"streaming concurrency must equal batch e27: got ${got.size} rows")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the batch query's own intervals, replayed IN ORDER with a cut
+      val rows = graft.engine.Tables.events(spark, sf0001)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), unix_micros(col("ts")), col("event_id"))
+        .collect()
+        .map(r => IvIn(r.getLong(0), r.getLong(1),
+                       r.getLong(1) + 7200000000L, r.getLong(2)))
+        .sortBy(iv => (iv.s_micros, iv.event_id))
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      val in = MemoryStream[IvIn]
+      val q = StreamingConcurrency.concurrency(in.toDS()).writeStream
+        .format("memory").queryName("conc_t").outputMode(OutputMode.Append).start()
+      try {
+        in.addData(b1: _*); q.processAllAvailable()
+        in.addData(b2: _*); q.processAllAvailable()
+        val batch = graft.engine.Round12Ops.e27.fn(spark, sf0001).collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+        val got = spark.table("conc_t").as[ConcOut].collect()
+          .map(o => (o.user_id, o.event_id) -> o.concurrency).toMap
+        assert(got == batch,
+          s"streaming concurrency must equal batch e27: got ${got.size} rows")
+      } finally { q.stop() }
     }
   }
 
@@ -2300,29 +2135,22 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val D = 86400L * 1000000L
-    val in = MemoryStream[EventIn]
-    // 5 weekly buckets: activity in weeks 0 (the anchor), 3, and 4
-    val q = StreamingRetention.retentionFlags(in.toDS(), nBuckets = 5).writeStream
-      .format("memory").queryName("retention5_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(EventIn(1, 0 * D, 1, "signup"), EventIn(1, 22 * D, 2, "click"),
-                 EventIn(1, 30 * D, 3, "view"))
-      q.processAllAvailable()
-      val r = spark.table("retention5_t").as[RetentionFlags].collect().last
-      assert(r.flags == Seq(1, 0, 0, 1, 1),
-        s"all 5 configured buckets must be emitted: ${r.flags}")
-      assert(r.mask == ((1 << 0) | (1 << 3) | (1 << 4)))
-      assert((r.w0, r.w1, r.w2) == ((1, 0, 0)), "j06-named views stay consistent")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val D = 86400L * 1000000L
+      val in = MemoryStream[EventIn]
+      // 5 weekly buckets: activity in weeks 0 (the anchor), 3, and 4
+      val q = StreamingRetention.retentionFlags(in.toDS(), nBuckets = 5).writeStream
+        .format("memory").queryName("retention5_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(EventIn(1, 0 * D, 1, "signup"), EventIn(1, 22 * D, 2, "click"),
+                   EventIn(1, 30 * D, 3, "view"))
+        q.processAllAvailable()
+        val r = spark.table("retention5_t").as[RetentionFlags].collect().last
+        assert(r.flags == Seq(1, 0, 0, 1, 1),
+          s"all 5 configured buckets must be emitted: ${r.flags}")
+        assert(r.mask == ((1 << 0) | (1 << 3) | (1 << 4)))
+        assert((r.w0, r.w1, r.w2) == ((1, 0, 0)), "j06-named views stay consistent")
+      } finally { q.stop() }
     }
   }
   test("streaming unigram LM one-batch replay equals batch k40 (score + flag)") {
@@ -2333,46 +2161,39 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val inT = MemoryStream[DocIn]
-    val q = StreamingUnigramLm.tokenHits(in.toDS()).writeStream
-      .format("memory").queryName("ulm_hits_t").outputMode(OutputMode.Update).start()
-    val qt = StreamingUnigramLm.corpusTotal(inT.toDS()).writeStream
-      .format("memory").queryName("ulm_tot_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
-      inT.addData(docs.toIndexedSeq)
-      q.processAllAvailable(); qt.processAllAvailable()
-      val tot = spark.table("ulm_tot_t").as[Tot].collect().map(_.tot).max
-      // sink-side rollup: mean_nll = -SUM(c * ln(ct/tot)) / SUM(c), the
-      // documented assembly of the emitted sufficient statistics
-      val streamed = spark.table("ulm_hits_t").as[TokenHit].collect()
-        .groupBy(_.doc_id).map { case (id, hs) =>
-          val n = hs.map(_.c).sum
-          val nll = -hs.map(h => h.c * math.log(h.ct.toDouble / tot)).sum
-          val mean = BigDecimal(nll / n)
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          id -> ((n, mean, if (mean > 3.45) 1 else 0))
-        }
-      val batch = Round13Ops.k40.fn(spark, sf0001).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_tokens"), r.getAs[Double]("mean_nll"),
-            r.getAs[Int]("high_surprise")))).toMap
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"one-batch streaming rollup must equal batch k40; diff=" +
-          s"${(streamed.toSet -- batch.toSet).take(3)}")
-    } finally {
-      q.stop(); qt.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val inT = MemoryStream[DocIn]
+      val q = StreamingUnigramLm.tokenHits(in.toDS()).writeStream
+        .format("memory").queryName("ulm_hits_t").outputMode(OutputMode.Update).start()
+      val qt = StreamingUnigramLm.corpusTotal(inT.toDS()).writeStream
+        .format("memory").queryName("ulm_tot_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
+        inT.addData(docs.toIndexedSeq)
+        q.processAllAvailable(); qt.processAllAvailable()
+        val tot = spark.table("ulm_tot_t").as[Tot].collect().map(_.tot).max
+        // sink-side rollup: mean_nll = -SUM(c * ln(ct/tot)) / SUM(c), the
+        // documented assembly of the emitted sufficient statistics
+        val streamed = spark.table("ulm_hits_t").as[TokenHit].collect()
+          .groupBy(_.doc_id).map { case (id, hs) =>
+            val n = hs.map(_.c).sum
+            val nll = -hs.map(h => h.c * math.log(h.ct.toDouble / tot)).sum
+            val mean = BigDecimal(nll / n)
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+            id -> ((n, mean, if (mean > 3.45) 1 else 0))
+          }
+        val batch = Round13Ops.k40.fn(spark, sf0001).collect()
+          .map(r => r.getAs[Long]("doc_id") ->
+            ((r.getAs[Long]("n_tokens"), r.getAs[Double]("mean_nll"),
+              r.getAs[Int]("high_surprise")))).toMap
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"one-batch streaming rollup must equal batch k40; diff=" +
+            s"${(streamed.toSet -- batch.toSet).take(3)}")
+      } finally { q.stop(); qt.stop() }
     }
   }
 
@@ -2383,41 +2204,34 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DocIn]
-    val inT = MemoryStream[DocIn]
-    val q = StreamingUnigramLm.tokenHits(in.toDS()).writeStream
-      .format("memory").queryName("ulm_xb_hits_t").outputMode(OutputMode.Update).start()
-    val qt = StreamingUnigramLm.corpusTotal(inT.toDS()).writeStream
-      .format("memory").queryName("ulm_xb_tot_t").outputMode(OutputMode.Update).start()
-    try {
-      // batch 1: doc 1 "x y" scores against a 2-token corpus: ct(x)=ct(y)=1,
-      // tot=2, mean_nll = ln 2
-      in.addData(DocIn(1, "x y")); inT.addData(DocIn(1, "x y"))
-      q.processAllAvailable(); qt.processAllAvailable()
-      val t1 = spark.table("ulm_xb_tot_t").as[Tot].collect().map(_.tot).max
-      assert(t1 == 2L)
-      val h1 = spark.table("ulm_xb_hits_t").as[TokenHit].collect()
-        .filter(_.doc_id == 1L)
-      assert(h1.forall(_.ct == 1L), s"batch-1 counts: ${h1.toSeq}")
-      // batch 2: doc 2 "x z" — x now counts 2 of tot 4; doc 1's batch-1
-      // emissions are UNCHANGED (no retro re-score rows for doc 1)
-      in.addData(DocIn(2, "x z")); inT.addData(DocIn(2, "x z"))
-      q.processAllAvailable(); qt.processAllAvailable()
-      val t2 = spark.table("ulm_xb_tot_t").as[Tot].collect().map(_.tot).max
-      assert(t2 == 4L)
-      val hits = spark.table("ulm_xb_hits_t").as[TokenHit].collect()
-      assert(hits.count(_.doc_id == 1L) == 2, "doc 1 not re-emitted")
-      val d2 = hits.filter(_.doc_id == 2L).map(h => h.t -> h.ct).toMap
-      assert(d2 == Map("x" -> 2L, "z" -> 1L), s"doc 2 sees batch-2 state: $d2")
-    } finally {
-      q.stop(); qt.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[DocIn]
+      val inT = MemoryStream[DocIn]
+      val q = StreamingUnigramLm.tokenHits(in.toDS()).writeStream
+        .format("memory").queryName("ulm_xb_hits_t").outputMode(OutputMode.Update).start()
+      val qt = StreamingUnigramLm.corpusTotal(inT.toDS()).writeStream
+        .format("memory").queryName("ulm_xb_tot_t").outputMode(OutputMode.Update).start()
+      try {
+        // batch 1: doc 1 "x y" scores against a 2-token corpus: ct(x)=ct(y)=1,
+        // tot=2, mean_nll = ln 2
+        in.addData(DocIn(1, "x y")); inT.addData(DocIn(1, "x y"))
+        q.processAllAvailable(); qt.processAllAvailable()
+        val t1 = spark.table("ulm_xb_tot_t").as[Tot].collect().map(_.tot).max
+        assert(t1 == 2L)
+        val h1 = spark.table("ulm_xb_hits_t").as[TokenHit].collect()
+          .filter(_.doc_id == 1L)
+        assert(h1.forall(_.ct == 1L), s"batch-1 counts: ${h1.toSeq}")
+        // batch 2: doc 2 "x z" — x now counts 2 of tot 4; doc 1's batch-1
+        // emissions are UNCHANGED (no retro re-score rows for doc 1)
+        in.addData(DocIn(2, "x z")); inT.addData(DocIn(2, "x z"))
+        q.processAllAvailable(); qt.processAllAvailable()
+        val t2 = spark.table("ulm_xb_tot_t").as[Tot].collect().map(_.tot).max
+        assert(t2 == 4L)
+        val hits = spark.table("ulm_xb_hits_t").as[TokenHit].collect()
+        assert(hits.count(_.doc_id == 1L) == 2, "doc 1 not re-emitted")
+        val d2 = hits.filter(_.doc_id == 2L).map(h => h.t -> h.ct).toMap
+        assert(d2 == Map("x" -> 2L, "z" -> 1L), s"doc 2 sees batch-2 state: $d2")
+      } finally { q.stop(); qt.stop() }
     }
   }
 
@@ -2480,42 +2294,35 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingBigramLm.pairHits(in.toDS()).writeStream
-      .format("memory").queryName("blm_hits_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
-      q.processAllAvailable()
-      // sink-side rollup: mean_nll = -SUM(c * ln(ct/ht)) / SUM(c) — the
-      // documented assembly; no separate total stream (denominator is
-      // per-head and rides the emission)
-      val streamed = spark.table("blm_hits_t").as[PairHit].collect()
-        .groupBy(_.doc_id).map { case (id, hs) =>
-          val n = hs.map(_.c).sum
-          val nll = -hs.map(h => h.c * math.log(h.ct.toDouble / h.ht)).sum
-          val mean = BigDecimal(nll / n)
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          id -> ((n, mean, if (mean > 3.45) 1 else 0))
-        }
-      val batch = Round17Ops.k48.fn(spark, sf0001).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_bigrams"), r.getAs[Double]("mean_nll"),
-            r.getAs[Int]("high_surprise")))).toMap
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"one-batch streaming rollup must equal batch k48; diff=" +
-          s"${(streamed.toSet -- batch.toSet).take(3)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingBigramLm.pairHits(in.toDS()).writeStream
+        .format("memory").queryName("blm_hits_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
+        q.processAllAvailable()
+        // sink-side rollup: mean_nll = -SUM(c * ln(ct/ht)) / SUM(c) — the
+        // documented assembly; no separate total stream (denominator is
+        // per-head and rides the emission)
+        val streamed = spark.table("blm_hits_t").as[PairHit].collect()
+          .groupBy(_.doc_id).map { case (id, hs) =>
+            val n = hs.map(_.c).sum
+            val nll = -hs.map(h => h.c * math.log(h.ct.toDouble / h.ht)).sum
+            val mean = BigDecimal(nll / n)
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+            id -> ((n, mean, if (mean > 3.45) 1 else 0))
+          }
+        val batch = Round17Ops.k48.fn(spark, sf0001).collect()
+          .map(r => r.getAs[Long]("doc_id") ->
+            ((r.getAs[Long]("n_bigrams"), r.getAs[Double]("mean_nll"),
+              r.getAs[Int]("high_surprise")))).toMap
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"one-batch streaming rollup must equal batch k48; diff=" +
+            s"${(streamed.toSet -- batch.toSet).take(3)}")
+      } finally { q.stop() }
     }
   }
 
@@ -2526,39 +2333,32 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[DocIn]
-    val q = StreamingBigramLm.pairHits(in.toDS()).writeStream
-      .format("memory").queryName("blm_xb_hits_t").outputMode(OutputMode.Update).start()
-    try {
-      // batch 1: doc 1 "x y" → pair (x,y) with ct=1, ht=1
-      in.addData(DocIn(1, "x y"))
-      q.processAllAvailable()
-      val h1 = spark.table("blm_xb_hits_t").as[PairHit].collect()
-      assert(h1.length == 1 && h1.head.ct == 1L && h1.head.ht == 1L,
-        s"batch-1 counts: ${h1.toSeq}")
-      // batch 2: doc 2 "x y x z" — head x gains 2 (ht 3), pair (x,y)
-      // gains 1 (ct 2), pair (x,z) is new (ct 1); doc 1's batch-1
-      // emission is UNCHANGED (no retro re-score), and the (y,x) pair
-      // rides head y's own state
-      in.addData(DocIn(2, "x y x z"))
-      q.processAllAvailable()
-      val hits = spark.table("blm_xb_hits_t").as[PairHit].collect()
-      assert(hits.count(_.doc_id == 1L) == 1, "doc 1 not re-emitted")
-      val d2 = hits.filter(_.doc_id == 2L)
-        .map(h => (h.a, h.b) -> ((h.c, h.ct, h.ht))).toMap
-      assert(d2 == Map(("x", "y") -> ((1L, 2L, 3L)),
-                       ("x", "z") -> ((1L, 1L, 3L)),
-                       ("y", "x") -> ((1L, 1L, 1L))),
-        s"doc 2 sees post-batch-2 head/pair state: $d2")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val in = MemoryStream[DocIn]
+      val q = StreamingBigramLm.pairHits(in.toDS()).writeStream
+        .format("memory").queryName("blm_xb_hits_t").outputMode(OutputMode.Update).start()
+      try {
+        // batch 1: doc 1 "x y" → pair (x,y) with ct=1, ht=1
+        in.addData(DocIn(1, "x y"))
+        q.processAllAvailable()
+        val h1 = spark.table("blm_xb_hits_t").as[PairHit].collect()
+        assert(h1.length == 1 && h1.head.ct == 1L && h1.head.ht == 1L,
+          s"batch-1 counts: ${h1.toSeq}")
+        // batch 2: doc 2 "x y x z" — head x gains 2 (ht 3), pair (x,y)
+        // gains 1 (ct 2), pair (x,z) is new (ct 1); doc 1's batch-1
+        // emission is UNCHANGED (no retro re-score), and the (y,x) pair
+        // rides head y's own state
+        in.addData(DocIn(2, "x y x z"))
+        q.processAllAvailable()
+        val hits = spark.table("blm_xb_hits_t").as[PairHit].collect()
+        assert(hits.count(_.doc_id == 1L) == 1, "doc 1 not re-emitted")
+        val d2 = hits.filter(_.doc_id == 2L)
+          .map(h => (h.a, h.b) -> ((h.c, h.ct, h.ht))).toMap
+        assert(d2 == Map(("x", "y") -> ((1L, 2L, 3L)),
+                         ("x", "z") -> ((1L, 1L, 3L)),
+                         ("y", "x") -> ((1L, 1L, 1L))),
+          s"doc 2 sees post-batch-2 head/pair state: $d2")
+      } finally { q.stop() }
     }
   }
 
@@ -2570,50 +2370,43 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingDomainMixture.sourceMass(in.toDS()).writeStream
-      .format("memory").queryName("dmx_t").outputMode(OutputMode.Update).start()
-    try {
-      // batch 1: first half; batch 2: the rest — the sink's LATEST row
-      // per source after batch 2 must carry the full corpus masses
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      in.addData(b1.toIndexedSeq); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val latest = spark.table("dmx_t").as[MassOut].collect()
-        .groupBy(_.source).map { case (src, rows) =>
-          val m = rows.maxBy(r => (r.n_tokens, r.n_docs)) // totals only grow
-          src -> ((m.n_tokens, m.n_docs))
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingDomainMixture.sourceMass(in.toDS()).writeStream
+        .format("memory").queryName("dmx_t").outputMode(OutputMode.Update).start()
+      try {
+        // batch 1: first half; batch 2: the rest — the sink's LATEST row
+        // per source after batch 2 must carry the full corpus masses
+        val (b1, b2) = docs.splitAt(docs.length / 2)
+        in.addData(b1.toIndexedSeq); q.processAllAvailable()
+        in.addData(b2.toIndexedSeq); q.processAllAvailable()
+        val latest = spark.table("dmx_t").as[MassOut].collect()
+          .groupBy(_.source).map { case (src, rows) =>
+            val m = rows.maxBy(r => (r.n_tokens, r.n_docs)) // totals only grow
+            src -> ((m.n_tokens, m.n_docs))
+          }
+        // sink-side rollup with k51's exact formulas
+        val tot = latest.values.map(_._1).sum
+        val nSrc = latest.size.toLong
+        val target = tot.toDouble / nSrc
+        def r4(x: Double) =
+          BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        val streamed = latest.map { case (src, (toks, docs)) =>
+          src -> ((toks, docs, r4(toks.toDouble / tot),
+                   r4(math.min(1.0, target / toks)),
+                   math.ceil(target / toks).toLong))
         }
-      // sink-side rollup with k51's exact formulas
-      val tot = latest.values.map(_._1).sum
-      val nSrc = latest.size.toLong
-      val target = tot.toDouble / nSrc
-      def r4(x: Double) =
-        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val streamed = latest.map { case (src, (toks, docs)) =>
-        src -> ((toks, docs, r4(toks.toDouble / tot),
-                 r4(math.min(1.0, target / toks)),
-                 math.ceil(target / toks).toLong))
-      }
-      val batch = Round17Ops.k51.fn(spark, sf0001).collect()
-        .map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4),
-            r.getLong(5)))).toMap
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"two-batch streaming rollup must equal batch k51; diff=" +
-          s"${(streamed.toSet -- batch.toSet).take(3)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        val batch = Round17Ops.k51.fn(spark, sf0001).collect()
+          .map(r => r.getString(0) ->
+            ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4),
+              r.getLong(5)))).toMap
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"two-batch streaming rollup must equal batch k51; diff=" +
+            s"${(streamed.toSet -- batch.toSet).take(3)}")
+      } finally { q.stop() }
     }
   }
 
@@ -2625,60 +2418,53 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val inT = MemoryStream[DocIn]
-    val q = StreamingDsir.tokenHits(in.toDS()).writeStream
-      .format("memory").queryName("dsir_hits_t").outputMode(OutputMode.Update).start()
-    val qt = StreamingDsir.corpusTotals(inT.toDS()).writeStream
-      .format("memory").queryName("dsir_tot_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
-      inT.addData(docs.toIndexedSeq)
-      q.processAllAvailable(); qt.processAllAvailable()
-      val tot = spark.table("dsir_tot_t").as[Tot].collect()
-        .maxBy(t => (t.nr, t.nt))
-      val hits = spark.table("dsir_hits_t").as[TokenHit].collect()
-      // V = distinct tokens ever seen — the once-per-token `first` facts
-      val v = hits.filter(_.first).map(_.t).distinct.length.toLong
-      val streamed = hits.groupBy(_.doc_id).map { case (id, hs) =>
-        val n = hs.map(_.c).sum
-        val llr = hs.map(h => h.c * math.log(
-          ((h.ctt + 1).toDouble * (tot.nr + v)) /
-            ((h.cr + 1).toDouble * (tot.nt + v)))).sum
-        val mean = BigDecimal(llr / n)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-        id -> ((n, mean, if (mean > 0.005) 1 else 0))
-      }
-      val batch = Round19Ops.k58.fn(spark, sf0001).collect()
-        .map(r => r.getAs[Long]("doc_id") ->
-          ((r.getAs[Long]("n_tokens"), r.getAs[Double]("mean_llr"),
-            r.getAs[Int]("selected")))).toMap
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"one-batch streaming rollup must equal batch k58; diff=" +
-          s"${(streamed.toSet -- batch.toSet).take(3)}")
-      // cross-batch probe-at-arrival: a second batch reusing a token must
-      // read counts THROUGH batch 2 on its own hits
-      val tok0 = docs.head.text.split(" ", -1).head
-      val before = hits.filter(_.t == tok0).map(_.cr).max
-      in.addData(DocIn(999999L, "src9", tok0))
-      q.processAllAvailable()
-      val after = spark.table("dsir_hits_t").as[TokenHit].collect()
-        .filter(h => h.doc_id == 999999L && h.t == tok0)
-      assert(after.length == 1 && after.head.cr == before + 1 &&
-               !after.head.first,
-        s"batch-2 hit must carry post-batch-2 counts: ${after.toSeq}")
-    } finally {
-      q.stop(); qt.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val inT = MemoryStream[DocIn]
+      val q = StreamingDsir.tokenHits(in.toDS()).writeStream
+        .format("memory").queryName("dsir_hits_t").outputMode(OutputMode.Update).start()
+      val qt = StreamingDsir.corpusTotals(inT.toDS()).writeStream
+        .format("memory").queryName("dsir_tot_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
+        inT.addData(docs.toIndexedSeq)
+        q.processAllAvailable(); qt.processAllAvailable()
+        val tot = spark.table("dsir_tot_t").as[Tot].collect()
+          .maxBy(t => (t.nr, t.nt))
+        val hits = spark.table("dsir_hits_t").as[TokenHit].collect()
+        // V = distinct tokens ever seen — the once-per-token `first` facts
+        val v = hits.filter(_.first).map(_.t).distinct.length.toLong
+        val streamed = hits.groupBy(_.doc_id).map { case (id, hs) =>
+          val n = hs.map(_.c).sum
+          val llr = hs.map(h => h.c * math.log(
+            ((h.ctt + 1).toDouble * (tot.nr + v)) /
+              ((h.cr + 1).toDouble * (tot.nt + v)))).sum
+          val mean = BigDecimal(llr / n)
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
+          id -> ((n, mean, if (mean > 0.005) 1 else 0))
+        }
+        val batch = Round19Ops.k58.fn(spark, sf0001).collect()
+          .map(r => r.getAs[Long]("doc_id") ->
+            ((r.getAs[Long]("n_tokens"), r.getAs[Double]("mean_llr"),
+              r.getAs[Int]("selected")))).toMap
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"one-batch streaming rollup must equal batch k58; diff=" +
+            s"${(streamed.toSet -- batch.toSet).take(3)}")
+        // cross-batch probe-at-arrival: a second batch reusing a token must
+        // read counts THROUGH batch 2 on its own hits
+        val tok0 = docs.head.text.split(" ", -1).head
+        val before = hits.filter(_.t == tok0).map(_.cr).max
+        in.addData(DocIn(999999L, "src9", tok0))
+        q.processAllAvailable()
+        val after = spark.table("dsir_hits_t").as[TokenHit].collect()
+          .filter(h => h.doc_id == 999999L && h.t == tok0)
+        assert(after.length == 1 && after.head.cr == before + 1 &&
+                 !after.head.first,
+          s"batch-2 hit must carry post-batch-2 counts: ${after.toSeq}")
+      } finally { q.stop(); qt.stop() }
     }
   }
 
@@ -2690,57 +2476,50 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // split tags computed exactly as the batch query computes them
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("text"),
-        (substring(md5(col("doc_id").cast("string")), 1, 1) >= "e").as("is_test"))
-      .as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingNovelty.gramHits(in.toDS()).writeStream
-      .format("memory").queryName("nov_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
-      q.processAllAvailable()
-      def r4(x: Double) =
-        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val streamed = spark.table("nov_t").as[GramHit].collect()
-        .groupBy(_.doc_id).map { case (id, hs) =>
-          val n = hs.map(_.c).sum
-          val novel = hs.filterNot(_.in_train).map(_.c).sum
-          val f = r4(novel.toDouble / n)
-          id -> ((n, novel, f, if (f < 0.2) 1 else 0))
-        }
-      val batch = Round19Ops.k61.fn(spark, sf0001).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4)))).toMap
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"one-batch streaming rollup must equal batch k61; diff=" +
-          s"${(streamed.toSet -- batch.toSet).take(3)}")
-      // probe-at-arrival: a test doc arriving BEFORE its matching train
-      // text reads fully novel; the same text arriving after train held
-      // it reads fully memorized
-      val g = (1 to 5).map(i => s"nv$i").mkString(" ")
-      in.addData(DocIn(900001L, g, is_test = true))
-      q.processAllAvailable()
-      in.addData(DocIn(900002L, g, is_test = false))
-      in.addData(DocIn(900003L, g, is_test = true))
-      q.processAllAvailable()
-      val late = spark.table("nov_t").as[GramHit].collect()
-        .filter(h => h.doc_id >= 900000L)
-      assert(late.find(_.doc_id == 900001L).get.in_train == false,
-        "test-before-train is novel at arrival")
-      assert(late.find(_.doc_id == 900003L).get.in_train == true,
-        "same-batch train rows fold before test rows read")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // split tags computed exactly as the batch query computes them
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("text"),
+          (substring(md5(col("doc_id").cast("string")), 1, 1) >= "e").as("is_test"))
+        .as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingNovelty.gramHits(in.toDS()).writeStream
+        .format("memory").queryName("nov_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
+        q.processAllAvailable()
+        def r4(x: Double) =
+          BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        val streamed = spark.table("nov_t").as[GramHit].collect()
+          .groupBy(_.doc_id).map { case (id, hs) =>
+            val n = hs.map(_.c).sum
+            val novel = hs.filterNot(_.in_train).map(_.c).sum
+            val f = r4(novel.toDouble / n)
+            id -> ((n, novel, f, if (f < 0.2) 1 else 0))
+          }
+        val batch = Round19Ops.k61.fn(spark, sf0001).collect()
+          .map(r => r.getLong(0) ->
+            ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getInt(4)))).toMap
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"one-batch streaming rollup must equal batch k61; diff=" +
+            s"${(streamed.toSet -- batch.toSet).take(3)}")
+        // probe-at-arrival: a test doc arriving BEFORE its matching train
+        // text reads fully novel; the same text arriving after train held
+        // it reads fully memorized
+        val g = (1 to 5).map(i => s"nv$i").mkString(" ")
+        in.addData(DocIn(900001L, g, is_test = true))
+        q.processAllAvailable()
+        in.addData(DocIn(900002L, g, is_test = false))
+        in.addData(DocIn(900003L, g, is_test = true))
+        q.processAllAvailable()
+        val late = spark.table("nov_t").as[GramHit].collect()
+          .filter(h => h.doc_id >= 900000L)
+        assert(late.find(_.doc_id == 900001L).get.in_train == false,
+          "test-before-train is novel at arrival")
+        assert(late.find(_.doc_id == 900003L).get.in_train == true,
+          "same-batch train rows fold before test rows read")
+      } finally { q.stop() }
     }
   }
 
@@ -2752,39 +2531,32 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingZipf.spectrum(in.toDS()).writeStream
-      .format("memory").queryName("zipf_t").outputMode(OutputMode.Update).start()
-    try {
-      // two batch cuts; the sink accumulates Update emissions, so the
-      // LATEST count per (source, token) is max(c) — counts only grow
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      in.addData(b1.toIndexedSeq); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val latest = spark.table("zipf_t").as[SpectrumOut].collect()
-        .groupBy(r => (r.source, r.t))
-        .map { case ((src, t), rows) => (src, t, rows.map(_.c).max) }.toSeq
-      // the stream's state IS the batch tf aggregate ⇒ feeding it through
-      // the SHARED finisher must reproduce batch k60 bit-for-bit
-      val streamed = Round19Ops.k60FromTf(
-        latest.toDF("source", "t", "c")).collect().map(_.toString).toSeq
-      val batch = Round19Ops.k60.fn(spark, sf0001).collect()
-        .map(_.toString).toSeq
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"spectrum rollup diverged; first diff: " +
-          s"${streamed.zip(batch).find(p => p._1 != p._2)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingZipf.spectrum(in.toDS()).writeStream
+        .format("memory").queryName("zipf_t").outputMode(OutputMode.Update).start()
+      try {
+        // two batch cuts; the sink accumulates Update emissions, so the
+        // LATEST count per (source, token) is max(c) — counts only grow
+        val (b1, b2) = docs.splitAt(docs.length / 2)
+        in.addData(b1.toIndexedSeq); q.processAllAvailable()
+        in.addData(b2.toIndexedSeq); q.processAllAvailable()
+        val latest = spark.table("zipf_t").as[SpectrumOut].collect()
+          .groupBy(r => (r.source, r.t))
+          .map { case ((src, t), rows) => (src, t, rows.map(_.c).max) }.toSeq
+        // the stream's state IS the batch tf aggregate ⇒ feeding it through
+        // the SHARED finisher must reproduce batch k60 bit-for-bit
+        val streamed = Round19Ops.k60FromTf(
+          latest.toDF("source", "t", "c")).collect().map(_.toString).toSeq
+        val batch = Round19Ops.k60.fn(spark, sf0001).collect()
+          .map(_.toString).toSeq
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"spectrum rollup diverged; first diff: " +
+            s"${streamed.zip(batch).find(p => p._1 != p._2)}")
+      } finally { q.stop() }
     }
   }
 
@@ -2796,35 +2568,28 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingSourceOverlap.newPairs(in.toDS()).writeStream
-      .format("memory").queryName("sov_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
-      q.processAllAvailable()
-      // each (digest, pair) fact arrives exactly once → count per pair
-      // IS the distinct-shared-span matrix
-      val streamed = spark.table("sov_t").as[PairOut].collect()
-        .groupBy(p => (p.source_a, p.source_b))
-        .map { case (k, v) => k -> v.length.toLong }
-      val batch = Round17Ops.k53.fn(spark, sf0001).collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"one-batch streaming matrix must equal batch k53; diff=" +
-          s"${(streamed.toSet -- batch.toSet).take(3)} / " +
-          s"${(batch.toSet -- streamed.toSet).take(3)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingSourceOverlap.newPairs(in.toDS()).writeStream
+        .format("memory").queryName("sov_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(docs.toIndexedSeq) // whole corpus in ONE micro-batch
+        q.processAllAvailable()
+        // each (digest, pair) fact arrives exactly once → count per pair
+        // IS the distinct-shared-span matrix
+        val streamed = spark.table("sov_t").as[PairOut].collect()
+          .groupBy(p => (p.source_a, p.source_b))
+          .map { case (k, v) => k -> v.length.toLong }
+        val batch = Round17Ops.k53.fn(spark, sf0001).collect()
+          .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"one-batch streaming matrix must equal batch k53; diff=" +
+            s"${(streamed.toSet -- batch.toSet).take(3)} / " +
+            s"${(batch.toSet -- streamed.toSet).take(3)}")
+      } finally { q.stop() }
     }
   }
 
@@ -2835,35 +2600,28 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val span = (1 to 20).map(i => s"s$i").mkString(" ")
-    val in = MemoryStream[DocIn]
-    val q = StreamingSourceOverlap.newPairs(in.toDS()).writeStream
-      .format("memory").queryName("sov_xb_t").outputMode(OutputMode.Update).start()
-    try {
-      // batch 1: sources A and B share the span (B twice — within-source
-      // repetition must not emit) → exactly one (A, B) fact
-      in.addData(DocIn(1, "A", span), DocIn(2, "B", span), DocIn(3, "B", span))
-      q.processAllAvailable()
-      val h1 = spark.table("sov_xb_t").as[PairOut].collect()
-      assert(h1.map(p => (p.source_a, p.source_b)).toSeq == Seq(("A", "B")),
-        s"batch 1: ${h1.toSeq}")
-      // batch 2: source C joins → only the two NEW pairs (A,C) and (B,C);
-      // (A,B) is not re-emitted
-      in.addData(DocIn(4, "C", span))
-      q.processAllAvailable()
-      val all = spark.table("sov_xb_t").as[PairOut].collect()
-        .map(p => (p.source_a, p.source_b)).sorted
-      assert(all.toSeq == Seq(("A", "B"), ("A", "C"), ("B", "C")),
-        s"after batch 2: $all")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val span = (1 to 20).map(i => s"s$i").mkString(" ")
+      val in = MemoryStream[DocIn]
+      val q = StreamingSourceOverlap.newPairs(in.toDS()).writeStream
+        .format("memory").queryName("sov_xb_t").outputMode(OutputMode.Update).start()
+      try {
+        // batch 1: sources A and B share the span (B twice — within-source
+        // repetition must not emit) → exactly one (A, B) fact
+        in.addData(DocIn(1, "A", span), DocIn(2, "B", span), DocIn(3, "B", span))
+        q.processAllAvailable()
+        val h1 = spark.table("sov_xb_t").as[PairOut].collect()
+        assert(h1.map(p => (p.source_a, p.source_b)).toSeq == Seq(("A", "B")),
+          s"batch 1: ${h1.toSeq}")
+        // batch 2: source C joins → only the two NEW pairs (A,C) and (B,C);
+        // (A,B) is not re-emitted
+        in.addData(DocIn(4, "C", span))
+        q.processAllAvailable()
+        val all = spark.table("sov_xb_t").as[PairOut].collect()
+          .map(p => (p.source_a, p.source_b)).sorted
+        assert(all.toSeq == Seq(("A", "B"), ("A", "C"), ("B", "C")),
+          s"after batch 2: $all")
+      } finally { q.stop() }
     }
   }
 
@@ -2874,45 +2632,38 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the d58 input: (return flag, integral quantity), 50 distinct <= 64 bins
-    val rows = graft.engine.Tables.lineitem(spark, sf0001)
-      .select(col("l_returnflag").as("group"),
-              col("l_quantity").cast("long").as("v"))
-      .as[ValueIn].collect()
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val in = MemoryStream[ValueIn]
-    val q = StreamingHistogram.histogram(in.toDS(), n = 64).writeStream
-      .format("memory").queryName("hist_t").outputMode(OutputMode.Update).start()
-    try {
-      in.addData(b1.toIndexedSeq) // mid-corpus batch cut
-      q.processAllAvailable()
-      in.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-      // final per-group state = the last batch's emissions for that group
-      val streamed = spark.table("hist_t").as[BinOut].collect()
-        .groupBy(_.group).map { case (g, bs) =>
-          val last = bs.groupBy(_.rank).map { case (_, dups) => dups.last }
-          // exact regime: every member equals the centroid -> value = sum/count
-          g -> last.toSeq.sortBy(_.rank)
-            .map(b => (b.sum / b.count, b.count)).toVector
-        }
-      val batch = graft.engine.Round14Ops.d58.fn(spark, sf0001).collect()
-        .groupBy(_.getAs[String]("l_returnflag")).map { case (g, rs) =>
-          g -> rs.map(r => (r.getAs[Long]("qty"), r.getAs[Long]("n"))).toVector
-        }
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"streaming exact-regime histogram must equal batch d58: " +
-          s"streamOnly=${streamed.keySet -- batch.keySet}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      // the d58 input: (return flag, integral quantity), 50 distinct <= 64 bins
+      val rows = graft.engine.Tables.lineitem(spark, sf0001)
+        .select(col("l_returnflag").as("group"),
+                col("l_quantity").cast("long").as("v"))
+        .as[ValueIn].collect()
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      val in = MemoryStream[ValueIn]
+      val q = StreamingHistogram.histogram(in.toDS(), n = 64).writeStream
+        .format("memory").queryName("hist_t").outputMode(OutputMode.Update).start()
+      try {
+        in.addData(b1.toIndexedSeq) // mid-corpus batch cut
+        q.processAllAvailable()
+        in.addData(b2.toIndexedSeq)
+        q.processAllAvailable()
+        // final per-group state = the last batch's emissions for that group
+        val streamed = spark.table("hist_t").as[BinOut].collect()
+          .groupBy(_.group).map { case (g, bs) =>
+            val last = bs.groupBy(_.rank).map { case (_, dups) => dups.last }
+            // exact regime: every member equals the centroid -> value = sum/count
+            g -> last.toSeq.sortBy(_.rank)
+              .map(b => (b.sum / b.count, b.count)).toVector
+          }
+        val batch = graft.engine.Round14Ops.d58.fn(spark, sf0001).collect()
+          .groupBy(_.getAs[String]("l_returnflag")).map { case (g, rs) =>
+            g -> rs.map(r => (r.getAs[Long]("qty"), r.getAs[Long]("n"))).toVector
+          }
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"streaming exact-regime histogram must equal batch d58: " +
+            s"streamOnly=${streamed.keySet -- batch.keySet}")
+      } finally { q.stop() }
     }
   }
 
@@ -3002,46 +2753,39 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val orders = Tables.orders(spark, sf0001)
-      .filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_custkey")).as[Long].collect().map(OrderIn.apply)
-    val in = MemoryStream[OrderIn]
-    val q = StreamingCustdist.distributionDeltas(in.toDS()).writeStream
-      .format("memory").queryName("cd_t").outputMode(OutputMode.Update).start()
-    try {
-      // two cuts; customers with urgent orders on BOTH sides force the
-      // retraction path (old-bucket -1) across the cut, not just within it
-      val (b1, b2) = orders.splitAt(orders.length / 2)
-      val both = b1.map(_.o_custkey).toSet intersect b2.map(_.o_custkey).toSet
-      assert(both.nonEmpty, "fixture must carry cross-cut customers")
-      in.addData(b1.toIndexedSeq); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      val deltas = spark.table("cd_t").as[DeltaOut].collect()
-      assert(deltas.exists(_.delta == -1L), "retractions must have fired")
-      // fold the changelog: net members per bucket (c >= 1); intermediate
-      // buckets net to zero and vanish
-      val nonZero = deltas.groupBy(_.c_count)
-        .map { case (c, ds) => c -> ds.map(_.delta).sum }
-        .filter(_._2 != 0L)
-      // the zero bucket is closed-form off the customer dimension
-      val nCust = Tables.customer(spark, sf0001).count()
-      val seen = nonZero.values.sum
-      val dist = (nonZero + (0L -> (nCust - seen)))
-        .filter(_._2 != 0L).toSeq
-        .sortBy { case (c, d) => (-d, -c) }
-      val batch = Round20bOps.d63.fn(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(dist == batch,
-        s"changelog distribution diverged:\nstream: $dist\nbatch:  $batch")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val orders = Tables.orders(spark, sf0001)
+        .filter(col("o_orderpriority") === "1-URGENT")
+        .select(col("o_custkey")).as[Long].collect().map(OrderIn.apply)
+      val in = MemoryStream[OrderIn]
+      val q = StreamingCustdist.distributionDeltas(in.toDS()).writeStream
+        .format("memory").queryName("cd_t").outputMode(OutputMode.Update).start()
+      try {
+        // two cuts; customers with urgent orders on BOTH sides force the
+        // retraction path (old-bucket -1) across the cut, not just within it
+        val (b1, b2) = orders.splitAt(orders.length / 2)
+        val both = b1.map(_.o_custkey).toSet intersect b2.map(_.o_custkey).toSet
+        assert(both.nonEmpty, "fixture must carry cross-cut customers")
+        in.addData(b1.toIndexedSeq); q.processAllAvailable()
+        in.addData(b2.toIndexedSeq); q.processAllAvailable()
+        val deltas = spark.table("cd_t").as[DeltaOut].collect()
+        assert(deltas.exists(_.delta == -1L), "retractions must have fired")
+        // fold the changelog: net members per bucket (c >= 1); intermediate
+        // buckets net to zero and vanish
+        val nonZero = deltas.groupBy(_.c_count)
+          .map { case (c, ds) => c -> ds.map(_.delta).sum }
+          .filter(_._2 != 0L)
+        // the zero bucket is closed-form off the customer dimension
+        val nCust = Tables.customer(spark, sf0001).count()
+        val seen = nonZero.values.sum
+        val dist = (nonZero + (0L -> (nCust - seen)))
+          .filter(_._2 != 0L).toSeq
+          .sortBy { case (c, d) => (-d, -c) }
+        val batch = Round20bOps.d63.fn(spark, sf0001).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assert(dist == batch,
+          s"changelog distribution diverged:\nstream: $dist\nbatch:  $batch")
+      } finally { q.stop() }
     }
   }
 
@@ -3053,37 +2797,30 @@ class StreamingSpec extends SparkSpec {
     import sp.implicits._
     implicit val s = spark
     implicit val sq = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val docs = Tables.documents(spark, sf0001)
-      .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
-    val in = MemoryStream[DocIn]
-    val q = StreamingDoremi.stats(in.toDS()).writeStream
-      .format("memory").queryName("dorem_t").outputMode(OutputMode.Update).start()
-    try {
-      val (b1, b2) = docs.splitAt(docs.length / 2)
-      in.addData(b1.toIndexedSeq); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      // n_docs grows monotonically -> latest per source = max-n row
-      val latest = spark.table("dorem_t").as[StatOut].collect()
-        .groupBy(_.source)
-        .map { case (src, rows) => rows.maxBy(_.n_docs) }.toSeq
-      val streamed = Round20cOps.k71FromZi(
-        latest.toDF("source", "sum_zi", "n_docs")).collect()
-        .map(_.toString).toSeq
-      val batch = Round20cOps.k71.fn(spark, sf0001).collect()
-        .map(_.toString).toSeq
-      assert(batch.nonEmpty)
-      assert(streamed == batch,
-        s"doremi rollup diverged; first diff: " +
-          s"${streamed.zip(batch).find(p => p._1 != p._2)}")
-    } finally {
-      q.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDbProvider {
+      val docs = Tables.documents(spark, sf0001)
+        .select(col("doc_id"), col("source"), col("text")).as[DocIn].collect()
+      val in = MemoryStream[DocIn]
+      val q = StreamingDoremi.stats(in.toDS()).writeStream
+        .format("memory").queryName("dorem_t").outputMode(OutputMode.Update).start()
+      try {
+        val (b1, b2) = docs.splitAt(docs.length / 2)
+        in.addData(b1.toIndexedSeq); q.processAllAvailable()
+        in.addData(b2.toIndexedSeq); q.processAllAvailable()
+        // n_docs grows monotonically -> latest per source = max-n row
+        val latest = spark.table("dorem_t").as[StatOut].collect()
+          .groupBy(_.source)
+          .map { case (src, rows) => rows.maxBy(_.n_docs) }.toSeq
+        val streamed = Round20cOps.k71FromZi(
+          latest.toDF("source", "sum_zi", "n_docs")).collect()
+          .map(_.toString).toSeq
+        val batch = Round20cOps.k71.fn(spark, sf0001).collect()
+          .map(_.toString).toSeq
+        assert(batch.nonEmpty)
+        assert(streamed == batch,
+          s"doremi rollup diverged; first diff: " +
+            s"${streamed.zip(batch).find(p => p._1 != p._2)}")
+      } finally { q.stop() }
     }
   }
 
