@@ -188,21 +188,23 @@ object Round18Ops {
     * statistic tokenizer papers report). k12's "BPE-ish" regex only
     * counted character-class pieces; this runs the actual merge-table
     * encode — greedy leftmost per rule, rules in learned order
-    * ([[graft.operators.Bpe]], one definition site shared with the
-    * Tier-2 training operator).
+    * (the native fold [[graft.functions.BpeFold]], which the Tier-2
+    * training operator [[graft.operators.Bpe]] also encodes with).
     *
-    * Scale shape: map-only — per word, chars → 8 nested `aggregate`
-    * folds (codegen'd HOFs, no UDF), summed per doc inside one
-    * `aggregate`; NO explode, NO join, NO shuffle except the final
-    * presentation sort (plan-pinned: zero Generate, zero Join). The
+    * Scale shape: map-only — one native `graft_bpe_pieces` call per doc
+    * ([[graft.functions.BpePiecesExpression]] via `Bpe.pieces`: words →
+    * code points → the 8 merges over an int buffer, summed), codegen'd
+    * with no `CodegenFallback` in the plan; NO explode, NO join, NO
+    * shuffle except the final presentation sort (plan-pinned: zero
+    * Generate, zero Join, zero CodegenFallback). The
     * ORACLE cannot fold, so it runs the nested-REPLACE chain over a
     * double-space-separated symbol rendering (' a  b ' → ' ab ' —
     * boundary-safe: every symbol keeps one flanking space per side for
     * neighboring matches, and a symbol merely PREFIXED by the right
     * element cannot match) — REPLACE-chain ≡ fold equivalence is
     * exhaustively verified over the corpus vocabulary and pinned in
-    * BpeSpec; the mechanisms stay independent (sequential array fold
-    * vs string rewriting). Integer counts, one declared ROUND-4
+    * Round18Spec; the mechanisms stay independent (symbol fold vs
+    * string rewriting). Integer counts, one declared ROUND-4
     * ratio of exact ints. */
   val k57: Q = Q(
     "k57_bpe_token_count",
@@ -228,13 +230,10 @@ object Round18Ops {
   /** The k57 plan body, factored so Round18Spec can drive the REAL plan
     * on synthetic frames (the h46Plan discipline). */
   def k57Plan(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val pieces = graft.operators.Bpe.encodeExpr(
-      graft.operators.Bpe.charsExpr("w"), merges)
     docs
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
-        expr(s"aggregate(transform(split(text, ' '), w -> size($pieces)), " +
-          "0, (p, q) -> p + q)").cast("long").as("n_pieces"))
+        graft.operators.Bpe.pieces(col("text"), merges).as("n_pieces"))
       .withColumn("pieces_per_token",
         round(col("n_pieces") * lit(1.0) / col("n_tokens"), 4))
       .orderBy(asc_nulls_last("doc_id"))

@@ -1,27 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.functions.{BpeEncodeExpression, BpeMergeTable, BpePiecesExpression}
 
 /** Byte-pair-encoding tokenizer [public: Sennrich et al. 2016, "Neural
   * Machine Translation of Rare Words with Subword Units"; Gage 1994]:
   * deterministic merge-table TRAINING over a distributed word-frequency
-  * frame, plus the ENCODE fold — both a reference Scala implementation
-  * and the Column-expression form the declared k57 query ships (one
-  * definition site, so the plan side and the operator can never drift).
+  * frame, the ENCODE Column faces over the native fold
+  * ([[graft.functions.BpePiecesExpression]] and its array form), and an
+  * independent reference encode in plain Scala that the native fold is
+  * tested against (the two share no code).
   *
-  * Semantics pinned here (BpeSpec):
+  * Semantics pinned here (Round18Spec):
   *
   *  - TRAIN: iterate `nMerges` times; each round counts ADJACENT symbol
   *    pairs weighted by word frequency and merges the argmax under the
   *    pinned tie rule (count DESC, left ASC, right ASC — a total order,
   *    so training is reproducible bit-for-bit on any cluster layout).
-  *  - ENCODE: apply the learned merges IN ORDER, each rule exhaustively
-  *    (greedy leftmost within a rule). Sequential full application is
-  *    equivalent to the classic lowest-rank-pair-first encode because a
-  *    rule's operands are always symbols formed by EARLIER rules only —
-  *    a later merge can never re-enable an earlier one (spec-pinned on
-  *    the chained-merge corpus).
+  *  - ENCODE: a word's base symbols are its code points (an empty word
+  *    is one empty symbol); apply the learned merges IN ORDER, each rule
+  *    exhaustively (greedy leftmost within a rule). Sequential full
+  *    application is equivalent to the classic lowest-rank-pair-first
+  *    encode because a rule's operands are always symbols formed by
+  *    EARLIER rules only — a later merge can never re-enable an earlier
+  *    one (spec-pinned on the chained-merge corpus).
   *
   * Scale shape of `train`: the input is the WORD-TYPE frame (word,
   * freq) — vocabulary-sized, not corpus-sized (the caller aggregates
@@ -46,40 +50,26 @@ object Bpe {
       else acc :+ x
     }
 
-  /** Reference encode: character symbols → merges in learned order. */
-  def encode(word: String, merges: Seq[(String, String)]): Vector[String] =
-    merges.foldLeft(word.toVector.map(_.toString)) { case (s, (a, b)) =>
-      applyMerge(s, a, b)
-    }
-
-  /** SQL literal guard: merge symbols are embedded in expression strings
-    * (and in the k57 oracle's REPLACE patterns, where a space would also
-    * break the separator discipline). */
-  private def checkSymbol(s: String): String = {
-    require(s.nonEmpty && s.forall(c => c != '\'' && c != '\\' && c != ' '),
-      s"BPE symbol must be quote/backslash/space-free: '$s'")
-    s
+  /** Reference encode: code-point symbols (an empty word is one empty
+    * symbol) → merges in learned order. */
+  def encode(word: String, merges: Seq[(String, String)]): Vector[String] = {
+    val symbols =
+      if (word.isEmpty) Vector("")
+      else word.codePoints.toArray.toVector.map(Character.toString(_))
+    merges.foldLeft(symbols) { case (s, (a, b)) => applyMerge(s, a, b) }
   }
 
-  /** Column-expression encode: fold `merges` over a symbol-array SQL
-    * expression via nested `aggregate` HOFs — codegen'd, map-only, the
-    * exact [[applyMerge]] semantics (bit-parity spec-pinned against the
-    * reference on random words). Lambda variables are suffixed per rule
-    * because Spark rejects shadowed lambda names in nested HOFs. */
-  def encodeExpr(symbolsExpr: String, merges: Seq[(String, String)]): String =
-    merges.zipWithIndex.foldLeft(symbolsExpr) { case (e, ((a0, b0), r)) =>
-      val a = checkSymbol(a0); val b = checkSymbol(b0)
-      s"aggregate($e, cast(array() as array<string>), (ac$r, x$r) -> " +
-        s"case when size(ac$r) > 0 and element_at(ac$r, -1) = '$a' " +
-        s"and x$r = '$b' " +
-        s"then concat(slice(ac$r, 1, size(ac$r) - 1), array('$a$b')) " +
-        s"else concat(ac$r, array(x$r)) end)"
-    }
+  /** BPE piece count of a text column under `merges`: ' '-split words
+    * (empty ones kept), code-point symbols, merges in learned order,
+    * summed per row — the native codegen'd
+    * [[graft.functions.BpePiecesExpression]]; null text gives null. */
+  def pieces(text: Column, merges: Seq[(String, String)]): Column =
+    Bridge.column(BpePiecesExpression(Bridge.expression(text), BpeMergeTable(merges)))
 
-  /** Character split of a word expression — the base symbol sequence.
-    * `split(w, '')` yields one element per character on both engines
-    * (parity spec-pinned). */
-  def charsExpr(wordExpr: String): String = s"split($wordExpr, '')"
+  /** A symbol-array column re-encoded under `merges` — the same native
+    * fold in its array → array form ([[graft.functions.BpeEncodeExpression]]). */
+  def encodeSymbols(symbols: Column, merges: Seq[(String, String)]): Column =
+    Bridge.column(BpeEncodeExpression(Bridge.expression(symbols), BpeMergeTable(merges)))
 
   /** Deterministic distributed BPE training over a (word, freq) frame.
     * Returns the learned merge table in order; stops early when no
@@ -87,7 +77,7 @@ object Bpe {
   def train(words: DataFrame, wordCol: String, freqCol: String,
             nMerges: Int): Seq[(String, String)] = {
     var df = words
-      .select(expr(charsExpr(wordCol)).as("__s"),
+      .select(split(col(wordCol), "").as("__s"), // one symbol per code point
               col(freqCol).cast("long").as("__f"))
       .localCheckpoint()
     val merges = Vector.newBuilder[(String, String)]
@@ -113,7 +103,7 @@ object Bpe {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((a, b))
         // re-derive symbols map-side; checkpoint so lineage stays flat
-        df = df.withColumn("__s", expr(encodeExpr("__s", Seq((a, b)))))
+        df = df.withColumn("__s", encodeSymbols(col("__s"), Seq((a, b))))
           .localCheckpoint()
         round += 1
       }

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.engine.{ExtOps, JoinOps}
 
 /** Physical-plan regression guards for the round-3 plan rewrites: the
@@ -13,6 +15,25 @@ class PlanShapeSpec extends SparkSpec {
   private def executedPlan(df: DataFrame): String = {
     df.collect() // force execution so AQE finalizes the plan
     df.queryExecution.executedPlan.toString
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Pretty names of the `CodegenFallback` expressions (evaluated
+    * interpreted even inside generated code) in a DataFrame's executed
+    * plan, AQE stages and subqueries included. */
+  private def codegenFallbacks(df: DataFrame): Seq[String] = {
+    df.collect() // force execution so AQE finalizes the plan
+    Aqe.collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e.prettyName }))
+      .distinct
+  }
+
+  test("k57: no CodegenFallback expression in the executed plan") {
+    // the BPE piece count is the native graft_bpe_pieces; a HOF fold
+    // (aggregate/transform are CodegenFallback) coming back fails here
+    val found = codegenFallbacks(graft.engine.Round18Ops.k57.fn(spark, sf0001))
+    assert(found.isEmpty, s"k57 runs interpreted expressions: $found")
   }
 
   test("full-surface sweep: no declared query plans an unintended nested-loop or cartesian") {

@@ -186,25 +186,54 @@ class Round18Spec extends SparkSpec {
     assert(Bpe.encode("merge", m2.reverse) == Vector("m", "er", "g", "e"))
   }
 
-  test("bpe encodeExpr ≡ reference encode on random words (the k57 plan side)") {
+  /** Reference piece count of a text: its ' '-split words (empty ones
+    * kept) priced by the reference encode. */
+  private def refPieces(text: String, merges: Seq[(String, String)]): Long =
+    text.split(" ", -1).map(w => graft.operators.Bpe.encode(w, merges).length.toLong).sum
+
+  test("bpe pieces ≡ reference encode on random words and edge texts") {
     val sp = spark
     import sp.implicits._
     import graft.operators.Bpe
+    import graft.functions.{BpeMergeTable, BpePiecesExpression}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
     val merges = graft.engine.Round18Ops.Merges
     val rnd = new scala.util.Random(77)
     val alphabet = "erinowstmalu"
     val words = (1 to 60).map(_ =>
       (1 to (2 + rnd.nextInt(9))).map(_ =>
         alphabet(rnd.nextInt(alphabet.length))).mkString)
-    val df = words.zipWithIndex.map { case (w, i) => (i.toLong, w) }
-      .toDF("id", "w")
-    val got = df.select(col("id"),
-        expr(Bpe.encodeExpr(Bpe.charsExpr("w"), merges)).as("enc"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[String](1).toVector).toMap
-    words.zipWithIndex.foreach { case (w, i) =>
-      assert(got(i.toLong) == Bpe.encode(w, merges),
-        s"fold expression must equal the reference on '$w'")
+    val smiley = "\uD83D\uDE00" // U+1F600, a supplementary-plane code point
+    // empty, leading / trailing / double / lone spaces, a supplementary
+    // code point, a precomposed accented letter (U+00E9)
+    val edges = Seq("", " stream", "stream ", "the  merge", " ",
+      s"x${smiley}er", "\u00e9er", s"caf\u00e9 $smiley$smiley", "merge")
+    val texts: Seq[Option[String]] = (words ++ edges).map(Option(_)) :+ None
+    val m2 = Seq("e" -> "r", "m" -> "er")
+    val wide = Seq("\u00e9" -> "er", smiley -> smiley)
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    Seq(merges, m2, m2.reverse, wide).foreach { m =>
+      val got = df.select(col("id"), Bpe.pieces(col("text"), m)).collect()
+        .map(r => r.getLong(0) -> Option.when(!r.isNullAt(1))(r.getLong(1))).toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        val want = t.map(refPieces(_, m))
+        assert(got(i.toLong) == want, s"codegen'd pieces must equal the reference on $t under $m")
+        val interp = BpePiecesExpression(Literal.create(t.orNull, StringType), BpeMergeTable(m))
+        assert(Option(interp.eval()) == want, s"interpreted pieces on $t under $m")
+      }
+    }
+    // the reference split itself: code points, an empty word is 1 piece
+    // (what Spark's split(w, '') and DuckDB's STRING_SPLIT(w, '') give)
+    assert(Bpe.encode("", merges) == Vector(""))
+    assert(Bpe.encode(s"x${smiley}er", merges) == Vector("x", smiley, "er"))
+    assert(refPieces("merge", m2) == 3 && refPieces("merge", m2.reverse) == 4)
+    // the array form Bpe.train re-encodes with ≡ the reference encode
+    val enc = (words ++ edges).toDF("w")
+      .select(col("w"), Bpe.encodeSymbols(split(col("w"), ""), merges)).collect()
+    enc.foreach { r =>
+      assert(r.getSeq[String](1).toVector == Bpe.encode(r.getString(0), merges),
+        s"array-form fold must equal the reference on '${r.getString(0)}'")
     }
   }
 
@@ -243,6 +272,7 @@ class Round18Spec extends SparkSpec {
     // exhaustively over the whole fixture vocabulary (31 words)
     import graft.operators.Bpe
     val merges = graft.engine.Round18Ops.Merges
+    val table = graft.functions.BpeMergeTable(merges)
     val vocab = graft.engine.Tables.documents(spark, sf001)
       .select(explode(split(col("text"), " ")).as("w"))
       .distinct().collect().map(_.getString(0))
@@ -253,6 +283,9 @@ class Round18Spec extends SparkSpec {
       val pieces = s.split("  ", -1).length - 2
       assert(pieces == Bpe.encode(w, merges).length,
         s"replace-chain and fold disagree on '$w'")
+      assert(pieces == graft.functions.BpeFold.pieces(
+          org.apache.spark.unsafe.types.UTF8String.fromString(w), table),
+        s"replace-chain and the native worker disagree on '$w'")
     }
   }
 }
