@@ -892,7 +892,7 @@ object ScaleProbe {
         iters = 3, broadcastGate = gate)
       val want = ringClosedForm(n, 3)
       val exact = ranks.filter(col("r") === lit(want)).count()
-      graft.operators.PageRank.freeResult(ranks)
+      graft.operators.Materialize.release(ranks)
       require(exact == n,
         s"PageRank ring($n): only $exact/$n nodes match the closed form $want")
       ((System.nanoTime() - t0) / 1e9, exact)
@@ -962,15 +962,16 @@ object ScaleProbe {
     // gated around; the ring gate above is the structured-similarity
     // scale statement.
     import org.apache.spark.sql.DataFrame
+    import graft.operators.Materialize
     def ringCorpus(n: Int): DataFrame =
       spark.range(n).select(col("id").as("vec_id"),
         expr(s"""array(cos(2 * pi() * id / $n), sin(2 * pi() * id / $n),
                 |      0.3 * cos(4 * pi() * id / $n),
                 |      0.3 * sin(4 * pi() * id / $n))""".stripMargin)
           .as("embedding"))
-    def ringProbe(n: Int, bandBits: Int): (Double, Double) = {
+    def ringProbe(n: Int, bandBits: Int): (Double, Double) = Materialize.scoped { ms =>
       val t0 = System.nanoTime()
-      val corpus = ringCorpus(n).localCheckpoint()
+      val corpus = ms.pin(ringCorpus(n))
       val idx = graft.operators.Hnsw.build(corpus, "vec_id", "embedding",
         dim = 4, m = 12, bands = 4, bandBits = bandBits)
       val probes = corpus.filter(pmod(col("vec_id"), lit(n / 20)) === 0)
@@ -1002,7 +1003,7 @@ object ScaleProbe {
                 expr("transform(embedding, (x, i) -> cast(x as double) + " +
                      "if(i = pmod(base, 64), r * 0.001d, 0d))")
                   .as("embedding"))
-    val corpusC = cliqueCorpus(200).localCheckpoint()
+    val corpusC = Materialize.shared(cliqueCorpus(200), eager = true)
     val idxC = graft.operators.Hnsw.build(corpusC, "vec_id", "embedding",
       dim = 64, m = 12, bands = 4, bandBits = 4)
     val probesC = corpusC.filter(pmod(col("vec_id"), lit(100)) === 0)
@@ -1012,6 +1013,7 @@ object ScaleProbe {
     val hitsC = resC.filter(col("vec_id") > col("qid") &&
                             col("vec_id") <= col("qid") + 9).count()
     idxC.free()
+    Materialize.release(corpusC)
     val recallC = hitsC / (9.0 * 20)
     require(recallC >= 0.9,
       f"hnsw clique(2000): planted recall@9 $recallC%.3f < 0.9")

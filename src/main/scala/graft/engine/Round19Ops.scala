@@ -867,14 +867,13 @@ object Round19Ops {
     // r19: ONE stored evaluation of the signature subtree. The x/y joins
     // below alias-renumber sig into two statically-planned copies whose
     // merged execution was left to AQE exchange reuse (the r18 plan read);
-    // the lazy localCheckpoint (the RangeJoin/DistributedRank discipline)
+    // the lazy shared pin (the RangeJoin/DistributedRank discipline)
     // makes the reuse structural — the corpus explode + doc-keyed
     // signature aggregate runs once by RDD identity, and both broadcast
     // builds read the doc-sized (doc_id + 4×16 B) checkpoint.
-    val sig = docs
+    val sig = graft.operators.Materialize.shared(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
-      .groupBy("doc_id").agg(mh(0), mh(1), mh(2), mh(3))
-      .localCheckpoint(false)
+      .groupBy("doc_id").agg(mh(0), mh(1), mh(2), mh(3)))
     val m = (0 to 3).map(i =>
       when(col(s"x.h$i") === col(s"y.h$i"), 1).otherwise(0)).reduce(_ + _)
     pairs
@@ -973,11 +972,11 @@ object Round19Ops {
     val sp = pairs0.sparkSession
     import sp.implicits._
     // The histogram split below consumes the pair frame TWICE (pair
-    // buckets + per-doc maxima); a lazy localCheckpoint stores the pruned
+    // buckets + per-doc maxima); a lazy shared pin stores the pruned
     // pair frame once (|pairs| × (id, id, j) — the τ-min frame, never the
     // corpus) so the expensive k02 pair join cannot re-plan per consumer
     // (the same structural-reuse discipline as d44/k66 this round).
-    val pairs = pairs0.localCheckpoint(false)
+    val pairs = graft.operators.Materialize.shared(pairs0)
     val grid = SweepGrid.toDF("threshold")
     // largest grid point ≤ j; NULL when j qualifies nowhere (j below the
     // grid minimum — impossible for the pruned pair frame, but a NULL here

@@ -468,14 +468,14 @@ object Round20bOps {
       val sh = grams3(Tables.documents(s, dir))
       val splits = mdSplits(Tables.documents(s, dir))
       // the eval gram set feeds THREE consumers (sketch sizing, Bloom
-      // build, semi-join build side) — localCheckpoint materializes the
+      // build, semi-join build side) — an eager shared pin materializes the
       // small frame once instead of re-running the eval-side Generate
       // three times (the k23/k25 lineage hygiene; measured 8.8 → ~3 s
       // at sf0.1)
-      val ev = sh.join(splits.filter(col("split") =!= "train").select("doc_id"),
-                       "doc_id")
-        .select("g").distinct()
-        .localCheckpoint()
+      val ev = graft.operators.Materialize.shared(
+        sh.join(splits.filter(col("split") =!= "train").select("doc_id"), "doc_id")
+          .select("g").distinct(),
+        eager = true)
       val train = sh.join(splits.filter(col("split") === "train")
                             .select("doc_id"), "doc_id")
       // sketch sizing: one tiny action over the (small) eval gram set —

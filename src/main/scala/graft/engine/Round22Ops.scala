@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{GreedyCover, PageRank}
+import graft.operators.{GreedyCover, Materialize, PageRank}
 
 /** Round-17 second batch (builder-internal r22): three operator CLASSES
   * the surface did not cover —
@@ -103,33 +103,30 @@ object Round22Ops {
        |ORDER BY rank_scaled DESC NULLS LAST, node_kind ASC NULLS LAST,
        |  entity_key ASC NULLS LAST
        |LIMIT 20""".stripMargin,
-    (s, dir) => {
-      val pairs = Tables.orders(s, dir)
+    (s, dir) => Materialize.scoped { m =>
+      // one materialization: the symmetrizing union would otherwise run
+      // the join+distinct once per branch (alias renumbering defeats
+      // exchange reuse — the ConnectedComponents lesson)
+      val pairs = m.pin(Tables.orders(s, dir)
         .filter(col("o_custkey").isNotNull)
         .join(Tables.lineitem(s, dir).filter(col("l_suppkey").isNotNull),
               col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("cn"),
                 (col("l_suppkey") * 2 + 1).as("sn"))
-        .distinct()
-        // one materialization: the symmetrizing union would otherwise run
-        // the join+distinct once per branch (alias renumbering defeats
-        // exchange reuse — the ConnectedComponents lesson)
-        .localCheckpoint()
+        .distinct())
       val edges = pairs.select(col("cn").as("src"), col("sn").as("dst"))
         .unionAll(pairs.select(col("sn").as("src"), col("cn").as("dst")))
       val ranks = PageRank.ranks(edges, "src", "dst", iters = 3)
-      val out = ranks.select(
-          when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
-            .as("node_kind"),
-          expr("node div 2").as("entity_key"),
-          col("r").as("rank_scaled"))
-        .orderBy(desc_nulls_last("rank_scaled"), asc_nulls_last("node_kind"),
-                 asc_nulls_last("entity_key"))
-        .limit(20)
-        .localCheckpoint() // 20-row self-contained result
-      PageRank.freeResult(ranks)
-      PageRank.freeResult(pairs)
-      out
+      // a 20-row self-contained result: every pin above it can go
+      try m.keep(m.pin(ranks.select(
+            when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
+              .as("node_kind"),
+            expr("node div 2").as("entity_key"),
+            col("r").as("rank_scaled"))
+          .orderBy(desc_nulls_last("rank_scaled"), asc_nulls_last("node_kind"),
+                   asc_nulls_last("entity_key"))
+          .limit(20)))
+      finally Materialize.release(ranks)
     })
 
   /** k74 — greedy max-coverage document selection [public: the

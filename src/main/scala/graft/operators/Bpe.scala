@@ -73,13 +73,13 @@ object Bpe {
 
   /** Deterministic distributed BPE training over a (word, freq) frame.
     * Returns the learned merge table in order; stops early when no
-    * adjacent pair remains. */
+    * adjacent pair remains. Each round's pinned symbol frame is released
+    * once the next one is materialized, and the last when training ends. */
   def train(words: DataFrame, wordCol: String, freqCol: String,
-            nMerges: Int): Seq[(String, String)] = {
-    var df = words
+            nMerges: Int): Seq[(String, String)] = Materialize.scoped { s =>
+    var df = s.pin(words
       .select(split(col(wordCol), "").as("__s"), // one symbol per code point
-              col(freqCol).cast("long").as("__f"))
-      .localCheckpoint()
+              col(freqCol).cast("long").as("__f")))
     val merges = Vector.newBuilder[(String, String)]
     var done = false
     var round = 0
@@ -102,9 +102,10 @@ object Bpe {
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((a, b))
-        // re-derive symbols map-side; checkpoint so lineage stays flat
-        df = df.withColumn("__s", encodeSymbols(col("__s"), Seq((a, b))))
-          .localCheckpoint()
+        // re-derive symbols map-side; pin so lineage stays flat
+        val next = s.pin(df.withColumn("__s", encodeSymbols(col("__s"), Seq((a, b)))))
+        s.release(df)
+        df = next
         round += 1
       }
     }

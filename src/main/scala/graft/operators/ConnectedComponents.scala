@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Connected components over an undirected edge list — the consumer every
   * near-dup candidate generator (k02/k15/k19, MinHashDedup, SimHashDedup)
   * feeds: candidate PAIRS become duplicate CLUSTERS, and a pipeline keeps
@@ -18,10 +16,11 @@ import scala.collection.mutable.ArrayBuffer
   * |edges| + |vertices| rows and NO driver-side data (the driver sees one
   * convergence counter per round). Rounds needed = graph diameter in
   * label-hops; duplicate clusters are near-cliques, so 2-3 rounds
-  * converge. Each round localCheckpoints its labels (lineage stays one
-  * round deep — at 100 TB swap for reliable `checkpoint` on a real
-  * cluster), and a graph too deep for the round budget FAILS loudly
-  * rather than returning unconverged labels.
+  * converge. Each round pins its labels ([[Materialize]]; lineage stays
+  * one round deep), and a graph too deep for the round budget FAILS
+  * loudly rather than returning unconverged labels. Every round pin is
+  * released when the call returns or fails; the result is one pinned
+  * |V|-row frame, released with [[Materialize.release]] once consumed.
   *
   * [public: label propagation and the large-star/small-star alternation —
   * Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -31,40 +30,12 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ConnectedComponents {
 
-  /** Unpersist the cached RDDs behind localCheckpoint'ed frames. Every
-    * iterative variant below checkpoints per round; without this the
-    * checkpointed label/edge blocks stay pinned in storage memory for the
-    * session's lifetime — monotone creep in a long-lived session (the
-    * Bench process runs 3 full passes × 2 CC queries and measurably slowed
-    * every later query via GC pressure). Spark exposes no public
-    * un-checkpoint, so this walks the analyzed plan to the LogicalRDD
-    * leaves (the checkpoint cache) and unpersists them directly. */
-  private def free(frames: Iterable[DataFrame]): Unit =
-    Checkpoints.free(frames)
-
-  /** Release the one cached frame an assign / assignContracted / assignStar
-    * result pins
-    * (the materialized final labels, |V| rows). Callers that hold the
-    * result long-term don't need this; call it after the labels are
-    * consumed to leave zero storage residue.
-    *
-    * Guarded to frames whose ROOT plan node is a LogicalRDD — i.e. the
-    * localCheckpoint result this module returned. The deep plan walk
-    * [[free]] does is correct only for module-OWNED frames: a
-    * localCheckpoint RDD cannot be recomputed after unpersist, so walking
-    * an arbitrary caller frame (e.g. assignContracted's edge-free branch,
-    * which returns a plain projection over the CALLER's vertices) could
-    * unpersist a caller-owned checkpoint and poison their later actions
-    * with "checkpoint block not found" instead of a recompute (flagged
-    * r7). Non-checkpoint roots are a safe no-op — such a result pins
-    * nothing of ours to release. */
-  def freeResult(labels: DataFrame): Unit = Checkpoints.freeResult(labels)
-
   /** Label every vertex with its component's minimum vertex id.
     * Returns (`vertexCol`, `component`). Vertices absent from `edges`
     * keep their own id (singleton clusters). */
   def assign(vertices: DataFrame, edges: DataFrame, vertexCol: String,
-             srcCol: String, dstCol: String, maxIters: Int = 20): DataFrame = {
+             srcCol: String, dstCol: String,
+             maxIters: Int = 20): DataFrame = Materialize.scoped { s =>
     // persist the DIRECTED edges before symmetrizing: every round joins
     // against them, and the edge producer is typically the expensive part
     // (a near-dup join). Persisting the union instead would run the
@@ -73,36 +44,37 @@ object ConnectedComponents {
     // persisting the base runs it exactly once and the symmetric view is
     // two cheap projections of the cache. Measured 18.6 s → 5 s for k23
     // at sf0.1.
-    val base = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")).persist()
+    val base = s.cache(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")))
     val sym = base
       .select(col("__s").as("__v"), col("__d").as("__n"))
       .unionByName(base.select(col("__d").as("__v"), col("__s").as("__n")))
-    var labels = vertices.select(col(vertexCol).as("__v"),
-                                 col(vertexCol).as("__label"))
-      .localCheckpoint(false) // lazy: round 1's action materializes it
+    var pinned = s.pin(vertices.select(col(vertexCol).as("__v"),
+                                       col(vertexCol).as("__label")),
+                       eager = false) // lazy: round 1's action materializes it
+    var labels = pinned
     var iters = 0
     var converged = false
     while (!converged && iters < maxIters) {
       // neighbor labels flow along edges; min over {own, neighbors'}. The
       // old label rides along so convergence is read off the SAME
       // materialized frame — one action per round, not a second
-      // compare-join job. localCheckpoint (not persist) TRUNCATES the
+      // compare-join job. A checkpoint pin (not persist) TRUNCATES the
       // lineage: the labels subtree is referenced twice per round, so
       // without truncation the analyzer walks a tree that doubles every
-      // round. (On a real cluster prefer reliable `checkpoint` —
-      // localCheckpoint does not survive executor loss.)
-      val next = sym
+      // round.
+      val next = s.pin(sym
         .join(labels.select(col("__v").as("__n2"), col("__label")),
               col("__n") === col("__n2"))
         .select(col("__v"), col("__label"), lit(null).cast("boolean").as("__own"))
         .unionByName(labels.withColumn("__own", lit(true)))
         .groupBy("__v")
         .agg(min("__label").as("__label"),
-             min(when(col("__own"), col("__label"))).as("__old"))
-        .localCheckpoint(false) // lazy: the changed-count below is the
-                                // round's ONE job and materializes it
+             min(when(col("__own"), col("__label"))).as("__old")),
+        eager = false) // lazy: the changed-count below is the round's ONE
+                       // job and materializes it
       val changed = next.filter(col("__label") =!= col("__old")).count()
-      free(Seq(labels)) // previous round's checkpoint: next is materialized
+      s.release(pinned) // previous round's checkpoint: next is materialized
+      pinned = next
       labels = next.select("__v", "__label")
       converged = changed == 0
       iters += 1
@@ -114,16 +86,13 @@ object ConnectedComponents {
     require(converged,
       s"label propagation did not converge in $maxIters rounds " +
         "(graph diameter exceeds the budget): raise maxIters or use assignStar")
-    base.unpersist()
-    // materialize the caller-facing projection and free the loop's final
-    // checkpoint: the caller's sort/write reads the |V| cached rows, never
-    // re-runs the iteration chain, and the only storage residue is this
-    // one small frame (see [[freeResult]])
-    val out = labels
-      .select(col("__v").as(vertexCol), col("__label").as("component"))
-      .localCheckpoint()
-    free(Seq(labels))
-    out
+    s.release(base)
+    // materialize the caller-facing projection; the scope then frees the
+    // loop's final checkpoint: the caller's sort/write reads the |V|
+    // cached rows, never re-runs the iteration chain, and the only storage
+    // residue is this one small frame
+    s.keep(s.pin(labels
+      .select(col("__v").as(vertexCol), col("__label").as("component"))))
   }
 
   /** Diagnostic trace of the LAST [[assignContracted]]/[[assignStar]] run
@@ -182,18 +151,17 @@ object ConnectedComponents {
   def assignContracted(vertices: DataFrame, edges: DataFrame, vertexCol: String,
                        srcCol: String, dstCol: String,
                        maxContract: Int = 4, maxIters: Int = 30,
-                       forceStar: Boolean = false): DataFrame = {
-    // LAZY localCheckpoint throughout the loop: it truncates the logical
+                       forceStar: Boolean = false): DataFrame = Materialize.scoped { s =>
+    // LAZY pins throughout the loop: each truncates the logical
     // plan IMMEDIATELY (each pass references its predecessor several
     // times — with persist() alone the plan tree quintuples per pass and
     // plan stringification OOMs), while deferring materialization so each
     // pass still runs ONE job (the contracted-edge count computes the
     // labels and edges together). Mapping frames stay pinned until the
-    // composed result is materialized below.
-    val junk = ArrayBuffer.empty[DataFrame] // all loop checkpoints, freed at the end
-    var e = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-      .filter(col("__a") =!= col("__b")).localCheckpoint(false)
-    junk += e
+    // composed result is materialized below; the scope frees every loop
+    // pin on exit.
+    var e = s.pin(edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
+      .filter(col("__a") =!= col("__b")), eager = false)
     var nEdges = e.count()
     val nEdges0 = nEdges // gate basis for the final |V|-sized compose join
     lastTrace.set(Trace(Vector(nEdges0), -1))
@@ -203,9 +171,8 @@ object ConnectedComponents {
     while (nEdges > 0 && pass < maxContract) {
       val sym = e.select(col("__a").as("__v"), col("__b").as("__n"))
         .unionByName(e.select(col("__b").as("__v"), col("__a").as("__n")))
-      val l = sym.groupBy("__v")
-        .agg(least(min(col("__n")), first(col("__v"))).as("__l"))
-        .localCheckpoint(false)
+      val l = s.pin(sym.groupBy("__v")
+        .agg(least(min(col("__n")), first(col("__v"))).as("__l")), eager = false)
       // relabel-join strategy, decided by the KNOWN pass size: the label
       // frame holds ≤ 2·nEdges rows, so below the gate it broadcasts
       // (the relabel joins then add ZERO exchanges — the edge side never
@@ -217,18 +184,16 @@ object ConnectedComponents {
       // joins: a broadcast there would be the OOM the GraftSession notes
       // warn about.
       val lSized = if (nEdges <= broadcastEdgeGate) broadcast(l) else l
-      val e2 = e
+      val e2 = s.pin(e
         .join(lSized.select(col("__v").as("__s2"), col("__l").as("__la")),
               col("__a") === col("__s2"))
         .join(lSized.select(col("__v").as("__d2"), col("__l").as("__lb")),
               col("__b") === col("__d2"))
         .select(col("__la").as("__a"), col("__lb").as("__b"))
         .filter(col("__a") =!= col("__b"))
-        .distinct().localCheckpoint(false)
+        .distinct(), eager = false)
       e = e2
       nEdges = e2.count() // materializes l and e2 in one job
-      junk += l
-      junk += e2
       mappings ::= l
       exits ::= nEdges
       pass += 1
@@ -247,8 +212,7 @@ object ConnectedComponents {
     val roots: Option[DataFrame] =
       if (nEdges == 0 && !forceStar) None
       else {
-        val fix = starFixpoint(e, maxIters, knownDistinctCount = Some(nEdges))
-        junk += fix
+        val fix = starFixpoint(s, e, maxIters, knownDistinctCount = Some(nEdges))
         Some(fix.groupBy("__a").agg(min("__b").as("__c"))
           .select(col("__a").as("__v"), col("__c")))
       }
@@ -271,22 +235,18 @@ object ConnectedComponents {
     }
     composed match {
       case None => // edge-free graph: every vertex is a singleton
-        free(junk)
         vertices.select(col(vertexCol), col(vertexCol).as("component"))
       case Some(c) =>
-        // materialize the composed labels, then release every loop
-        // checkpoint: the only storage residue is the |V|-row result.
+        // materialize the composed labels; the scope then releases every
+        // loop pin: the only storage residue is the |V|-row result.
         // c holds ≤ 2·nEdges0 rows (every vertex that ever touched an
         // edge) — broadcast below the gate so the |V|-row side never
         // re-shuffles for this join either.
         val cSized = if (nEdges0 <= broadcastEdgeGate) broadcast(c) else c
-        val out = vertices.select(col(vertexCol).as("__v0"))
+        s.keep(s.pin(vertices.select(col(vertexCol).as("__v0"))
           .join(cSized, col("__v0") === col("__v"), "left")
           .select(col("__v0").as(vertexCol),
-                  coalesce(col("__c"), col("__v0")).as("component"))
-          .localCheckpoint()
-        free(junk)
-        out
+                  coalesce(col("__c"), col("__v0")).as("component"))))
     }
   }
 
@@ -330,33 +290,31 @@ object ConnectedComponents {
     * and random graphs. Numeric vertex ids required (the star orders ids;
     * [[assign]] only needs orderable ids). */
   def assignStar(vertices: DataFrame, edges: DataFrame, vertexCol: String,
-                 srcCol: String, dstCol: String, maxIters: Int = 30): DataFrame = {
+                 srcCol: String, dstCol: String,
+                 maxIters: Int = 30): DataFrame = Materialize.scoped { s =>
     // fixpoint edges are stars (v → component min); roots keep themselves.
-    // Materialize the labels and free the fixpoint edge checkpoint — the
-    // only storage residue is the |V|-row result (see [[freeResult]]).
-    val e = starFixpoint(
+    // Materialize the labels; the scope frees the fixpoint edge pin — the
+    // only storage residue is the |V|-row result.
+    val e = starFixpoint(s,
       edges.select(col(srcCol).as("__a"), col(dstCol).as("__b")),
       maxIters, knownDistinctCount = None)
-    val out = vertices.select(col(vertexCol).as("__v"))
+    s.keep(s.pin(vertices.select(col(vertexCol).as("__v"))
       .join(e.groupBy("__a").agg(min("__b").as("__r")),
             col("__v") === col("__a"), "left")
       .select(col("__v").as(vertexCol),
-              coalesce(col("__r"), col("__v")).as("component"))
-      .localCheckpoint()
-    free(Seq(e))
-    out
+              coalesce(col("__r"), col("__v")).as("component"))))
   }
 
   /** The large-star/small-star alternation run to its fixpoint over an
-    * (__a, __b) edge frame; returns the CHECKPOINTED fixpoint edges
-    * (caller frees). `knownDistinctCount` = Some(n) promises the input is
-    * already loop-free, distinct, and checkpointed with n edges (the
+    * (__a, __b) edge frame; returns the fixpoint edges pinned in `s`.
+    * `knownDistinctCount` = Some(n) promises the input is already
+    * loop-free, distinct, and pinned in `s` with n edges (the
     * contract-loop pass outputs) — the initial distinct + sig job is then
     * skipped entirely and round 1 compares against a sentinel that can
     * never match a real signature. Fails loudly if the round budget is
     * exhausted before the fixpoint (the [[assign]] philosophy: silent
     * unconverged stars would be silently wrong roots). */
-  private def starFixpoint(edges: DataFrame, maxIters: Int,
+  private def starFixpoint(s: Materialize.Scope, edges: DataFrame, maxIters: Int,
                            knownDistinctCount: Option[Long]): DataFrame = {
     def symmetric(e: DataFrame): DataFrame =
       e.select(col("__a").as("__u"), col("__b").as("__n"))
@@ -400,20 +358,19 @@ object ConnectedComponents {
         .collect().head
       (r.getLong(0), r.getDecimal(1).toString)
     }
-    // localCheckpoint per round: large/small-star each reference their
+    // a checkpoint pin per round: large/small-star each reference their
     // input twice, so untruncated lineage would double every round (the
     // same argument as assign's loop)
     var e = knownDistinctCount match {
-      case Some(_) => edges // caller's checkpoint; do NOT free it here
+      case Some(_) => edges // the contract loop's last pin, same scope
       case None =>
         // standalone entry (public assignStar): start a FRESH trace so a
         // prior assignContracted run's pass counts can't leak into this
         // run's record (the Trace contract: the LAST run, never a blend)
         lastTrace.set(Trace(Vector.empty, -1))
-        edges.filter(col("__a") =!= col("__b"))
-          .distinct().localCheckpoint(false) // lazy: sig() materializes it
+        s.pin(edges.filter(col("__a") =!= col("__b")).distinct(),
+              eager = false) // lazy: sig() materializes it
     }
-    var ownsE = knownDistinctCount.isEmpty
     var prevSig = knownDistinctCount match {
       case Some(n) => (n, "") // sentinel hash: never equals a real sig
       case None => sig(e)
@@ -421,13 +378,12 @@ object ConnectedComponents {
     var iters = 0
     var converged = prevSig._1 == 0
     while (!converged && iters < maxIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val s = sig(next) // the round's ONE job: materializes the checkpoint
-      if (ownsE) free(Seq(e)) // previous round's checkpoint: next is materialized
+      val next = s.pin(smallStar(largeStar(e)), eager = false)
+      val sg = sig(next) // the round's ONE job: materializes the checkpoint
+      s.release(e) // previous round's checkpoint: next is materialized
       e = next
-      ownsE = true
-      converged = s == prevSig
-      prevSig = s
+      converged = sg == prevSig
+      prevSig = sg
       iters += 1
     }
     require(converged,

@@ -63,17 +63,15 @@ object DistributedRank {
     // AQE's runtime exchange canonicalization — a match that pruning or a
     // rule change can silently break, at which point the DOMINANT exchange
     // of the whole operator materializes twice (the r18 verdict's d44
-    // item). A lazy localCheckpoint (the RangeJoin discipline) makes the
-    // reuse STRUCTURAL: both consumers read one stored evaluation by RDD
-    // identity, not by plan-shape luck. Lazy, so the caller's first action
-    // still materializes it as part of its own job; distinct-key-sized
-    // (never data-sized) rows are what gets pinned. Exposed pre-checkpoint
-    // as [[midranks2Ranged]] so Round10Spec's plan pin can still see the
-    // range exchange (the checkpoint hides the subtree behind a
-    // LogicalRDD). On a real cluster prefer reliable `checkpoint` — the
-    // ConnectedComponents caveat applies here too.
-    val ranged = midranks2Ranged(df, groupCols, valueCol, weight)
-      .localCheckpoint(false)
+    // item). A lazy shared pin ([[Materialize.shared]], the RangeJoin
+    // discipline) makes the reuse STRUCTURAL: both consumers read one
+    // stored evaluation by RDD identity, not by plan-shape luck. Lazy, so
+    // the caller's first action still materializes it as part of its own
+    // job; distinct-key-sized (never data-sized) rows are what gets
+    // pinned. Exposed pre-checkpoint as [[midranks2Ranged]] so
+    // Round10Spec's plan pin can still see the range exchange (the
+    // checkpoint hides the subtree behind a LogicalRDD).
+    val ranged = Materialize.shared(midranks2Ranged(df, groupCols, valueCol, weight))
     // pass 2a: strictly-less count within this slice of the group
     val wRun = Window.partitionBy(("__p" +: groupCols).map(col): _*)
       .orderBy(col(valueCol).asc)
@@ -185,10 +183,10 @@ object DistributedRank {
     // the copies. Same structural-reuse move as midranks2Weighted's ranged
     // checkpoint: one stored evaluation, distinct-grid-sized (and with
     // broadcastXRanks, domain-sized — tiny by the caller's assertion).
-    val rx0 = (if (broadcastXRanks) midranks2Bounded(base, groupCols, xCol)
-               else midranks2(base, groupCols, xCol))
-      .withColumnRenamed("cnt", "__cx").withColumnRenamed("dr2", "__dx")
-      .localCheckpoint(false)
+    val rx0 = Materialize.shared(
+      (if (broadcastXRanks) midranks2Bounded(base, groupCols, xCol)
+       else midranks2(base, groupCols, xCol))
+        .withColumnRenamed("cnt", "__cx").withColumnRenamed("dr2", "__dx"))
     val ry = midranks2(base, groupCols, yCol)
       .withColumnRenamed("cnt", "__cy").withColumnRenamed("dr2", "__dy")
     // group sizes from the mapping itself (Σ tie counts = row count) — a

@@ -19,8 +19,8 @@ import scala.collection.mutable.ArrayBuffer
   * `k` driver rounds, each a fully distributed job (one anti-join +
   * one count-aggregate + a TakeOrdered top-1), and the only thing ever
   * collected is the 1-row argmax per round. The covered set stays a
-  * DISTRIBUTED frame (localCheckpoint'ed per round so lineage is O(1),
-  * not O(k); swap for reliable `checkpoint` on a real cluster).
+  * DISTRIBUTED frame (pinned per round, [[Materialize]], so lineage is
+  * O(1), not O(k)).
   *
   * Scale path at 100 TB: the per-round anti-join is an equi-join on the
   * item column — hash-partitioned, AQE-splittable, and Bloom-prunable
@@ -56,44 +56,43 @@ object GreedyCover {
       s"GreedyCover: $idCol must be LONG, got ${items.schema(idCol).dataType}")
 
     // distinct per (id, item): gains are DISTINCT-item counts, and one
-    // materialization serves all k rounds
-    val g = items.select(col(idCol), col(itemCol)).distinct().localCheckpoint()
+    // materialization serves all k rounds; the scope frees every pin on
+    // exit, the failure paths included
+    val picks = Materialize.scoped { s =>
+      val g = s.pin(items.select(col(idCol), col(itemCol)).distinct())
 
-    // require-reject NULL ids (the r17 ADVICE item): a NULL id would form
-    // its own gains group — Spark's asc() sorts it FIRST while DuckDB's
-    // default is NULLS LAST, so a NULL winner would silently diverge the
-    // engines (and getLong below would NPE). The declared domain is
-    // non-null ids; one cheap scan of the already-checkpointed frame
-    // enforces it loudly instead of ordering around it.
-    require(g.filter(col(idCol).isNull).isEmpty,
-      s"GreedyCover: NULL $idCol rows present — the argmax tie-break " +
-        "(gain DESC, id ASC) needs a total order over non-null ids; " +
-        "filter NULLs upstream or assign surrogate ids")
+      // require-reject NULL ids (the r17 ADVICE item): a NULL id would form
+      // its own gains group — Spark's asc() sorts it FIRST while DuckDB's
+      // default is NULLS LAST, so a NULL winner would silently diverge the
+      // engines (and getLong below would NPE). The declared domain is
+      // non-null ids; one cheap scan of the already-checkpointed frame
+      // enforces it loudly instead of ordering around it.
+      require(g.filter(col(idCol).isNull).isEmpty,
+        s"GreedyCover: NULL $idCol rows present — the argmax tie-break " +
+          "(gain DESC, id ASC) needs a total order over non-null ids; " +
+          "filter NULLs upstream or assign surrogate ids")
 
-    var covered = g.select(col(itemCol)).limit(0)
-    val picks = ArrayBuffer[(Int, Long, Long)]()
-    val trail = ArrayBuffer[DataFrame]()
-    var exhausted = false
-    for (i <- 1 to k if !exhausted) {
-      // top-1 via TakeOrdered (no global sort); 1-row collect per round
-      val top = gains(g, covered, idCol, itemCol)
-        .orderBy(desc("gain"), asc(idCol)).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val id = top(0).getLong(top(0).fieldIndex(idCol))
-        picks += ((i, id, top(0).getLong(top(0).fieldIndex("gain"))))
-        // covered is a BAG, deliberately: the anti-join is insensitive to
-        // build-side duplicates, so the per-round distinct exchange is pure
-        // cost; the bag is bounded by the selected docs' total item count
-        // (k × max doc size) with or without it
-        val next = covered
-          .unionAll(g.filter(col(idCol) === lit(id)).select(col(itemCol)))
-          .localCheckpoint()
-        trail += covered
-        covered = next
+      var covered = g.select(col(itemCol)).limit(0)
+      val picks = ArrayBuffer[(Int, Long, Long)]()
+      var exhausted = false
+      for (i <- 1 to k if !exhausted) {
+        // top-1 via TakeOrdered (no global sort); 1-row collect per round
+        val top = gains(g, covered, idCol, itemCol)
+          .orderBy(desc("gain"), asc(idCol)).limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val id = top(0).getLong(top(0).fieldIndex(idCol))
+          picks += ((i, id, top(0).getLong(top(0).fieldIndex("gain"))))
+          // covered is a BAG, deliberately: the anti-join is insensitive to
+          // build-side duplicates, so the per-round distinct exchange is pure
+          // cost; the bag is bounded by the selected docs' total item count
+          // (k × max doc size) with or without it
+          covered = s.pin(covered
+            .unionAll(g.filter(col(idCol) === lit(id)).select(col(itemCol))))
+        }
       }
+      picks
     }
-    Checkpoints.free(trail); Checkpoints.free(Seq(g, covered))
 
     // k-row driver-built result: self-contained, pins nothing
     val schema = StructType(Seq(

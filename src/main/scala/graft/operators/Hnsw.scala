@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.api.Similarity
 
 /** HNSW-style graph ANN [public: Malkov & Yashunin 2016, "Efficient and
@@ -53,8 +51,8 @@ import graft.api.Similarity
   *    CONSTRUCTION, inside the Guards fold budget without a probe).
   *    Fixed hop/round counts are the declared semantics (the k71/k75
   *    unrolled-recurrence posture, not a convergence loop); every round
-  *    localCheckpoints (lineage would otherwise double per hop — the
-  *    frontier appears twice in each step's plan).
+  *    is pinned ([[Materialize]]; lineage would otherwise double per hop —
+  *    the frontier appears twice in each step's plan).
   *
   * 100 TB shape: levels are map-only; layer sizes shrink geometrically
   * (m^-l), so build cost is the layer-0 pass — LSH bucketing (map) + the
@@ -68,18 +66,19 @@ import graft.api.Similarity
   * the 1-row entry collect (the k-means posture).
   *
   * EAGER construction (the k70 class): [[build]] runs the level pass, the
-  * per-layer edge jobs and the entry lookup; the index holds checkpointed
-  * frames — call [[HnswIndex.free]] when done (Checkpoints hygiene).
+  * per-layer edge jobs and the entry lookup; the index holds pinned
+  * frames — call [[HnswIndex.free]] when done. Build-time and per-round
+  * search pins are released when the call returns or fails.
   */
 object Hnsw {
 
   /** A built index: `adjacency` (layer, src, dst, cos), `levels`
     * (node, level), `unit` (node, u — unit-normalized vectors, the
     * search-time scoring side), the deterministic entry point (max level,
-    * ties lowest id). All three frames are localCheckpoint'ed. */
+    * ties lowest id). All three frames are pinned checkpoints. */
   final case class HnswIndex(adjacency: DataFrame, levels: DataFrame,
                              unit: DataFrame, entryId: Long, topLayer: Int) {
-    def free(): Unit = Checkpoints.free(Seq(adjacency, levels, unit))
+    def free(): Unit = Seq(adjacency, levels, unit).foreach(Materialize.release)
   }
 
   /** Seeded-hash geometric level: largest l ≤ maxLevel with
@@ -99,7 +98,8 @@ object Hnsw {
     * the LSH candidate generation; `dim` must match the vector width. */
   def build(embeddings: DataFrame, idCol: String, vecCol: String,
             dim: Int, m: Int = 8, maxLevel: Int = 3,
-            bands: Int = 6, bandBits: Int = 2, seed: Long = 42L): HnswIndex = {
+            bands: Int = 6, bandBits: Int = 2,
+            seed: Long = 42L): HnswIndex = Materialize.scoped { s =>
     require(m >= 2, s"Hnsw: m must be >= 2, got $m")
     require(maxLevel >= 1, s"Hnsw: maxLevel must be >= 1, got $maxLevel")
     require(math.pow(m.toDouble, maxLevel.toDouble) <= Long.MaxValue.toDouble,
@@ -109,10 +109,9 @@ object Hnsw {
     // r17-ADVICE discipline); reject loudly up front
     val base = embeddings.select(col(idCol).cast("long").as("node"),
                                  col(vecCol).as("__v"))
-    val unit = base
+    val unit = s.pin(base
       .select(col("node"), Similarity.normalize(col("__v")).as("u"),
-              levelCol("node", m, maxLevel, seed).as("level"))
-      .localCheckpoint()
+              levelCol("node", m, maxLevel, seed).as("level")))
     require(unit.filter(col("node").isNull).isEmpty,
       s"Hnsw: NULL $idCol rows present — the deterministic tie-breaks " +
         "need a total order over non-null ids")
@@ -120,27 +119,24 @@ object Hnsw {
 
     val top = unit.agg(max("level")).collect().head.getInt(0) // 1-row scalar
     val layers = (0 to top).map { l =>
-      buildLayer(unit.filter(col("level") >= l), l, m, dim, bands, bandBits, seed)
+      s.pin(buildLayer(unit.filter(col("level") >= l), l, m, dim, bands, bandBits, seed))
     }
-    val adjacency = layers.reduce(_.unionAll(_)).localCheckpoint()
-    layers.foreach(Checkpoints.freeResult)
+    val adjacency = s.pin(layers.reduce(_.unionAll(_)))
+    layers.foreach(s.release)
 
     // deterministic entry: max level, lowest id — TakeOrdered, 1-row
     val e = unit.orderBy(desc("level"), asc("node")).limit(1).collect().head
-    val idx = HnswIndex(adjacency,
-                        unit.select("node", "level").localCheckpoint(),
-                        unit.select("node", "u").localCheckpoint(),
-                        e.getLong(0), top)
-    // the two skinny index checkpoints above are materialized (eager), so
-    // the fat build-time frame can be released — without this, every
+    val levels = s.pin(unit.select("node", "level"))
+    val units = s.pin(unit.select("node", "u"))
+    // the two skinny index pins above are materialized (eager), so the
+    // scope releases the fat build-time frame — without that, every
     // build pins a third copy of the corpus for the session's lifetime
-    Checkpoints.freeResult(unit)
-    idx
+    HnswIndex(s.keep(adjacency), s.keep(levels), s.keep(units), e.getLong(0), top)
   }
 
-  /** One layer's capped adjacency (layer, src, dst, cos) as a CHECKPOINTED
-    * frame: LSH-banded candidates → per-src top-4m shortlist → the paper's
-    * NEIGHBOR-DIVERSITY selection (Malkov & Yashunin §4, SELECT-NEIGHBORS-
+  /** One layer's capped adjacency (layer, src, dst, cos), the frame
+    * [[build]] pins: LSH-banded candidates → per-src top-4m shortlist →
+    * the paper's NEIGHBOR-DIVERSITY selection (Malkov & Yashunin §4, SELECT-NEIGHBORS-
     * HEURISTIC) as a deterministic fold → pad back to m → ∪ reverse →
     * cap 2m.
     *
@@ -201,13 +197,12 @@ object Hnsw {
     val directed = kept
       .select(col("src"), explode(col("sel")).as("e"))
       .select(col("src"), col("e.dst").as("dst"), col("e.cos").as("cos"))
-    val capped = directed
+    directed
       .unionAll(directed.select(col("dst").as("src"), col("src").as("dst"),
                                 col("cos")))
       .groupBy("src", "dst").agg(max("cos").as("cos")) // dedup mutual edges
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") <= 2 * m)
       .select(lit(layer).as("layer"), col("src"), col("dst"), col("cos"))
-    capped.localCheckpoint()
   }
 
   /** Batched top-k search. `queries`: (qidCol: long, qvecCol: array).
@@ -219,23 +214,18 @@ object Hnsw {
   def search(index: HnswIndex, queries: DataFrame, qidCol: String,
              qvecCol: String, k: Int = 10, ef: Int = 32,
              descentHops: Int = 3, layer0Rounds: Int = 4,
-             excludeSelf: Boolean = false): DataFrame = {
+             excludeSelf: Boolean = false): DataFrame = Materialize.scoped { s =>
     require(k >= 1 && ef >= k, s"Hnsw: need 1 <= k <= ef, got k=$k ef=$ef")
-    val trail = ArrayBuffer[DataFrame]()
 
-    val q = queries.select(col(qidCol).cast("long").as("qid"),
-                           Similarity.normalize(col(qvecCol)).as("qu"))
-      .localCheckpoint()
-    trail += q
+    val q = s.pin(queries.select(col(qidCol).cast("long").as("qid"),
+                                 Similarity.normalize(col(qvecCol)).as("qu")))
 
     // seed frontier: every query anchored at the entry point
     val entryU = index.unit.filter(col("node") === index.entryId)
       .select(col("u").as("eu"))
-    var frontier = q.crossJoin(broadcast(entryU))
+    var frontier = s.pin(q.crossJoin(broadcast(entryU))
       .select(col("qid"), lit(index.entryId).as("node"),
-              Similarity.dot(col("qu"), col("eu")).as("cos"))
-      .localCheckpoint()
-    trail += frontier
+              Similarity.dot(col("qu"), col("eu")).as("cos")))
 
     // upper layers: greedy descent, one argmax per query per hop
     for (layer <- index.topLayer to 1 by -1; _ <- 1 to descentHops) {
@@ -248,14 +238,11 @@ object Hnsw {
         .join(q, "qid")
         .select(col("qid"), col("node"),
                 Similarity.dot(col("qu"), col("u")).as("cos"))
-      val next = frontier.unionAll(expanded)
+      frontier = s.pin(frontier.unionAll(expanded)
         .groupBy("qid")
         .agg(max(struct(col("cos"), (-col("node")).as("negn"),
                         col("node"))).as("__b"))
-        .select(col("qid"), col("__b.node").as("node"), col("__b.cos").as("cos"))
-        .localCheckpoint()
-      trail += next
-      frontier = next
+        .select(col("qid"), col("__b.node").as("node"), col("__b.cos").as("cos")))
     }
 
     // layer 0: beam of ef, fixed rounds (declared semantics)
@@ -270,31 +257,25 @@ object Hnsw {
         .join(q, "qid")
         .select(col("qid"), col("node"),
                 Similarity.dot(col("qu"), col("u")).as("cos"))
-      val next = cand.unionAll(expanded)
+      cand = s.pin(cand.unionAll(expanded)
         .groupBy("qid", "node").agg(max("cos").as("cos")) // dedup revisits
         .groupBy("qid")
         .agg(slice(array_sort(collect_list(
           struct((-col("cos")).as("nc"), col("node"), col("cos")))),
           1, ef).as("__beam"))
         .select(col("qid"), explode(col("__beam")).as("__c"))
-        .select(col("qid"), col("__c.node").as("node"), col("__c.cos").as("cos"))
-        .localCheckpoint()
-      trail += next
-      cand = next
+        .select(col("qid"), col("__c.node").as("node"), col("__c.cos").as("cos")))
     }
 
     val filtered = if (excludeSelf) cand.filter(col("node") =!= col("qid"))
                    else cand
-    val out = filtered
+    s.keep(s.pin(filtered
       .groupBy("qid")
       .agg(slice(array_sort(collect_list(
         struct((-col("cos")).as("nc"), col("node"), col("cos")))),
         1, k).as("__top"))
       .select(col("qid"), posexplode(col("__top")).as(Seq("__p", "__c")))
       .select(col("qid"), (col("__p") + 1).cast("int").as("rank"),
-              col("__c.node").as("vec_id"), col("__c.cos").as("cos"))
-      .localCheckpoint()
-    Checkpoints.free(trail)
-    out
+              col("__c.node").as("vec_id"), col("__c.cos").as("cos"))))
   }
 }

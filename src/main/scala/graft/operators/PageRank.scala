@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Integer-exact PageRank over a directed edge list — the iterative
   * WEIGHTED-MASS fixed point, the sibling class ConnectedComponents does
   * not cover (CC propagates a min-label through a lattice and converges
@@ -38,12 +36,11 @@ import scala.collection.mutable.ArrayBuffer
   * round), with no driver-side data in either regime.
   * Rounds are a FIXED count (the declared semantics — this is not a
   * convergence loop), so lineage stays `iters` joins deep; each round
-  * localCheckpoints its ranks to keep per-job plans one round deep
-  * (swap for reliable `checkpoint` on a real cluster). At 100 TB the
-  * edge table is the scan cost and the rank table is |V| rows — the
-  * standard link-analysis shape for web-graph quality signals in
-  * pretraining pipelines (CommonCrawl harmonic-centrality/PageRank seed
-  * filtering).
+  * pins its ranks ([[Materialize]]) to keep per-job plans one round deep.
+  * At 100 TB the edge table is the scan cost and the rank table is |V|
+  * rows — the standard link-analysis shape for web-graph quality signals
+  * in pretraining pipelines (CommonCrawl harmonic-centrality/PageRank
+  * seed filtering).
   *
   * Overflow: Σ contributions ≤ total mass ≈ S, so `damp * Σ ≤ 100·S`
   * needs S ≤ Long.Max/100 ≈ 9.2e16 — the default 1e12 leaves 4 orders of
@@ -57,11 +54,6 @@ object PageRank {
     * relabel-gate discipline; above it both joins fall back to hash). */
   val broadcastNodeGate: Long = 1000000L
 
-  /** Release the one cached frame a [[ranks]] result pins (|V| rows).
-    * Safe no-op on non-checkpoint roots — see [[Checkpoints.freeResult]]
-    * for why the guard matters. */
-  def freeResult(labels: DataFrame): Unit = Checkpoints.freeResult(labels)
-
   /** Rank every node of the directed graph `edges`. Returns
     * (`node` long, `r` long) — r is the PageRank mass scaled by `scale`.
     *
@@ -73,12 +65,14 @@ object PageRank {
     *
     * EAGER construction (the k70 class): calling this runs Spark jobs —
     * the edge-table checkpoint, the dangling/size counts, and one small
-    * job per iteration. Plan-only callers pay the full evaluation.
+    * job per iteration. Plan-only callers pay the full evaluation. The
+    * result is one pinned |V|-row frame: release it with
+    * [[Materialize.release]] once consumed.
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String,
             iters: Int = 3, scale: Long = 1000000000000L,
             damp: Int = 85,
-            broadcastGate: Long = broadcastNodeGate): DataFrame = {
+            broadcastGate: Long = broadcastNodeGate): DataFrame = Materialize.scoped { s =>
     require(iters >= 1, s"PageRank: iters must be >= 1, got $iters")
     require(damp >= 0 && damp <= 100, s"PageRank: damp must be in [0,100]")
     require(scale > 0 && scale <= Long.MaxValue / 100,
@@ -90,12 +84,12 @@ object PageRank {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
                           col(dstCol).cast("long").as("dst"))
     val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val edgesD = e0.join(deg, "src").localCheckpoint()
+    val edgesD = s.pin(e0.join(deg, "src"))
 
     // node set == deg's key set once danglingness is excluded; checkpoint
     // FIRST so the dangling guard below probes this |V|-row frame instead
     // of recomputing the degree aggregate from the raw edges
-    val nodes = edgesD.select(col("src").as("node")).distinct().localCheckpoint()
+    val nodes = s.pin(edgesD.select(col("src").as("node")).distinct())
     val dangling = edgesD.select(col("dst").as("node")).distinct()
       .join(nodes, Seq("node"), "left_anti").count()
     require(dangling == 0L,
@@ -117,17 +111,10 @@ object PageRank {
     val small = n <= broadcastGate
 
     var ranks = nodes.withColumn("r", lit(init))
-    val trail = ArrayBuffer[DataFrame]()
-    for (_ <- 1 to iters) {
-      val next = round(edgesD, nodes, ranks, base, damp, small).localCheckpoint()
-      trail += ranks
-      ranks = next
-    }
-    // final ranks are a self-contained checkpoint: everything upstream
-    // (intermediate rounds, the edge table, the node set) can be released
-    Checkpoints.free(trail)
-    Checkpoints.free(Seq(edgesD, nodes))
-    ranks
+    for (_ <- 1 to iters) ranks = s.pin(round(edgesD, nodes, ranks, base, damp, small))
+    // final ranks are a self-contained checkpoint: the scope releases
+    // everything upstream (intermediate rounds, the edge table, the nodes)
+    s.keep(ranks)
   }
 
   /** One recurrence round as a LAZY frame — the loop body, exposed so the

@@ -58,14 +58,13 @@ object RangeJoin {
     def bin(c: Column): Column = floor(c / binWidth).cast("long")
     // per-interval-row id for the unmatched collapse (scaladoc above):
     // caller-supplied key columns when available, else generated ids
-    // pinned by a lazy localCheckpoint so both branches read ONE stored
+    // pinned lazily ([[Materialize.shared]]) so both branches read ONE stored
     // evaluation — order-unstable upstreams cannot desynchronize them
     val ivd =
       if (idCols.nonEmpty)
         intervals.withColumn("__iid", struct(idCols.map(col): _*))
       else
-        intervals.withColumn("__iid", monotonically_increasing_id())
-          .localCheckpoint(false)
+        Materialize.shared(intervals.withColumn("__iid", monotonically_increasing_id()))
     val iv = ivd
       .withColumn("__bin",
         explode(sequence(bin(col(startCol)),

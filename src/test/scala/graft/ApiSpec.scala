@@ -660,23 +660,101 @@ class ApiSpec extends SparkSpec {
     assert(top.groupBy("g").count().collect().forall(_.getLong(1) == 3))
   }
 
-  test("CC.freeResult releases module checkpoints, never caller-owned ones") {
+  test("Materialize.release releases module checkpoints, never caller-owned ones") {
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.storage.StorageLevel
     val callerOwned = spark.range(10).toDF("v").localCheckpoint()
     val callerRdd = callerOwned.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
     // a projection over the caller's checkpoint — the assignContracted
-    // edge-free return shape; freeResult must NOT reach through it
-    graft.operators.ConnectedComponents.freeResult(
-      callerOwned.select(col("v").as("x")))
+    // edge-free return shape; release must NOT reach through it
+    graft.operators.Materialize.release(callerOwned.select(col("v").as("x")))
     assert(callerRdd.getStorageLevel != StorageLevel.NONE,
-      "caller-owned checkpoint must survive freeResult on a derived frame")
+      "caller-owned checkpoint must survive release on a derived frame")
     assert(callerOwned.count() == 10, "caller frame must stay usable")
     // a frame whose root IS the checkpoint (the module's result shape) is
     // released
-    graft.operators.ConnectedComponents.freeResult(callerOwned)
+    graft.operators.Materialize.release(callerOwned)
     assert(callerRdd.getStorageLevel == StorageLevel.NONE,
       "module-shaped result must be unpersisted")
+  }
+
+  test("Materialize: operator calls leave no pinned RDD behind, on failure or success") {
+    import graft.operators._
+    val sp = spark
+    import sp.implicits._
+    def chain(n: Int) = (0L until n - 1L).map(i => (i, i + 1)).toDF("src", "dst")
+    def vertices(n: Int) = spark.range(n).toDF("v")
+    // two triangles {0,1,2}, {3,4,5} joined by 2-3, symmetric
+    val twoCliques = {
+      val e = Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L), (4L, 5L), (3L, 5L), (2L, 3L))
+      (e ++ e.map(_.swap)).toDF("src", "dst")
+    }
+    val items = Seq((1L, "a"), (1L, "b"), (2L, "b"), (2L, "c"), (3L, "d")).toDF("id", "item")
+    val corpus = (0L until 40L).map(i =>
+      (i, Array(math.cos(i * 0.15), math.sin(i * 0.15), 0.1 * (i % 3), 0.0)))
+      .toDF("vec_id", "embedding")
+    // (call, whether it must fail): a failing call must release every pin
+    // it made; a succeeding call leaves only its result, released here
+    val rows: Seq[(String, Boolean, () => Any)] = Seq(
+      ("PageRank.ranks, dangling node", true,
+        () => PageRank.ranks(Seq((1L, 2L)).toDF("src", "dst"), "src", "dst")),
+      ("GreedyCover.select, NULL id", true,
+        () => GreedyCover.select(Seq((Some(1L), "a"), (None, "b")).toDF("id", "item"),
+                                 "id", "item", 2)),
+      ("ConnectedComponents.assign, 4-chain, maxIters 1", true,
+        () => ConnectedComponents.assign(vertices(4), chain(4), "v", "src", "dst",
+                                         maxIters = 1)),
+      ("ConnectedComponents.assignStar, 64-chain, maxIters 1", true,
+        () => ConnectedComponents.assignStar(vertices(64), chain(64), "v", "src", "dst",
+                                             maxIters = 1)),
+      ("Hnsw.build, empty corpus", true,
+        () => Hnsw.build(corpus.limit(0), "vec_id", "embedding", dim = 4)),
+      ("Bpe.train, 6 merges", false,
+        () => Bpe.train(Seq(("lower", 5L), ("lowest", 2L), ("newer", 6L), ("wider", 3L))
+                          .toDF("w", "f"), "w", "f", 6)),
+      ("PageRank.ranks", false, () => PageRank.ranks(twoCliques, "src", "dst")),
+      ("GreedyCover.select", false, () => GreedyCover.select(items, "id", "item", 3)),
+      ("ConnectedComponents.assignContracted", false,
+        () => ConnectedComponents.assignContracted(vertices(8), twoCliques, "v", "src", "dst")),
+      ("ConnectedComponents.assignStarSeeded", false,
+        () => ConnectedComponents.assignStarSeeded(vertices(64), chain(64), "v", "src", "dst")),
+      ("Hnsw.build + search + free", false, () => {
+        val idx = Hnsw.build(corpus, "vec_id", "embedding", dim = 4, m = 4)
+        val hits = Hnsw.search(idx, corpus.filter(col("vec_id") % 10 === 0),
+                               "vec_id", "embedding", k = 3, ef = 8)
+        assert(hits.count() == 12)
+        idx.free()
+        hits
+      }))
+    val sc = spark.sparkContext
+    val leaks = rows.flatMap { case (name, fails, call) =>
+      val before = sc.getPersistentRDDs.keySet
+      if (fails) intercept[IllegalArgumentException](call())
+      else call() match {
+        case out: org.apache.spark.sql.DataFrame =>
+          out.count()
+          Materialize.release(out)
+        case _ => ()
+      }
+      val left = sc.getPersistentRDDs.keySet -- before
+      if (left.isEmpty) None else Some(s"$name: ${left.size} pinned RDD(s) left")
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+  }
+
+  test("no localCheckpoint/persist/cache call in src/main outside operators/Materialize.scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val home = root.resolve("graft/operators/Materialize.scala")
+    val call = """\.(localCheckpoint|persist)\(|\.cache\(\)""".r
+    def hits(p: java.nio.file.Path) = Files.readAllLines(p).asScala.zipWithIndex
+      .collect { case (l, i) if call.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}" }
+    assert(hits(home).nonEmpty, s"the scan must see the calls in $home")
+    val stray = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != home)
+      .flatMap(hits).toList
+    assert(stray.isEmpty, "pin through graft.operators.Materialize:\n" + stray.mkString("\n"))
   }
 
   test("RangeJoin.binnedPointJoin ≡ brute-force range join on wide and empty intervals") {

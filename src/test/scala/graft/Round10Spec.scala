@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.RDDScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.operators.DistributedRank
 
 /** Pins for the round-10 surface: the 2-pass distributed midranks against
@@ -10,6 +12,8 @@ import graft.operators.DistributedRank
   * against independent brute-force references, and the AUC rank identity
   * against a brute-force pair count. */
 class Round10Spec extends SparkSpec {
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   // ----------------------------------------------- DistributedRank
 
@@ -93,14 +97,19 @@ class Round10Spec extends SparkSpec {
     assert(!pass1.contains("SinglePartition"),
            s"no single-partition exchange allowed in pass 1:\n$pass1")
     // … and the output plan must (a) consume ONE stored pass-1 evaluation
-    // — the structural reuse the checkpoint buys: exactly one scan leaf,
-    // which is the checkpointed RDD — and (b) still never collapse to a
-    // single partition anywhere in pass 2.
+    // — the structural reuse the checkpoint buys: every leaf is a scan of
+    // the checkpointed RDD, and the scans (one per pass-2 consumer) count
+    // exactly one distinct RDD, so two independent copies would fail —
+    // and (b) still never collapse to a single partition anywhere in
+    // pass 2.
     val out = DistributedRank.midranks2(src, Seq("g"), "v")
     val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD") || plan.contains("LogicalRDD") ||
-           plan.contains("Scan ExistingRDD"),
-           s"pass 2 should read the checkpointed pass-1 frame:\n$plan")
+    val leaves = Aqe.collectLeaves(out.queryExecution.executedPlan)
+    val checkpoints = leaves.collect { case r: RDDScanExec => r.rdd.id }.distinct
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[RDDScanExec]),
+           s"pass 2 should read only the checkpointed pass-1 frame:\n$plan")
+    assert(checkpoints.size == 1,
+           s"pass 2 should read ONE checkpoint, got RDDs $checkpoints:\n$plan")
     assert(!plan.contains("SinglePartition"),
            s"no single-partition exchange allowed:\n$plan")
     assert(!plan.toLowerCase.contains("rangepartitioning"),

@@ -110,7 +110,7 @@ class Round22Spec extends SparkSpec {
         assert(total <= S, s"mass above scale: $total > $S")
         assert(total >= S - floorLoss,
           s"mass leak beyond floor dust: $total < $S - $floorLoss (n=$n, e=$e)")
-        PageRank.freeResult(ranks)
+        graft.operators.Materialize.release(ranks)
       }
     }
   }
