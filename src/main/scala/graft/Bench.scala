@@ -49,7 +49,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // absorb session/codegen warm-up so the first query isn't overcharged,
-    // and prime the shared FileStatusCache (file listing is once per session)
+    // and prime the shared FileStatusCache: the file listing is then cached
+    // for the session, but every later Tables.load still runs one parquet
+    // schema-inference job (timed inside each query below)
     spark.range(1000).selectExpr("sum(id)").count()
     graft.engine.Tables.names.foreach { n =>
       graft.engine.Tables.table(spark, sfDir, n).schema

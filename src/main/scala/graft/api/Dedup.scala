@@ -208,7 +208,8 @@ object Dedup {
     * (array_intersect), so results are identical to the naive join —
     * asserted in ApiSpec.
     *
-    * MEASURED (sf0.1, local[32], graft.TimePpjoin): both paths emit the
+    * MEASURED (sf0.1, local[32], one warm `count()` of each path over the
+    * cached documents table, t = 0.6): both paths emit the
     * same 353,929 pairs; naive 2.5 s, prefix 5.9 s. The fixture is
     * adversarial for prefix filtering — over half of all within-block
     * pairs genuinely qualify at t=0.6, so candidate pruning is nil and the

@@ -12,7 +12,7 @@ object AggOps {
 
   /** d02 — flagship TPC-H Q1 shape (SURVEY §7 M1). Sums/avgs routed through
     * DECIMAL for cross-engine bit-stability (see Determinism.dsum). */
-  val d02: Q = Q(
+  val d02: Q = Q.fromSql(
     "d02_agg_group_q1",
     s"""SELECT l_returnflag, l_linestatus,
        |  ${dsumSql("l_quantity")} AS sum_qty,
@@ -26,92 +26,50 @@ object AggOps {
        |FROM lineitem
        |WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
        |GROUP BY l_returnflag, l_linestatus
-       |ORDER BY l_returnflag ASC NULLS LAST, l_linestatus ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("2000-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))).as("sum_charge"),
-          davg(col("l_quantity")).as("avg_qty"),
-          davg(col("l_extendedprice")).as("avg_price"),
-          davg(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy(asc_nulls_last("l_returnflag"), asc_nulls_last("l_linestatus")))
+       |ORDER BY l_returnflag ASC NULLS LAST, l_linestatus ASC NULLS LAST""".stripMargin)
 
   /** d01 — single-row global aggregate over lineitem. */
-  val d01: Q = Q(
+  val d01: Q = Q.fromSql(
     "d01_agg_global",
     s"""SELECT COUNT(*) AS n,
        |  ${dsumSql("l_quantity")} AS sum_qty,
        |  ${davgSql("l_quantity")} AS avg_qty,
        |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty,
        |  MIN(l_shipdate) AS min_ship, MAX(l_shipdate) AS max_ship
-       |FROM lineitem""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir).agg(
-        count(lit(1)).as("n"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        davg(col("l_quantity")).as("avg_qty"),
-        min(col("l_quantity")).as("min_qty"), max(col("l_quantity")).as("max_qty"),
-        min(col("l_shipdate")).as("min_ship"), max(col("l_shipdate")).as("max_ship")))
+       |FROM lineitem""".stripMargin)
 
   /** d03 — distinct customers per order status (Expand + two-phase agg). */
-  val d03: Q = Q(
+  val d03: Q = Q.fromSql(
     "d03_agg_count_distinct",
     """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_cust
       |FROM orders GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy("o_orderstatus")
-        .agg(countDistinct(col("o_custkey")).as("n_cust"))
-        .orderBy(asc_nulls_last("o_orderstatus")))
+      |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin)
 
   /** d04 — two distinct aggregates in one query. */
-  val d04: Q = Q(
+  val d04: Q = Q.fromSql(
     "d04_agg_multi_distinct",
     """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_cust,
       |  COUNT(DISTINCT CAST(o_orderdate AS DATE)) AS n_days
       |FROM orders GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy("o_orderstatus")
-        .agg(countDistinct(col("o_custkey")).as("n_cust"),
-             countDistinct(col("o_orderdate").cast("date")).as("n_days"))
-        .orderBy(asc_nulls_last("o_orderstatus")))
+      |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin)
 
   /** d05 — ROLLUP hierarchy status→priority with subtotals and grand total. */
-  val d05: Q = Q(
+  val d05: Q = Q.fromSql(
     "d05_agg_rollup",
     """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
       |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-      |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .rollup("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority")))
+      |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
 
   /** d06 — CUBE: all subtotal combinations of status × priority. */
-  val d06: Q = Q(
+  val d06: Q = Q.fromSql(
     "d06_agg_cube",
     """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
       |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority")))
+      |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
 
   /** d07 — explicit GROUPING SETS with grouping() flags, via the SQL entry
     * point (EP2). grouping() cast to INT on both engines for width parity. */
-  val d07: Q = Q(
+  val d07: Q = Q.fromSql(
     "d07_agg_grouping_sets",
     """SELECT o_orderstatus, o_orderpriority,
       |  CAST(GROUPING(o_orderstatus) AS INT) AS g_s,
@@ -120,19 +78,7 @@ object AggOps {
       |FROM orders
       |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
       |ORDER BY g_s ASC NULLS LAST, g_p ASC NULLS LAST,
-      |  o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_orderstatus, o_orderpriority,
-          |  CAST(GROUPING(o_orderstatus) AS INT) AS g_s,
-          |  CAST(GROUPING(o_orderpriority) AS INT) AS g_p,
-          |  COUNT(*) AS n
-          |FROM orders
-          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-          |ORDER BY g_s ASC NULLS LAST, g_p ASC NULLS LAST,
-          |  o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
-    })
+      |  o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
 
   /** d08 — HAVING with a scalar subquery threshold: nations holding more
     * than 1/30 of all customers (scale-invariant — selective at every sf;
@@ -155,7 +101,7 @@ object AggOps {
     })
 
   /** d09 — statistical aggregates of price vs quantity, rounded. */
-  val d09: Q = Q(
+  val d09: Q = Q.fromSql(
     "d09_agg_stats",
     """SELECT l_returnflag,
       |  ROUND(STDDEV_SAMP(l_extendedprice), 4) AS sd_price,
@@ -163,32 +109,16 @@ object AggOps {
       |  ROUND(CORR(l_extendedprice, l_quantity), 4) AS corr_pq,
       |  ROUND(COVAR_SAMP(l_extendedprice, l_quantity), 4) AS covar_pq
       |FROM lineitem GROUP BY l_returnflag
-      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(
-          round(stddev_samp(col("l_extendedprice")), 4).as("sd_price"),
-          round(var_samp(col("l_quantity")), 4).as("var_qty"),
-          round(corr(col("l_extendedprice"), col("l_quantity")), 4).as("corr_pq"),
-          round(covar_samp(col("l_extendedprice"), col("l_quantity")), 4).as("covar_pq"))
-        .orderBy(asc_nulls_last("l_returnflag")))
+      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin)
 
   /** d10 — exact percentiles (interpolating median + p90) per priority. */
-  val d10: Q = Q(
+  val d10: Q = Q.fromSql(
     "d10_agg_percentile",
     """SELECT o_orderpriority,
       |  ROUND(CAST(PERCENTILE_CONT(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE), 4) AS p50,
       |  ROUND(CAST(PERCENTILE_CONT(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS DOUBLE), 4) AS p90
       |FROM orders GROUP BY o_orderpriority
-      |ORDER BY o_orderpriority ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy("o_orderpriority")
-        .agg(
-          round(expr("percentile(o_totalprice, 0.5D)"), 4).as("p50"),
-          round(expr("percentile(o_totalprice, 0.9D)"), 4).as("p90"))
-        .orderBy(asc_nulls_last("o_orderpriority")))
+      |ORDER BY o_orderpriority ASC NULLS LAST""".stripMargin)
 
   /** d11 — deterministic list aggregation: sorted supplier names per nation
     * (Spark collect_list order is nondeterministic → sort_array; SURVEY §2
@@ -207,7 +137,7 @@ object AggOps {
         .orderBy(asc_nulls_last("s_nationkey")))
 
   /** d12 — manual pivot via conditional aggregation: per-user event-type counts. */
-  val d12: Q = Q(
+  val d12: Q = Q.fromSql(
     "d12_agg_cond_pivot",
     """SELECT user_id,
       |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
@@ -216,14 +146,7 @@ object AggOps {
       |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
       |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
       |FROM events GROUP BY user_id
-      |ORDER BY user_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      def cnt(t: String) = sum(when(col("event_type") === t, 1).otherwise(0)).as(s"n_$t")
-      Tables.events(s, dir)
-        .groupBy("user_id")
-        .agg(cnt("click"), cnt("view"), cnt("purchase"), cnt("signup"), cnt("error"))
-        .orderBy(asc_nulls_last("user_id"))
-    })
+      |ORDER BY user_id ASC NULLS LAST""".stripMargin)
 
   /** d13 — relational pivot operator (RelationalGroupedDataset.pivot with
     * explicit value list → deterministic output columns; d12 is the

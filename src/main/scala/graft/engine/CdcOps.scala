@@ -74,15 +74,10 @@ object CdcOps {
         .orderBy(asc_nulls_last("user_id"), asc_nulls_last("event_id")))
 
   /** i05 — full-row dedup of a projection (at-least-once replay dedup). */
-  val i05: Q = Q(
+  val i05: Q = Q.fromSql(
     "i05_dedup_exact_rows",
     """SELECT DISTINCT user_id, event_type FROM events
-      |ORDER BY user_id ASC NULLS LAST, event_type ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.events(s, dir)
-        .select("user_id", "event_type")
-        .distinct()
-        .orderBy(asc_nulls_last("user_id"), asc_nulls_last("event_type")))
+      |ORDER BY user_id ASC NULLS LAST, event_type ASC NULLS LAST""".stripMargin)
 
   /** i06 — per-day partition rollup (PARTITION BY toYYYYMMDD bookkeeping). */
   val i06: Q = Q(

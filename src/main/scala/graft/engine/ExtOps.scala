@@ -26,54 +26,28 @@ object ExtOps {
   /** b06 — IN (subquery) predicate → left-semi join under Catalyst.
     * Declared through the SQL entry point (EP2) to exercise the
     * subquery-rewrite rules rather than a hand-built semi join (c06). */
-  val b06: Q = Q(
+  val b06: Q = Q.fromSql(
     "b06_in_subquery",
     """SELECT o_orderkey, o_custkey FROM orders
       |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      Tables.customer(s, dir).createOrReplaceTempView("customer")
-      s.sql(
-        """SELECT o_orderkey, o_custkey FROM orders
-          |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-          |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
-    })
+      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** b07 — correlated EXISTS → left-semi join with the correlation as the
     * join key plus the extra predicate pushed into the inner scan. */
-  val b07: Q = Q(
+  val b07: Q = Q.fromSql(
     "b07_exists_correlated",
     """SELECT c_custkey, c_name FROM customer c
       |WHERE EXISTS (SELECT 1 FROM orders o
       |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000)
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      Tables.customer(s, dir).createOrReplaceTempView("customer")
-      s.sql(
-        """SELECT c_custkey, c_name FROM customer c
-          |WHERE EXISTS (SELECT 1 FROM orders o
-          |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 450000)
-          |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
-    })
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** b08 — correlated NOT EXISTS → left-anti join. */
-  val b08: Q = Q(
+  val b08: Q = Q.fromSql(
     "b08_not_exists_correlated",
     """SELECT c_custkey FROM customer c
       |WHERE NOT EXISTS (SELECT 1 FROM orders o
       |                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      Tables.customer(s, dir).createOrReplaceTempView("customer")
-      s.sql(
-        """SELECT c_custkey FROM customer c
-          |WHERE NOT EXISTS (SELECT 1 FROM orders o
-          |                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
-          |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
-    })
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** b09 — recursive CTE (Spark 4 WITH RECURSIVE, probe-verified): longest
     * run of consecutive event_ids per user. Anchor = run heads (no
@@ -176,86 +150,50 @@ object ExtOps {
     * ordered-limit subquery (the per-row-subquery face of e08's windowed
     * top-k; Catalyst plans it as a lateral join with the limit pushed into
     * the inner side). */
-  val c13: Q = Q(
+  val c13: Q = Q.fromSql(
     "c13_lateral_topk",
     """SELECT n.n_nationkey, t.s_suppkey, t.s_acctbal
       |FROM nation n, LATERAL (
       |  SELECT s_suppkey, s_acctbal FROM supplier s
       |  WHERE s.s_nationkey = n.n_nationkey
       |  ORDER BY s_acctbal DESC NULLS LAST, s_suppkey ASC NULLS LAST LIMIT 2) t
-      |ORDER BY n_nationkey ASC NULLS LAST, s_suppkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      Tables.nation(s, dir).createOrReplaceTempView("nation")
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier")
-      s.sql(
-        """SELECT n.n_nationkey, t.s_suppkey, t.s_acctbal
-          |FROM nation n, LATERAL (
-          |  SELECT s_suppkey, s_acctbal FROM supplier s
-          |  WHERE s.s_nationkey = n.n_nationkey
-          |  ORDER BY s_acctbal DESC NULLS LAST, s_suppkey ASC NULLS LAST LIMIT 2) t
-          |ORDER BY n_nationkey ASC NULLS LAST, s_suppkey ASC NULLS LAST""".stripMargin)
-    })
+      |ORDER BY n_nationkey ASC NULLS LAST, s_suppkey ASC NULLS LAST""".stripMargin)
 
   /** g05 — INTERSECT ALL: bag semantics (multiplicity = min of the two
     * sides), vs g03's distinct INTERSECT. */
-  val g05: Q = Q(
+  val g05: Q = Q.fromSql(
     "g05_intersect_all",
     """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
       |INTERSECT ALL
       |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |ORDER BY o_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val o = Tables.orders(s, dir)
-      o.filter(col("o_orderstatus") === "O").select("o_custkey")
-        .intersectAll(o.filter(col("o_orderstatus") === "F").select("o_custkey"))
-        .orderBy(asc_nulls_last("o_custkey"))
-    })
+      |ORDER BY o_custkey ASC NULLS LAST""".stripMargin)
 
   /** g06 — EXCEPT ALL: bag difference (multiplicity = left − right, floor
     * 0), vs g04's distinct EXCEPT. */
-  val g06: Q = Q(
+  val g06: Q = Q.fromSql(
     "g06_except_all",
     """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
       |EXCEPT ALL
       |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-      |ORDER BY o_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val o = Tables.orders(s, dir)
-      o.filter(col("o_orderstatus") === "O").select("o_custkey")
-        .exceptAll(o.filter(col("o_orderstatus") === "F").select("o_custkey"))
-        .orderBy(asc_nulls_last("o_custkey"))
-    })
+      |ORDER BY o_custkey ASC NULLS LAST""".stripMargin)
 
   /** d14 — boolean aggregates (every/any). */
-  val d14: Q = Q(
+  val d14: Q = Q.fromSql(
     "d14_agg_bool",
     """SELECT s_nationkey, BOOL_AND(s_acctbal > 0) AS all_pos,
       |  BOOL_OR(s_acctbal > 9000) AS any_big
       |FROM supplier GROUP BY s_nationkey
-      |ORDER BY s_nationkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.supplier(s, dir)
-        .groupBy("s_nationkey")
-        .agg(bool_and(col("s_acctbal") > 0).as("all_pos"),
-             bool_or(col("s_acctbal") > 9000).as("any_big"))
-        .orderBy(asc_nulls_last("s_nationkey")))
+      |ORDER BY s_nationkey ASC NULLS LAST""".stripMargin)
 
   /** d15 — bitwise aggregates over the group (AND/OR/XOR fold). */
-  val d15: Q = Q(
+  val d15: Q = Q.fromSql(
     "d15_agg_bitagg",
     """SELECT l_returnflag,
       |  CAST(BIT_AND(l_linenumber) AS INT) AS b_and,
       |  CAST(BIT_OR(l_linenumber) AS INT) AS b_or,
       |  CAST(BIT_XOR(l_linenumber) AS INT) AS b_xor
       |FROM lineitem GROUP BY l_returnflag
-      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(expr("bit_and(l_linenumber)").as("b_and"),
-             expr("bit_or(l_linenumber)").as("b_or"),
-             expr("bit_xor(l_linenumber)").as("b_xor"))
-        .orderBy(asc_nulls_last("l_returnflag")))
+      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin)
 
   /** d16 — argmin/argmax (max_by/min_by vs DuckDB arg_max/arg_min). The
     * ordering value is the UNIQUE key c_custkey so ties cannot occur
@@ -275,16 +213,11 @@ object ExtOps {
 
   /** d17 — exact median (interpolating 0.5-percentile; same recipe as the
     * hash-matched d10: round(…, 4) on the interpolated double). */
-  val d17: Q = Q(
+  val d17: Q = Q.fromSql(
     "d17_agg_median",
     """SELECT o_orderstatus, ROUND(CAST(MEDIAN(o_totalprice) AS DOUBLE), 4) AS med
       |FROM orders GROUP BY o_orderstatus
-      |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy("o_orderstatus")
-        .agg(round(median(col("o_totalprice")), 4).as("med"))
-        .orderBy(asc_nulls_last("o_orderstatus")))
+      |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin)
 
   /** d22 — exact weighted quantiles (`quantileExactWeighted` analog [public:
     * ClickHouse docs]): the q-quantile of l_extendedprice where each row
@@ -302,7 +235,7 @@ object ExtOps {
     * (cardinality of distinct prices, not rows, crosses the sort) or accept
     * interpolated semantics and use Spark's hash-agg `percentile(v, q, w)` /
     * the lengthBandApprox sketch pattern. */
-  val d22: Q = Q(
+  val d22: Q = Q.fromSql(
     "d22_weighted_quantile",
     """SELECT l_returnflag,
       |  ROUND(MIN(CASE WHEN cw >= 0.5 * tw THEN v END), 4) AS wq50,
@@ -314,19 +247,7 @@ object ExtOps {
       |    SUM(l_quantity) OVER (PARTITION BY l_returnflag) AS tw
       |  FROM lineitem)
       |GROUP BY l_returnflag
-      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val byFlag = Window.partitionBy("l_returnflag")
-      val cum    = byFlag.orderBy(asc_nulls_last("l_extendedprice"))
-      Tables.lineitem(s, dir)
-        .select(col("l_returnflag"), col("l_extendedprice").as("v"),
-                sum(col("l_quantity")).over(cum).as("cw"),
-                sum(col("l_quantity")).over(byFlag).as("tw"))
-        .groupBy("l_returnflag")
-        .agg(round(min(when(col("cw") >= lit(0.5) * col("tw"), col("v"))), 4).as("wq50"),
-             round(min(when(col("cw") >= lit(0.9) * col("tw"), col("v"))), 4).as("wq90"))
-        .orderBy(asc_nulls_last("l_returnflag"))
-    })
+      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin)
 
   /** e10 — IGNORE NULLS window navigation: last non-null carried forward
     * (classic gap-fill / last-observation per key). */
@@ -378,17 +299,12 @@ object ExtOps {
 
   /** f04 — fixed-width histogram via floor division (DuckDB 1.0 has no
     * width_bucket); bucket math is exact in both engines. */
-  val f04: Q = Q(
+  val f04: Q = Q.fromSql(
     "f04_histogram",
     s"""SELECT CAST(FLOOR(o_totalprice / 50000) AS BIGINT) AS bucket, COUNT(*) AS n,
        |  ${Determinism.dsumSql("o_totalprice")} AS total
        |FROM orders GROUP BY bucket
-       |ORDER BY bucket ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy(floor(col("o_totalprice") / 50000).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"), Determinism.dsum(col("o_totalprice")).as("total"))
-        .orderBy(asc_nulls_last("bucket")))
+       |ORDER BY bucket ASC NULLS LAST""".stripMargin)
 
   /** h14 — datetime arithmetic: interval add, day diff, end-of-month,
     * day-of-year. */
@@ -443,16 +359,11 @@ object ExtOps {
                  asc_nulls_last("shr"), asc_nulls_last("nbits")))
 
   /** h16 — string edit distance (levenshtein), identical in both engines. */
-  val h16: Q = Q(
+  val h16: Q = Q.fromSql(
     "h16_str_distance",
     """SELECT p_partkey, p_type, CAST(LEVENSHTEIN(p_type, 'STANDARD') AS INT) AS lev
       |FROM part
-      |ORDER BY p_partkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.part(s, dir)
-        .select(col("p_partkey"), col("p_type"),
-                levenshtein(col("p_type"), lit("STANDARD")).as("lev"))
-        .orderBy(asc_nulls_last("p_partkey")))
+      |ORDER BY p_partkey ASC NULLS LAST""".stripMargin)
 
   /** i07 — snapshot diff: two simulated snapshots of `orders` full-outer
     * joined on the key, rows classified added/deleted/changed/same. The
@@ -517,16 +428,11 @@ object ExtOps {
     })
 
   /** d18 — predicate-counting aggregate (count_if). */
-  val d18: Q = Q(
+  val d18: Q = Q.fromSql(
     "d18_agg_countif",
     """SELECT event_type, CAST(COUNT_IF(value > 50) AS BIGINT) AS n_big, COUNT(*) AS n
       |FROM events GROUP BY event_type
-      |ORDER BY event_type ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.events(s, dir)
-        .groupBy("event_type")
-        .agg(expr("count_if(value > 50)").as("n_big"), count(lit(1)).as("n"))
-        .orderBy(asc_nulls_last("event_type")))
+      |ORDER BY event_type ASC NULLS LAST""".stripMargin)
 
   /** h17 — second string-function matrix: translate/repeat/reverse/
     * position/left/right + regexp_extract_all (serialized, rule 6). */

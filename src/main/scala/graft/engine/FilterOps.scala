@@ -12,25 +12,17 @@ object FilterOps {
   /** b01 — derived columns: revenue expression, alias, lossless cast.
     * Note: double→int casts are avoided cross-engine (DuckDB rounds, Spark
     * truncates); FLOOR+BIGINT is the portable form. */
-  val b01: Q = Q(
+  val b01: Q = Q.fromSql(
     "b01_project_expr",
     """SELECT l_orderkey, l_linenumber,
       |  ROUND(l_extendedprice * (1 - l_discount), 4) AS revenue,
       |  CAST(FLOOR(l_quantity) AS BIGINT) AS qty_floor
       |FROM lineitem
       |ORDER BY l_orderkey ASC NULLS LAST, l_linenumber ASC NULLS LAST,
-      |         revenue ASC NULLS LAST, qty_floor ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          round(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"),
-          floor(col("l_quantity")).cast("bigint").as("qty_floor"))
-        .orderBy(asc_nulls_last("l_orderkey"), asc_nulls_last("l_linenumber"),
-                 asc_nulls_last("revenue"), asc_nulls_last("qty_floor")))
+      |         revenue ASC NULLS LAST, qty_floor ASC NULLS LAST""".stripMargin)
 
   /** b02 — compound predicate: AND/OR/NOT + IN + BETWEEN + LIKE over P⋈L. */
-  val b02: Q = Q(
+  val b02: Q = Q.fromSql(
     "b02_filter_compound",
     """SELECT l_orderkey, l_linenumber, p_partkey, p_type, l_quantity
       |FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -38,19 +30,10 @@ object FilterOps {
       |  AND l_quantity BETWEEN 10 AND 20
       |  AND NOT (l_returnflag = 'A')
       |ORDER BY l_orderkey ASC NULLS LAST, l_linenumber ASC NULLS LAST,
-      |         p_partkey ASC NULLS LAST, l_quantity ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .filter((col("p_type").like("PROMO%") || col("p_type").isin("ECONOMY", "SMALL")) &&
-                col("l_quantity").between(10, 20) &&
-                !(col("l_returnflag") === "A"))
-        .select("l_orderkey", "l_linenumber", "p_partkey", "p_type", "l_quantity")
-        .orderBy(asc_nulls_last("l_orderkey"), asc_nulls_last("l_linenumber"),
-                 asc_nulls_last("p_partkey"), asc_nulls_last("l_quantity")))
+      |         p_partkey ASC NULLS LAST, l_quantity ASC NULLS LAST""".stripMargin)
 
   /** b03 — 3-valued logic: NULLIF-created nulls, IS [NOT] NULL, null-safe equality. */
-  val b03: Q = Q(
+  val b03: Q = Q.fromSql(
     "b03_filter_null3vl",
     """SELECT o_orderkey,
       |  NULLIF(o_orderstatus, 'P') AS status_np,
@@ -58,18 +41,7 @@ object FilterOps {
       |  (NULLIF(o_orderstatus, 'P') IS NOT DISTINCT FROM 'F') AS nsafe_f
       |FROM orders
       |WHERE NULLIF(o_orderstatus, 'O') IS NOT NULL
-      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val st = nullif(col("o_orderstatus"), lit("P"))
-      Tables.orders(s, dir)
-        .select(
-          col("o_orderkey"),
-          st.as("status_np"),
-          st.isNull.as("was_p"),
-          st.eqNullSafe(lit("F")).as("nsafe_f"))
-        .filter(nullif(col("o_orderstatus"), lit("O")).isNotNull)
-        .orderBy(asc_nulls_last("o_orderkey"))
-    })
+      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** b04 — CASE WHEN banding of o_totalprice with per-band counts. */
   val b04: Q = Q(
@@ -99,22 +71,13 @@ object FilterOps {
     * on the bit-identical constant; a double AVG would drift in low bits and
     * could flip boundary rows). Declared through the SQL entry point (EP2)
     * to exercise Catalyst's scalar-subquery planning. */
-  val b05: Q = Q(
+  val b05: Q = Q.fromSql(
     "b05_scalar_subquery",
     """SELECT o_orderkey, o_totalprice FROM orders
       |WHERE o_totalprice >
       |  (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
       |          / COUNT(*) * 1.5 FROM orders)
-      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |WHERE o_totalprice >
-          |  (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-          |          / COUNT(*) * 1.5 FROM orders)
-          |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
-    })
+      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   def ops: Vector[Q] = Vector(b01, b02, b03, b04, b05)
 }

@@ -92,22 +92,17 @@ object FuncOps {
         .orderBy(asc_nulls_last("o_orderkey")))
 
   /** h05 — month-truncated revenue series. */
-  val h05: Q = Q(
+  val h05: Q = Q.fromSql(
     "h05_date_trunc",
     s"""SELECT CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS mon,
        |  COUNT(*) AS n, ${Determinism.dsumSql("o_totalprice")} AS revenue
        |FROM orders GROUP BY 1
-       |ORDER BY mon ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy(date_trunc("month", col("o_orderdate")).as("mon"))
-        .agg(count(lit(1)).as("n"), Determinism.dsum(col("o_totalprice")).as("revenue"))
-        .orderBy(asc_nulls_last("mon")))
+       |ORDER BY mon ASC NULLS LAST""".stripMargin)
 
   /** h06 — math expression matrix. Spark ceil/floor(double) yield LONG while
     * DuckDB yields DOUBLE → explicit BIGINT casts; libm 1-ulp drift absorbed
     * by ROUND 4. */
-  val h06: Q = Q(
+  val h06: Q = Q.fromSql(
     "h06_math",
     """SELECT l_orderkey, l_linenumber,
       |  ABS(0 - l_extendedprice) AS abs_p,
@@ -122,23 +117,7 @@ object FuncOps {
       |FROM lineitem
       |ORDER BY l_orderkey ASC NULLS LAST, l_linenumber ASC NULLS LAST,
       |         abs_p ASC NULLS LAST, ceil_d ASC NULLS LAST, floor_t ASC NULLS LAST,
-      |         sqrt_q ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(
-          col("l_orderkey"), col("l_linenumber"),
-          abs(lit(0) - col("l_extendedprice")).as("abs_p"),
-          ceil(col("l_discount") * 100).cast("bigint").as("ceil_d"),
-          floor(col("l_tax") * 100).cast("bigint").as("floor_t"),
-          round(col("l_extendedprice"), 2).as("round_p"),
-          round(sqrt(col("l_quantity")), 4).as("sqrt_q"),
-          round(log(col("l_extendedprice")), 4).as("ln_p"),
-          round(exp(col("l_discount")), 4).as("exp_d"),
-          round(pow(col("l_quantity"), 2), 4).as("pow_q"),
-          (col("l_orderkey") % 7).as("mod7"))
-        .orderBy(asc_nulls_last("l_orderkey"), asc_nulls_last("l_linenumber"),
-                 asc_nulls_last("abs_p"), asc_nulls_last("ceil_d"),
-                 asc_nulls_last("floor_t"), asc_nulls_last("sqrt_q")))
+      |         sqrt_q ASC NULLS LAST""".stripMargin)
 
   /** h07 — array ops on embeddings: size, 1-based element_at, slice,
     * per-element arithmetic via HOF transform, then posexplode back to
@@ -215,7 +194,7 @@ object FuncOps {
         .orderBy(asc_nulls_last("o_orderkey")))
 
   /** h10 — null-handling functions. */
-  val h10: Q = Q(
+  val h10: Q = Q.fromSql(
     "h10_null_funcs",
     """SELECT o_orderkey,
       |  COALESCE(NULLIF(o_orderstatus, 'O'), 'open') AS st,
@@ -223,16 +202,7 @@ object FuncOps {
       |  GREATEST(o_totalprice, 50000.0) AS greatest_p,
       |  NULLIF(o_orderpriority, '5-LOW') AS pr
       |FROM orders
-      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .select(
-          col("o_orderkey"),
-          coalesce(nullif(col("o_orderstatus"), lit("O")), lit("open")).as("st"),
-          least(col("o_totalprice"), lit(100000.0)).as("least_p"),
-          greatest(col("o_totalprice"), lit(50000.0)).as("greatest_p"),
-          nullif(col("o_orderpriority"), lit("5-LOW")).as("pr"))
-        .orderBy(asc_nulls_last("o_orderkey")))
+      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** h11 — cryptographic digests of document texts (k01's primitive;
     * digests verified identical across engines). */

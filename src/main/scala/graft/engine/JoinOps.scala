@@ -17,19 +17,13 @@ import graft.engine.Determinism._
 object JoinOps {
 
   /** c01 — inner equi-join O⋈C, per-nation order count + total. */
-  val c01: Q = Q(
+  val c01: Q = Q.fromSql(
     "c01_join_inner",
     s"""SELECT c_nationkey, COUNT(*) AS n_orders,
        |  ${dsumSql("o_totalprice")} AS total_price
        |FROM orders JOIN customer ON o_custkey = c_custkey
        |GROUP BY c_nationkey
-       |ORDER BY c_nationkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total_price"))
-        .orderBy(asc_nulls_last("c_nationkey")))
+       |ORDER BY c_nationkey ASC NULLS LAST""".stripMargin)
 
   /** c02 — explicit broadcast of the dim chain S⋈N⋈R under the L fact scan. */
   val c02: Q = Q(
@@ -53,52 +47,30 @@ object JoinOps {
         .orderBy(asc_nulls_last("r_name")))
 
   /** c03 — left outer: every customer with order count including zero. */
-  val c03: Q = Q(
+  val c03: Q = Q.fromSql(
     "c03_join_left",
     """SELECT c_custkey, COUNT(o_orderkey) AS n_orders
       |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
       |GROUP BY c_custkey
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir), col("o_custkey") === col("c_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("n_orders"))
-        .orderBy(asc_nulls_last("c_custkey")))
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** c04 — right outer mirror of c03 (orders RIGHT JOIN customer). */
-  val c04: Q = Q(
+  val c04: Q = Q.fromSql(
     "c04_join_right",
     """SELECT c_custkey, COUNT(o_orderkey) AS n_orders
       |FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
       |GROUP BY c_custkey
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"), "right")
-        .groupBy("c_custkey")
-        .agg(count(col("o_orderkey")).as("n_orders"))
-        .orderBy(asc_nulls_last("c_custkey")))
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** c05 — full outer join of per-nation supplier vs customer counts;
     * null sides preserved (nations can lack suppliers). */
-  val c05: Q = Q(
+  val c05: Q = Q.fromSql(
     "c05_join_full",
     """WITH s AS (SELECT s_nationkey AS nk, COUNT(*) AS n_supp FROM supplier GROUP BY 1),
       |     c AS (SELECT c_nationkey AS nk, COUNT(*) AS n_cust FROM customer GROUP BY 1)
       |SELECT COALESCE(s.nk, c.nk) AS nationkey, n_supp, n_cust
       |FROM s FULL JOIN c ON s.nk = c.nk
-      |ORDER BY nationkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val sp = Tables.supplier(s, dir)
-        .groupBy(col("s_nationkey").as("snk")).agg(count(lit(1)).as("n_supp"))
-      val cu = Tables.customer(s, dir)
-        .groupBy(col("c_nationkey").as("cnk")).agg(count(lit(1)).as("n_cust"))
-      sp.join(cu, col("snk") === col("cnk"), "full")
-        .select(coalesce(col("snk"), col("cnk")).as("nationkey"),
-                col("n_supp"), col("n_cust"))
-        .orderBy(asc_nulls_last("nationkey"))
-    })
+      |ORDER BY nationkey ASC NULLS LAST""".stripMargin)
 
   /** c06 — left semi (EXISTS): customers with ≥1 URGENT order. */
   val c06: Q = Q(
@@ -129,17 +101,12 @@ object JoinOps {
         .orderBy(asc_nulls_last("c_custkey")))
 
   /** c08 — cross join: region × distinct part type grid with type counts. */
-  val c08: Q = Q(
+  val c08: Q = Q.fromSql(
     "c08_join_cross",
     """SELECT r_name, p_type, n_parts
       |FROM region CROSS JOIN
       |  (SELECT p_type, COUNT(*) AS n_parts FROM part GROUP BY 1) t
-      |ORDER BY r_name ASC NULLS LAST, p_type ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.region(s, dir)
-        .crossJoin(Tables.part(s, dir).groupBy("p_type").agg(count(lit(1)).as("n_parts")))
-        .select("r_name", "p_type", "n_parts")
-        .orderBy(asc_nulls_last("r_name"), asc_nulls_last("p_type")))
+      |ORDER BY r_name ASC NULLS LAST, p_type ASC NULLS LAST""".stripMargin)
 
   /** c09 — theta (band) join as order statistics: per-supplier count of
     * customers with a strictly larger account balance. The raw non-equi
@@ -165,7 +132,7 @@ object JoinOps {
 
   /** c10 — TPC-H Q5 shape: 6-way join, revenue per nation, one region+year.
     * AQE reorders/re-sizes at runtime; all dims broadcast. */
-  val c10: Q = Q(
+  val c10: Q = Q.fromSql(
     "c10_join_multiway",
     s"""SELECT n_name, ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue
        |FROM customer, orders, lineitem, supplier, nation, region
@@ -176,23 +143,7 @@ object JoinOps {
        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
        |  AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
        |GROUP BY n_name
-       |ORDER BY n_name ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir)
-                .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-                        col("o_orderdate") <  lit("1997-01-01").cast("timestamp")),
-              col("c_custkey") === col("o_custkey"))
-        .join(Tables.lineitem(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.supplier(s, dir),
-              col("l_suppkey") === col("s_suppkey") &&
-              col("c_nationkey") === col("s_nationkey"))
-        .join(Tables.nation(s, dir), col("s_nationkey") === col("n_nationkey"))
-        .join(Tables.region(s, dir).filter(col("r_name") === "ASIA"),
-              col("n_regionkey") === col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .orderBy(asc_nulls_last("n_name")))
+       |ORDER BY n_name ASC NULLS LAST""".stripMargin)
 
   /** c11 — as-of join: for each purchase event, the latest signup ts ≤ it
     * for the same user. Delegates to the generic `Windows.asOf` operator
@@ -323,7 +274,7 @@ object JoinOps {
     * Both date filters reach the scans (pushdown), the dims broadcast
     * under AQE, and the final top-10 fuses to TakeOrderedAndProject (no
     * global sort materializes). */
-  val c17: Q = Q(
+  val c17: Q = Q.fromSql(
     "c17_join_topk_revenue",
     s"""SELECT l_orderkey, ${dsumSql("l_extendedprice * (1 - l_discount)")} AS revenue,
        |  o_orderdate
@@ -335,21 +286,7 @@ object JoinOps {
        |GROUP BY l_orderkey, o_orderdate
        |ORDER BY revenue DESC NULLS LAST, o_orderdate ASC NULLS LAST,
        |  l_orderkey ASC NULLS LAST
-       |LIMIT 10""".stripMargin,
-    (s, dir) => {
-      val cut = lit("1996-03-15").cast("timestamp")
-      Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-        .join(Tables.orders(s, dir).filter(col("o_orderdate") < cut),
-              col("c_custkey") === col("o_custkey"))
-        .join(Tables.lineitem(s, dir).filter(col("l_shipdate") > cut),
-              col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(desc_nulls_last("revenue"), asc_nulls_last("o_orderdate"),
-                 asc_nulls_last("l_orderkey"))
-        .limit(10)
-    })
+       |LIMIT 10""".stripMargin)
 
   /** c18 — TPC-H Q10 shape: top-20 customers by returned-item revenue in a
     * quarter. Four-table join where Catalyst broadcasts the 25-row nation

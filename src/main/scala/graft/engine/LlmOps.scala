@@ -115,16 +115,11 @@ object LlmOps {
         .limit(10))
 
   /** k06 — lang × source doc-count matrix (pipeline partition planning). */
-  val k06: Q = Q(
+  val k06: Q = Q.fromSql(
     "k06_lang_source_matrix",
     """SELECT lang, source, COUNT(*) AS n FROM documents
       |GROUP BY lang, source
-      |ORDER BY lang ASC NULLS LAST, source ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      docs(s, dir)
-        .groupBy("lang", "source")
-        .agg(count(lit(1)).as("n"))
-        .orderBy(asc_nulls_last("lang"), asc_nulls_last("source")))
+      |ORDER BY lang ASC NULLS LAST, source ASC NULLS LAST""".stripMargin)
 
   /** k07 — embedding-cosine near-dup: same-label pairs with cosine ≥ 0.4
     * (label is the blocking key; exact within block). The `label` column

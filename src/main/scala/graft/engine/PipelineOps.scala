@@ -142,7 +142,7 @@ object PipelineOps {
     * stddev/var: both engines run double partial sums whose merge-order
     * noise sits at ~1e-12 relative — ROUND 4 over O(1..1e4) magnitudes
     * absorbs it. */
-  val d20: Q = Q(
+  val d20: Q = Q.fromSql(
     "d20_regr_stats",
     """SELECT l_returnflag,
       |  ROUND(REGR_SLOPE(l_extendedprice, l_quantity), 4) AS slope,
@@ -151,15 +151,7 @@ object PipelineOps {
       |  ROUND(CORR(l_extendedprice, l_quantity), 4) AS corr
       |FROM lineitem
       |GROUP BY l_returnflag
-      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(round(regr_slope(col("l_extendedprice"), col("l_quantity")), 4).as("slope"),
-             round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 4).as("icept"),
-             round(regr_r2(col("l_extendedprice"), col("l_quantity")), 4).as("r2"),
-             round(corr(col("l_extendedprice"), col("l_quantity")), 4).as("corr"))
-        .orderBy(asc_nulls_last("l_returnflag")))
+      |ORDER BY l_returnflag ASC NULLS LAST""".stripMargin)
 
   /** The k02 edge set (exact token Jaccard ≥ 0.6 within a source block) as
     * an oracle CTE prefix — k23/k24 consume the SAME pairs the oracle

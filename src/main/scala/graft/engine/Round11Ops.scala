@@ -299,7 +299,7 @@ object Round11Ops {
     * values). The r/covar trees are ONE shared-text IEEE expression each
     * over those casts — zero ROUND, the d32 class. At 100× scale the
     * remaining int64 sums route through the same decimal escape. */
-  val d46: Q = Q(
+  val d46: Q = Q.fromSql(
     "d46_corr_matrix",
     s"""WITH s AS (
       |  SELECT l_linestatus, CAST(COUNT(*) AS BIGINT) AS n,
@@ -321,33 +321,7 @@ object Round11Ops {
       |  ${covarE("sq", "sp", "sqp")} AS covar_qty_price,
       |  ${covarE("sq", "sd", "sqd")} AS covar_qty_disc,
       |  ${covarE("sp", "sd", "spd")} AS covar_price_disc
-      |FROM s ORDER BY l_linestatus ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val q = col("l_quantity").cast("long")
-      val p = (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-      val d = (col("l_discount").cast("decimal(18,2)") * 100).cast("long")
-      Tables.lineitem(s, dir)
-        .select(col("l_linestatus"), q.as("q"), p.as("p"), d.as("d"))
-        .groupBy("l_linestatus")
-        .agg(count(lit(1)).cast("long").as("n"),
-             sum("q").cast("long").as("sq"),
-             sum(col("q") * col("q")).cast("long").as("sq2"),
-             sum("p").cast("long").as("sp"),
-             sum((col("p") * col("p")).cast("decimal(38,0)")).as("sp2"),
-             sum("d").cast("long").as("sd"),
-             sum(col("d") * col("d")).cast("long").as("sd2"),
-             sum(col("q") * col("p")).cast("long").as("sqp"),
-             sum(col("q") * col("d")).cast("long").as("sqd"),
-             sum(col("p") * col("d")).cast("long").as("spd"))
-        .select(col("l_linestatus"), col("n").as("n_rows"),
-                expr(corrE("sq", "sp", "sq2", "sp2", "sqp")).as("corr_qty_price"),
-                expr(corrE("sq", "sd", "sq2", "sd2", "sqd")).as("corr_qty_disc"),
-                expr(corrE("sp", "sd", "sp2", "sd2", "spd")).as("corr_price_disc"),
-                expr(covarE("sq", "sp", "sqp")).as("covar_qty_price"),
-                expr(covarE("sq", "sd", "sqd")).as("covar_qty_disc"),
-                expr(covarE("sp", "sd", "spd")).as("covar_price_disc"))
-        .orderBy(asc_nulls_last("l_linestatus"))
-    })
+      |FROM s ORDER BY l_linestatus ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- d47
 
@@ -510,7 +484,7 @@ object Round11Ops {
     * statistics are shared-text IEEE trees — zero ROUND, the d32 class.
     * Weights are frequency semantics (integer repeat counts), matching
     * the Σw − 1 Bessel denominator. */
-  val d48: Q = Q(
+  val d48: Q = Q.fromSql(
     "d48_weighted_moments",
     s"""WITH s AS (
       |  SELECT l_returnflag,
@@ -525,23 +499,7 @@ object Round11Ops {
       |SELECT l_returnflag, n AS n_rows, sw AS sum_w,
       |  $avgWE AS avg_weighted,
       |  $varWE AS var_weighted
-      |FROM s ORDER BY l_returnflag ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = col("l_quantity").cast("long")
-      val x = (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-      Tables.lineitem(s, dir)
-        .select(col("l_returnflag"), w.as("w"), x.as("x"))
-        .groupBy("l_returnflag")
-        .agg(sum("w").cast("long").as("sw"),
-             sum(col("w") * col("x")).cast("long").as("swx"),
-             sum((col("w") * col("x") * col("x")).cast("decimal(38,0)")).as("swx2"),
-             count(lit(1)).cast("long").as("n"))
-        .select(col("l_returnflag"), col("n").as("n_rows"),
-                col("sw").as("sum_w"),
-                expr(avgWE).as("avg_weighted"),
-                expr(varWE).as("var_weighted"))
-        .orderBy(asc_nulls_last("l_returnflag"))
-    })
+      |FROM s ORDER BY l_returnflag ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- h37
 
@@ -765,7 +723,7 @@ object Round11Ops {
     * ulp at exact powers is not cross-engine-guaranteed). Inputs derive
     * deterministically from the event row (cents; cents as seconds mod
     * a day; a 0–89 pseudo-age). */
-  val h38: Q = Q(
+  val h38: Q = Q.fromSql(
     "h38_round_ladders",
     s"""SELECT event_id, x AS cents,
       |  CAST($exp2E AS BIGINT) AS exp2_floor,
@@ -777,18 +735,7 @@ object Round11Ops {
       |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) % 86400 AS s,
       |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) % 90 AS a
       |  FROM events)
-      |ORDER BY event_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
-      Tables.events(s, dir)
-        .select(col("event_id"), cents.as("x"), (cents % 86400).as("s"),
-                (cents % 90).as("a"))
-        .select(col("event_id"), col("x").as("cents"),
-                expr(exp2E).cast("long").as("exp2_floor"),
-                expr(durE).cast("long").as("dur_bucket"),
-                expr(ageE).cast("long").as("age_bucket"))
-        .orderBy(asc_nulls_last("event_id"))
-    })
+      |ORDER BY event_id ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- h39
 
@@ -985,7 +932,7 @@ object Round11Ops {
     * default — the "filled edges" form dashboards reach for. Same
     * three-argument spelling in both engines; exact integers/strings,
     * one window pass. */
-  val e23: Q = Q(
+  val e23: Q = Q.fromSql(
     "e23_lag_lead_defaults",
     """SELECT event_id, user_id,
       |  LAG(c, 2, -1) OVER w AS prev2_c,
@@ -995,19 +942,7 @@ object Round11Ops {
       |        CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
       |      FROM events)
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-      |ORDER BY event_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-      val cents = (col("value").cast("decimal(18,2)") * 100).cast("long")
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
-                cents.as("c"))
-        .select(col("event_id"), col("user_id"),
-                lag(col("c"), 2, -1L).over(w).as("prev2_c"),
-                lead(col("c"), 3, -1L).over(w).as("next3_c"),
-                lag(col("event_type"), 1, "none").over(w).as("prev_type"))
-        .orderBy(asc_nulls_last("event_id"))
-    })
+      |ORDER BY event_id ASC NULLS LAST""".stripMargin)
 
   def ops: Vector[Q] =
     Vector(j12, h35, e21, d45, d46, d47, h36, d48, h37, d49, e22, h38, h39,

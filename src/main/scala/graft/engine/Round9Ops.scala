@@ -57,7 +57,7 @@ object Round9Ops {
     * object scaladoc for the recipe and why it is safe). One map-combined
     * hash agg carries four int64 power sums per group; the closed form runs
     * on |groups| rows. */
-  val d32: Q = Q(
+  val d32: Q = Q.fromSql(
     "d32_skew_kurt",
     s"""WITH s AS (
       |  SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n,
@@ -77,24 +77,7 @@ object Round9Ops {
       |c AS (
       |  SELECT l_returnflag, n, mean, $m2E AS m2, $m3E AS m3, $m4E AS m4 FROM m)
       |SELECT l_returnflag, n AS n_rows, $skewE AS skew_pop, $kurtE AS kurt_pop
-      |FROM c ORDER BY l_returnflag ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val q = col("l_quantity").cast("long")
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum(q).as("s1"), sum(q * q).as("s2"),
-             sum(q * q * q).as("s3"), sum(q * q * q * q).as("s4"))
-        .withColumn("mean", expr(meanE))
-        .withColumn("r2", expr("CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)"))
-        .withColumn("r3", expr("CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE)"))
-        .withColumn("r4", expr("CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE)"))
-        .withColumn("m2", expr(m2E))
-        .withColumn("m3", expr(m3E))
-        .withColumn("m4", expr(m4E))
-        .select(col("l_returnflag"), col("n").as("n_rows"),
-                expr(skewE).as("skew_pop"), expr(kurtE).as("kurt_pop"))
-        .orderBy(asc_nulls_last("l_returnflag"))
-    })
+      |FROM c ORDER BY l_returnflag ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- d33
 
@@ -121,7 +104,7 @@ object Round9Ops {
     * (CH `cramersVBiasCorrected` — GREATEST/LEAST are exact on doubles in
     * both engines) complete the association family. All float ops are
     * IEEE exact on bit-identical inputs (object scaladoc). */
-  val d33: Q = Q(
+  val d33: Q = Q.fromSql(
     "d33_cramers_v",
     s"""WITH t AS (
       |  SELECT
@@ -143,30 +126,7 @@ object Round9Ops {
       |  SQRT(GREATEST(0.0, chi2 / n - 2.0 / (n - 1.0))
       |       / LEAST(3.0 - 4.0 / (n - 1.0) - 1.0, 2.0 - 1.0 / (n - 1.0) - 1.0))
       |    AS cramers_v_bc
-      |FROM x""".stripMargin,
-    (s, dir) => {
-      def cell(rf: String, ls: String) =
-        sum(when(col("l_returnflag") === rf && col("l_linestatus") === ls, 1)
-              .otherwise(0)).cast("double")
-      Tables.lineitem(s, dir)
-        .agg(count(lit(1)).cast("double").as("n"),
-             cell("A", "F").as("caf"), cell("A", "O").as("cao"),
-             cell("N", "F").as("cnf"), cell("N", "O").as("cno"),
-             cell("R", "F").as("crf"), cell("R", "O").as("cro"))
-        .withColumn("ra", expr("caf + cao"))
-        .withColumn("rn", expr("cnf + cno"))
-        .withColumn("rr", expr("crf + cro"))
-        .withColumn("kf", expr("caf + cnf + crf"))
-        .withColumn("ko", expr("cao + cno + cro"))
-        .withColumn("chi2", expr(chi2E))
-        .select(col("n").cast("long").as("n_rows"), col("chi2"),
-                expr("SQRT(chi2 / n)").as("cramers_v"),
-                expr("SQRT(chi2 / (chi2 + n))").as("contingency_coef"),
-                expr("""SQRT(GREATEST(0.0, chi2 / n - 2.0 / (n - 1.0))
-                       |     / LEAST(3.0 - 4.0 / (n - 1.0) - 1.0,
-                       |             2.0 - 1.0 / (n - 1.0) - 1.0))""".stripMargin)
-                  .as("cramers_v_bc"))
-    })
+      |FROM x""".stripMargin)
 
   // ---------------------------------------------------------------- d38
 
@@ -193,7 +153,7 @@ object Round9Ops {
     * family has never hit across three SFs). Plan identical to d33: one
     * conditional map-combined hash agg, single-row output. All three CH
     * sign conventions agree here: U ∈ [0, 1]. */
-  val d38: Q = Q(
+  val d38: Q = Q.fromSql(
     "d38_theils_u",
     s"""WITH t AS (
       |  SELECT
@@ -213,28 +173,7 @@ object Round9Ops {
       |SELECT CAST(n AS BIGINT) AS n_rows,
       |  ROUND(hx, 4) AS h_x, ROUND(hxy, 4) AS h_x_given_y,
       |  ROUND((hx - hxy) / hx, 4) AS theils_u
-      |FROM h""".stripMargin,
-    (s, dir) => {
-      def cell(rf: String, ls: String) =
-        sum(when(col("l_returnflag") === rf && col("l_linestatus") === ls, 1)
-              .otherwise(0)).cast("double")
-      Tables.lineitem(s, dir)
-        .agg(count(lit(1)).cast("double").as("n"),
-             cell("A", "F").as("caf"), cell("A", "O").as("cao"),
-             cell("N", "F").as("cnf"), cell("N", "O").as("cno"),
-             cell("R", "F").as("crf"), cell("R", "O").as("cro"))
-        .withColumn("ra", expr("caf + cao"))
-        .withColumn("rn", expr("cnf + cno"))
-        .withColumn("rr", expr("crf + cro"))
-        .withColumn("kf", expr("caf + cnf + crf"))
-        .withColumn("ko", expr("cao + cno + cro"))
-        .withColumn("hx", expr(s"-($hxE)"))
-        .withColumn("hxy", expr(s"-($hxyE)"))
-        .select(col("n").cast("long").as("n_rows"),
-                round(col("hx"), 4).as("h_x"),
-                round(col("hxy"), 4).as("h_x_given_y"),
-                round(expr("(hx - hxy) / hx"), 4).as("theils_u"))
-    })
+      |FROM h""".stripMargin)
 
   // ---------------------------------------------------------------- d34
 

@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.functions._
-
 /** SURVEY §2.1 block A — scans / sources.
   *
   * All reads are declarative parquet scans: Catalyst pushes column pruning
@@ -11,52 +9,32 @@ import org.apache.spark.sql.functions._
 object ScanOps {
 
   /** a01 — full-scan cardinalities of all 10 tables, unioned. */
-  val a01: Q = Q(
+  val a01: Q = Q.fromSql(
     "a01_scan_count",
     Tables.names
       .map(n => s"SELECT '$n' AS tbl, COUNT(*) AS n_rows FROM $n")
-      .mkString("", " UNION ALL ", " ORDER BY tbl ASC NULLS LAST"),
-    (s, dir) =>
-      Tables.names
-        .map(n => Tables.table(s, dir, n)
-          .agg(count(lit(1)).as("n_rows"))
-          .select(lit(n).as("tbl"), col("n_rows")))
-        .reduce(_ unionAll _)
-        .orderBy(asc_nulls_last("tbl")))
+      .mkString("", " UNION ALL ", " ORDER BY tbl ASC NULLS LAST"))
 
   /** a02 — column pruning: 3 of 11 lineitem columns, first 100 rows.
     * NOTE (l_orderkey, l_linenumber) is NOT unique in the fixtures — the
     * ORDER BY covers every output column so ties are identical rows and the
     * LIMIT cut is deterministic on both engines. */
-  val a02: Q = Q(
+  val a02: Q = Q.fromSql(
     "a02_scan_project",
     """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
       |ORDER BY l_orderkey ASC NULLS LAST, l_linenumber ASC NULLS LAST,
       |         l_quantity ASC NULLS LAST
-      |LIMIT 100""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-        .orderBy(asc_nulls_last("l_orderkey"), asc_nulls_last("l_linenumber"),
-                 asc_nulls_last("l_quantity"))
-        .limit(100))
+      |LIMIT 100""".stripMargin)
 
   /** a03 — predicate pushdown: one month of shipments, selective columns.
     * The filter reaches the parquet reader as a row-group predicate. */
-  val a03: Q = Q(
+  val a03: Q = Q.fromSql(
     "a03_scan_filter_pushdown",
     """SELECT l_orderkey, l_linenumber, l_shipdate, l_quantity FROM lineitem
       |WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
       |  AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
       |ORDER BY l_orderkey ASC NULLS LAST, l_linenumber ASC NULLS LAST,
-      |         l_shipdate ASC NULLS LAST, l_quantity ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1997-03-01").cast("timestamp") &&
-                col("l_shipdate") <  lit("1997-04-01").cast("timestamp"))
-        .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity")
-        .orderBy(asc_nulls_last("l_orderkey"), asc_nulls_last("l_linenumber"),
-                 asc_nulls_last("l_shipdate"), asc_nulls_last("l_quantity")))
+      |         l_shipdate ASC NULLS LAST, l_quantity ASC NULLS LAST""".stripMargin)
 
   /** a04 — deterministic fractional sampling by key hash (the `SAMPLE k`
     * clause analog: the engine samples `hash(key) < k * 2^32` so the same key
@@ -78,7 +56,7 @@ object ScanOps {
     * (1 − k) of the file bytes via min/max pruning — the arithmetic here is
     * exactly what that layout would order by. Sums routed through DECIMAL
     * (Determinism.dsum) so partial-merge order cannot perturb bits. */
-  val a04: Q = Q(
+  val a04: Q = Q.fromSql(
     "a04_sample_key",
     s"""SELECT o_orderstatus, COUNT(*) AS n,
        |  ${Determinism.dsumSql("o_totalprice")} AS sum_price,
@@ -86,17 +64,7 @@ object ScanOps {
        |FROM orders
        |WHERE ((o_orderkey % 2147483648) * 2654435761) % 4294967296 < 536870912
        |GROUP BY o_orderstatus
-       |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .filter(((col("o_orderkey") % lit(2147483648L)) * lit(2654435761L)) %
-                lit(4294967296L) < lit(536870912L))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-             Determinism.dsum(col("o_totalprice")).as("sum_price"),
-             min(col("o_orderkey")).as("min_key"),
-             max(col("o_orderkey")).as("max_key"))
-        .orderBy(asc_nulls_last("o_orderstatus")))
+       |ORDER BY o_orderstatus ASC NULLS LAST""".stripMargin)
 
   def ops: Vector[Q] = Vector(a01, a02, a03, a04)
 }

@@ -15,23 +15,14 @@ import org.apache.spark.sql.functions._
 object WindowOps {
 
   /** e01 — ranking trio per priority, ordered by price desc. */
-  val e01: Q = Q(
+  val e01: Q = Q.fromSql(
     "e01_win_ranking",
     """SELECT o_orderkey, o_orderpriority,
       |  ROW_NUMBER() OVER w AS rn, RANK() OVER w AS rk, DENSE_RANK() OVER w AS drk
       |FROM orders
       |WINDOW w AS (PARTITION BY o_orderpriority
       |             ORDER BY o_totalprice DESC, o_orderkey ASC)
-      |ORDER BY o_orderpriority ASC NULLS LAST, rn ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderpriority"),
-                row_number().over(w).as("rn"), rank().over(w).as("rk"),
-                dense_rank().over(w).as("drk"))
-        .orderBy(asc_nulls_last("o_orderpriority"), asc_nulls_last("rn"))
-    })
+      |ORDER BY o_orderpriority ASC NULLS LAST, rn ASC NULLS LAST""".stripMargin)
 
   /** e02 — distribution functions over customer balances. The global window
     * (no PARTITION BY) is the semantics, and WindowExec moves everything to
@@ -39,7 +30,7 @@ object WindowOps {
     * 100 TB path for global ntile/percent_rank over facts is two-pass:
     * approx/exact quantile cutpoints first (d10's percentile machinery),
     * then a map-side bucket lookup join — no single-partition shuffle. */
-  val e02: Q = Q(
+  val e02: Q = Q.fromSql(
     "e02_win_dist",
     """SELECT c_custkey,
       |  NTILE(4) OVER w AS quartile,
@@ -47,16 +38,7 @@ object WindowOps {
       |  ROUND(CUME_DIST() OVER w, 4) AS cd
       |FROM customer
       |WINDOW w AS (ORDER BY c_acctbal ASC, c_custkey ASC)
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.orderBy(asc("c_acctbal"), asc("c_custkey"))
-      Tables.customer(s, dir)
-        .select(col("c_custkey"),
-                ntile(4).over(w).as("quartile"),
-                round(percent_rank().over(w), 4).as("pr"),
-                round(cume_dist().over(w), 4).as("cd"))
-        .orderBy(asc_nulls_last("c_custkey"))
-    })
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** e03 — lag/lead neighbors per user with µs gap (epoch_us on both sides). */
   val e03: Q = Q(
@@ -79,27 +61,17 @@ object WindowOps {
 
   /** e04 — running revenue per customer (cumulative frame; DECIMAL-routed so
     * DuckDB's segment-tree summation order can't perturb low bits). */
-  val e04: Q = Q(
+  val e04: Q = Q.fromSql(
     "e04_win_running",
     """SELECT o_custkey, o_orderkey,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER
       |    (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
       |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running
       |FROM orders
-      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(asc("o_orderdate"), asc("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-                sum(col("o_totalprice").cast("decimal(18,6)")).over(w)
-                  .cast("double").as("running"))
-        .orderBy(asc_nulls_last("o_custkey"), asc_nulls_last("o_orderkey"))
-    })
+      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** e05 — 4-row moving average of order price per customer. */
-  val e05: Q = Q(
+  val e05: Q = Q.fromSql(
     "e05_win_sliding_rows",
     """SELECT o_custkey, o_orderkey,
       |  ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER w4 AS DOUBLE)
@@ -107,21 +79,11 @@ object WindowOps {
       |FROM orders
       |WINDOW w4 AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
       |              ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
-      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w4 = Window.partitionBy("o_custkey")
-        .orderBy(asc("o_orderdate"), asc("o_orderkey"))
-        .rowsBetween(-3, Window.currentRow)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-                round(sum(col("o_totalprice").cast("decimal(18,6)")).over(w4)
-                        .cast("double") / count(lit(1)).over(w4), 4).as("mov_avg"))
-        .orderBy(asc_nulls_last("o_custkey"), asc_nulls_last("o_orderkey"))
-    })
+      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** e06 — value-range frame: orders within ±1000.0 of each order's price
     * (SQL entry point: the DataFrame rangeBetween API takes long bounds). */
-  val e06: Q = Q(
+  val e06: Q = Q.fromSql(
     "e06_win_range_frame",
     """SELECT o_orderkey, o_totalprice,
       |  COUNT(*) OVER wr AS n_near,
@@ -129,18 +91,7 @@ object WindowOps {
       |FROM orders
       |WINDOW wr AS (ORDER BY o_totalprice
       |              RANGE BETWEEN 1000.0 PRECEDING AND 1000.0 FOLLOWING)
-      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT o_orderkey, o_totalprice,
-          |  COUNT(*) OVER wr AS n_near,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER wr AS DOUBLE) AS sum_near
-          |FROM orders
-          |WINDOW wr AS (ORDER BY o_totalprice
-          |              RANGE BETWEEN 1000.0 PRECEDING AND 1000.0 FOLLOWING)
-          |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
-    })
+      |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** e07 — first/last value with the full-partition frame. */
   val e07: Q = Q(
@@ -184,23 +135,14 @@ object WindowOps {
 
   /** e09 — nth_value with the full-partition frame: the 2nd-earliest order
     * key per customer (null for single-order customers). */
-  val e09: Q = Q(
+  val e09: Q = Q.fromSql(
     "e09_win_nth_value",
     """SELECT o_custkey, o_orderkey,
       |  NTH_VALUE(o_orderkey, 2) OVER wful AS second_ok
       |FROM orders
       |WINDOW wful AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
       |                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val wful = Window.partitionBy("o_custkey")
-        .orderBy(asc("o_orderdate"), asc("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-                nth_value(col("o_orderkey"), 2).over(wful).as("second_ok"))
-        .orderBy(asc_nulls_last("o_custkey"), asc_nulls_last("o_orderkey"))
-    })
+      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin)
 
   def ops: Vector[Q] = Vector(e01, e02, e03, e04, e05, e06, e07, e08, e09)
 }

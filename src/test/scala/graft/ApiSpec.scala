@@ -757,6 +757,22 @@ class ApiSpec extends SparkSpec {
     assert(stray.isEmpty, "pin through graft.operators.Materialize:\n" + stray.mkString("\n"))
   }
 
+  test("Q.fromSql binds the fixture tables of each call's sfDir: CTEs and subqueries reached, unknown names rejected") {
+    import graft.engine.{ExtOps, Round9Ops, ScanOps, SqlBody, Tables}
+    assert(Seq(ScanOps.a01, Round9Ops.d32, ExtOps.b07).forall(_.fn.isInstanceOf[SqlBody]))
+    // one session, both scale factors: a binding that leaked across
+    // directories (a view, a cached plan) would miscount the second
+    for (d <- Seq(sf0001, sf001)) {
+      val nRows = ScanOps.a01.fn(spark, d).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      for (t <- Tables.names)
+        assert(nRows(t) == Tables.table(spark, d, t).count(), s"a01 $t @ $d")
+      for (q <- Seq(Round9Ops.d32, ExtOps.b07)) // CTE; correlated EXISTS
+        assert(q.fn(spark, d).collect().nonEmpty, s"${q.name} @ $d")
+    }
+    intercept[org.apache.spark.sql.AnalysisException](
+      SqlBody("SELECT COUNT(*) FROM orders JOIN no_such_table ON TRUE")(spark, sf0001))
+  }
+
   test("RangeJoin.binnedPointJoin ≡ brute-force range join on wide and empty intervals") {
     val sp = spark
     import sp.implicits._

@@ -1,9 +1,11 @@
 package graft
 
+import scala.util.Try
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import graft.engine.{ExtOps, JoinOps}
+import graft.engine.{ExtOps, JoinOps, SqlBody}
 
 /** Physical-plan regression guards for the round-3 plan rewrites: the
   * correctness oracle can't see plan shape, so the scale properties the
@@ -93,11 +95,33 @@ class PlanShapeSpec extends SparkSpec {
                                     // the oracle-gated exact regime whose
                                     // 100 TB path is k43's IVF shortlist;
                                     // argmax partials keep it shuffle-free)
-    val offenders = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val df = fn(spark, sf0001)
+    // The same loop guards Q.fromSql: a hand-written body whose text Spark
+    // binds to the same optimized plan, with the same join hints, is a
+    // second copy of that plan and must become Q.fromSql. The bodies below
+    // are kept on purpose: each is the declared-query face of library code,
+    // which the oracle gates through it at fixture scale.
+    val libraryFaces = Map(
+      "e08_win_topk_group"   -> "api.Windows.topKPerGroup",
+      "i01_inc_scan"         -> "api.Replication.incrementalSlice",
+      "i02_cdc_latest"       -> "api.Replication.latestPerKey",
+      "i03_cdc_tombstone"    -> "api.Replication.latestPerKey",
+      "i06_partition_stats"  -> "api.Replication.partitionStats",
+      "j08_sequence_count"   -> "operators.SequenceMatch.countChains",
+      "k01_dedup_exact_text" -> "api.Dedup.exactByDigest")
+    def joinHints(p: LogicalPlan) =
+      p.collectWithSubqueries { case j: Join => j.hint }.groupBy(identity).view.mapValues(_.size).toMap
+    val redundant = Seq.newBuilder[String]
+    val offenders = graft.SparkEntry.all.sortBy(_.name).flatMap { q =>
+        val name = q.name
+        val df = q.fn(spark, sf0001)
         df.collect()
         val p = df.queryExecution.executedPlan.toString
+        if (!q.fn.isInstanceOf[SqlBody]) {
+          val hand = df.queryExecution.optimizedPlan
+          val same = Try(SqlBody(q.sql)(spark, sf0001).queryExecution.optimizedPlan).toOption
+            .exists(b => b.sameResult(hand) && joinHints(b) == joinHints(hand))
+          if (same != libraryFaces.contains(name)) redundant += name
+        }
         val bad =
           (if (p.contains("BroadcastNestedLoopJoin") && !allowedBnlj(name))
              Seq(s"$name: BroadcastNestedLoopJoin") else Nil) ++
@@ -108,6 +132,9 @@ class PlanShapeSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"unintended join shapes (add to the whitelist ONLY with a tiny-build " +
         s"justification): ${offenders.mkString("; ")}")
+    assert(redundant.result().isEmpty,
+      s"hand body plans exactly as its SQL (declare it Q.fromSql), or a " +
+        s"library face no longer does: ${redundant.result().mkString("; ")}")
   }
 
   test("c11 as-of: no join anywhere in the physical plan") {
