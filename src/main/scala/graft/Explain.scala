@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-review diagnostic: prints `explain("formatted")` for the named
   * queries (or a default set of plan-shape-critical ones) against sf0.001.
   *

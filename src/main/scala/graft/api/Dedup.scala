@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generic deduplication operators for training-data pipelines, over

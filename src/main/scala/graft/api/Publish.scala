@@ -72,7 +72,7 @@ object Publish {
   def splitBalance(splitCol: String, expected: Map[String, Double],
                    tol: Double): DataFrame => Option[String] =
     df => {
-      import org.apache.spark.sql.functions.{col, count, lit, sum}
+      import org.apache.spark.sql.functions.{col, count, lit}
       val counts = df.groupBy(col(splitCol).cast("string").as("__s"))
         .agg(count(lit(1)).as("__n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

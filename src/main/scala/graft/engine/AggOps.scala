@@ -175,7 +175,7 @@ object AggOps {
     * Same two-phase HashAggregate shape as d05 — the Expand operator tags
     * each grouping set, so the indicators are free metadata, not an extra
     * pass. */
-  val d23: Q = Q(
+  val d23: Q = Q.fromSql(
     "d23_grouping_id",
     """SELECT l_returnflag, l_linestatus,
       |  CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
@@ -183,16 +183,7 @@ object AggOps {
       |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INT) AS gid,
       |  COUNT(*) AS n
       |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      |ORDER BY gid ASC, l_returnflag ASC NULLS LAST, l_linestatus ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(grouping(col("l_returnflag")).cast("int").as("g_rf"),
-             grouping(col("l_linestatus")).cast("int").as("g_ls"),
-             grouping_id().cast("int").as("gid"),
-             count(lit(1)).as("n"))
-        .orderBy(asc("gid"), asc_nulls_last("l_returnflag"),
-                 asc_nulls_last("l_linestatus")))
+      |ORDER BY gid ASC, l_returnflag ASC NULLS LAST, l_linestatus ASC NULLS LAST""".stripMargin)
 
   /** d24 — the `-If` combinator family beyond d18's countIf (`sumIf` /
     * `avgIf` / `minIf` / `argMaxIf` analogs [public: CH combinator docs]):

@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2.1 block I — ETL / CDC / replication semantics.

@@ -105,22 +105,8 @@ object ExtOps {
       |FROM runs GROUP BY user_id
       |ORDER BY user_id ASC NULLS LAST""".stripMargin,
     (s, dir) => {
-      val ev = Tables.events(s, dir)
-      requireRunDepth(ev)
-      ev.createOrReplaceTempView("events")
-      s.sql(
-        """WITH RECURSIVE runs AS (
-          |  SELECT user_id, event_id AS head, event_id AS tail, 1 AS len
-          |  FROM events e
-          |  WHERE NOT EXISTS (SELECT 1 FROM events p
-          |                    WHERE p.user_id = e.user_id AND p.event_id = e.event_id - 1)
-          |  UNION ALL
-          |  SELECT r.user_id, r.head, n.event_id, r.len + 1
-          |  FROM runs r JOIN events n
-          |    ON n.user_id = r.user_id AND n.event_id = r.tail + 1)
-          |SELECT user_id, CAST(MAX(len) AS INT) AS max_run, COUNT(*) AS n_segments
-          |FROM runs GROUP BY user_id
-          |ORDER BY user_id ASC NULLS LAST""".stripMargin)
+      requireRunDepth(Tables.events(s, dir))
+      SqlBody(b09.sql)(s, dir)
     })
 
   /** d19 — unpivot/melt: three lineitem measures to long form. Measure
@@ -368,7 +354,7 @@ object ExtOps {
   /** i07 — snapshot diff: two simulated snapshots of `orders` full-outer
     * joined on the key, rows classified added/deleted/changed/same. The
     * 100 TB shape: co-partitioned sort-merge join on the primary key. */
-  val i07: Q = Q(
+  val i07: Q = Q.fromSql(
     "i07_snapshot_diff",
     """WITH a AS (SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 3 <> 0),
       |b AS (SELECT o_orderkey,
@@ -381,24 +367,7 @@ object ExtOps {
       |            ELSE 'same' END AS op,
       |       COUNT(*) AS n
       |FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey
-      |GROUP BY op ORDER BY op ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val o = Tables.orders(s, dir)
-      val a = o.filter(col("o_orderkey") % 3 =!= 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val b = o.filter(col("o_orderkey") % 5 =!= 1)
-        .select(col("o_orderkey"),
-                when(col("o_orderstatus") === "O", col("o_totalprice") * 1.1)
-                  .otherwise(col("o_totalprice")).as("o_totalprice"))
-      a.as("a").join(b.as("b"), col("a.o_orderkey") === col("b.o_orderkey"), "full_outer")
-        .select(
-          when(col("a.o_orderkey").isNull, "added")
-            .when(col("b.o_orderkey").isNull, "deleted")
-            .when(col("a.o_totalprice") =!= col("b.o_totalprice"), "changed")
-            .otherwise("same").as("op"))
-        .groupBy("op").agg(count(lit(1)).as("n"))
-        .orderBy(asc_nulls_last("op"))
-    })
+      |GROUP BY op ORDER BY op ASC NULLS LAST""".stripMargin)
 
   /** j04 — gap-filled hourly counts: generated hour dimension LEFT JOIN
     * pre-aggregated buckets (fact side reduced before the join; the tiny

@@ -1,7 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.functions._
-
 /** SURVEY §2.1 block B — projection / filter / predicates.
   *
   * All predicates stay declarative `Column` expressions so Catalyst can fold
@@ -44,7 +42,7 @@ object FilterOps {
       |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** b04 — CASE WHEN banding of o_totalprice with per-band counts. */
-  val b04: Q = Q(
+  val b04: Q = Q.fromSql(
     "b04_case_when",
     s"""SELECT
        |  CASE WHEN o_totalprice < 50000 THEN 'low'
@@ -54,17 +52,7 @@ object FilterOps {
        |  ${Determinism.dsumSql("o_totalprice")} AS total
        |FROM orders
        |GROUP BY 1
-       |ORDER BY band ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.orders(s, dir)
-        .select(
-          when(col("o_totalprice") < 50000, "low")
-            .when(col("o_totalprice") < 150000, "mid")
-            .otherwise("high").as("band"),
-          col("o_totalprice"))
-        .groupBy("band")
-        .agg(count(lit(1)).as("n"), Determinism.dsum(col("o_totalprice")).as("total"))
-        .orderBy(asc_nulls_last("band")))
+       |ORDER BY band ASC NULLS LAST""".stripMargin)
 
   /** b05 — uncorrelated scalar subquery in a predicate: orders priced above
     * 1.5× the mean (threshold via exact decimal sum so both engines filter

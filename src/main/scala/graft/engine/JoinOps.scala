@@ -73,32 +73,20 @@ object JoinOps {
       |ORDER BY nationkey ASC NULLS LAST""".stripMargin)
 
   /** c06 — left semi (EXISTS): customers with ≥1 URGENT order. */
-  val c06: Q = Q(
+  val c06: Q = Q.fromSql(
     "c06_join_semi",
     """SELECT c_custkey, c_name FROM customer
       |WHERE EXISTS (SELECT 1 FROM orders
       |              WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT"),
-              col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy(asc_nulls_last("c_custkey")))
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** c07 — left anti (NOT EXISTS): customers with no 'P'-status order. */
-  val c07: Q = Q(
+  val c07: Q = Q.fromSql(
     "c07_join_anti",
     """SELECT c_custkey, c_name FROM customer
       |WHERE NOT EXISTS (SELECT 1 FROM orders
       |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin,
-    (s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_orderstatus") === "P"),
-              col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy(asc_nulls_last("c_custkey")))
+      |ORDER BY c_custkey ASC NULLS LAST""".stripMargin)
 
   /** c08 — cross join: region × distinct part type grid with type counts. */
   val c08: Q = Q.fromSql(
@@ -251,23 +239,13 @@ object JoinOps {
     })
 
   /** c12 — self-join on a sequential key: consecutive-event pairs per user. */
-  val c12: Q = Q(
+  val c12: Q = Q.fromSql(
     "c12_join_self_seq",
     """SELECT e1.event_id AS id1, e2.event_id AS id2, e1.user_id,
       |  e1.event_type AS type1, e2.event_type AS type2
       |FROM events e1 JOIN events e2
       |  ON e2.event_id = e1.event_id + 1 AND e1.user_id = e2.user_id
-      |ORDER BY id1 ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val e = Tables.events(s, dir)
-      val e1 = e.select(col("event_id").as("id1"), col("user_id"),
-                        col("event_type").as("type1"))
-      val e2 = e.select(col("event_id").as("id2"), col("user_id").as("uid2"),
-                        col("event_type").as("type2"))
-      e1.join(e2, col("id2") === col("id1") + 1 && col("user_id") === col("uid2"))
-        .select("id1", "id2", "user_id", "type1", "type2")
-        .orderBy(asc_nulls_last("id1"))
-    })
+      |ORDER BY id1 ASC NULLS LAST""".stripMargin)
 
   /** c17 — TPC-H Q3 shape: top-10 open orders by pending revenue for one
     * market segment — the classic filter→3-way-join→agg→top-k composite.

@@ -16,13 +16,16 @@ import org.apache.spark.sql.graftbridge.Bridge
   *               by name). It is either bound from `sql` itself
   *               ([[Q.fromSql]]: Spark runs the oracle text) or hand-written.
   *               A body stays hand-written only when Spark cannot run the
-  *               text, when the text plans differently from the body, when
-  *               the body carries a join hint the text lacks, or when the
-  *               body is the declared-query face of library code (an
-  *               `api`/`operators` call the oracle gates at fixture scale).
-  *               PlanShapeSpec's full-surface sweep fails by name on a
-  *               hand-written body that Spark would plan identically from
-  *               its text.
+  *               text, when the text's physical plan differs from the
+  *               body's in shape (its exchanges, joins, windows, sorts and
+  *               aggregates) or in the rows an exchange carries, when the
+  *               body carries a join hint the text lacks, or when the body
+  *               is the declared-query face of library code (an
+  *               `api`/`operators` call the oracle gates at fixture scale),
+  *               of a Spark expression, of a Scala UDF or of a guard that
+  *               runs before the plan. PlanShapeSpec's full-surface sweep fails
+  *               by name on a hand-written body that Spark would plan
+  *               identically from its text.
   */
 final case class Q(name: String, sql: String, fn: (SparkSession, String) => DataFrame)
 

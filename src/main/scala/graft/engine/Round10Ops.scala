@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-10 extension block: the last members of the statistical-test
@@ -47,7 +46,7 @@ object Round10Ops {
     * statistic are one fixed IEEE tree each, shared textually between
     * dialects; dof = n1 + n2 − 2 is pure int64. One conditional
     * map-combined hash agg, single-row output. */
-  val d40: Q = Q(
+  val d40: Q = Q.fromSql(
     "d40_student_ttest",
     s"""WITH s AS (
       |  SELECT
@@ -63,24 +62,7 @@ object Round10Ops {
       |v AS (SELECT *, $vpE AS vp FROM s)
       |SELECT n1 AS n_purchase, n2 AS n_click, n1 + n2 - 2 AS dof,
       |  vp AS pooled_var, $tpE AS t_stat
-      |FROM v""".stripMargin,
-    (s, dir) => {
-      val c = (col("value").cast("decimal(18,2)") * 100).cast("long")
-      def side(t: String, e: org.apache.spark.sql.Column) =
-        sum(when(col("event_type") === t, e).otherwise(0L))
-      Tables.events(s, dir)
-        .where(col("event_type").isin("purchase", "click"))
-        .agg(side("purchase", lit(1L)).cast("long").as("n1"),
-             side("purchase", c).cast("long").as("s1"),
-             side("purchase", c * c).cast("long").as("q1"),
-             side("click", lit(1L)).cast("long").as("n2"),
-             side("click", c).cast("long").as("s2"),
-             side("click", c * c).cast("long").as("q2"))
-        .withColumn("vp", expr(vpE))
-        .select(col("n1").as("n_purchase"), col("n2").as("n_click"),
-                (col("n1") + col("n2") - 2).as("dof"),
-                col("vp").as("pooled_var"), expr(tpE).as("t_stat"))
-    })
+      |FROM v""".stripMargin)
 
   // ---------------------------------------------------------------- d41
 
@@ -102,7 +84,7 @@ object Round10Ops {
     * are fixed IEEE trees over the 9 bit-identical doubles, with k = 3
     * constant-folded into the text. Single-row output; the closed forms
     * never see data-sized input. */
-  val d41: Q = Q(
+  val d41: Q = Q.fromSql(
     "d41_anova_f",
     s"""WITH t AS (
       |  SELECT
@@ -120,26 +102,7 @@ object Round10Ops {
       |SELECT CAST(na + nn + nr AS BIGINT) AS n_rows, 2 AS df_between,
       |  CAST(na + nn + nr AS BIGINT) - 3 AS df_within,
       |  ssb AS ss_between, ssw AS ss_within, $fE AS f_stat
-      |FROM x""".stripMargin,
-    (s, dir) => {
-      val q = col("l_quantity").cast("long")
-      def cell(rf: String, e: org.apache.spark.sql.Column) =
-        sum(when(col("l_returnflag") === rf, e).otherwise(0L)).cast("double")
-      Tables.lineitem(s, dir)
-        .agg(cell("A", lit(1L)).as("na"), cell("A", q).as("sa"),
-             cell("A", q * q).as("qa"),
-             cell("N", lit(1L)).as("nn"), cell("N", q).as("sn"),
-             cell("N", q * q).as("qn"),
-             cell("R", lit(1L)).as("nr"), cell("R", q).as("sr"),
-             cell("R", q * q).as("qr"))
-        .withColumn("ssb", expr(ssbE))
-        .withColumn("ssw", expr(sswE))
-        .select(expr("CAST(na + nn + nr AS BIGINT)").as("n_rows"),
-                lit(2).as("df_between"),
-                expr("CAST(na + nn + nr AS BIGINT) - 3").as("df_within"),
-                col("ssb").as("ss_between"), col("ssw").as("ss_within"),
-                expr(fE).as("f_stat"))
-    })
+      |FROM x""".stripMargin)
 
   // ---------------------------------------------------------------- d42
 
@@ -154,7 +117,7 @@ object Round10Ops {
     * scale, so the unpartitioned cumulative window is constant-size work
     * (object scaladoc; unbounded-domain scores route through
     * [[graft.operators.DistributedRank]] instead). */
-  val d42: Q = Q(
+  val d42: Q = Q.fromSql(
     "d42_roc_auc",
     """WITH g AS (
       |  SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c,
@@ -174,33 +137,7 @@ object Round10Ops {
       |SELECT npos AS n_pos, nneg AS n_neg, u2 AS u2_pos,
       |  CAST(u2 AS DOUBLE) / CAST(2 * npos * nneg AS DOUBLE) AS roc_auc,
       |  CAST(u2 - npos * nneg AS DOUBLE) / CAST(npos * nneg AS DOUBLE) AS gini
-      |FROM u""".stripMargin,
-    (s, dir) => {
-      val w = Window.orderBy(asc("c"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      Tables.events(s, dir)
-        .where(col("event_type").isin("purchase", "click"))
-        .groupBy((col("value").cast("decimal(18,2)") * 100)
-                   .cast("long").as("c"))
-        .agg(sum(when(col("event_type") === "purchase", 1).otherwise(0))
-               .cast("long").as("np"),
-             sum(when(col("event_type") === "click", 1).otherwise(0))
-               .cast("long").as("nn"))
-        .withColumn("ct", col("np") + col("nn"))
-        .withColumn("cumlt", coalesce(sum(col("ct")).over(w), lit(0L))
-                               .cast("long"))
-        .agg(sum("np").cast("long").as("npos"),
-             sum("nn").cast("long").as("nneg"),
-             sum(col("np") * (lit(2) * col("cumlt") + col("ct") + 1))
-               .cast("long").as("drp"))
-        .withColumn("u2", col("drp") - col("npos") * (col("npos") + 1))
-        .select(col("npos").as("n_pos"), col("nneg").as("n_neg"),
-                col("u2").as("u2_pos"),
-                expr("CAST(u2 AS DOUBLE) / CAST(2 * npos * nneg AS DOUBLE)")
-                  .as("roc_auc"),
-                expr("CAST(u2 - npos * nneg AS DOUBLE) / CAST(npos * nneg AS DOUBLE)")
-                  .as("gini"))
-    })
+      |FROM u""".stripMargin)
 
   // ---------------------------------------------------------------- h33
 
@@ -302,7 +239,7 @@ object Round10Ops {
     * d36 (Welch) and d40 (pooled t): only counts and Σcents are needed —
     * the lightest member, two int64 cells per side, one IEEE tree. One
     * conditional map-combined hash agg, single-row output. */
-  val d43: Q = Q(
+  val d43: Q = Q.fromSql(
     "d43_mean_ztest",
     s"""WITH s AS (
       |  SELECT
@@ -314,20 +251,7 @@ object Round10Ops {
       |          CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
       |        FROM events WHERE event_type IN ('purchase', 'click')))
       |SELECT n1 AS n_purchase, n2 AS n_click, $zE AS z_stat
-      |FROM s""".stripMargin,
-    (s, dir) => {
-      val c = (col("value").cast("decimal(18,2)") * 100).cast("long")
-      def side(t: String, e: org.apache.spark.sql.Column) =
-        sum(when(col("event_type") === t, e).otherwise(0L))
-      Tables.events(s, dir)
-        .where(col("event_type").isin("purchase", "click"))
-        .agg(side("purchase", lit(1L)).cast("long").as("n1"),
-             side("purchase", c).cast("long").as("s1"),
-             side("click", lit(1L)).cast("long").as("n2"),
-             side("click", c).cast("long").as("s2"))
-        .select(col("n1").as("n_purchase"), col("n2").as("n_click"),
-                expr(zE).as("z_stat"))
-    })
+      |FROM s""".stripMargin)
 
   // ---------------------------------------------------------------- h34
 

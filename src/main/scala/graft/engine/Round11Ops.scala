@@ -800,11 +800,7 @@ object Round11Ops {
       |  $maskListE AS mask_list
       |FROM (SELECT o_orderkey, o_orderkey AS x FROM orders)
       |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val sql = Round11Ops.h40.sql.replace("//", "div")
-      Tables.orders(s, dir).createOrReplaceTempView("orders")
-      s.sql(sql)
-    })
+    (s, dir) => SqlBody(h40.sql.replace("//", "div"))(s, dir))
 
   // ---------------------------------------------------------------- d50
 

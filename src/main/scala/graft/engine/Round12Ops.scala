@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -374,7 +373,7 @@ object Round12Ops {
     * by the ordered per-user window — two exchanges ((user,type) then
     * user), each a plain hash partition, per-key window state one long.
     * All integer. */
-  val e25: Q = Q(
+  val e25: Q = Q.fromSql(
     "e25_running_distinct",
     """SELECT user_id, event_id, run_uniq_types FROM (
       |  SELECT user_id, event_id, ts,
@@ -386,21 +385,7 @@ object Round12Ops {
       |          ROW_NUMBER() OVER (PARTITION BY user_id, event_type
       |                             ORDER BY ts ASC NULLS LAST, event_id ASC NULLS LAST) AS rn
       |        FROM events WHERE user_id % 7 = 0))
-      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val wFirst = Window.partitionBy("user_id", "event_type")
-        .orderBy(asc_nulls_last("ts"), asc_nulls_last("event_id"))
-      val wCum = Window.partitionBy("user_id")
-        .orderBy(asc_nulls_last("ts"), asc_nulls_last("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir)
-        .where(col("user_id") % 7 === 0)
-        .withColumn("rn", row_number().over(wFirst))
-        .withColumn("run_uniq_types",
-          sum(when(col("rn") === 1, 1).otherwise(0)).over(wCum).cast("long"))
-        .select("user_id", "event_id", "run_uniq_types")
-        .orderBy(asc_nulls_last("user_id"), asc_nulls_last("event_id"))
-    })
+      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- k39
 
@@ -476,7 +461,7 @@ object Round12Ops {
     * plan-pinned shape, here on the row-preserving form CH users write
     * daily). (ts DESC, event_id DESC) is a total order, so both engines
     * keep identical rows; all integer/string. */
-  val f05: Q = Q(
+  val f05: Q = Q.fromSql(
     "f05_limit_by",
     """SELECT user_id, event_id, event_type,
       |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -486,19 +471,7 @@ object Round12Ops {
       |      ORDER BY ts DESC, event_id DESC) AS rn
       |  FROM events WHERE user_id % 7 = 0)
       |WHERE rn <= 2
-      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(desc("ts"), desc("event_id"))
-      Tables.events(s, dir)
-        .where(col("user_id") % 7 === 0)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-                (col("value").cast("decimal(18,2)") * 100).cast("long")
-                  .as("cents"))
-        .orderBy(asc_nulls_last("user_id"), asc_nulls_last("event_id"))
-    })
+      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- h43
 

@@ -255,7 +255,7 @@ object Round13Ops {
     * WindowGroupLimit shape (the rank filter's upper bound still prunes
     * to per-partition top-(n+m) candidates before the exchange). Same
     * (ts, event_id) DESC total order ⇒ identical rows both engines. */
-  val f06: Q = Q(
+  val f06: Q = Q.fromSql(
     "f06_limit_offset_by",
     """SELECT user_id, event_id, event_type,
       |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -265,19 +265,7 @@ object Round13Ops {
       |      ORDER BY ts DESC, event_id DESC) AS rn
       |  FROM events WHERE user_id % 7 = 0)
       |WHERE rn > 1 AND rn <= 3
-      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(desc("ts"), desc("event_id"))
-      Tables.events(s, dir)
-        .where(col("user_id") % 7 === 0)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") > 1 && col("rn") <= 3)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-                (col("value").cast("decimal(18,2)") * 100).cast("long")
-                  .as("cents"))
-        .orderBy(asc_nulls_last("user_id"), asc_nulls_last("event_id"))
-    })
+      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- d54
 
@@ -306,8 +294,6 @@ object Round13Ops {
       |GROUP BY event_type
       |ORDER BY event_type ASC NULLS LAST""".stripMargin,
     (s, dir) => {
-      val w = Window.partitionBy("event_type")
-        .orderBy(desc("ts"), desc("event_id"))
       Tables.events(s, dir)
         .select(col("event_type"), col("event_id"),
                 unix_micros(col("ts")).as("tus"),

@@ -386,7 +386,7 @@ object Round14Ops {
     * the any-found flag. Map-only; the 0→sentinel→NULLIF route keeps
     * `LEAST` total on both engines (mixed NULL handling in LEAST is a
     * known cross-engine divergence — never fed one). */
-  val h52: Q = Q(
+  val h52: Q = Q.fromSql(
     "h52_multi_search",
     """SELECT doc_id,
       |  CAST(instr(text, 'spark') AS INT) AS p_spark,
@@ -404,23 +404,7 @@ object Round14Ops {
       |                 + instr(text, 'window') > 0
       |            THEN 1 ELSE 0 END AS INT) AS any_found
       |FROM documents
-      |ORDER BY doc_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      def p(needle: String) = instr(col("text"), needle).cast("int")
-      def sent(c: org.apache.spark.sql.Column) =
-        when(c === 0, lit(2147483647)).otherwise(c)
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-                p("spark").as("p_spark"), p("hash").as("p_hash"),
-                p("window").as("p_window"))
-        .select(col("doc_id"), col("p_spark"), col("p_hash"), col("p_window"),
-                nullif(least(sent(col("p_spark")), sent(col("p_hash")),
-                             sent(col("p_window"))), lit(2147483647))
-                  .cast("int").as("first_pos"),
-                when(col("p_spark") + col("p_hash") + col("p_window") > 0, 1)
-                  .otherwise(0).cast("int").as("any_found"))
-        .orderBy(asc_nulls_last("doc_id"))
-    })
+      |ORDER BY doc_id ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- j20
 

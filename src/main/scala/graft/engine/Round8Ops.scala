@@ -193,7 +193,7 @@ object Round8Ops {
     * them into one Window operator over one exchange+sort; the filter then
     * keeps one row per signed-up user. NULL next_type = signup was the
     * user's last event (both engines: LEAD beyond the frame is NULL). */
-  val j09: Q = Q(
+  val j09: Q = Q.fromSql(
     "j09_sequence_next_node",
     """SELECT user_id, next_type
       |FROM (SELECT user_id, event_type,
@@ -203,20 +203,7 @@ object Round8Ops {
       |      FROM events
       |      WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC))
       |WHERE event_type = 'signup' AND rn = 1
-      |ORDER BY user_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-      val wSignup = Window
-        .partitionBy(col("user_id"), col("event_type") === "signup")
-        .orderBy(asc("ts"), asc("event_id"))
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .withColumn("rn", row_number().over(wSignup))
-        .filter(col("event_type") === "signup" && col("rn") === 1)
-        .select(col("user_id"), col("next_type"))
-        .orderBy(asc_nulls_last("user_id"))
-    })
+      |ORDER BY user_id ASC NULLS LAST""".stripMargin)
 
   /** e15 — `deltaSum` analog [public: CH aggregate-function docs]: per
     * user, the sum of POSITIVE step-to-step increases of `value` in event

@@ -90,7 +90,7 @@ object Round8bOps {
     * exact integer cents via the decimal route; the output stays BIGINT
     * cents (zero float). Restricted to users ≡ 0 (mod 7) to keep the
     * declared output row count in family norms. */
-  val e17: Q = Q(
+  val e17: Q = Q.fromSql(
     "e17_moving_sum",
     """SELECT user_id, event_id,
       |  CAST(SUM(cents) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
@@ -102,19 +102,7 @@ object Round8bOps {
       |FROM (SELECT user_id, event_id, ts,
       |        CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
       |      FROM events WHERE user_id % 7 = 0)
-      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-        .rowsBetween(-2, Window.currentRow)
-      Tables.events(s, dir)
-        .where(col("user_id") % 7 === 0)
-        .select(col("user_id"), col("event_id"), col("ts"),
-                (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-        .withColumn("mov_sum3_cents", sum(col("cents")).over(w).cast("long"))
-        .withColumn("mov_n", count(lit(1)).over(w).cast("int"))
-        .select("user_id", "event_id", "mov_sum3_cents", "mov_n")
-        .orderBy(asc_nulls_last("user_id"), asc_nulls_last("event_id"))
-    })
+      |ORDER BY user_id ASC NULLS LAST, event_id ASC NULLS LAST""".stripMargin)
 
   /** d27 — bounding slope (ClickHouse `boundingRatio` analog [public: CH
     * aggregate-function docs]): per user, the slope between the first and

@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension block: the exact-moment family (skewness/kurtosis,
@@ -233,7 +232,7 @@ object Round9Ops {
     * u2_a/u2_r are the doubled U statistics (exact int64, u2_a + u2_r =
     * 2·n_a·n_r — asserted by the oracle identity), and the common-language
     * effect size is ONE float division of bit-identical ints. */
-  val d35: Q = Q(
+  val d35: Q = Q.fromSql(
     "d35_mann_whitney_u",
     """WITH g AS (
       |  SELECT l_linestatus, CAST(l_quantity AS BIGINT) AS q,
@@ -254,29 +253,7 @@ object Round9Ops {
       |  dra - na * (na + 1) AS u2_a,
       |  2 * na * nr - (dra - na * (na + 1)) AS u2_r,
       |  CAST(dra - na * (na + 1) AS DOUBLE) / CAST(2 * na * nr AS DOUBLE) AS cles_a
-      |FROM a ORDER BY l_linestatus ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val w = Window.partitionBy("l_linestatus").orderBy(asc("q"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      Tables.lineitem(s, dir)
-        .where(col("l_returnflag").isin("A", "R"))
-        .groupBy(col("l_linestatus"), col("l_quantity").cast("long").as("q"))
-        .agg(sum(when(col("l_returnflag") === "A", 1).otherwise(0)).as("ca"),
-             sum(when(col("l_returnflag") === "R", 1).otherwise(0)).as("cr"))
-        .withColumn("ct", col("ca") + col("cr"))
-        .withColumn("cumlt", coalesce(sum(col("ct")).over(w), lit(0L)))
-        .groupBy("l_linestatus")
-        .agg(sum("ca").cast("long").as("na"), sum("cr").cast("long").as("nr"),
-             sum(col("ca") * (lit(2) * col("cumlt") + col("ct") + 1))
-               .cast("long").as("dra"))
-        .select(col("l_linestatus"), col("na").as("n_a"), col("nr").as("n_r"),
-                (col("dra") - col("na") * (col("na") + 1)).as("u2_a"),
-                (lit(2) * col("na") * col("nr")
-                   - (col("dra") - col("na") * (col("na") + 1))).as("u2_r"),
-                ((col("dra") - col("na") * (col("na") + 1)).cast("double") /
-                   (lit(2) * col("na") * col("nr")).cast("double")).as("cles_a"))
-        .orderBy(asc_nulls_last("l_linestatus"))
-    })
+      |FROM a ORDER BY l_linestatus ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- d36
 
@@ -296,7 +273,7 @@ object Round9Ops {
     * and the Welch–Satterthwaite dof are ONE fixed IEEE tree each (÷ × −
     * sqrt, shared textually between dialects). One conditional hash agg,
     * single-row output — map-combined at any scale. */
-  val d36: Q = Q(
+  val d36: Q = Q.fromSql(
     "d36_welch_ttest",
     s"""WITH s AS (
       |  SELECT
@@ -312,24 +289,7 @@ object Round9Ops {
       |v AS (SELECT *, $v1E AS v1, $v2E AS v2 FROM s)
       |SELECT n1 AS n_purchase, n2 AS n_click,
       |  $tE AS t_stat, $dofE AS welch_dof
-      |FROM v""".stripMargin,
-    (s, dir) => {
-      val c = (col("value").cast("decimal(18,2)") * 100).cast("long")
-      def side(t: String, e: org.apache.spark.sql.Column) =
-        sum(when(col("event_type") === t, e).otherwise(0L))
-      Tables.events(s, dir)
-        .where(col("event_type").isin("purchase", "click"))
-        .agg(side("purchase", lit(1L)).cast("long").as("n1"),
-             side("purchase", c).cast("long").as("s1"),
-             side("purchase", c * c).cast("long").as("q1"),
-             side("click", lit(1L)).cast("long").as("n2"),
-             side("click", c).cast("long").as("s2"),
-             side("click", c * c).cast("long").as("q2"))
-        .withColumn("v1", expr(v1E))
-        .withColumn("v2", expr(v2E))
-        .select(col("n1").as("n_purchase"), col("n2").as("n_click"),
-                expr(tE).as("t_stat"), expr(dofE).as("welch_dof"))
-    })
+      |FROM v""".stripMargin)
 
   // ---------------------------------------------------------------- d37
 
@@ -344,7 +304,7 @@ object Round9Ops {
     * ONE float division of bit-identical ints. Map-combined hash agg +
     * two cumulative windows over grid-sized data — fixed state at any
     * input scale, no data-sized sort. */
-  val d37: Q = Q(
+  val d37: Q = Q.fromSql(
     "d37_ks_test",
     """WITH g AS (
       |  SELECT l_linestatus, CAST(l_quantity AS BIGINT) AS q,
@@ -366,30 +326,7 @@ object Round9Ops {
       |  FROM c GROUP BY 1)
       |SELECT l_linestatus, na AS n_a, nr AS n_r, d_num,
       |  CAST(d_num AS DOUBLE) / CAST(na * nr AS DOUBLE) AS ks_d
-      |FROM a ORDER BY l_linestatus ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val wc = Window.partitionBy("l_linestatus").orderBy(asc("q"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wt = Window.partitionBy("l_linestatus")
-      Tables.lineitem(s, dir)
-        .where(col("l_returnflag").isin("A", "R"))
-        .groupBy(col("l_linestatus"), col("l_quantity").cast("long").as("q"))
-        .agg(sum(when(col("l_returnflag") === "A", 1).otherwise(0)).as("ca"),
-             sum(when(col("l_returnflag") === "R", 1).otherwise(0)).as("cr"))
-        .withColumn("cuma", sum("ca").over(wc).cast("long"))
-        .withColumn("cumr", sum("cr").over(wc).cast("long"))
-        .withColumn("na", sum("ca").over(wt).cast("long"))
-        .withColumn("nr", sum("cr").over(wt).cast("long"))
-        .groupBy("l_linestatus")
-        .agg(max("na").as("na"), max("nr").as("nr"),
-             max(abs(col("cuma") * col("nr") - col("cumr") * col("na")))
-               .as("d_num"))
-        .select(col("l_linestatus"), col("na").as("n_a"), col("nr").as("n_r"),
-                col("d_num"),
-                (col("d_num").cast("double") /
-                   (col("na") * col("nr")).cast("double")).as("ks_d"))
-        .orderBy(asc_nulls_last("l_linestatus"))
-    })
+      |FROM a ORDER BY l_linestatus ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- d39
 
@@ -408,7 +345,7 @@ object Round9Ops {
     * per-linestatus (the fixture shape: 2 groups); at real scale the
     * standard 2-pass distributed rank (range-bucket counts → per-bucket
     * offsets) replaces the window, same integers out. */
-  val d39: Q = Q(
+  val d39: Q = Q.fromSql(
     "d39_rank_corr",
     """WITH src AS (
       |  SELECT l_linestatus, CAST(l_quantity AS BIGINT) AS q,
@@ -433,33 +370,7 @@ object Round9Ops {
       |SELECT l_linestatus, n AS n_rows,
       |  CAST(sxy AS DOUBLE) / (SQRT(CAST(sxx AS DOUBLE)) * SQRT(CAST(syy AS DOUBLE)))
       |    AS spearman_rho
-      |FROM a ORDER BY l_linestatus ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val wq = Window.partitionBy("l_linestatus").orderBy(asc("q"))
-      val wp = Window.partitionBy("l_linestatus").orderBy(asc("p"))
-      val tq = Window.partitionBy("l_linestatus", "q")
-      val tp = Window.partitionBy("l_linestatus", "p")
-      val wn = Window.partitionBy("l_linestatus")
-      Tables.lineitem(s, dir)
-        .select(col("l_linestatus"), col("l_quantity").cast("long").as("q"),
-                (col("l_extendedprice").cast("decimal(18,2)") * 100)
-                  .cast("long").as("p"))
-        .withColumn("dx", lit(2) * rank().over(wq) + count(lit(1)).over(tq) - 1)
-        .withColumn("dy", lit(2) * rank().over(wp) + count(lit(1)).over(tp) - 1)
-        .withColumn("n", count(lit(1)).over(wn))
-        .select(col("l_linestatus"),
-                (col("dx") - (col("n") + 1)).as("ux"),
-                (col("dy") - (col("n") + 1)).as("uy"))
-        .groupBy("l_linestatus")
-        .agg(count(lit(1)).cast("long").as("n"),
-             sum(col("ux") * col("uy")).cast("long").as("sxy"),
-             sum(col("ux") * col("ux")).cast("long").as("sxx"),
-             sum(col("uy") * col("uy")).cast("long").as("syy"))
-        .select(col("l_linestatus"), col("n").as("n_rows"),
-                expr("CAST(sxy AS DOUBLE) / (SQRT(CAST(sxx AS DOUBLE)) * SQRT(CAST(syy AS DOUBLE)))")
-                  .as("spearman_rho"))
-        .orderBy(asc_nulls_last("l_linestatus"))
-    })
+      |FROM a ORDER BY l_linestatus ASC NULLS LAST""".stripMargin)
 
   // ---------------------------------------------------------------- j11
 

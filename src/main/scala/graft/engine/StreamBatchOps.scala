@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Determinism._
 
@@ -121,7 +120,7 @@ object StreamBatchOps {
     * there ANY activity in weeks 0/1/2 after the first signup; aggregated
     * to cohort counts. One per-user window min + one conditional agg —
     * one shuffle. */
-  val j06: Q = Q(
+  val j06: Q = Q.fromSql(
     "j06_retention",
     """WITH w AS (
       |  SELECT user_id, ts,
@@ -141,23 +140,7 @@ object StreamBatchOps {
       |  CAST(SUM(w0) AS BIGINT) AS wk0,
       |  CAST(SUM(w1) AS BIGINT) AS wk1,
       |  CAST(SUM(w2) AS BIGINT) AS wk2
-      |FROM u""".stripMargin,
-    (s, dir) => {
-      val wu = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-      def inWeek(k: Int) =
-        col("ts") >= col("l1") + expr(s"INTERVAL ${k * 7} DAY") &&
-        col("ts") < col("l1") + expr(s"INTERVAL ${(k + 1) * 7} DAY")
-      Tables.events(s, dir)
-        .withColumn("l1",
-          min(when(col("event_type") === "signup", col("ts"))).over(wu))
-        .filter(col("l1").isNotNull)
-        .groupBy("user_id")
-        .agg(max(when(inWeek(0), 1).otherwise(0)).as("w0"),
-             max(when(inWeek(1), 1).otherwise(0)).as("w1"),
-             max(when(inWeek(2), 1).otherwise(0)).as("w2"))
-        .agg(count(lit(1)).as("n_users"), sum(col("w0")).as("wk0"),
-             sum(col("w1")).as("wk1"), sum(col("w2")).as("wk2"))
-    })
+      |FROM u""".stripMargin)
 
   /** j07 — ClickHouse `sequenceMatch` analog [public: CH docs]: per-user
     * ordered event-pattern matching — the funnel-adjacent primitive j05's

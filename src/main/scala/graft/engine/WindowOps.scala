@@ -94,7 +94,7 @@ object WindowOps {
       |ORDER BY o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** e07 — first/last value with the full-partition frame. */
-  val e07: Q = Q(
+  val e07: Q = Q.fromSql(
     "e07_win_first_last",
     """SELECT o_custkey, o_orderkey,
       |  FIRST_VALUE(o_orderkey) OVER wful AS first_ok,
@@ -102,17 +102,7 @@ object WindowOps {
       |FROM orders
       |WINDOW wful AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
       |                ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin,
-    (s, dir) => {
-      val wful = Window.partitionBy("o_custkey")
-        .orderBy(asc("o_orderdate"), asc("o_orderkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-                first(col("o_orderkey")).over(wful).as("first_ok"),
-                last(col("o_orderkey")).over(wful).as("last_ok"))
-        .orderBy(asc_nulls_last("o_custkey"), asc_nulls_last("o_orderkey"))
-    })
+      |ORDER BY o_custkey ASC NULLS LAST, o_orderkey ASC NULLS LAST""".stripMargin)
 
   /** e08 — windowed top-k: top-3 orders per customer by price.
     * The rn ≤ 3 filter is pushed into WindowGroupLimitExec — per-partition

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.ml.feature.{CountVectorizer, MinHashLSH, RegexTokenizer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sub-quadratic near-dedup — the 100 TB path for k02/k08

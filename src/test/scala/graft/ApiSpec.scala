@@ -758,19 +758,25 @@ class ApiSpec extends SparkSpec {
   }
 
   test("Q.fromSql binds the fixture tables of each call's sfDir: CTEs and subqueries reached, unknown names rejected") {
-    import graft.engine.{ExtOps, Round9Ops, ScanOps, SqlBody, Tables}
+    import graft.engine.{ExtOps, Round11Ops, Round9Ops, ScanOps, SqlBody, Tables}
     assert(Seq(ScanOps.a01, Round9Ops.d32, ExtOps.b07).forall(_.fn.isInstanceOf[SqlBody]))
     // one session, both scale factors: a binding that leaked across
-    // directories (a view, a cached plan) would miscount the second
+    // directories (a view, a cached plan) would miscount the second. The
+    // session is fresh, so a temp view registered by any body shows up.
+    val fresh = spark.newSession()
+    def tempViews = fresh.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val viewsBefore = tempViews
     for (d <- Seq(sf0001, sf001)) {
-      val nRows = ScanOps.a01.fn(spark, d).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val nRows = ScanOps.a01.fn(fresh, d).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       for (t <- Tables.names)
-        assert(nRows(t) == Tables.table(spark, d, t).count(), s"a01 $t @ $d")
-      for (q <- Seq(Round9Ops.d32, ExtOps.b07)) // CTE; correlated EXISTS
-        assert(q.fn(spark, d).collect().nonEmpty, s"${q.name} @ $d")
+        assert(nRows(t) == Tables.table(fresh, d, t).count(), s"a01 $t @ $d")
+      // CTE; correlated EXISTS; guard + recursive CTE; rewritten text
+      for (q <- Seq(Round9Ops.d32, ExtOps.b07, ExtOps.b09, Round11Ops.h40))
+        assert(q.fn(fresh, d).collect().nonEmpty, s"${q.name} @ $d")
     }
+    assert(tempViews == viewsBefore, s"temp views registered: ${tempViews -- viewsBefore}")
     intercept[org.apache.spark.sql.AnalysisException](
-      SqlBody("SELECT COUNT(*) FROM orders JOIN no_such_table ON TRUE")(spark, sf0001))
+      SqlBody("SELECT COUNT(*) FROM orders JOIN no_such_table ON TRUE")(fresh, sf0001))
   }
 
   test("RangeJoin.binnedPointJoin ≡ brute-force range join on wide and empty intervals") {

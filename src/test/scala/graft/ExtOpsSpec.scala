@@ -162,7 +162,6 @@ class ExtOpsSpec extends SparkSpec {
   }
 
   test("h30 geohash expression matches a reference bisection encoder") {
-    import spark.implicits._
     val alpha = "0123456789bcdefghjkmnpqrstuvwxyz"
     // reference: the textbook FLOAT interval-bisection geohash (independent
     // of the production integer formula; the two can only disagree if a

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** GraftSession posture + GraftExtensions SQL registration (the SQL-string
   * face of the native expressions — the Column face is covered by the
   * Similarity/engine specs). */

@@ -46,8 +46,6 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compactFiles collapses small files, preserves rows and content, and is crash-honest") {
-    val sp = spark
-    import sp.implicits._
     implicit val s = spark
     val dir = java.nio.file.Files.createTempDirectory("compactf").toString + "/t"
     val df = spark.range(10000).select(col("id"), (col("id") % 97).as("k"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import graft.connectors.{CdcEvent, ClickHouseDdl, JdbcSourceConfig, Sinks}
 import org.apache.spark.sql.types._

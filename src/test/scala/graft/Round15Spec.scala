@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Adversarial edge pins for the round-15 declared queries — cases the
   * fixture cannot force, exercised on synthesized frames through the REAL
   * declared plans ([[graft.engine.Round15Ops.j21Plan]]/[[

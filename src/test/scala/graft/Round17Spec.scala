@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Adversarial edge pins for the round-17 declared queries — cases the
   * fixture cannot force, exercised on synthesized frames through the REAL
   * declared plan bodies ([[graft.engine.Round17Ops]] — the h46Plan

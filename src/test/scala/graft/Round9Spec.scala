@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Kmv, KmvBuf}
+import graft.operators.Kmv
 
 /** Pins for the round-9 surface: the exact-moment recipe (d32/d35 against
   * independent brute-force reference computations), the KMV sketch laws

@@ -2668,7 +2668,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming quality buckets one-batch replay equals batch k49 (cutoffs + buckets)") {
-    import graft.engine.{Round17Ops, Tables}
+    import graft.engine.Round17Ops
     import graft.streaming.StreamingQualityBuckets
     import graft.streaming.StreamingQualityBuckets.{BucketOut, ScoredDoc}
     val sp = spark
