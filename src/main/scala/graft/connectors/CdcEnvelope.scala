@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * `position` is the global binlog offset (total order), `op` ∈ c/u/d.
   * The collapse rules are exactly what CdcOps.i02/i03 prove against the
   * DuckDB oracle on the events fixture; here they are factored as typed,
-  * reusable functions so the streaming upsert (graft.streaming.StreamOps)
-  * and a future live binlog tail share one implementation.
+  * reusable functions; [[SchemaReplicator]]'s streaming state machine
+  * mirrors them, and its replicator invariant is stated against
+  * [[CdcCollapse.effectiveState]].
   */
 final case class CdcEvent(
     key: Long,

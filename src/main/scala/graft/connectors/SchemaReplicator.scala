@@ -5,12 +5,25 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQ
 import org.apache.spark.sql.streaming.GroupState
 import org.apache.spark.sql.types.StructType
 
-/** Whole-schema replication: every table of a MySQL schema through ONE
-  * binlog stream into per-table ClickHouse-style replicas — the
-  * multi-table face of [[Replicator]] (which documents the single-table
-  * invariant this generalizes).
+/** MySQL→ClickHouse-style replication of a whole schema (one table
+  * included) through ONE binlog stream into per-table replicas — the
+  * reference domain's core use-case as one surface:
   *
-  * Why one stream, not N [[Replicator]]s: the binlog is a single totally
+  *  1. [[bootstrapDdl]] — CREATE each sink table through the §1.2 type
+  *     matrix (ReplacingMergeTree versioned by the event timestamp, the
+  *     engine whose FINAL semantics equal the latest-per-key collapse);
+  *     schema changes mid-stream go through [[DdlPropagate]] per table.
+  *  2. [[snapshotEvents]] — the initial bulk copy as synthetic 'c' events
+  *     at position 0, so seed and tail share ONE code path.
+  *  3. [[start]] — the continuous tail: latest-per-(table, key) state
+  *     machine (tombstones INCLUDED, so deletes reach the sink) into the
+  *     idempotent per-batch sink (a replayed batch id overwrites its own
+  *     output — at-least-once delivery collapses to exactly-once state,
+  *     the same contract a ReplacingMergeTree insert gives).
+  *  4. [[materializedState]] — read one table back and collapse, which is
+  *     what ClickHouse's `FINAL` does at query time.
+  *
+  * Why one stream, not one per table: the binlog is a single totally
   * ordered log; its row events interleave across tables but share the one
   * `position` sequence. Running per-table streams would need N checkpoints
   * whose positions drift apart — after a crash there is no single offset
@@ -22,38 +35,43 @@ import org.apache.spark.sql.types.StructType
   * schema.
   *
   * Scale: state remains one row per live (table, key); the per-batch sink
-  * partitions by table (directory per table per batch — the per-table
-  * INSERT a ClickHouse sink would issue); adding a table adds state rows,
-  * not operators.
+  * shuffles only changed rows and partitions them by table (directory per
+  * table per batch — the per-table INSERT a ClickHouse sink would issue);
+  * adding a table adds state rows, not operators. The snapshot phase is a
+  * plain partitioned batch read (Jdbc.scala's partitionColumn bounds).
   *
-  * THE PER-TABLE INVARIANT (ConnectorsSpec, interleaved two-table
-  * scenario with deletes): for every table t,
-  * `materializedState(outDir, t) == CdcCollapse.effectiveState(log where
-  * table = t)` — fan-out must not leak events across tables or lose the
-  * single-table guarantees.
+  * THE REPLICATOR INVARIANT (ConnectorsSpec, interleaved two-table
+  * scenario with snapshot, updates, deletes, a post-snapshot key and a
+  * stale event): for every table t,
+  * `materializedState(outDir, t) == CdcCollapse.effectiveState(snapshot
+  * ++ log where table = t)` — the streamed, checkpointed, batch-committed
+  * pipeline lands in exactly the state a from-scratch log replay computes,
+  * deletes included, and fan-out never leaks events across tables.
   */
 object SchemaReplicator {
 
-  /** CREATE TABLE per schema table, through the same §1.2 type matrix as
-    * the single-table bootstrap ([[Replicator.bootstrapDdl]]); mid-stream
-    * DDL keeps flowing through [[DdlPropagate]] per table. */
+  /** CREATE TABLE per schema table: ReplacingMergeTree versioned by
+    * `tsMicros` and ordered by the replication key — FINAL on that table
+    * IS the latest-per-key collapse. */
   def bootstrapDdl(tables: Map[String, (StructType, Seq[String])]): Map[String, String] =
     tables.map { case (t, (schema, orderBy)) =>
-      t -> Replicator.bootstrapDdl(t, schema, orderBy)
+      t -> ClickHouseDdl.createTable(
+        t, schema, ClickHouseDdl.ReplacingMergeTree(Some("tsMicros")), orderBy)
     }
 
-  /** Snapshot rows of one table as synthetic creates at position 0 — same
-    * seed-and-tail-share-one-path convention as [[Replicator.snapshotEvents]]. */
+  /** Snapshot rows of one table as synthetic creates at position 0 / ts 0:
+    * any real binlog event for the key (position ≥ 1) wins over the seed,
+    * so snapshot-then-tail needs no fencing. */
   def snapshotEvents(table: String, rows: Dataset[(Long, String)])
                     (implicit s: SparkSession): Dataset[TableCdcEvent] = {
     import s.implicits._
     rows.map { case (key, payload) => TableCdcEvent(table, key, 0L, 0L, "c", payload) }
   }
 
-  /** Latest-per-(table, key) streaming state machine — the multi-table
-    * sibling of StreamOps.latestPerKeyStream, same newest-wins /
-    * emit-only-on-change rules, tombstones included so deletes reach
-    * every table's sink. */
+  /** Latest-per-(table, key) streaming state machine: the newest event
+    * by (tsMicros, position) wins and is emitted only when it changes the
+    * key's state, tombstones included so deletes reach every table's sink.
+    * It mirrors [[CdcCollapse.latestPerKey]]. */
   def latestPerTableKeyStream(events: Dataset[TableCdcEvent])
                              (implicit s: SparkSession): Dataset[TableCdcEvent] = {
     import s.implicits._

@@ -309,8 +309,8 @@ object JoinOps {
     * bug); `operators.RangeJoin.binnedPointJoin` quantizes time into 1-hour
     * bins, replicates each interval to its ≤ 3 touched bins, maps each
     * point to its ONE bin, and equi-joins on (user, bin) + exact
-    * post-filter — a plain hash exchange, no nested loop (the full-surface
-    * plan sweep enforces exactly this). LEFT semantics: purchases with no
+    * post-filter — a plain hash exchange, no nested loop (Tier1SmokeSpec's
+    * per-query plan check enforces exactly this). LEFT semantics: purchases with no
     * errors count 0 via NULL-skipping count. */
   val c19: Q = Q(
     "c19_join_range_binned",

@@ -23,7 +23,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   *               is the declared-query face of library code (an
   *               `api`/`operators` call the oracle gates at fixture scale),
   *               of a Spark expression, of a Scala UDF or of a guard that
-  *               runs before the plan. PlanShapeSpec's full-surface sweep fails
+  *               runs before the plan. Tier1SmokeSpec's per-query test fails
   *               by name on a hand-written body that Spark would plan
   *               identically from its text.
   */

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
-  KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-import graft.connectors.CdcEvent
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
 
 /** SURVEY §2.2 streaming surface — true unbounded execution.
   *
@@ -17,17 +15,15 @@ import graft.connectors.CdcEvent
   *
   * Every single-`ValueState` twin in this package (the `Streaming*`
   * objects) is one [[keyedFold]] call: the twin writes only its per-key
-  * fold step, and [[keyedFold]] owns every state decision. Seven
+  * fold step, and [[keyedFold]] owns every state decision. Six
   * processors stay outside it:
   *  - `StreamingBigramLm` (a ValueState plus a MapState) and
   *    `StreamingQualityBuckets` (a MapState) keep keyed maps;
   *  - `StreamingNearDedup` (×2) and `StreamingPpJoin` append to a
   *    ListState;
-  *  - `StreamingSessionClose` closes sessions on event-time timers;
-  *  - [[LatestPerKeyProcessor]] runs in Append mode and is kept
-  *    line-for-line beside its `flatMapGroupsWithState` twin
-  *    [[latestPerKeyStream]], which the StreamingSpec drives through
-  *    the same scenario.
+  *  - `StreamingSessionClose` closes sessions on event-time timers.
+  * The CDC latest-per-key state machine lives in
+  * `graft.connectors.SchemaReplicator`.
   */
 object StreamOps {
 
@@ -116,78 +112,6 @@ object StreamOps {
       .select(col("user_id"), col("session_window.start").as("s_start"),
               col("session_window.end").as("s_end"), col("n_events"))
 
-  /** Stateful latest-per-key upsert over a CDC stream: emits the new
-    * effective row whenever a key's latest event changes. By default
-    * tombstoned keys emit nothing further (a pure upsert view); with
-    * `emitTombstones` the winning delete event itself is emitted so a
-    * downstream sink can collapse the key away (the shape a replicator
-    * needs — see graft.connectors.Replicator, whose materialized-state
-    * invariant depends on deletes reaching the sink). The state machine
-    * mirrors CdcCollapse exactly. */
-  def latestPerKeyStream(events: Dataset[CdcEvent], emitTombstones: Boolean = false)
-                        (implicit s: SparkSession): Dataset[CdcEvent] = {
-    import s.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CdcEvent, CdcEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, incoming: Iterator[CdcEvent], state: GroupState[CdcEvent]) =>
-          val newest = (state.getOption.iterator ++ incoming)
-            .maxBy(e => (e.tsMicros, e.position))
-          val changed = state.getOption.forall(prev =>
-            (newest.tsMicros, newest.position) != (prev.tsMicros, prev.position))
-          state.update(newest)
-          if (changed && (emitTombstones || newest.op != "d")) Iterator.single(newest)
-          else Iterator.empty
-      }
-  }
-
-  /** The same latest-per-key state machine on Spark 4's transformWithState
-    * API (the successor to flatMapGroupsWithState: named state variables,
-    * TTL, timers; requires the RocksDB state store provider). Kept
-    * behaviorally identical to [[latestPerKeyStream]] — the StreamingSpec
-    * drives both through the same scenario.
-    *
-    * `ttl` bounds state for long-running CDC streams with churn: without it,
-    * tombstoned ('d') keys park a ValueState entry forever. Production
-    * deployments should pass a TTL at least as long as the source's maximum
-    * replay window (an expired key that reappears is re-created, which is
-    * correct for upsert semantics); the NONE default keeps tests exact. */
-  final class LatestPerKeyProcessor(ttl: TTLConfig = TTLConfig.NONE,
-                                    emitTombstones: Boolean = false)
-      extends StatefulProcessor[Long, CdcEvent, CdcEvent] {
-    @transient private var latest: ValueState[CdcEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      latest = getHandle.getValueState[CdcEvent](
-        "latest", Encoders.product[CdcEvent], ttl)
-
-    override def handleInputRows(key: Long, rows: Iterator[CdcEvent],
-                                 timerValues: TimerValues): Iterator[CdcEvent] = {
-      val prev = Option(latest.get())
-      val newest = (prev.iterator ++ rows).maxBy(e => (e.tsMicros, e.position))
-      val changed = prev.forall(p =>
-        (newest.tsMicros, newest.position) != (p.tsMicros, p.position))
-      latest.update(newest)
-      if (changed && (emitTombstones || newest.op != "d")) Iterator.single(newest)
-      else Iterator.empty
-    }
-  }
-
-  /** latestPerKeyStream via transformWithState (needs
-    * `spark.sql.streaming.stateStore.providerClass` = RocksDB provider).
-    * A non-NONE `ttl` requires processing-time semantics, so TimeMode
-    * follows the TTL choice. */
-  def latestPerKeyTws(events: Dataset[CdcEvent], ttl: TTLConfig = TTLConfig.NONE,
-                      emitTombstones: Boolean = false)
-                     (implicit s: SparkSession): Dataset[CdcEvent] = {
-    import s.implicits._
-    events
-      .groupByKey(_.key)
-      .transformWithState(new LatestPerKeyProcessor(ttl, emitTombstones),
-                          timeModeFor(ttl), OutputMode.Append())
-  }
-
   /** Stream-stream interval join: each left event enriched with right events
     * for the same key whose timestamp falls within [left.ts − window,
     * left.ts] — the streaming analog of the c11 as-of join. Both sides carry
@@ -203,22 +127,6 @@ object StreamOps {
     left.withWatermark("ts", lateness)
       .join(right.withWatermark("r_ts", lateness),
             expr(s"user_id = r_user AND r_ts <= ts AND r_ts >= ts - interval $window_"))
-
-  /** Exactly-once-effective sink: foreachBatch + idempotent per-batch
-    * parquet commit (a replayed batchId overwrites its own directory, so
-    * at-least-once delivery collapses to exactly-once output — the same
-    * contract a ReplacingMergeTree insert gives the ClickHouse sink). */
-  def startParquetUpsertSink(df: DataFrame, outDir: String,
-                             checkpointDir: String,
-                             mode: OutputMode = OutputMode.Update)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(mode)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-      }
-      .start()
 
   /** One micro-batch step of streaming MV maintenance: merge the batch's
     * partial-aggregate delta into the state AS OF the previous batch and

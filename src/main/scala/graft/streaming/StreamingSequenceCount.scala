@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming.TTLConfig
   * (Update-mode shape — downstream sinks upsert on user_id). `ttl` bounds
   * state for cold users; an expired user restarts from (0, 0), which
   * undercounts straddling chains — the standard TTL trade, document per
-  * deployment (same posture as LatestPerKeyProcessor).
+  * deployment.
   */
 object StreamingSequenceCount {
 

@@ -757,6 +757,23 @@ class ApiSpec extends SparkSpec {
     assert(stray.isEmpty, "pin through graft.operators.Materialize:\n" + stray.mkString("\n"))
   }
 
+  test("flatMapGroupsWithState/mapGroupsWithState in src/main only in connectors/SchemaReplicator.scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // the one CDC latest-per-key state machine; every other stateful
+    // streaming operator goes through transformWithState
+    val root = Paths.get("src/main/scala")
+    val home = root.resolve("graft/connectors/SchemaReplicator.scala")
+    val call = """\.(flatMap|map)GroupsWithState\b""".r
+    def hits(p: java.nio.file.Path) = Files.readAllLines(p).asScala.zipWithIndex
+      .collect { case (l, i) if call.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}" }
+    assert(hits(home).nonEmpty, s"the scan must see the call in $home")
+    val stray = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != home)
+      .flatMap(hits).toList
+    assert(stray.isEmpty, "a second GroupState operator:\n" + stray.mkString("\n"))
+  }
+
   test("Q.fromSql binds the fixture tables of each call's sfDir: CTEs and subqueries reached, unknown names rejected") {
     import graft.engine.{ExtOps, Round11Ops, Round9Ops, ScanOps, SqlBody, Tables}
     assert(Seq(ScanOps.a01, Round9Ops.d32, ExtOps.b07).forall(_.fn.isInstanceOf[SqlBody]))

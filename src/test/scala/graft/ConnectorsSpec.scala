@@ -155,45 +155,6 @@ class ConnectorsSpec extends SparkSpec {
     assert(ddl.contains("`id` Int64") && !ddl.contains("memo"))
   }
 
-  test("Replicator invariant: snapshot + tail materializes exactly the log replay") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sp = spark
-    import sp.implicits._
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("repl_out").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("repl_ck").toString
-    val seed = Replicator.snapshotEvents(
-      Seq((1L, "a1"), (2L, "b1"), (3L, "c1")).toDS()).collect().toSeq
-    val tail = Seq(
-      CdcEvent(2, 10, 1000, "u", "b2"), // update wins over seed
-      CdcEvent(3, 11, 1100, "d", ""),   // delete must reach the sink
-      CdcEvent(4, 12, 1200, "c", "d1")) // key born after the snapshot
-    val stale = CdcEvent(2, 9, 900, "u", "stale") // late event: no effect
-    val in = MemoryStream[CdcEvent]
-    val q = Replicator.start(in.toDS(), outDir, ckDir)
-    try {
-      in.addData(seed: _*)
-      q.processAllAvailable()
-      in.addData(tail: _*)
-      q.processAllAvailable()
-      in.addData(stale)
-      q.processAllAvailable()
-    } finally q.stop()
-    val mat = Replicator.materializedState(outDir).collect()
-      .map(e => e.key -> e.payload).toMap
-    val replay = graft.connectors.CdcCollapse.effectiveState(
-      (seed ++ tail :+ stale).toDS())
-      .collect().map(e => e.key -> e.payload).toMap
-    assert(mat == replay, s"sink state $mat != log replay $replay")
-    assert(mat == Map(1L -> "a1", 2L -> "b2", 4L -> "d1"),
-      "update applied, delete collapsed, post-snapshot key present")
-    val ddl = Replicator.bootstrapDdl("sink_t",
-      org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key"))
-    assert(ddl.contains("ENGINE = ReplacingMergeTree(tsMicros)"))
-    assert(ddl.contains("`key` Int64"))
-  }
-
   test("SchemaReplicator: two interleaved tables through one stream, per-table invariant holds") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val sp = spark
@@ -202,8 +163,10 @@ class ConnectorsSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val outDir = java.nio.file.Files.createTempDirectory("schema_out").toString
     val ckDir = java.nio.file.Files.createTempDirectory("schema_ck").toString
-    // a nothing-committed-yet replica is empty and resumes from position 0
-    assert(SchemaReplicator.materializedState(outDir, "users").collect().isEmpty)
+    // a nothing-committed-yet replica is empty and resumes from position 0;
+    // a dir that does not exist at all behaves the same (listFiles null)
+    for (d <- Seq(outDir, outDir + "/never_created"))
+      assert(SchemaReplicator.materializedState(d, "users").collect().isEmpty)
     assert(SchemaReplicator.committedPosition(outDir) == 0L)
     val seed =
       SchemaReplicator.snapshotEvents("users",
@@ -230,6 +193,15 @@ class ConnectorsSpec extends SparkSpec {
       in.addData(TableCdcEvent("users", 2, 8, 800, "u", "older"))
       q.processAllAvailable()
     } finally q.stop()
+    // only effective changes are emitted: every seed and tail event changed
+    // its key, the stale-only batch (users 2 at position 8) changed nothing
+    val batchRows = new java.io.File(outDir).listFiles()
+      .filter(_.getName.startsWith("batch_"))
+      .map(b => b.getName.stripPrefix("batch_").toLong ->
+        spark.read.schema(org.apache.spark.sql.Encoders.product[TableCdcEvent].schema)
+          .parquet(b.getPath).count())
+      .toMap
+    assert(batchRows == Map(0L -> 4L, 1L -> 5L, 2L -> 0L), s"rows per batch: $batchRows")
     // per-table invariant: materialized ≡ that table's log replay
     val log = (seed ++ tail :+ TableCdcEvent("users", 2, 8, 800, "u", "older")).toDS()
     for (t <- Seq("users", "orders")) {
@@ -303,17 +275,7 @@ class ConnectorsSpec extends SparkSpec {
     assert(ddl("users").contains("CREATE TABLE users") ||
            ddl("users").contains("users"))
     assert(ddl.values.forall(_.contains("ENGINE = ReplacingMergeTree(tsMicros)")))
-  }
-
-  test("Replicator.materializedState of a replica with no committed batch is empty") {
-    implicit val s = spark
-    // before the first micro-batch lands, the batch_* glob matches nothing —
-    // that is an empty replica, not an AnalysisException
-    val freshDir = java.nio.file.Files.createTempDirectory("repl_empty").toString
-    assert(Replicator.materializedState(freshDir).collect().isEmpty)
-    // and a dir that does not exist at all behaves the same (listFiles null)
-    assert(Replicator.materializedState(freshDir + "/never_created")
-      .collect().isEmpty)
+    assert(ddl.values.forall(_.contains("`key` Int64")), "replication key rendered non-nullable")
   }
 
   test("dirty CDC ingest end-to-end: corrupt lines quarantine, clean lines replicate") {
@@ -342,13 +304,14 @@ class ConnectorsSpec extends SparkSpec {
     assert(clean.count() == good.size)
     val outDir = java.nio.file.Files.createTempDirectory("dirty_out").toString
     val ckDir = java.nio.file.Files.createTempDirectory("dirty_ck").toString
-    val in = MemoryStream[CdcEvent]
-    val q = Replicator.start(in.toDS(), outDir, ckDir)
+    val in = MemoryStream[TableCdcEvent]
+    val q = SchemaReplicator.start(in.toDS(), outDir, ckDir)
     try {
-      in.addData(clean.collect().toSeq: _*)
+      in.addData(clean.collect().toSeq.map(e =>
+        TableCdcEvent("t", e.key, e.position, e.tsMicros, e.op, e.payload)): _*)
       q.processAllAvailable()
     } finally q.stop()
-    val mat = Replicator.materializedState(outDir).collect()
+    val mat = SchemaReplicator.materializedState(outDir, "t").collect()
       .map(e => e.key -> e.payload).toMap
     assert(mat == Map(1L -> "a2"), "update applied, tombstoned key gone, corrupt rows absent")
   }

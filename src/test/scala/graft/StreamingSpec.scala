@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
-import graft.connectors.CdcEvent
 import graft.streaming.StreamOps
 
 /** True streaming execution against MemoryStream (SURVEY §2.2 rows
@@ -96,34 +95,6 @@ class StreamingSpec extends SparkSpec {
       assert(sessions(ts(0).getTime) == 2L)
       assert(sessions(ts(50).getTime) == 1L)
     } finally q.stop()
-  }
-
-  test("transformWithState latest-per-key matches the flatMapGroupsWithState semantics") {
-    val sp = spark
-    import sp.implicits._
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    withRocksDbProvider {
-      val in = MemoryStream[CdcEvent]
-      val q = StreamOps.latestPerKeyTws(in.toDS()).writeStream
-        .format("memory").queryName("tws_t").outputMode(OutputMode.Append).start()
-      try {
-        in.addData(CdcEvent(1, 10, 1000, "c", "v1"), CdcEvent(2, 11, 1000, "c", "w1"))
-        q.processAllAvailable()
-        in.addData(CdcEvent(1, 12, 2000, "u", "v2")) // newer → emit
-        in.addData(CdcEvent(2, 9, 500, "u", "stale")) // older → suppressed
-        in.addData(CdcEvent(3, 13, 3000, "c", "x1"))  // separate batch: emit
-        q.processAllAvailable()
-        in.addData(CdcEvent(3, 14, 4000, "d", "gone")) // tombstone: suppressed
-        q.processAllAvailable()
-        val emitted = spark.table("tws_t").collect()
-          .map(r => (r.getAs[Long]("key"), r.getAs[String]("payload")))
-        assert(emitted.count(_._1 == 1L) == 2) // v1 then v2
-        assert(emitted.filter(_._1 == 2L).map(_._2).toSeq == Seq("w1"))
-        // key 3: create emitted, tombstone suppressed
-        assert(emitted.filter(_._1 == 3L).map(_._2).toSeq == Seq("x1"))
-      } finally { q.stop() }
-    }
   }
 
   test("streaming simhash60 is bit-identical to the batch SimHashDedup fingerprints") {
@@ -250,27 +221,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("stateful latest-per-key upsert emits only effective changes") {
-    val sp = spark
-    import sp.implicits._
-    implicit val s = spark
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[CdcEvent]
-    val q = StreamOps.latestPerKeyStream(in.toDS()).writeStream
-      .format("memory").queryName("upsert_t").outputMode(OutputMode.Append).start()
-    try {
-      in.addData(CdcEvent(1, 10, 1000, "c", "v1"), CdcEvent(2, 11, 1000, "c", "w1"))
-      q.processAllAvailable()
-      in.addData(CdcEvent(1, 12, 2000, "u", "v2")) // newer → emit
-      in.addData(CdcEvent(2, 9, 500, "u", "stale")) // older → suppressed
-      q.processAllAvailable()
-      val emitted = spark.table("upsert_t").collect()
-        .map(r => (r.getAs[Long]("key"), r.getAs[String]("payload")))
-      assert(emitted.count(_._1 == 1L) == 2) // v1 then v2
-      assert(emitted.filter(_._1 == 2L).map(_._2).toSeq == Seq("w1")) // stale never emitted
-    } finally q.stop()
-  }
-
   test("stream-stream interval join enriches within the window only") {
     val sp = spark
     import sp.implicits._
@@ -321,23 +271,6 @@ class StreamingSpec extends SparkSpec {
       Seq((3L, "c")).toDF("id", "v").coalesce(1).write.mode("append").parquet(inDir)
       q.processAllAvailable()
       assert(spark.table("tail_t").count() == 3)
-    } finally q.stop()
-  }
-
-  test("foreachBatch parquet sink writes idempotent per-batch output") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("sink_s").toString
-    val in = MemoryStream[Ev]
-    val q = StreamOps.startParquetUpsertSink(
-      in.toDF().withWatermark("ts", "1 minute"), s"$dir/out", s"$dir/ckpt")
-    try {
-      in.addData(Ev(1, 1, ts(0), 1.0), Ev(2, 2, ts(1), 2.0))
-      q.processAllAvailable()
-      val batches = new java.io.File(s"$dir/out").listFiles().filter(_.getName.startsWith("batch_"))
-      assert(batches.nonEmpty)
-      assert(spark.read.parquet(batches.head.getPath).count() == 2)
     } finally q.stop()
   }
 
