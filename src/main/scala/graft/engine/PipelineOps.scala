@@ -182,10 +182,12 @@ object PipelineOps {
     * near-dup pairs, each doc labeled with its cluster's smallest doc_id.
     * The oracle states reachability as a recursive CTE; the plan is
     * ConnectedComponents.assignContracted — iterated seed-and-contract
-    * (the sf0.1 dup graph's 354k edges collapse to 827 after pass 1, 32
-    * after pass 2, zero after pass 3 — the trajectory is PINNED as the
-    * heavy-band regression spec in ScaleOpsSpec), with the O(log² n)
-    * star finisher behind a pass budget for adversarial shapes. Measured
+    * (the sf0.1 dup graph's 354k edges collapse to 827 after pass 1),
+    * finished by a driver-side union-find once the residual edges fit its
+    * cap — at sf0.01 and below before the first pass (trajectories for
+    * both paths PINNED as the heavy-band regression spec in ScaleOpsSpec),
+    * with the O(log² n) star finisher behind a pass budget for
+    * adversarial shapes above the cap. Measured
     * vs the propagation variant at sf0.1 warm: 1.7 s vs 5 s on identical
     * edges (r15: the post-loop compose/final joins broadcast their
     * bound-tracked small side below the edge gate). This is THE consumer

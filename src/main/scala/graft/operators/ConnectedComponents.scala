@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Connected components over an undirected edge list — the consumer every
   * near-dup candidate generator (k02/k15/k19, MinHashDedup, SimHashDedup)
@@ -70,8 +73,8 @@ object ConnectedComponents {
         .groupBy("__v")
         .agg(min("__label").as("__label"),
              min(when(col("__own"), col("__label"))).as("__old")),
-        eager = false) // lazy: the changed-count below is the round's ONE
-                       // job and materializes it
+        eager = false) // lazy: the changed-count below stores it (the
+                       // pin itself runs the round's shuffle stages)
       val changed = next.filter(col("__label") =!= col("__old")).count()
       s.release(pinned) // previous round's checkpoint: next is materialized
       pinned = next
@@ -96,16 +99,25 @@ object ConnectedComponents {
   }
 
   /** Diagnostic trace of the LAST [[assignContracted]]/[[assignStar]] run
-    * on this thread: edge counts entering/produced by each contract pass
-    * and the star-finisher round count (−1 = finisher never ran). Written
-    * unconditionally (two longs and an int per run — free); read by the
+    * on this thread: edge counts entering/produced by each contract pass,
+    * the star-finisher round count (−1 = finisher never ran) and the
+    * residual edges the driver finished with union-find (−1 = none).
+    * Written unconditionally (a few longs per run — free); read by the
     * heavy-band regression spec, which pins the fixture's convergence
     * TRAJECTORY (pair cardinality, pass counts, star rounds) instead of
     * wall-clock — the r12 brief's CI-stable form of "did CC regress". */
-  final case class Trace(passEdges: Vector[Long], starRounds: Int)
+  final case class Trace(passEdges: Vector[Long], starRounds: Int, localEdges: Long)
   private[graft] val lastTrace = new ThreadLocal[Trace] {
-    override def initialValue: Trace = Trace(Vector.empty, -1)
+    override def initialValue: Trace = Trace(Vector.empty, -1, -1L)
   }
+
+  /** Residual edge count at or below which [[assignContracted]] stops
+    * contracting and the driver finishes the components itself: 2^17
+    * edges of two longs is 2 MiB collected, one job, where each further
+    * distributed pass costs several jobs of launch overhead on a graph
+    * that small. The large-star/small-star authors finish the same way
+    * once the graph fits in memory (Kiveris et al., SoCC'14). */
+  private val localFinishEdges: Long = 1L << 17
 
   /** Edge-count gate below which a contraction pass BROADCASTS its label
     * frame into the relabel joins (labels ≤ 2·edges rows ≈ 32 MB of
@@ -129,19 +141,27 @@ object ConnectedComponents {
     *      labels and drop loops/dups. label(v) is always in v's component,
     *      so contraction preserves component structure exactly; on a
     *      near-clique corpus the 354k-edge sf0.1 dup graph collapses to
-    *      827 inter-star edges in pass 1, 32 in pass 2, zero in pass 3. The two
+    *      827 inter-star edges in pass 1, which the driver finish below
+    *      then takes (32 in pass 2 and zero in pass 3 without it). The two
     *      relabel joins BROADCAST the label frame below
     *      [[broadcastEdgeGate]] (zero added exchanges; the gate is the
     *      pass's own known edge count) and shuffle beyond it.
-    *      ONE action per pass (the contracted-edge count materializes the
-    *      persisted labels and edges together).
+    *      Each pass still launches several jobs: under AQE a lazy pin
+    *      runs its plan's shuffle stages when it is taken, and the
+    *      contracted-edge count is one more.
     *
-    * A pass removes every vertex that has a smaller neighbor, so dense
-    * components collapse immediately, but an adversarial n-chain only
-    * shortens by a constant — after `maxContract` passes any surviving
-    * edges go to the [[assignStar]] finisher (O(log² n) on any shape)
-    * rather than looping O(diameter) times. Final labels compose the
-    * per-pass mappings back down (one small join per pass).
+    * Once the residual edge count is at most `localFinishEdges` (checked
+    * before every pass, the first included) the loop stops and the
+    * driver collects the residual edges and runs union-find on them —
+    * one bounded collect instead of the tail passes, whose few edges
+    * cost as many jobs as the first. Integral ids only; other id types
+    * and `forceStar` keep the distributed finisher. A pass removes every
+    * vertex that has a smaller neighbor, so dense components collapse
+    * immediately, but an adversarial n-chain only shortens by a constant
+    * — after `maxContract` passes any surviving edges above the cap go to
+    * the [[assignStar]] finisher (O(log² n) on any shape) rather than
+    * looping O(diameter) times. Final labels compose the per-pass
+    * mappings back down (one small join per pass).
     *
     * A component's global minimum M satisfies label(M) = M in every pass,
     * so it survives contraction as itself and the final labels are
@@ -151,24 +171,36 @@ object ConnectedComponents {
   def assignContracted(vertices: DataFrame, edges: DataFrame, vertexCol: String,
                        srcCol: String, dstCol: String,
                        maxContract: Int = 4, maxIters: Int = 30,
-                       forceStar: Boolean = false): DataFrame = Materialize.scoped { s =>
+                       forceStar: Boolean = false): DataFrame =
+    assignContractedCapped(vertices, edges, vertexCol, srcCol, dstCol,
+                           maxContract, maxIters, forceStar, localFinishEdges)
+
+  /** [[assignContracted]] with the local-finish cap as a parameter; 0 never
+    * finishes on the driver, so small test graphs still run the
+    * distributed contraction and finisher. */
+  private[graft] def assignContractedCapped(
+      vertices: DataFrame, edges: DataFrame, vertexCol: String,
+      srcCol: String, dstCol: String, maxContract: Int, maxIters: Int,
+      forceStar: Boolean, localCap: Long): DataFrame = Materialize.scoped { s =>
     // LAZY pins throughout the loop: each truncates the logical
     // plan IMMEDIATELY (each pass references its predecessor several
     // times — with persist() alone the plan tree quintuples per pass and
-    // plan stringification OOMs), while deferring materialization so each
-    // pass still runs ONE job (the contracted-edge count computes the
-    // labels and edges together). Mapping frames stay pinned until the
+    // plan stringification OOMs). Mapping frames stay pinned until the
     // composed result is materialized below; the scope frees every loop
     // pin on exit.
     var e = s.pin(edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
       .filter(col("__a") =!= col("__b")), eager = false)
+    val idType = e.schema("__a").dataType
+    val integralIds = (idType == LongType || idType == IntegerType) &&
+      e.schema("__b").dataType == idType
     var nEdges = e.count()
     val nEdges0 = nEdges // gate basis for the final |V|-sized compose join
-    lastTrace.set(Trace(Vector(nEdges0), -1))
+    lastTrace.set(Trace(Vector(nEdges0), -1, -1L))
+    def finishLocally = !forceStar && integralIds && nEdges <= localCap
     var mappings = List.empty[DataFrame] // deepest level first; (__v, __l)
     var exits = List.empty[Long] // edge count EXITING each pass (same order)
     var pass = 0
-    while (nEdges > 0 && pass < maxContract) {
+    while (nEdges > 0 && !finishLocally && pass < maxContract) {
       val sym = e.select(col("__a").as("__v"), col("__b").as("__n"))
         .unionByName(e.select(col("__b").as("__v"), col("__a").as("__n")))
       val l = s.pin(sym.groupBy("__v")
@@ -193,7 +225,7 @@ object ConnectedComponents {
         .filter(col("__a") =!= col("__b"))
         .distinct(), eager = false)
       e = e2
-      nEdges = e2.count() // materializes l and e2 in one job
+      nEdges = e2.count()
       mappings ::= l
       exits ::= nEdges
       pass += 1
@@ -209,9 +241,14 @@ object ConnectedComponents {
     // coalesce already resolves to "own label", so no vertex-completion
     // join, no endpoint-distinct, and no extra materialization job are
     // paid here (they were three jobs of pure overhead — r12 brief).
+    // A remainder within the local cap gets the same raw-roots shape from
+    // the driver's union-find.
     val roots: Option[DataFrame] =
       if (nEdges == 0 && !forceStar) None
-      else {
+      else if (finishLocally) {
+        lastTrace.set(lastTrace.get.copy(localEdges = nEdges))
+        Some(unionFindRoots(e, idType))
+      } else {
         val fix = starFixpoint(s, e, maxIters, knownDistinctCount = Some(nEdges))
         Some(fix.groupBy("__a").agg(min("__b").as("__c"))
           .select(col("__a").as("__v"), col("__c")))
@@ -248,6 +285,35 @@ object ConnectedComponents {
           .select(col("__v0").as(vertexCol),
                   coalesce(col("__c"), col("__v0")).as("component"))))
     }
+  }
+
+  /** Union-find on the driver over a small (__a, __b) edge frame of
+    * integral ids: union by smaller root with path compression, so every
+    * root is its component's minimum. Returns (__v, __c) = (vertex,
+    * component min) for every NON-root vertex as a local frame of
+    * `idType` — the star finisher's raw-roots shape. */
+  private def unionFindRoots(e: DataFrame, idType: DataType): DataFrame = {
+    val rows = e.select(col("__a").cast(LongType), col("__b").cast(LongType)).collect()
+    val ids = rows.flatMap(r => Array(r.getLong(0), r.getLong(1))).distinct.sorted
+    val parent = Array.range(0, ids.length) // index order = id order
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val up = parent(j); parent(j) = r; j = up }
+      r
+    }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    rows.foreach { r =>
+      val (x, y) = (find(at(r.getLong(0))), find(at(r.getLong(1))))
+      if (x < y) parent(y) = x else if (y < x) parent(x) = y
+    }
+    def id(i: Int): Any = if (idType == IntegerType) ids(i).toInt else ids(i)
+    val out = ids.indices.iterator.map(i => i -> find(i)).collect {
+      case (i, r) if r != i => Row(id(i), id(r))
+    }.toSeq
+    e.sparkSession.createDataFrame(out.asJava,
+      StructType(Seq(StructField("__v", idType), StructField("__c", idType))))
   }
 
   /** [[assignStar]] seeded with TWO seed-and-contract passes: the
@@ -367,7 +433,7 @@ object ConnectedComponents {
         // standalone entry (public assignStar): start a FRESH trace so a
         // prior assignContracted run's pass counts can't leak into this
         // run's record (the Trace contract: the LAST run, never a blend)
-        lastTrace.set(Trace(Vector.empty, -1))
+        lastTrace.set(Trace(Vector.empty, -1, -1L))
         s.pin(edges.filter(col("__a") =!= col("__b")).distinct(),
               eager = false) // lazy: sig() materializes it
     }
@@ -379,7 +445,7 @@ object ConnectedComponents {
     var converged = prevSig._1 == 0
     while (!converged && iters < maxIters) {
       val next = s.pin(smallStar(largeStar(e)), eager = false)
-      val sg = sig(next) // the round's ONE job: materializes the checkpoint
+      val sg = sig(next) // stores the checkpoint (the pin ran the shuffles)
       s.release(e) // previous round's checkpoint: next is materialized
       e = next
       converged = sg == prevSig

@@ -46,7 +46,10 @@ object Materialize {
 
     /** `df.localCheckpoint(eager)`, released when the scope exits. Eager
       * (the default, as in `localCheckpoint`) materializes now; lazy
-      * truncates the plan now and materializes with the next action. */
+      * truncates the plan now and stores the rows with the next action.
+      * Lazy is not free: taking the checkpoint builds the plan's RDD, and
+      * under AQE that runs every shuffle stage of the plan as its own job
+      * at the pin — only the final stage waits for the action. */
     def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
       val c = df.localCheckpoint(eager)
       val rdd = c.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd

@@ -486,16 +486,21 @@ class ApiSpec extends SparkSpec {
         .assignStar(vertices, edges, "id", "src", "dst")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(star == plain, s"$tag: star CC diverged from propagation CC")
+      // the default path: these graphs sit under the local-finish cap, so
+      // the driver's union-find labels them
       val contracted = graft.operators.ConnectedComponents
         .assignContracted(vertices, edges, "id", "src", "dst")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(contracted == plain, s"$tag: contracted CC diverged from propagation CC")
-      // and with a 1-pass contract budget, so the assignStar finisher
-      // (not contraction) resolves everything beyond one hop
-      val viaFinisher = graft.operators.ConnectedComponents
-        .assignContracted(vertices, edges, "id", "src", "dst", maxContract = 1)
+      // cap 0: the distributed contract loop; with a 1-pass budget the
+      // assignStar finisher (not contraction) resolves everything beyond
+      // one hop
+      def distributed(maxContract: Int) = graft.operators.ConnectedComponents
+        .assignContractedCapped(vertices, edges, "id", "src", "dst",
+                                maxContract, maxIters = 30, forceStar = false, localCap = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaFinisher == plain, s"$tag: finisher-path CC diverged")
+      assert(distributed(4) == plain, s"$tag: distributed contracted CC diverged")
+      assert(distributed(1) == plain, s"$tag: finisher-path CC diverged")
       // and the k25 path: seed pass + unconditional star finisher
       val seeded = graft.operators.ConnectedComponents
         .assignStarSeeded(vertices, edges, "id", "src", "dst")
@@ -525,6 +530,19 @@ class ApiSpec extends SparkSpec {
     }
     // edgeless graph: everything is its own component
     compare(Seq(5L, 6L), Seq.empty, "edgeless")
+    // string ids take the distributed loop instead of the driver's
+    // union-find (integral ids only) and still match propagation
+    val strVertices = Seq("a", "b", "c", "d", "e", "f").toDF("id")
+    val strEdges = Seq(("d", "c"), ("c", "b"), ("e", "f"), ("b", "b")).toDF("src", "dst")
+    def strLabels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val strPlain = strLabels(graft.operators.ConnectedComponents
+      .assign(strVertices, strEdges, "id", "src", "dst"))
+    assert(strPlain == Map("a" -> "a", "b" -> "b", "c" -> "b", "d" -> "b", "e" -> "e", "f" -> "e"))
+    assert(strLabels(graft.operators.ConnectedComponents
+      .assignContracted(strVertices, strEdges, "id", "src", "dst")) == strPlain)
+    assert(graft.operators.ConnectedComponents.lastTrace.get.localEdges == -1L,
+      "string ids must not take the local finisher")
     // the star path ALSO refuses silently-unconverged labels (r15: the
     // require landed with the starFixpoint extraction — before it, an
     // exhausted round budget returned wrong roots without a word)

@@ -272,8 +272,10 @@ class ConnectorsSpec extends SparkSpec {
       "users" -> (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key")),
       "orders" -> (org.apache.spark.sql.Encoders.product[CdcEvent].schema, Seq("key"))))
     assert(ddl.keySet == Set("users", "orders"))
-    assert(ddl("users").contains("CREATE TABLE users") ||
-           ddl("users").contains("users"))
+    ddl.foreach { case (t, sql) =>
+      assert(sql.startsWith(s"CREATE TABLE IF NOT EXISTS `$t` ("), s"$t DDL header: $sql")
+      assert(sql.contains("ORDER BY (`key`)"), s"$t DDL sort key: $sql")
+    }
     assert(ddl.values.forall(_.contains("ENGINE = ReplacingMergeTree(tsMicros)")))
     assert(ddl.values.forall(_.contains("`key` Int64")), "replication key rendered non-nullable")
   }

@@ -44,18 +44,57 @@ class ScaleOpsSpec extends SparkSpec {
     val pairs = graft.api.Dedup.tokenJaccardPairsAuto(
       docs, "doc_id", "text", "source", 0.6)
     assert(pairs.count() == 3536L, "k02 edge cardinality moved at sf0.001")
+    // k23's default path: the whole edge set is under the local-finish
+    // cap, so the driver finishes it before any contract pass
     graft.operators.ConnectedComponents.assignContracted(
       docs.select("doc_id"), pairs, "doc_id", "id1", "id2").count()
+    val tl = graft.operators.ConnectedComponents.lastTrace.get
+    assert(tl.passEdges == Vector(3536L) && tl.localEdges == 3536L,
+      s"k23 should finish on the driver before the first pass: $tl")
+    assert(tl.starRounds == -1, s"k23 should finish without the star finisher: $tl")
+    // cap 0: the distributed contract loop's trajectory
+    graft.operators.ConnectedComponents.assignContractedCapped(
+      docs.select("doc_id"), pairs, "doc_id", "id1", "id2",
+      maxContract = 4, maxIters = 30, forceStar = false, localCap = 0).count()
     val tc = graft.operators.ConnectedComponents.lastTrace.get
     assert(tc.passEdges == Vector(3536L, 54L, 2L, 0L),
       s"k23 contraction trajectory moved: ${tc.passEdges}")
-    assert(tc.starRounds == -1, s"k23 should drain without the star finisher: $tc")
+    assert(tc.starRounds == -1 && tc.localEdges == -1L,
+      s"k23 should drain without the star finisher: $tc")
     graft.operators.ConnectedComponents.assignStarSeeded(
       docs.select("doc_id"), pairs, "doc_id", "id1", "id2").count()
     val ts = graft.operators.ConnectedComponents.lastTrace.get
     assert(ts.passEdges == Vector(3536L, 54L, 2L),
       s"k25 seed trajectory moved: ${ts.passEdges}")
     assert(ts.starRounds == 2, s"k25 star finisher rounds moved: $ts")
+    assert(ts.localEdges == -1L, s"k25 must keep the star finisher: $ts")
+  }
+
+  test("k23 build + collect launches a pinned number of Spark jobs at sf0.001") {
+    // The job count is what the driver-side union-find finish saves (the
+    // contract loop's tail passes cost as many jobs as its first): a
+    // returning round loop fails here by name, not as bench noise. Jobs
+    // are counted by a local property of this thread only (broadcast
+    // threads inherit it), on a warm second run.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.test.jobCensus", java.util.UUID.randomUUID.toString)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          jobs.incrementAndGet()
+    }
+    def run(): Int = graft.engine.PipelineOps.k23.fn(spark, sf0001).collect().length
+    val rows = run()
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try assert(run() == rows) finally sc.setLocalProperty(key, null)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 12,
+      s"k23 launched ${jobs.get} jobs (12 with the driver finish, 27 through the full contract loop)")
   }
 
   test("MinHashLSH recall ≥ 0.9 against exact token-Jaccard pairs (k02)") {
